@@ -6,8 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import java.nio.charset.StandardCharsets
-
 /** Continuous CDC pipeline: change-feed stream → `foreachBatch`
   * merge into a hash-bucketed copy-on-write parquet state table
   * ([[BucketStateStore]] — shared with IncrementalAgg).
@@ -44,24 +42,25 @@ object StreamingCdc {
     */
   def firstRow(spark: SparkSession, stateDir: String): Option[String] =
     BucketStateStore.readTextFile(spark, new Path(stateDir, FirstRowFile))
+      .filter(_.trim.nonEmpty)
 
   private val FirstRowFile = "_first_row.json"
 
+  /** Published write-then-rename, so a crash mid-write leaves no torn
+    * record. Replay-safe: a crash-replayed first batch keeps the
+    * original record; only a blank leftover (from a torn in-place
+    * write) is replaced.
+    */
   private def recordFirstRow(batch: DataFrame, stateDir: String,
-      orderCols: Seq[String]): Unit =
-    batch.orderBy(orderCols.map(col): _*).limit(1).toJSON.collect()
-      .headOption.foreach { json =>
-        val p = new Path(stateDir, FirstRowFile)
-        val fs = p.getFileSystem(
-          batch.sparkSession.sparkContext.hadoopConfiguration)
-        // replay-safe: keep the original record if a crash-replayed
-        // first batch runs again
-        if (!fs.exists(p)) {
-          val out = fs.create(p, false)
-          try out.write(json.getBytes(StandardCharsets.UTF_8))
-          finally out.close()
+      orderCols: Seq[String]): Unit = {
+    val spark = batch.sparkSession
+    if (firstRow(spark, stateDir).isEmpty)
+      batch.orderBy(orderCols.map(col): _*).limit(1).toJSON.collect()
+        .headOption.foreach { json =>
+          BucketStateStore.publishTextFile(spark,
+            new Path(stateDir, FirstRowFile), json)
         }
-      }
+  }
 
   /** Merge one CDC batch and publish the next version, rewriting
     * ONLY the key-buckets the batch touches. Idempotent for a

@@ -162,4 +162,31 @@ class FirstRowSpec extends AnyFunSuite {
       Seq("user_id"), Seq("ts", "event_id"))
     assert(StreamingCdc.firstRow(spark, s"$root/state") == first)
   }
+
+  test("first row survives crash leftovers: blank record replaced, valid one kept") {
+    val feed = graft.cdc.ChangeFeed.fromEvents(Tables.load(spark, dir, "events"))
+    val batch = graft.cdc.ChangeFeed.timeBatches(feed, "week").head
+    def mergeFirst(root: String): Unit = StreamingCdc.mergeIntoState(batch,
+      s"$root/state", Seq("user_id"), Seq("ts", "event_id"))
+    def leftover(root: String, name: String, content: String): Unit = {
+      Files.createDirectories(java.nio.file.Paths.get(s"$root/state"))
+      Files.writeString(java.nio.file.Paths.get(s"$root/state/$name"), content)
+    }
+    // a zero-byte record (a torn in-place write) is no first row and
+    // is replaced by the first merge; a stray temp file is ignored
+    val torn = Files.createTempDirectory("graft_firstrow_torn").toString
+    leftover(torn, "_first_row.json", "")
+    leftover(torn, "._first_row.json.tmp", "{\"event_id\"")
+    assert(StreamingCdc.firstRow(spark, s"$torn/state").isEmpty)
+    mergeFirst(torn)
+    assert(StreamingCdc.firstRow(spark, s"$torn/state")
+      .exists(_.contains("\"event_id\"")))
+    // a complete record from a first batch that crashed before its
+    // version published is kept when the batch replays
+    val replay = Files.createTempDirectory("graft_firstrow_replay").toString
+    leftover(replay, "_first_row.json", "{\"event_id\":-1}")
+    mergeFirst(replay)
+    assert(StreamingCdc.firstRow(spark, s"$replay/state")
+      .contains("{\"event_id\":-1}"))
+  }
 }

@@ -503,6 +503,40 @@ class StreamingCdcSpec extends AnyFunSuite {
     assert(stateKeys(s"$root/state").sameElements(expected))
   }
 
+  test("every bucket a merge writes is one parquet file") {
+    val root = Files.createTempDirectory("graft_bucket_files").toString
+    def changes(step: Long, ts: Long, op: String): DataFrame =
+      spark.range(0, 2000, step).select(col("id"), (col("id") * ts).as("v"),
+        lit(ts).as("ts"), lit(op).as("op"))
+    def parquetFiles(dir: String): Seq[String] =
+      new java.io.File(dir).listFiles().toSeq.map(_.getName)
+        .filter(_.endsWith(".parquet"))
+    def bucketDirs(v: Long): Seq[java.io.File] =
+      new java.io.File(s"$root/state/v$v").listFiles().toSeq
+        .filter(_.getName.startsWith("graft_bucket="))
+    // the second merge keeps most rows of every touched bucket: its
+    // state side is read by several scan tasks, its changes by another
+    StreamingCdc.mergeIntoState(changes(1, 0, "insert"), s"$root/state",
+      Seq("id"), Seq("ts"))
+    StreamingCdc.mergeIntoState(changes(10, 1, "update"), s"$root/state",
+      Seq("id"), Seq("ts"))
+    Seq(0L, 1L).foreach { v =>
+      assert(bucketDirs(v).size > 1, s"v$v should write several buckets")
+      bucketDirs(v).foreach { d =>
+        assert(parquetFiles(d.getPath).size == 1,
+          s"v$v/${d.getName} holds ${parquetFiles(d.getPath)}")
+      }
+    }
+    val entries = scala.io.Source.fromFile(s"$root/state/manifest/v1")
+      .getLines().map(_.trim).filter(_.matches("""\d+=\d+""")).toSeq
+    val referenced = entries.flatMap { e =>
+      val Array(b, bv) = e.split('=')
+      parquetFiles(s"$root/state/v$bv/graft_bucket=$b")
+    }
+    assert(entries.size > 1 && referenced.size == entries.size,
+      s"${entries.size} buckets referenced by ${referenced.size} files")
+  }
+
   test("version pointer survives torn-write-free publish") {
     val root = Files.createTempDirectory("graft_scdc4").toString
     val months = ChangeFeed.timeBatches(feed, "week").take(2)
