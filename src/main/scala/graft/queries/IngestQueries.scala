@@ -880,14 +880,14 @@ object IngestQueries {
         val probeShingles = graft.dedup.Dedup
           .shingleRows(probes, 3, "doc_id", "text")
           .select("shingle").distinct().localCheckpoint()
-        val nb = graft.streaming.BucketStateStore.DefaultNumBuckets
         val legs = Seq(
           CurationPumps.noveltyLeg(s"$root/state/novelty", k = 3),
           CurationPumps.MonitorLeg("contamination",
             s"$root/state/contamination", (b, bid) =>
             CurationPumps.mergeContaminationBatch(
               b.filter(col("doc_id") % 100 =!= 0), probeShingles,
-              s"$root/state/contamination", 3, "doc_id", "text", nb, bid)),
+              s"$root/state/contamination", 3, "doc_id", "text",
+              numBuckets = 0, batchId = bid)),
           CurationPumps.agreementLeg(s"$root/state/agreement",
             gold = col("lang"),
             pred = graft.text.TextAnalysis.langId(col("text"),

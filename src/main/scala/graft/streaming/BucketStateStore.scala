@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import java.nio.charset.StandardCharsets
 
@@ -18,13 +19,30 @@ import java.nio.charset.StandardCharsets
   * {{{
   * stateDir/
   *   _version                      global version counter N (atomic rename publish)
-  *   manifest/v<N>                 text manifest: numBuckets + bucket -> writer version
+  *   manifest/v<N>                 text manifest, one entry per line (below)
   *   v<M>/graft_bucket=<i>/part-...parquet   bucket i's snapshot, written by version M
   * }}}
+  *
+  * Manifest lines: `numBuckets=<k>` first; then `batchId=<id>` (the
+  * replay fence, fenced merges only); `schema=<json>` (the template
+  * the merge wrote, so the drift check reads no parquet footer);
+  * `<i>=<M>` for each live bucket i and the version M holding it; and
+  * `bytes.<i>=<n>`, bucket i's parquet bytes. Manifests written before
+  * the `schema=` and `bytes.` lines still read: the schema then comes
+  * from a footer, and growth (below) waits until every live bucket has
+  * been rewritten once and so has a recorded size.
   *
   * Each `v<M>/graft_bucket=<i>/` holds exactly one parquet file: the
   * merge shuffles its output on the bucket id before the partitioned
   * write, so one task writes each touched bucket.
+  *
+  * Bucket count: sized so one bucket is about one read split,
+  * `spark.sql.files.maxPartitionBytes` (the target). A new store takes
+  * the smallest power of two k whose k × target covers Catalyst's size
+  * estimate of its first batch, at most [[DefaultNumBuckets]]; an
+  * explicit `numBuckets` fixes it instead. Once the recorded live bytes
+  * exceed k × target, the next merge re-buckets the whole store to the
+  * smallest power of two that covers them. The count never shrinks.
   *
   * Bucket of a key = `pmod(hash(keys...), numBuckets)`. A merge at
   * version N reads ONLY the touched buckets' current snapshots,
@@ -46,19 +64,30 @@ object BucketStateStore {
     */
   val BucketCol = "graft_bucket"
 
-  /** Default key-bucket count. A production deployment sizes this to
-    * state volume (buckets ≈ state_bytes / target_rewrite_bytes) —
-    * the dial trades rewrite amplification (fewer buckets → bigger
-    * rewrites) against small-file count (more buckets → more files).
+  /** The most buckets a new store starts with when its count is
+    * derived: an unknown or huge first-batch estimate gives this
+    * layout, the fixed default of stores created before sizing.
+    * Growth past it is by re-bucketing (see the Layout note); the count
+    * trades rewrite amplification (fewer buckets → bigger rewrites)
+    * against small-file count (more buckets → more files).
     */
   val DefaultNumBuckets = 64
 
+  private val BucketLine = """\d+=\d+"""
+
   /** bucket → version dir that last rewrote that bucket. A bucket
     * absent from the map is empty (all its keys deleted or never
-    * seen).
+    * seen). `bytes` holds the parquet bytes of the live buckets whose
+    * size is recorded, `schema` the JSON of the last merge's template.
     */
   private case class Manifest(numBuckets: Int, buckets: Map[Int, Long],
-      fence: Option[Long] = None)
+      fence: Option[Long] = None, bytes: Map[Int, Long] = Map.empty,
+      schema: Option[String] = None) {
+    /** Live bytes, once every live bucket has a recorded size. */
+    def liveBytes: Option[Long] =
+      Option.when(buckets.keySet.subsetOf(bytes.keySet))(
+        buckets.keysIterator.map(bytes).sum)
+  }
 
   // ---- small atomic-file helpers (single text blob, rename publish) ----
 
@@ -145,21 +174,25 @@ object BucketStateStore {
         s"state manifest missing for committed version $v at $stateDir"))
     val lines = text.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
     val k = lines.head.stripPrefix("numBuckets=").toInt
-    val (fenceLines, bucketLines) =
-      lines.tail.partition(_.startsWith("batchId="))
-    val fence = fenceLines.headOption.map(_.stripPrefix("batchId=").toLong)
-    val buckets = bucketLines.map { l =>
-      val Array(b, bv) = l.split('=')
-      b.toInt -> bv.toLong
+    def field(key: String): Option[String] =
+      lines.tail.find(_.startsWith(key)).map(_.stripPrefix(key))
+    def pairs(ls: Seq[String]): Map[Int, Long] = ls.map { l =>
+      val Array(b, n) = l.split('=')
+      b.toInt -> n.toLong
     }.toMap
-    Manifest(k, buckets, fence)
+    Manifest(k, pairs(lines.filter(_.matches(BucketLine))),
+      field("batchId=").map(_.toLong),
+      pairs(lines.filter(_.startsWith("bytes.")).map(_.stripPrefix("bytes."))),
+      field("schema="))
   }
 
   private def writeManifest(spark: SparkSession, stateDir: String, v: Long,
       m: Manifest): Unit = {
-    val body = (s"numBuckets=${m.numBuckets}" +:
-      (m.fence.map(b => s"batchId=$b").toSeq ++
-        m.buckets.toSeq.sorted.map { case (b, bv) => s"$b=$bv" })).mkString("\n")
+    val body = (Seq(s"numBuckets=${m.numBuckets}") ++
+      m.fence.map(b => s"batchId=$b") ++
+      m.schema.map(js => s"schema=$js") ++
+      m.buckets.toSeq.sorted.map { case (b, bv) => s"$b=$bv" } ++
+      m.bytes.toSeq.sorted.map { case (b, n) => s"bytes.$b=$n" }).mkString("\n")
     publishTextFile(spark, manifestPath(stateDir, v), body)
   }
 
@@ -215,26 +248,44 @@ object BucketStateStore {
     spark.read.parquet(paths: _*)
   }
 
-  /** The on-disk schema the LAST merge persisted (None when the store
-    * is absent or empty): inferred from the parquet footer of the
-    * most-recently-rewritten bucket — by construction the one written
-    * with the newest template. Used by the CDC pump's schema-drift
-    * refusal before each merge. Not free: `spark.read.parquet(dir)
-    * .schema` runs a Spark schema-inference job (one task reading the
-    * bucket's footer) on every call, so every CDC merge pays one
-    * extra Spark job: 26–50 ms of each live batch in a traced
-    * `cdc_uniform` run on a 4-core host.
+  /** The schema the LAST merge persisted, as a parquet reader sees it
+    * (every field nullable; None when the store is absent or empty).
+    * Used by the CDC pump's schema-drift refusal before each merge.
+    * Read from the manifest's `schema=` line, so it runs no Spark job;
+    * a manifest without one falls back to the parquet footer of the
+    * most-recently-rewritten bucket, by construction the one written
+    * with the newest template.
     */
   def persistedSchema(spark: SparkSession,
-      stateDir: String): Option[org.apache.spark.sql.types.StructType] =
+      stateDir: String): Option[StructType] =
     currentVersion(spark, stateDir).flatMap { v =>
       val m = readManifest(spark, stateDir, v)
       if (m.buckets.isEmpty) None
-      else {
-        val (b, bv) = m.buckets.maxBy(_._2)
-        Some(spark.read.parquet(bucketDir(stateDir, b, bv)).schema)
+      else m.schema match {
+        case Some(js) => Some(nullable(DataType.fromJson(js)).asInstanceOf[StructType])
+        case None =>
+          val (b, bv) = m.buckets.maxBy(_._2)
+          Some(spark.read.parquet(bucketDir(stateDir, b, bv)).schema)
       }
     }
+
+  /** `t` with every nested field, element and map value nullable: what
+    * a file-source read reports for a schema it wrote.
+    */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** Smallest power of two k with k × target ≥ bytes, at most `cap`. */
+  private def bucketsFor(bytes: BigInt, target: Long, cap: Int): Int = {
+    val need = ((bytes + target - 1) / target).min(cap).max(1).toInt
+    math.max(1, Integer.highestOneBit(need - 1) << 1)
+  }
 
   /** Committed versions still readable by [[stateAt]] (ascending):
     * the manifests that exist — vacuum trims this list from the
@@ -254,7 +305,10 @@ object BucketStateStore {
     * rewriting ONLY the key-buckets the batch touches. `template`
     * fixes the persisted schema (must equal `combine`'s output
     * schema); `combine(stateSlice, batch)` produces the replacement
-    * rows for the touched buckets.
+    * rows for the touched buckets. `numBuckets` is the bucket count of
+    * a NEW store; 0, every caller's default, derives it from the
+    * batch's size (see the Layout note). An existing store keeps the
+    * count its manifest records.
     *
     * Exactly-once under crash replay, two regimes:
     *  - idempotent combines (CDC last-write-wins): re-applying a
@@ -275,31 +329,49 @@ object BucketStateStore {
     * it every write task emits its own file per bucket its rows fall
     * in, and file create/commit/rename dominates the batch). That
     * exchange's bytes scale with the touched buckets' state, the
-    * same volume the rewrite moves anyway, not with the batch.
+    * same volume the rewrite moves anyway, not with the batch. The
+    * exception is a merge that re-buckets: it reads and rewrites every
+    * bucket at the new count, one full rewrite per doubling of the
+    * state, amortized like a hash-table resize.
     */
   def merge(batch: DataFrame, stateDir: String, keys: Seq[String],
-      template: DataFrame, numBuckets: Int = DefaultNumBuckets,
+      template: DataFrame, numBuckets: Int = 0,
       batchId: Option[Long] = None)(
       combine: (DataFrame, DataFrame) => DataFrame): Unit = {
     val spark = batch.sparkSession
     require(!template.columns.contains(BucketCol),
       s"state schema must not contain reserved column $BucketCol")
+    require(numBuckets >= 0, s"numBuckets must be >= 0, got $numBuckets")
     for (bid <- batchId; last <- lastBatchId(spark, stateDir))
       if (bid <= last) return // replayed batch already folded in
+    val target = spark.sessionState.conf.filesMaxPartitionBytes
     val curV = currentVersion(spark, stateDir)
-    val manifest = curV.map(readManifest(spark, stateDir, _))
-      .getOrElse(Manifest(numBuckets, Map.empty))
-    val k = manifest.numBuckets
+    val manifest = curV.map(readManifest(spark, stateDir, _)).getOrElse {
+      val k =
+        if (numBuckets > 0) numBuckets
+        else bucketsFor(batch.queryExecution.optimizedPlan.stats.sizeInBytes,
+          target, DefaultNumBuckets)
+      Manifest(k, Map.empty)
+    }
+    // grow once the recorded live bytes outgrow k buckets of `target`;
+    // 1 << 30 is the largest Int power of two
+    val k = manifest.liveBytes.filter(_ > manifest.numBuckets.toLong * target)
+      .fold(manifest.numBuckets)(bytes => bucketsFor(bytes, target, 1 << 30))
     val bucketOf = pmod(hash(keys.map(col): _*), lit(k))
 
+    // re-bucketing touches every bucket; otherwise discovery is
     // driver-sized by construction: at most k distinct bucket ids
-    val touched = batch.select(bucketOf.as("b")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    val touchedWithState = manifest.buckets.filter { case (b, _) => touched(b) }
-    val state =
-      if (touchedWithState.isEmpty) template.limit(0)
+    val (read, kept) =
+      if (k != manifest.numBuckets) (manifest.buckets, Map.empty[Int, Long])
       else {
-        val paths = touchedWithState.toSeq.sorted.map { case (b, bv) =>
+        val touched = batch.select(bucketOf.as("b")).distinct()
+          .collect().map(_.getInt(0)).toSet
+        manifest.buckets.partition { case (b, _) => touched(b) }
+      }
+    val state =
+      if (read.isEmpty) template.limit(0)
+      else {
+        val paths = read.toSeq.sorted.map { case (b, bv) =>
           bucketDir(stateDir, b, bv)
         }
         spark.read.schema(template.schema).parquet(paths: _*)
@@ -316,28 +388,25 @@ object BucketStateStore {
     // the write actually produced instead of assuming `touched`.
     val vPath = new Path(s"$stateDir/v$v")
     val fs = fsFor(spark, vPath)
-    val written = fs.listStatus(vPath).iterator
-      .map(_.getPath.getName)
-      .filter(_.startsWith(s"$BucketCol="))
-      .map(_.stripPrefix(s"$BucketCol=").toInt)
-      .toSet
-    val nextBuckets = (manifest.buckets -- touched) ++ written.map(_ -> v)
-    writeManifest(spark, stateDir, v, Manifest(k, nextBuckets, batchId))
+    val written: Map[Int, Long] = fs.listStatus(vPath).iterator
+      .filter(_.getPath.getName.startsWith(s"$BucketCol="))
+      .map { d =>
+        d.getPath.getName.stripPrefix(s"$BucketCol=").toInt ->
+          fs.listStatus(d.getPath).iterator
+            .filter(f => f.isFile && !f.getPath.getName.startsWith(".") &&
+              !f.getPath.getName.startsWith("_"))
+            .map(_.getLen).sum
+      }.toMap
+    writeManifest(spark, stateDir, v, Manifest(k,
+      kept ++ written.map { case (b, _) => b -> v }, batchId,
+      manifest.bytes.filter { case (b, _) => kept.contains(b) } ++ written,
+      Some(template.schema.json)))
     // Atomic publish: manifest + data land first, pointer flips last
     // (with the batch-id fence riding the same atomic rename).
     publishTextFile(spark, new Path(stateDir, VersionFile),
       v.toString + batchId.fold("")(b => s":$b"))
   }
 
-  /** Retire state older than the newest `keep` versions — the vacuum
-    * step every copy-on-write table needs: without it a long-running
-    * pump accumulates dead bucket copies. Manifest-aware: a version
-    * dir survives as long as ANY retained manifest references one of
-    * its buckets (an untouched bucket keeps its original version dir
-    * alive arbitrarily long — that dir still holds live data).
-    * Readers of retained versions are unaffected (same contract as
-    * table-format vacuums: retention must exceed the longest reader).
-    */
   /** The subdirectories of `root`, through the store's own FS
     * abstraction — the discovery step a multi-belt vacuum needs
     * (every per-table state dir under a root, including tables absent
@@ -353,15 +422,24 @@ object BucketStateStore {
       .map(_.getPath.toString)
   }
 
+  /** Retire state older than the newest `keep` versions — the vacuum
+    * step every copy-on-write table needs: without it a long-running
+    * pump accumulates dead bucket copies. Manifest-aware: a version
+    * dir survives as long as ANY retained manifest references one of
+    * its buckets (an untouched bucket keeps its original version dir
+    * alive arbitrarily long — that dir still holds live data).
+    * Readers of retained versions are unaffected (same contract as
+    * table-format vacuums: retention must exceed the longest reader).
+    */
   def vacuum(spark: SparkSession, stateDir: String, keep: Int = 2): Unit = {
     require(keep >= 1, "must keep at least the current version")
     currentVersion(spark, stateDir).foreach { v =>
       val floor = v - keep + 1
       val referenced: Set[Long] = (math.max(0L, floor) to v).flatMap { mv =>
         readTextFile(spark, manifestPath(stateDir, mv)).toSeq.flatMap { text =>
-          // bucket lines only — skip the numBuckets/batchId headers
+          // bucket lines only — skip the header, schema and bytes lines
           text.linesIterator.map(_.trim)
-            .filter(_.matches("""\d+=\d+"""))
+            .filter(_.matches(BucketLine))
             .map(_.split('=')(1).toLong)
         }
       }.toSet

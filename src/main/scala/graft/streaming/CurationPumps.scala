@@ -96,7 +96,7 @@ object CurationPumps {
   def startNoveltyPump(docsStream: DataFrame, stateDir: String,
       checkpointDir: String, k: Int = 3, idCol: String = "doc_id",
       textCol: String = "text",
-      numBuckets: Int = BucketStateStore.DefaultNumBuckets,
+      numBuckets: Int = 0,
       processingTime: Option[String] = None,
       vacuumEvery: Int = 0, vacuumKeep: Int = 4): StreamingQuery =
     docsStream.writeStream
@@ -167,7 +167,7 @@ object CurationPumps {
   def startContaminationPump(docsStream: DataFrame, probes: DataFrame,
       stateDir: String, checkpointDir: String, k: Int = 3,
       idCol: String = "doc_id", textCol: String = "text",
-      numBuckets: Int = BucketStateStore.DefaultNumBuckets,
+      numBuckets: Int = 0,
       processingTime: Option[String] = None,
       vacuumEvery: Int = 0, vacuumKeep: Int = 4): StreamingQuery = {
     val probeShingles = Dedup.shingleRows(probes, k, idCol, textCol)
@@ -237,7 +237,7 @@ object CurationPumps {
   def startAgreementPump(docsStream: DataFrame, stateDir: String,
       checkpointDir: String, gold: org.apache.spark.sql.Column,
       pred: org.apache.spark.sql.Column,
-      numBuckets: Int = BucketStateStore.DefaultNumBuckets,
+      numBuckets: Int = 0,
       processingTime: Option[String] = None,
       vacuumEvery: Int = 0, vacuumKeep: Int = 4): StreamingQuery =
     docsStream.writeStream
@@ -309,7 +309,7 @@ object CurationPumps {
   def startScorePump(docsStream: DataFrame, stateDir: String,
       checkpointDir: String, score: org.apache.spark.sql.Column,
       label: org.apache.spark.sql.Column,
-      numBuckets: Int = BucketStateStore.DefaultNumBuckets,
+      numBuckets: Int = 0,
       processingTime: Option[String] = None,
       vacuumEvery: Int = 0, vacuumKeep: Int = 4): StreamingQuery =
     docsStream.writeStream
@@ -376,7 +376,7 @@ object CurationPumps {
   def startDriftPump(docsStream: DataFrame, stateDir: String,
       checkpointDir: String, score: org.apache.spark.sql.Column,
       group: org.apache.spark.sql.Column,
-      numBuckets: Int = BucketStateStore.DefaultNumBuckets,
+      numBuckets: Int = 0,
       processingTime: Option[String] = None,
       vacuumEvery: Int = 0, vacuumKeep: Int = 4): StreamingQuery =
     docsStream.writeStream
@@ -629,7 +629,7 @@ object CurationPumps {
 
   def noveltyLeg(stateDir: String, k: Int = 3, idCol: String = "doc_id",
       textCol: String = "text",
-      numBuckets: Int = BucketStateStore.DefaultNumBuckets): MonitorLeg =
+      numBuckets: Int = 0): MonitorLeg =
     MonitorLeg("novelty", stateDir, (b, bid) =>
       mergeNoveltyBatch(b, stateDir, k, idCol, textCol, numBuckets, bid))
 
@@ -639,7 +639,7 @@ object CurationPumps {
     */
   def contaminationLeg(probes: DataFrame, stateDir: String, k: Int = 3,
       idCol: String = "doc_id", textCol: String = "text",
-      numBuckets: Int = BucketStateStore.DefaultNumBuckets): MonitorLeg = {
+      numBuckets: Int = 0): MonitorLeg = {
     val probeShingles = Dedup.shingleRows(probes, k, idCol, textCol)
       .select("shingle").distinct().localCheckpoint()
     MonitorLeg("contamination", stateDir, (b, bid) =>
@@ -649,31 +649,31 @@ object CurationPumps {
 
   def agreementLeg(stateDir: String, gold: org.apache.spark.sql.Column,
       pred: org.apache.spark.sql.Column,
-      numBuckets: Int = BucketStateStore.DefaultNumBuckets): MonitorLeg =
+      numBuckets: Int = 0): MonitorLeg =
     MonitorLeg("agreement", stateDir, (b, bid) =>
       mergeAgreementBatch(b, gold, pred, stateDir, numBuckets, bid))
 
   def scoreLeg(stateDir: String, score: org.apache.spark.sql.Column,
       label: org.apache.spark.sql.Column,
-      numBuckets: Int = BucketStateStore.DefaultNumBuckets): MonitorLeg =
+      numBuckets: Int = 0): MonitorLeg =
     MonitorLeg("score", stateDir, (b, bid) =>
       mergeScoreBatch(b, score, label, stateDir, numBuckets, bid))
 
   def driftLeg(stateDir: String, score: org.apache.spark.sql.Column,
       group: org.apache.spark.sql.Column,
-      numBuckets: Int = BucketStateStore.DefaultNumBuckets): MonitorLeg =
+      numBuckets: Int = 0): MonitorLeg =
     MonitorLeg("drift", stateDir, (b, bid) =>
       mergeDriftBatch(b, score, group, stateDir, numBuckets, bid))
 
   def jsdLeg(stateDir: String, group: org.apache.spark.sql.Column,
       text: org.apache.spark.sql.Column,
-      numBuckets: Int = BucketStateStore.DefaultNumBuckets): MonitorLeg =
+      numBuckets: Int = 0): MonitorLeg =
     MonitorLeg("jsd", stateDir, (b, bid) =>
       mergeJsdBatch(b, group, text, stateDir, numBuckets, bid))
 
   def ksMatrixLeg(stateDir: String, score: org.apache.spark.sql.Column,
       group: org.apache.spark.sql.Column,
-      numBuckets: Int = BucketStateStore.DefaultNumBuckets): MonitorLeg =
+      numBuckets: Int = 0): MonitorLeg =
     MonitorLeg("ksmatrix", stateDir, (b, bid) =>
       mergeKsMatrixBatch(b, score, group, stateDir, numBuckets, bid))
 
@@ -685,7 +685,7 @@ object CurationPumps {
     */
   def vocabLeg(stateDir: String, group: org.apache.spark.sql.Column,
       text: org.apache.spark.sql.Column,
-      numBuckets: Int = BucketStateStore.DefaultNumBuckets): MonitorLeg =
+      numBuckets: Int = 0): MonitorLeg =
     MonitorLeg("vocab", stateDir, (b, bid) =>
       mergeJsdBatch(b, group, text, stateDir, numBuckets, bid))
 
@@ -697,14 +697,14 @@ object CurationPumps {
   def classesLeg(stateDir: String,
       confMilliByClass: org.apache.spark.sql.Column,
       gold: org.apache.spark.sql.Column,
-      numBuckets: Int = BucketStateStore.DefaultNumBuckets): MonitorLeg =
+      numBuckets: Int = 0): MonitorLeg =
     MonitorLeg("classes", stateDir, (b, bid) =>
       mergeClassesBatch(b, confMilliByClass, gold, stateDir,
         numBuckets, bid))
 
   def embeddingDriftLeg(stateDir: String, groupCol: String = "label",
       vecCol: String = "embedding",
-      numBuckets: Int = BucketStateStore.DefaultNumBuckets): MonitorLeg =
+      numBuckets: Int = 0): MonitorLeg =
     MonitorLeg("embedding", stateDir, (b, bid) =>
       mergeEmbeddingDriftBatch(b, groupCol, vecCol, stateDir,
         numBuckets, bid))

@@ -37,7 +37,7 @@ object IncrementalAgg {
   def mergeBatch(batch: DataFrame, stateDir: String, keys: Seq[String],
       batchAgg: Seq[Column], mergeAgg: Seq[Column],
       batchId: Option[Long] = None,
-      numBuckets: Int = BucketStateStore.DefaultNumBuckets): Unit = {
+      numBuckets: Int = 0): Unit = {
     import org.apache.spark.sql.functions.col
     val partials = batch.groupBy(keys.map(col): _*).agg(
       batchAgg.head, batchAgg.tail: _*)
@@ -62,7 +62,7 @@ object IncrementalAgg {
   def start(feed: DataFrame, stateDir: String, checkpointDir: String,
       keys: Seq[String], batchAgg: Seq[Column], mergeAgg: Seq[Column],
       processingTime: Option[String] = None,
-      numBuckets: Int = BucketStateStore.DefaultNumBuckets): StreamingQuery = {
+      numBuckets: Int = 0): StreamingQuery = {
     val trigger = processingTime
       .map(Trigger.ProcessingTime(_))
       .getOrElse(Trigger.AvailableNow())

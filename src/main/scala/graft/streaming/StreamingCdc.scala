@@ -22,7 +22,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 object StreamingCdc {
 
   val BucketCol: String = BucketStateStore.BucketCol
-  val DefaultNumBuckets: Int = BucketStateStore.DefaultNumBuckets
 
   def currentVersion(spark: SparkSession, stateDir: String): Option[Long] =
     BucketStateStore.currentVersion(spark, stateDir)
@@ -91,7 +90,7 @@ object StreamingCdc {
     */
   def mergeIntoState(rawBatch: DataFrame, stateDir: String, pk: Seq[String],
       orderCols: Seq[String],
-      numBuckets: Int = DefaultNumBuckets): Unit = {
+      numBuckets: Int = 0): Unit = {
     val spark = rawBatch.sparkSession
     // expand PK-moving updates BEFORE deriving the state template:
     // normalization drops the transient `_before_<pk>` columns, which
@@ -138,7 +137,7 @@ object StreamingCdc {
     */
   def mergeMultiplexed(batch: DataFrame, stateRoot: String, pk: Seq[String],
       orderCols: Seq[String], routingCols: Seq[String] = Seq("db", "table"),
-      numBuckets: Int = DefaultNumBuckets,
+      numBuckets: Int = 0,
       pkFor: Map[String, Seq[String]] = Map.empty): Unit = {
     val tables = batch.select(routingCols.map(col): _*).distinct()
       .collect().map(r => routingCols.indices.map(r.getString))
@@ -170,7 +169,7 @@ object StreamingCdc {
       checkpointDir: String, pk: Seq[String], orderCols: Seq[String],
       routingCols: Seq[String] = Seq("db", "table"),
       processingTime: Option[String] = None,
-      numBuckets: Int = DefaultNumBuckets,
+      numBuckets: Int = 0,
       pkFor: Map[String, Seq[String]] = Map.empty,
       vacuumEvery: Int = 0, vacuumKeep: Int = 4): StreamingQuery = {
     val trigger = processingTime
@@ -204,7 +203,7 @@ object StreamingCdc {
   def start(feed: DataFrame, stateDir: String, checkpointDir: String,
       pk: Seq[String], orderCols: Seq[String],
       processingTime: Option[String] = None,
-      numBuckets: Int = DefaultNumBuckets,
+      numBuckets: Int = 0,
       vacuumEvery: Int = 0, vacuumKeep: Int = 4): StreamingQuery = {
     val trigger = processingTime
       .map(Trigger.ProcessingTime(_))
@@ -250,7 +249,7 @@ object StreamingCdc {
       tableSchemas: Map[String, org.apache.spark.sql.types.StructType],
       pk: Seq[String],
       processingTime: Option[String] = None,
-      numBuckets: Int = DefaultNumBuckets,
+      numBuckets: Int = 0,
       pkFor: Map[String, Seq[String]] = Map.empty,
       vacuumEvery: Int = 0, vacuumKeep: Int = 4): StreamingQuery = {
     import graft.cdc.DebeziumAdapter

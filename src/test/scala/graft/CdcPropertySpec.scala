@@ -1,8 +1,8 @@
 package graft
 
 import graft.cdc.CdcApplier
-import graft.streaming.StreamingCdc
-import org.apache.spark.sql.functions.col
+import graft.streaming.{BucketStateStore, IncrementalAgg, StreamingCdc}
+import org.apache.spark.sql.functions.{col, count, lit, sha2, sum}
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 import org.scalacheck.util.Pretty
@@ -15,7 +15,8 @@ import java.nio.file.Files
   * a time through `StreamingCdc.mergeIntoState`, lands on the state
   * `CdcApplier.replayCompact` computes over the whole feed in one
   * pass — the associativity the `CdcApplier` scaladoc claims, through
-  * the bucketed store at several bucket counts.
+  * the bucketed store at several bucket counts, and while the store
+  * grows by re-bucketing.
   */
 class CdcPropertySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -32,17 +33,18 @@ class CdcPropertySpec extends AnyFunSuite {
     * `_before_id` (occasionally the same key: a plain update in
     * before-image form); an update carries its own key or none.
     */
-  private val feedGen: Gen[Vector[Change]] = {
+  private def feedGen(keySpace: Long, minLen: Int,
+      maxLen: Int): Gen[Vector[Change]] = {
     val step = for {
       op <- Gen.frequency(3 -> "insert", 4 -> "update", 2 -> "delete",
         2 -> "move")
-      id <- Gen.choose(0L, KeySpace - 1)
-      from <- Gen.choose(0L, KeySpace - 1)
+      id <- Gen.choose(0L, keySpace - 1)
+      from <- Gen.choose(0L, keySpace - 1)
       withBefore <- Gen.oneOf(true, false)
       v <- Gen.choose(0L, 999L)
       dt <- Gen.choose(0L, 2L)
     } yield (op, id, from, withBefore, v, dt)
-    Gen.choose(1, 40).flatMap(Gen.listOfN(_, step)).map { steps =>
+    Gen.choose(minLen, maxLen).flatMap(Gen.listOfN(_, step)).map { steps =>
       val tss = steps.scanLeft(0L)(_ + _._6).tail
       steps.zip(tss).zipWithIndex.map {
         case (((op, id, from, withBefore, v, _), ts), i) => op match {
@@ -56,7 +58,7 @@ class CdcPropertySpec extends AnyFunSuite {
 
   /** A feed and the sorted, distinct interior points it is cut at. */
   private val splitFeedGen: Gen[(Vector[Change], Seq[Int])] = for {
-    feed <- feedGen
+    feed <- feedGen(KeySpace, 1, 40)
     cuts <- Gen.containerOf[Set, Int](Gen.choose(1, math.max(1, feed.size - 1)))
   } yield (feed, cuts.filter(_ < feed.size).toSeq.sorted)
 
@@ -90,6 +92,99 @@ class CdcPropertySpec extends AnyFunSuite {
         .withInitialSeed(Seed(20261017L + numBuckets))
       val result = Test.check(params, prop)
       assert(result.passed, Pretty.pretty(result))
+    }
+  }
+
+  /** A longer feed over many keys, so the state outgrows a few-kB
+    * bucket target, cut into at most 7 batches.
+    */
+  private val growthFeedGen: Gen[(Vector[Change], Seq[Int])] = for {
+    feed <- feedGen(500L, 200, 300)
+    n <- Gen.choose(2, 6)
+    cuts <- Gen.listOfN(n, Gen.choose(1, feed.size - 1))
+  } yield (feed, cuts.distinct.sorted)
+
+  /** 128 hex characters per row that do not compress, so the state's
+    * bytes follow its row count.
+    */
+  private def padded(df: org.apache.spark.sql.DataFrame) =
+    df.withColumn("pad", sha2(col("v").cast("string"), 512))
+
+  test("a growing store re-buckets: state equals replayCompact, bucket " +
+    "counts double, recorded sizes match, history reads") {
+    StoreManifest.withTarget(spark, "4k") {
+      val prop = Prop.forAllNoShrink(growthFeedGen) { case (feed, cuts) =>
+        val stateDir = Files.createTempDirectory("graft_cdc_grow").toString
+        val template = padded(rows(feed)).drop("op", "_before_id")
+        val bounds = (0 +: cuts) :+ feed.size
+        val batches = bounds.zip(bounds.tail)
+        val problems = scala.collection.mutable.ArrayBuffer.empty[String]
+        var k = 1
+        var prior = Seq.empty[Seq[Any]]
+        def step(from: Int, until: Int): Unit = {
+          StreamingCdc.mergeIntoState(padded(rows(feed.slice(from, until))),
+            stateDir, Seq("id"), Seq("ts", "seq"), numBuckets = 1)
+          val m = StoreManifest.current(spark, stateDir)
+          val v = BucketStateStore.currentVersion(spark, stateDir).get
+          if (!StoreManifest.isPowerOfTwo(m.numBuckets) || m.numBuckets < k)
+            problems += s"v$v: numBuckets ${m.numBuckets} after $k"
+          if (m.numBuckets != k && v > 0) {
+            val old = sorted(BucketStateStore.stateAt(spark, stateDir, template, v - 1))
+            if (old != prior) problems += s"v${v - 1} reads $old, was $prior"
+          }
+          k = m.numBuckets
+          m.buckets.foreach { case (b, bv) =>
+            val lens = StoreManifest.files(stateDir, b, bv).map(_.length)
+            if (lens != Seq(m.bytes(b)))
+              problems += s"v$v bucket $b records ${m.bytes(b)}, files $lens"
+          }
+          prior = sorted(StreamingCdc.currentState(spark, stateDir, template))
+          val want = sorted(CdcApplier.replayCompact(rows(feed.take(until)),
+            Seq("id"), Seq(col("ts"), col("seq"))))
+          if (prior != want) problems += s"v$v: state $prior != replay $want"
+        }
+        batches.foreach { case (from, until) => step(from, until) }
+        // a replayed batch is a state no-op, so re-merging the last one
+        // lets a store that outgrew its buckets late double twice
+        Iterator.fill(3)(batches.last).takeWhile(_ => k < 4)
+          .foreach { case (from, until) => step(from, until) }
+        if (k < 4) problems += s"the store ended at $k buckets"
+        Prop(problems.isEmpty) :| s"feed=$feed cuts=$cuts ${problems.mkString("; ")}"
+      }
+      val params = Test.Parameters.default
+        .withMinSuccessfulTests(6)
+        .withInitialSeed(Seed(20261017L))
+      val result = Test.check(params, prop)
+      assert(result.passed, Pretty.pretty(result))
+    }
+  }
+
+  test("an IncrementalAgg batch replayed right after a re-bucket is fenced") {
+    import spark.implicits._
+    val stateDir = Files.createTempDirectory("graft_agg_grow").toString
+    val batch = (0L until 400L).map(i => (i, i)).toDF("k", "x")
+    val batchAgg = Seq(count(lit(1)).as("n"), sum(col("x")).as("s"))
+    val mergeAgg = Seq(sum(col("n")).as("n"), sum(col("s")).as("s"))
+    def fold(bid: Long): Unit = IncrementalAgg.mergeBatch(batch, stateDir,
+      Seq("k"), batchAgg, mergeAgg, batchId = Some(bid), numBuckets = 1)
+    def totals: (Long, Long) = IncrementalAgg.current(spark, stateDir,
+        batch.groupBy("k").agg(batchAgg.head, batchAgg.tail: _*))
+      .agg(sum("n"), sum("s")).as[(Long, Long)].head()
+    StoreManifest.withTarget(spark, "4k") {
+      fold(0L)
+      assert(StoreManifest.current(spark, stateDir).numBuckets == 1)
+      fold(1L) // 400 keys outgrow one 4 kB bucket: this merge re-buckets
+      val grown = StoreManifest.current(spark, stateDir).numBuckets
+      assert(grown > 1, "the second fold should re-bucket")
+      val v = BucketStateStore.currentVersion(spark, stateDir)
+      fold(1L) // crash-replay of the re-bucketing batch
+      assert(BucketStateStore.currentVersion(spark, stateDir) == v,
+        "a fenced replay publishes nothing")
+      assert(totals == (800L, 2L * (0L until 400L).sum),
+        "the replay must not double-count")
+      fold(2L)
+      assert(totals == (1200L, 3L * (0L until 400L).sum))
+      assert(StoreManifest.current(spark, stateDir).numBuckets >= grown)
     }
   }
 }

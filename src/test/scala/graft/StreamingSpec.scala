@@ -439,11 +439,13 @@ class StreamingCdcSpec extends AnyFunSuite {
     assert(batches.size >= 3, "need several versions to vacuum")
     // first merge spreads keys across many buckets; later merges touch
     // only user_id=0's bucket, so v0 stays referenced by every manifest
-    StreamingCdc.mergeIntoState(batches.head, s"$root/state", pk, orderCols)
+    StreamingCdc.mergeIntoState(batches.head, s"$root/state", pk, orderCols,
+      numBuckets = 64)
     val touchOne = feed.filter(col("user_id") === 0)
     assert(touchOne.count() > 0, "fixture must have user_id 0")
     (1 to 3).foreach(_ =>
-      StreamingCdc.mergeIntoState(touchOne, s"$root/state", pk, orderCols))
+      StreamingCdc.mergeIntoState(touchOne, s"$root/state", pk, orderCols,
+        numBuckets = 64))
     StreamingCdc.vacuum(spark, s"$root/state", keep = 2)
     val dirs = new java.io.File(s"$root/state").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("v"))
@@ -466,7 +468,8 @@ class StreamingCdcSpec extends AnyFunSuite {
   test("a merge rewrites only touched buckets; untouched bucket files are byte-identical") {
     val root = Files.createTempDirectory("graft_bucketed").toString
     val months = ChangeFeed.timeBatches(feed, "week")
-    StreamingCdc.mergeIntoState(months.head, s"$root/state", pk, orderCols)
+    StreamingCdc.mergeIntoState(months.head, s"$root/state", pk, orderCols,
+      numBuckets = 64)
     // snapshot every v0 bucket file's bytes
     def bucketFiles(v: String): Map[String, Array[Byte]] = {
       val base = new java.io.File(s"$root/state/$v")
@@ -482,7 +485,8 @@ class StreamingCdcSpec extends AnyFunSuite {
 
     // second merge touches exactly one key → one bucket
     val oneKey = feed.filter(col("user_id") === 0)
-    StreamingCdc.mergeIntoState(oneKey, s"$root/state", pk, orderCols)
+    StreamingCdc.mergeIntoState(oneKey, s"$root/state", pk, orderCols,
+      numBuckets = 64)
 
     val v0After = bucketFiles("v0")
     assert(v0After.keySet == v0Before.keySet,
@@ -517,9 +521,9 @@ class StreamingCdcSpec extends AnyFunSuite {
     // the second merge keeps most rows of every touched bucket: its
     // state side is read by several scan tasks, its changes by another
     StreamingCdc.mergeIntoState(changes(1, 0, "insert"), s"$root/state",
-      Seq("id"), Seq("ts"))
+      Seq("id"), Seq("ts"), numBuckets = 64)
     StreamingCdc.mergeIntoState(changes(10, 1, "update"), s"$root/state",
-      Seq("id"), Seq("ts"))
+      Seq("id"), Seq("ts"), numBuckets = 64)
     Seq(0L, 1L).foreach { v =>
       assert(bucketDirs(v).size > 1, s"v$v should write several buckets")
       bucketDirs(v).foreach { d =>
