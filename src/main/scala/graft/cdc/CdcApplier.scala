@@ -80,6 +80,22 @@ object CdcApplier {
     Seq(pass, dels, ins).map(_.drop(beforeCols: _*)).reduce(_ unionByName _)
   }
 
+  /** One row per key: the batch's last change to that key (key moves
+    * expanded first), `op` kept. `last` is one window per key over the
+    * (small) batch.
+    */
+  def lastPerKey(batch: DataFrame, pk: Seq[String],
+      orderCols: Seq[Column]): DataFrame =
+    Transforms.replacingFinal(pk, orderCols)(normalizePkChanges(batch, pk))
+
+  /** Apply a batch already reduced by [[lastPerKey]]: state rows of
+    * the touched keys go, the non-delete changes come in.
+    */
+  def applyLast(state: DataFrame, last: DataFrame, pk: Seq[String]): DataFrame =
+    state
+      .join(last.select(pk.map(col): _*), pk, "left_anti")
+      .unionByName(last.filter(col(OpCol) =!= "delete").drop(OpCol))
+
   /** Apply one change batch to a state snapshot.
     *
     * Scale shape: `last` is one window per key over the (small)
@@ -91,15 +107,8 @@ object CdcApplier {
     * AQE falls back to a shuffle join instead.
     */
   def applyBatch(state: DataFrame, batch: DataFrame, pk: Seq[String],
-      orderCols: Seq[Column]): DataFrame = {
-    val last = Transforms.replacingFinal(pk, orderCols)(
-      normalizePkChanges(batch, pk))
-    val survivors = last.filter(col(OpCol) =!= "delete").drop(OpCol)
-    val touchedKeys = last.select(pk.map(col): _*)
-    state
-      .join(touchedKeys, pk, "left_anti")
-      .unionByName(survivors)
-  }
+      orderCols: Seq[Column]): DataFrame =
+    applyLast(state, lastPerKey(batch, pk, orderCols), pk)
 
   /** Fold a time-ordered sequence of batches over an initial state.
     * Each batch must wholly precede the next in `orderCols` order
@@ -130,7 +139,7 @@ object CdcApplier {
     */
   def replayCompact(feed: DataFrame, pk: Seq[String],
       orderCols: Seq[Column]): DataFrame =
-    Transforms.replacingFinal(pk, orderCols)(normalizePkChanges(feed, pk))
+    lastPerKey(feed, pk, orderCols)
       .filter(col(OpCol) =!= "delete")
       .drop(OpCol)
 }

@@ -61,10 +61,13 @@ object StreamingCdc {
         }
   }
 
-  /** Merge one CDC batch and publish the next version, rewriting
-    * ONLY the key-buckets the batch touches. Idempotent for a
-    * replayed batch: last-write-wins per key means re-applying the
-    * same changes to the already-merged buckets is a no-op.
+  /** Merge one CDC batch and publish the next version, writing ONLY
+    * the key-buckets the batch touches. The batch is resolved once to
+    * its last change per key; the store writes that as a run per
+    * touched bucket, or folds it into the bases (see
+    * [[BucketStateStore.merge]]). Idempotent for a replayed batch:
+    * last-write-wins per key means re-applying the same changes to the
+    * already-merged buckets is a no-op.
     *
     * Schema drift follows the [[graft.migrate.SchemaDrift]] contract
     * (the same one `remigrate` applies to snapshots): ADDITIVE feed
@@ -116,8 +119,12 @@ object StreamingCdc {
     }
     if (BucketStateStore.currentVersion(spark, stateDir).isEmpty)
       recordFirstRow(batch, stateDir, orderCols)
-    BucketStateStore.merge(batch, stateDir, pk, template, numBuckets) {
-      (state, b) => CdcApplier.applyBatch(state, b, pk, orderCols.map(col))
+    // resolved once: the store writes it as a run, or applies it to
+    // the touched buckets' state when it writes bases
+    val last = CdcApplier.lastPerKey(batch, pk, orderCols.map(col))
+    BucketStateStore.merge(last, stateDir, pk, template, numBuckets,
+        tombstone = Some(col(CdcApplier.OpCol) === "delete")) {
+      (state, b) => CdcApplier.applyLast(state, b, pk)
     }
   }
 
@@ -196,9 +203,12 @@ object StreamingCdc {
     * Trigger.AvailableNow); `Some(interval)` maps `--src-wait` +
     * `--nice-pause` (stay up, batch on a cadence —
     * Trigger.ProcessingTime), per SURVEY §2.10 T4. `vacuumEvery > 0`
-    * retires old state versions every N batches — a long-running
-    * copy-on-write pump without vacuum accumulates dead bucket
-    * copies without bound.
+    * folds pending runs into their bases and retires old state
+    * versions every N batches, inside the pump's own batch (vacuum is
+    * a writer) — a long-running copy-on-write pump without vacuum
+    * accumulates dead bucket copies without bound. Without a cadence
+    * the merges still fold each run once it passes a quarter of its
+    * base.
     */
   def start(feed: DataFrame, stateDir: String, checkpointDir: String,
       pk: Seq[String], orderCols: Seq[String],

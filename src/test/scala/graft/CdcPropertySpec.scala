@@ -159,6 +159,84 @@ class CdcPropertySpec extends AnyFunSuite {
     }
   }
 
+  /** A feed over 60 keys cut into batches, and after each batch either
+    * no vacuum or a vacuum keeping 1 to 3 versions.
+    */
+  private val compactionFeedGen: Gen[(Vector[Change], Seq[Int], Seq[Option[Int]])] = for {
+    feed <- feedGen(60L, 20, 80)
+    n <- Gen.choose(2, 7)
+    cuts <- Gen.listOfN(n, Gen.choose(1, feed.size - 1))
+    vacuums <- Gen.listOfN(n + 1,
+      Gen.frequency(2 -> Gen.const(None), 1 -> Gen.choose(1, 3).map(Some(_))))
+  } yield (feed, cuts.distinct.sorted, vacuums)
+
+  // events the compaction property must have seen, per bucket count
+  private val seen = scala.collection.mutable.Map.empty[(Int, String), Int]
+
+  Seq(1 -> "8k", 4 -> "2k", 64 -> "1k").foreach { case (numBuckets, target) =>
+    test(s"random compaction points: every retained version equals replayCompact " +
+      s"of its prefix at numBuckets=$numBuckets") {
+      StoreManifest.withTarget(spark, target) {
+        val prop = Prop.forAllNoShrink(compactionFeedGen) { case (feed, cuts, vacuums) =>
+          val stateDir = Files.createTempDirectory("graft_cdc_compact").toString
+          val template = padded(rows(feed)).drop("op", "_before_id")
+          val bounds = (0 +: cuts) :+ feed.size
+          val replays = scala.collection.mutable.Map.empty[Int, Seq[Seq[Any]]]
+          def replay(n: Int) = replays.getOrElseUpdate(n, sorted(
+            CdcApplier.replayCompact(rows(feed.take(n)), Seq("id"),
+              Seq(col("ts"), col("seq")))))
+          val prefixOf = scala.collection.mutable.Map.empty[Long, Int]
+          val problems = scala.collection.mutable.ArrayBuffer.empty[String]
+          def version = BucketStateStore.currentVersion(spark, stateDir).get
+          def check(what: String): Unit = {
+            val v = version
+            val cur = sorted(StreamingCdc.currentState(spark, stateDir, template))
+            if (cur != replay(prefixOf(v))) problems += s"$what: current v$v $cur"
+            BucketStateStore.availableVersions(spark, stateDir).foreach { rv =>
+              val got = sorted(BucketStateStore.stateAt(spark, stateDir, template, rv))
+              if (got != replay(prefixOf(rv))) problems += s"$what: v$rv reads $got"
+            }
+          }
+          def note(event: String): Unit =
+            seen.synchronized(seen((numBuckets, event)) = seen.getOrElse((numBuckets, event), 0) + 1)
+          bounds.zip(bounds.tail).zip(vacuums).foreach { case ((from, until), vac) =>
+            val before = BucketStateStore.currentVersion(spark, stateDir)
+              .map(StoreManifest.lines(stateDir, _)).getOrElse(Nil)
+            val pending = before.filter(_.startsWith("run."))
+              .map(_.stripPrefix("run.").split('=')(0).toInt).toSet
+            StreamingCdc.mergeIntoState(padded(rows(feed.slice(from, until))),
+              stateDir, Seq("id"), Seq("ts", "seq"), numBuckets)
+            val v = version
+            prefixOf(v) = until
+            val after = StoreManifest.at(stateDir, v)
+            if (pending.nonEmpty && before.head != s"numBuckets=${after.numBuckets}")
+              note("re-bucket")
+            else if (after.buckets.exists { case (b, bv) => bv == v && pending(b) })
+              note("threshold")
+            check(s"after merge to $until")
+            vac.foreach { keep =>
+              val v = version
+              BucketStateStore.vacuum(spark, stateDir, keep)
+              if (version != v) { prefixOf(version) = until; note("vacuum") }
+              check(s"after vacuum($keep) at $until")
+            }
+          }
+          Prop(problems.isEmpty) :|
+            s"feed=$feed cuts=$cuts vacuums=$vacuums ${problems.mkString("; ")}"
+        }
+        val params = Test.Parameters.default
+          .withMinSuccessfulTests(8)
+          .withInitialSeed(Seed(20261018L + numBuckets))
+        val result = Test.check(params, prop)
+        assert(result.passed, Pretty.pretty(result))
+      }
+      Seq("threshold", "re-bucket", "vacuum").foreach { e =>
+        assert(seen.getOrElse((numBuckets, e), 0) > 0,
+          s"no $e compaction while a run was pending: $seen")
+      }
+    }
+  }
+
   test("an IncrementalAgg batch replayed right after a re-bucket is fenced") {
     import spark.implicits._
     val stateDir = Files.createTempDirectory("graft_agg_grow").toString

@@ -414,23 +414,36 @@ class StreamingCdcSpec extends AnyFunSuite {
   test("vacuum retires old versions but keeps the readable tail") {
     val root = Files.createTempDirectory("graft_vacuum").toString
     val batches = ChangeFeed.timeBatches(feed, "week")
-    // numBuckets=1: every merge rewrites the lone bucket, so each
-    // version dir is referenced only by its own manifest and the
-    // vacuum outcome is exactly the pre-bucketing contract (newest
-    // `keep` version dirs survive, older ones go).
+    // numBuckets=1: one bucket, so a manifest names one base dir and at
+    // most one run dir. On this small fixture a merge after a base write
+    // writes a run and the next one folds it (it passes a quarter of
+    // the base), so re-applying the last batch (a state no-op) within
+    // two merges leaves a run pending; vacuum folds it into a new base
+    // version, and the newest `keep` manifests are then that version's
+    // and the last merge's
     batches.foreach(b =>
       StreamingCdc.mergeIntoState(b, s"$root/state", pk, orderCols,
         numBuckets = 1))
+    def pending = StoreManifest.lines(s"$root/state",
+      StreamingCdc.currentVersion(spark, s"$root/state").get).filter(_.startsWith("run."))
+    Iterator.fill(2)(batches.last).takeWhile(_ => pending.isEmpty).foreach(b =>
+      StreamingCdc.mergeIntoState(b, s"$root/state", pk, orderCols, numBuckets = 1))
     val v = StreamingCdc.currentVersion(spark, s"$root/state").get
     assert(v >= 2, "need several versions to vacuum")
+    assert(pending == Seq(s"run.0=$v"), "the last merge writes a run")
+    val base = StoreManifest.at(s"$root/state", v).buckets(0)
     StreamingCdc.vacuum(spark, s"$root/state", keep = 2)
+    assert(StreamingCdc.currentVersion(spark, s"$root/state").contains(v + 1),
+      "vacuum publishes the folded run as one new version")
+    assert(!StoreManifest.lines(s"$root/state", v + 1).exists(_.startsWith("run.")))
+    assert(graft.streaming.BucketStateStore.availableVersions(spark, s"$root/state")
+      == Seq(v, v + 1))
     val dirs = new java.io.File(s"$root/state").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("v"))
       .map(_.getName).toSet
-    assert(dirs == Set(s"v$v", s"v${v - 1}"), s"got $dirs")
-    // current state still reads
-    assert(StreamingCdc.currentState(spark, s"$root/state", feed.drop("op"))
-      .count() > 0)
+    assert(dirs == Set(s"v${v + 1}", s"v$v", s"v$base"), s"got $dirs")
+    // current state still reads, and is the whole feed's replay
+    assert(stateKeys(s"$root/state").sameElements(batchAnswer))
   }
 
   test("vacuum keeps old version dirs that still hold live (untouched) buckets") {
@@ -446,17 +459,26 @@ class StreamingCdcSpec extends AnyFunSuite {
     (1 to 3).foreach(_ =>
       StreamingCdc.mergeIntoState(touchOne, s"$root/state", pk, orderCols,
         numBuckets = 64))
+    val v = StreamingCdc.currentVersion(spark, s"$root/state").get
+    assert(v == 3)
     StreamingCdc.vacuum(spark, s"$root/state", keep = 2)
+    // the merges left user_id=0's bucket with a run, which vacuum folds
+    // into a new version v4; keep=2 then retains manifests v3 and v4,
+    // and exactly the version dirs they name as a base or a run
+    assert(StreamingCdc.currentVersion(spark, s"$root/state").contains(4L))
+    val named = Seq(3L, 4L).flatMap(StoreManifest.lines(s"$root/state", _))
+      .filter(l => l.matches("""(run\.)?\d+=\d+"""))
+      .map(l => s"v${l.split('=')(1)}").toSet
     val dirs = new java.io.File(s"$root/state").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("v"))
       .map(_.getName).toSet
+    assert(dirs == named, s"kept $dirs, retained manifests name $named")
     assert(dirs.contains("v0"),
       s"v0 holds untouched live buckets and must survive vacuum; got $dirs")
-    // keep=2 at v=3 retains the v2/v3 window (readers at version 2 are
-    // protected); v1 is older, held only user_id=0's bucket, and was
-    // superseded — it must be gone
+    // v1 held only user_id=0's bucket and was superseded before the
+    // retained window: it must be gone
     assert(!dirs.contains("v1"), s"v1 is unreferenced and pre-window: $dirs")
-    assert(dirs.contains("v2") && dirs.contains("v3"), s"keep window: $dirs")
+    assert(dirs.contains("v3") && dirs.contains("v4"), s"keep window: $dirs")
     // state after vacuum must still be the correct merge
     val expected = CdcApplier.replayCompact(
       batches.head.unionByName(touchOne), pk, orderCols.map(col))
@@ -499,6 +521,16 @@ class StreamingCdcSpec extends AnyFunSuite {
       .filter(_.getName.startsWith("graft_bucket=")).map(_.getName).toSet
     assert(v1Dirs.size == 1,
       s"single-key batch must write exactly one bucket, got $v1Dirs")
+    // a CDC merge writes that bucket as a run: every base stays the v0
+    // file, and the one v1 dir is the one run the manifest names
+    val v0 = StoreManifest.at(s"$root/state", 0L)
+    val v1 = StoreManifest.lines(s"$root/state", 1L)
+    assert(StoreManifest.at(s"$root/state", 1L).buckets == v0.buckets,
+      s"every base must stay in v0: $v1")
+    val runs = v1.filter(_.startsWith("run."))
+    assert(runs.map(_.stripPrefix("run.")) ==
+      v1Dirs.toSeq.map(d => s"${d.stripPrefix("graft_bucket=")}=1"),
+      s"exactly the written bucket is a run: $v1")
     // and the combined state is still the correct merge
     val expected = CdcApplier.replayCompact(
       months.head.unionByName(oneKey), pk, orderCols.map(col))
@@ -539,6 +571,20 @@ class StreamingCdcSpec extends AnyFunSuite {
     }
     assert(entries.size > 1 && referenced.size == entries.size,
       s"${entries.size} buckets referenced by ${referenced.size} files")
+    // v1 wrote runs: each run the manifest names is one parquet file,
+    // and so is each base vacuum folds them into (v2)
+    val runs = scala.io.Source.fromFile(s"$root/state/manifest/v1")
+      .getLines().map(_.trim).filter(_.startsWith("run.")).toSeq
+    assert(runs.size == bucketDirs(1L).size, s"v1 names $runs")
+    runs.foreach { r =>
+      val Array(b, bv) = r.stripPrefix("run.").split('=')
+      assert(bv == "1" && parquetFiles(s"$root/state/v1/graft_bucket=$b").size == 1, r)
+    }
+    StreamingCdc.vacuum(spark, s"$root/state", keep = 3)
+    assert(bucketDirs(2L).size == runs.size)
+    bucketDirs(2L).foreach { d =>
+      assert(parquetFiles(d.getPath).size == 1, s"v2/${d.getName}")
+    }
   }
 
   test("version pointer survives torn-write-free publish") {
