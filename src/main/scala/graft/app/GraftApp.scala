@@ -941,8 +941,22 @@ object GraftApp {
     // resident runs keep folding on the nice-pause cadence — state is
     // then read live via --state-dir/--state-export or the library
     // report faces.
+    //
+    // Every pump here is a CurationPumps monitor: each --*-pump flag is
+    // a one-leg monitor with its own reader, state dir and checkpoint;
+    // --pumps=<leg,...> is ONE reader, ONE checkpoint, one foreachBatch
+    // folding every listed census from a single pass over each arriving
+    // file (N one-leg pumps on one feed = N readers + N× ingest I/O).
+    // Legs share the dials: --dedup-k / --contamination-k /
+    // --agreement-gold / --agreement-pred / --score-col / --score-label
+    // / --drift-col / --overlap-group-col; the contamination leg grades
+    // against --contamination-pump=<dir> (flag) or --probe-dir
+    // (--pumps), and the embedding leg reads --embedding-col grouped by
+    // --overlap-group-col (for an embeddings-style table). Each leg
+    // keeps its own batch-id fence, so a crash between two legs' merges
+    // replays safely (CurationPumpsSpec).
     val curationPumps: Seq[Curation] = {
-      import org.apache.spark.sql.functions.col
+      import org.apache.spark.sql.functions.{col, lit, when}
       import graft.streaming.{BucketStateStore, CurationPumps}
       def tableStream(t: String) = {
         val schema = Tables.load(spark, c.srcDir, t).schema
@@ -958,264 +972,132 @@ object GraftApp {
         else reader.option("pathGlobFilter", new java.io.File(p).getName)
           .parquet(c.srcDir)
       }
-      val cadence = if (stayUp(c)) Some(c.nicePause) else None
-      val vacEvery = vacuumCadence(c)
-      def drainAndReport(t: String, mode: String, stateDir: String,
-          q: org.apache.spark.sql.streaming.StreamingQuery,
-          report: () => org.apache.spark.sql.DataFrame,
-          out: String): Curation = {
-        q.awaitTermination()
-        report().write.mode("overwrite").parquet(out)
-        val stateRows = BucketStateStore.currentVersion(spark, stateDir)
-          .map(v => BucketStateStore.stateAtInferred(spark, stateDir, v)
-            .count()).getOrElse(0L)
-        Curation(t, mode, stateRows, spark.read.parquet(out).count(), out)
-      }
-      val noveltyPumpRuns =
-        if (!c.noveltyPump) Nil
-        else tables.map { t =>
-          val stateDir = s"${c.dstDir}/${dstNameFor(t)}_novelty_state"
-          val q = CurationPumps.startNoveltyPump(tableStream(t), stateDir,
-            s"${c.dstDir}/_ckpt_novelty_$t", k = c.dedupK,
-            idCol = c.docIdCol, textCol = c.textCol,
-            processingTime = cadence,
-            vacuumEvery = vacEvery, vacuumKeep = c.vacuumKeep)
-          drainAndReport(t, "novelty-pump", stateDir, q,
-            () => CurationPumps.noveltyReport(spark, stateDir,
-              Tables.load(spark, c.srcDir, t), k = c.dedupK,
-              idCol = c.docIdCol, textCol = c.textCol),
-            s"${c.dstDir}/${dstNameFor(t)}_novelty_pump.parquet")
-        }
-      val contaminationPumpRuns = c.contaminationPump match {
-        case None => Nil
-        case Some(probeDir) =>
-          val probes = spark.read.parquet(probeDir)
-          tables.map { t =>
-            val stateDir = s"${c.dstDir}/${dstNameFor(t)}_contamination_state"
-            val q = CurationPumps.startContaminationPump(tableStream(t),
-              probes, stateDir, s"${c.dstDir}/_ckpt_contamination_$t",
-              k = c.contaminationK, idCol = c.docIdCol, textCol = c.textCol,
-              processingTime = cadence,
-              vacuumEvery = vacEvery, vacuumKeep = c.vacuumKeep)
-            drainAndReport(t, "contamination-pump", stateDir, q,
-              () => CurationPumps.contaminationVerdicts(spark, stateDir),
-              s"${c.dstDir}/${dstNameFor(t)}_contamination_pump.parquet")
-          }
-      }
-      val agreementPumpRuns =
-        if (!c.agreementPump) Nil
-        else {
-          val preds = c.agreementPred
-            .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-          require(preds.sizeIs <= 1,
-            "--agreement-pump grades ONE labeler against gold (the " +
-              "durable census is a pairwise confusion matrix); a panel " +
-              s"got ${preds.size} predictions — use batch " +
-              "--agreement-report for Fleiss' kappa")
-          val pred = preds.headOption.map(col).getOrElse(
-            graft.text.TextAnalysis.langId(col(c.textCol),
-              graft.text.TextAnalysis.defaultProfiles))
-          tables.map { t =>
-            val stateDir = s"${c.dstDir}/${dstNameFor(t)}_agreement_state"
-            val q = CurationPumps.startAgreementPump(tableStream(t),
-              stateDir, s"${c.dstDir}/_ckpt_agreement_$t",
-              gold = col(c.agreementGold), pred = pred,
-              processingTime = cadence,
-              vacuumEvery = vacEvery, vacuumKeep = c.vacuumKeep)
-            drainAndReport(t, "agreement-pump", stateDir, q,
-              () => CurationPumps.agreementReport(spark, stateDir),
-              s"${c.dstDir}/${dstNameFor(t)}_agreement_pump.parquet")
-          }
-        }
-      // --score-pump: the resident face of --score-report — each
-      // arriving document's (quantized score, 0/1 label) folds into
-      // a durable per-score census, and the drained ROC-AUC must
-      // equal the batch scan's (additive counts; q176's contract).
-      // Same score/label defaults as --score-report.
-      val scorePumpRuns =
-        if (!c.scorePump) Nil
-        else {
-          val score = c.scoreCol.map(col).getOrElse(
-            org.apache.spark.sql.functions.size(
-              org.apache.spark.sql.functions.filter(
-                graft.text.TextAnalysis.tokens(col(c.textCol)),
-                tok => tok === "the" || tok === "a")))
-          val label = c.scoreLabel.map(col).getOrElse(
-            org.apache.spark.sql.functions.when(
-              col(c.agreementGold) === c.scorePositive,
-              org.apache.spark.sql.functions.lit(1L))
-              .otherwise(org.apache.spark.sql.functions.lit(0L)))
-          tables.map { t =>
-            val stateDir = s"${c.dstDir}/${dstNameFor(t)}_score_state"
-            val q = CurationPumps.startScorePump(tableStream(t),
-              stateDir, s"${c.dstDir}/_ckpt_score_$t",
-              score = score, label = label, processingTime = cadence,
-              vacuumEvery = vacEvery, vacuumKeep = c.vacuumKeep)
-            drainAndReport(t, "score-pump", stateDir, q,
-              () => CurationPumps.scoreAuc(spark, stateDir),
-              s"${c.dstDir}/${dstNameFor(t)}_score_pump.parquet")
-          }
-        }
-      // --drift-pump: the resident face of --drift-report — each
-      // arriving document's (quantized --drift-col, slice membership)
-      // folds into a durable two-population census; the drained KS
-      // must equal the batch scan's (additive census; q179's
-      // contract). Same split defaults as --drift-report.
-      val driftPumpRuns =
-        if (!c.driftPump) Nil
-        else tables.map { t =>
-          val group = org.apache.spark.sql.functions.when(
-            col(c.overlapGroupCol) === c.driftGroupVal,
-            org.apache.spark.sql.functions.lit(1L))
-            .otherwise(org.apache.spark.sql.functions.lit(0L))
-          val stateDir = s"${c.dstDir}/${dstNameFor(t)}_drift_state"
-          val q = CurationPumps.startDriftPump(tableStream(t),
-            stateDir, s"${c.dstDir}/_ckpt_drift_$t",
-            score = col(c.driftCol), group = group,
-            processingTime = cadence,
-            vacuumEvery = vacEvery, vacuumKeep = c.vacuumKeep)
-          drainAndReport(t, "drift-pump", stateDir, q,
-            () => CurationPumps.driftKs(spark, stateDir),
-            s"${c.dstDir}/${dstNameFor(t)}_drift_pump.parquet")
-        }
-      // --pumps=<leg,...>: the UNIFIED monitor — ONE reader over the
-      // table's directory, ONE checkpoint, one foreachBatch folding
-      // every listed census from a single pass over each arriving
-      // file (the standalone --*-pump flags each run their own
-      // reader: N pumps on one feed = N readers + N× ingest I/O; the
-      // monitor is what a deployment watching several censuses runs).
-      // Legs reuse the standalone pumps' dials: --dedup-k /
-      // --contamination-k / --agreement-gold / --agreement-pred /
-      // --score-col / --score-label / --drift-col /
-      // --overlap-group-col; the contamination leg grades against
-      // --probe-dir, and the embedding leg reads --embedding-col
-      // grouped by --overlap-group-col (for an embeddings-style
-      // table). Per-leg state dirs live under one _monitor_state
-      // root; each leg keeps its own batch-id fence, so a crash
-      // between two legs' merges replays safely (CurationPumpsSpec).
+      val flagLegs = Seq("novelty" -> c.noveltyPump,
+        "contamination" -> c.contaminationPump.isDefined,
+        "agreement" -> c.agreementPump, "score" -> c.scorePump,
+        "drift" -> c.driftPump).collect { case (leg, true) => leg }
       val monitorLegNames = Set("novelty", "contamination", "agreement",
         "score", "drift", "ksmatrix", "jsd", "vocab", "embedding",
         "classes")
-      val monitorRuns =
-        if (c.pumps.isEmpty) Nil
-        else {
-          val bad = c.pumps.filterNot(monitorLegNames)
-          require(bad.isEmpty, s"--pumps: unknown census legs " +
-            s"${bad.mkString(",")} (known: " +
-            s"${monitorLegNames.toSeq.sorted.mkString(",")})")
-          require(c.pumps.distinct.size == c.pumps.size,
-            s"--pumps: duplicate legs in ${c.pumps.mkString(",")}")
-          require(!c.pumps.contains("contamination") || c.probeDir.isDefined,
-            "--pumps=contamination needs --probe-dir=<parquet dir of " +
-              "probe documents>")
-          require(!c.pumps.contains("classes") || c.scoreClasses.isDefined,
-            "--pumps=classes needs --score-classes=<per-class " +
-              "probability map column>")
-          val preds = c.agreementPred
-            .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-          require(!c.pumps.contains("agreement") || preds.sizeIs <= 1,
-            "the monitor's agreement leg grades ONE labeler against " +
-              "gold — use batch --agreement-report for a panel")
-          val pred = preds.headOption.map(col).getOrElse(
-            graft.text.TextAnalysis.langId(col(c.textCol),
-              graft.text.TextAnalysis.defaultProfiles))
-          val score = c.scoreCol.map(col).getOrElse(
-            org.apache.spark.sql.functions.size(
-              org.apache.spark.sql.functions.filter(
-                graft.text.TextAnalysis.tokens(col(c.textCol)),
-                tok => tok === "the" || tok === "a")))
-          val label = c.scoreLabel.map(col).getOrElse(
-            org.apache.spark.sql.functions.when(
-              col(c.agreementGold) === c.scorePositive,
-              org.apache.spark.sql.functions.lit(1L))
-              .otherwise(org.apache.spark.sql.functions.lit(0L)))
-          val driftGroup = org.apache.spark.sql.functions.when(
-            col(c.overlapGroupCol) === c.driftGroupVal,
-            org.apache.spark.sql.functions.lit(1L))
-            .otherwise(org.apache.spark.sql.functions.lit(0L))
-          tables.flatMap { t =>
-            val stateRoot = s"${c.dstDir}/${dstNameFor(t)}_monitor_state"
-            val legs: Seq[CurationPumps.MonitorLeg] = c.pumps.flatMap {
-              case "novelty" => Some(CurationPumps.noveltyLeg(
-                s"$stateRoot/novelty", k = c.dedupK, idCol = c.docIdCol,
-                textCol = c.textCol))
-              case "contamination" => Some(CurationPumps.contaminationLeg(
-                spark.read.parquet(c.probeDir.get),
-                s"$stateRoot/contamination", k = c.contaminationK,
-                idCol = c.docIdCol, textCol = c.textCol))
-              case "agreement" => Some(CurationPumps.agreementLeg(
-                s"$stateRoot/agreement", gold = col(c.agreementGold),
-                pred = pred))
-              case "score" => Some(CurationPumps.scoreLeg(
-                s"$stateRoot/score", score = score, label = label))
-              case "drift" => Some(CurationPumps.driftLeg(
-                s"$stateRoot/drift", score = col(c.driftCol),
-                group = driftGroup))
-              case "ksmatrix" => Some(CurationPumps.ksMatrixLeg(
-                s"$stateRoot/ksmatrix", score = col(c.driftCol),
-                group = col(c.overlapGroupCol)))
-              case "jsd" => Some(CurationPumps.jsdLeg(
-                s"$stateRoot/jsd", group = col(c.overlapGroupCol),
-                text = col(c.textCol)))
-              // vocab is a second FACE of the jsd leg's token census:
-              // when jsd also runs, the census is already folded —
-              // vocab adds a report, not a second fold per batch
-              case "vocab" if c.pumps.contains("jsd") => None
-              case "vocab" => Some(CurationPumps.vocabLeg(
-                s"$stateRoot/jsd", group = col(c.overlapGroupCol),
-                text = col(c.textCol)))
-              case "embedding" => Some(CurationPumps.embeddingDriftLeg(
-                s"$stateRoot/embedding", groupCol = c.overlapGroupCol,
-                vecCol = c.embeddingCol))
-              case "classes" => Some(CurationPumps.classesLeg(
-                s"$stateRoot/classes",
-                confMilliByClass = classConfCol(
-                  Tables.load(spark, c.srcDir, t).schema,
-                  c.scoreClasses.get),
-                gold = col(c.agreementGold).cast("string")))
-            }
-            CurationPumps.startMonitorPump(tableStream(t),
-              s"${c.dstDir}/_ckpt_monitor_$t", legs,
-              processingTime = cadence,
-              vacuumEvery = vacEvery, vacuumKeep = c.vacuumKeep)
-              .awaitTermination()
-            c.pumps.map { leg =>
-              val stateDir = s"$stateRoot/$leg"
-              val report = leg match {
-                case "novelty" => CurationPumps.noveltyReport(spark,
-                  stateDir, Tables.load(spark, c.srcDir, t),
-                  k = c.dedupK, idCol = c.docIdCol, textCol = c.textCol)
-                case "contamination" =>
-                  CurationPumps.contaminationVerdicts(spark, stateDir)
-                case "agreement" =>
-                  CurationPumps.agreementReport(spark, stateDir)
-                case "score" => CurationPumps.scoreAuc(spark, stateDir)
-                case "drift" => CurationPumps.driftKs(spark, stateDir)
-                case "ksmatrix" => CurationPumps.ksMatrixReport(spark, stateDir)
-                case "jsd" => CurationPumps.jsdReport(spark, stateDir)
-                // the vocab face reads the jsd leg's token census
-                case "vocab" =>
-                  CurationPumps.vocabCoverageReport(spark, s"$stateRoot/jsd")
-                case "embedding" =>
-                  CurationPumps.embeddingDriftReport(spark, stateDir)
-                // the drained router audit: per-class AUC off the
-                // durable census (AP/operating points are further
-                // faces of the same state, library-reachable)
-                case "classes" =>
-                  CurationPumps.classAucReport(spark, stateDir)
-              }
-              val out = s"${c.dstDir}/${dstNameFor(t)}_monitor_$leg.parquet"
-              report.write.mode("overwrite").parquet(out)
-              val stateRows = BucketStateStore.currentVersion(spark, stateDir)
-                .map(v => BucketStateStore.stateAtInferred(spark, stateDir, v)
-                  .count()).getOrElse(0L)
-              Curation(t, s"monitor-$leg", stateRows,
-                spark.read.parquet(out).count(), out)
-            }
-          }
+      val bad = c.pumps.filterNot(monitorLegNames)
+      require(bad.isEmpty, s"--pumps: unknown census legs " +
+        s"${bad.mkString(",")} (known: " +
+        s"${monitorLegNames.toSeq.sorted.mkString(",")})")
+      require(c.pumps.distinct.size == c.pumps.size,
+        s"--pumps: duplicate legs in ${c.pumps.mkString(",")}")
+      require(!c.pumps.contains("contamination") || c.probeDir.isDefined,
+        "--pumps=contamination needs --probe-dir=<parquet dir of " +
+          "probe documents>")
+      require(!c.pumps.contains("classes") || c.scoreClasses.isDefined,
+        "--pumps=classes needs --score-classes=<per-class " +
+          "probability map column>")
+      val preds = c.agreementPred
+        .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
+      require(!(flagLegs ++ c.pumps).contains("agreement") ||
+        preds.sizeIs <= 1,
+        "the agreement pump grades ONE labeler against gold (the " +
+          "durable census is a pairwise confusion matrix); a panel got " +
+          s"${preds.size} predictions — use batch --agreement-report " +
+          "for Fleiss' kappa")
+      // the defaults of the batch --*-report modes
+      lazy val pred = preds.headOption.map(col).getOrElse(
+        graft.text.TextAnalysis.langId(col(c.textCol),
+          graft.text.TextAnalysis.defaultProfiles))
+      lazy val score = c.scoreCol.map(col).getOrElse(
+        org.apache.spark.sql.functions.size(
+          org.apache.spark.sql.functions.filter(
+            graft.text.TextAnalysis.tokens(col(c.textCol)),
+            tok => tok === "the" || tok === "a")))
+      lazy val label = c.scoreLabel.map(col).getOrElse(
+        when(col(c.agreementGold) === c.scorePositive, lit(1L))
+          .otherwise(lit(0L)))
+      lazy val driftGroup = when(col(c.overlapGroupCol) === c.driftGroupVal,
+        lit(1L)).otherwise(lit(0L))
+      def legOf(t: String, leg: String, stateDir: String,
+          probeDir: Option[String]): CurationPumps.MonitorLeg = leg match {
+        case "novelty" => CurationPumps.noveltyLeg(stateDir, k = c.dedupK,
+          idCol = c.docIdCol, textCol = c.textCol)
+        case "contamination" => CurationPumps.contaminationLeg(
+          spark.read.parquet(probeDir.get), stateDir, k = c.contaminationK,
+          idCol = c.docIdCol, textCol = c.textCol)
+        case "agreement" => CurationPumps.agreementLeg(stateDir,
+          gold = col(c.agreementGold), pred = pred)
+        case "score" => CurationPumps.scoreLeg(stateDir, score = score,
+          label = label)
+        case "drift" => CurationPumps.driftLeg(stateDir,
+          score = col(c.driftCol), group = driftGroup)
+        case "ksmatrix" => CurationPumps.ksMatrixLeg(stateDir,
+          score = col(c.driftCol), group = col(c.overlapGroupCol))
+        case "jsd" => CurationPumps.jsdLeg(stateDir,
+          group = col(c.overlapGroupCol), text = col(c.textCol))
+        case "vocab" => CurationPumps.vocabLeg(stateDir,
+          group = col(c.overlapGroupCol), text = col(c.textCol))
+        case "embedding" => CurationPumps.embeddingDriftLeg(stateDir,
+          groupCol = c.overlapGroupCol, vecCol = c.embeddingCol)
+        case "classes" => CurationPumps.classesLeg(stateDir,
+          confMilliByClass = classConfCol(
+            Tables.load(spark, c.srcDir, t).schema, c.scoreClasses.get),
+          gold = col(c.agreementGold).cast("string"))
+      }
+      def reportOf(t: String, leg: String,
+          stateDir: String): org.apache.spark.sql.DataFrame = leg match {
+        case "novelty" => CurationPumps.noveltyReport(spark, stateDir,
+          Tables.load(spark, c.srcDir, t), k = c.dedupK,
+          idCol = c.docIdCol, textCol = c.textCol)
+        case "contamination" =>
+          CurationPumps.contaminationVerdicts(spark, stateDir)
+        case "agreement" => CurationPumps.agreementReport(spark, stateDir)
+        case "score" => CurationPumps.scoreAuc(spark, stateDir)
+        case "drift" => CurationPumps.driftKs(spark, stateDir)
+        case "ksmatrix" => CurationPumps.ksMatrixReport(spark, stateDir)
+        case "jsd" => CurationPumps.jsdReport(spark, stateDir)
+        case "vocab" => CurationPumps.vocabCoverageReport(spark, stateDir)
+        case "embedding" =>
+          CurationPumps.embeddingDriftReport(spark, stateDir)
+        // the drained router audit: per-class AUC off the durable
+        // census (AP/operating points are further faces of the same
+        // state, library-reachable)
+        case "classes" => CurationPumps.classAucReport(spark, stateDir)
+      }
+      /** One census of a pump: its leg name, state dir, mode name and
+        * report file; `folds = false` when another leg of the same pump
+        * folds its state. */
+      final case class Census(leg: String, stateDir: String, mode: String,
+          out: String, folds: Boolean = true)
+      // drain one pump over table t, then write and record each report
+      def drain(t: String, ckpt: String, probeDir: Option[String],
+          censuses: Seq[Census]): Seq[Curation] = {
+        CurationPumps.startMonitorPump(tableStream(t), ckpt,
+          censuses.filter(_.folds).map(x => legOf(t, x.leg, x.stateDir, probeDir)),
+          processingTime = if (stayUp(c)) Some(c.nicePause) else None,
+          vacuumEvery = vacuumCadence(c), vacuumKeep = c.vacuumKeep)
+          .awaitTermination()
+        censuses.map { x =>
+          reportOf(t, x.leg, x.stateDir).write.mode("overwrite").parquet(x.out)
+          val stateRows = BucketStateStore.currentVersion(spark, x.stateDir)
+            .map(v => BucketStateStore.stateAtInferred(spark, x.stateDir, v)
+              .count()).getOrElse(0L)
+          Curation(t, x.mode, stateRows, spark.read.parquet(x.out).count(), x.out)
         }
-      noveltyPumpRuns ++ contaminationPumpRuns ++ agreementPumpRuns ++
-        scorePumpRuns ++ driftPumpRuns ++ monitorRuns
+      }
+      val flagRuns = flagLegs.flatMap(leg => tables.flatMap { t =>
+        val base = s"${c.dstDir}/${dstNameFor(t)}"
+        drain(t, s"${c.dstDir}/_ckpt_${leg}_$t", c.contaminationPump,
+          Seq(Census(leg, s"${base}_${leg}_state", s"$leg-pump",
+            s"${base}_${leg}_pump.parquet")))
+      })
+      val monitorRuns = if (c.pumps.isEmpty) Nil else tables.flatMap { t =>
+        val root = s"${c.dstDir}/${dstNameFor(t)}_monitor_state"
+        drain(t, s"${c.dstDir}/_ckpt_monitor_$t", c.probeDir, c.pumps.map { leg =>
+          // vocab is a second FACE of the jsd leg's token census: it
+          // reads the jsd state, and folds it only when jsd does not
+          Census(leg, s"$root/${if (leg == "vocab") "jsd" else leg}",
+            s"monitor-$leg",
+            s"${c.dstDir}/${dstNameFor(t)}_monitor_$leg.parquet",
+            folds = leg != "vocab" || !c.pumps.contains("jsd"))
+        })
+      }
+      flagRuns ++ monitorRuns
     }
 
     val pumped =
@@ -1258,41 +1140,32 @@ object GraftApp {
         val stream = reader.load()
         val tput = graft.streaming.Throughput.attach(spark)
         try {
-          val trigger = if (stayUp(c))
-            org.apache.spark.sql.streaming.Trigger.ProcessingTime(c.nicePause)
-          else org.apache.spark.sql.streaming.Trigger.AvailableNow()
-          stream.writeStream
-            .option("checkpointLocation", s"${c.dstDir}/_checkpoint")
-            .trigger(trigger)
-            .foreachBatch {
-              (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-                if (!b.isEmpty) {
-                  // cache: the merge and the position-file max would
-                  // otherwise each re-run the batch's JDBC range scan
-                  val batch = if (c.positionFile.isDefined) b.persist() else b
-                  try {
-                    StreamingCdc.mergeIntoState(
-                      batch.withColumn(graft.cdc.CdcApplier.OpCol,
-                        org.apache.spark.sql.functions.lit("insert")),
-                      stateDir, pk = Seq(key), orderCols = Seq(key))
-                    c.positionFile.foreach { path =>
-                      val mx = batch.agg(org.apache.spark.sql.functions
-                        .max(org.apache.spark.sql.functions.col(key))).head()
-                      // any integral key type (INT/BIGINT/...) records
-                      if (!mx.isNullAt(0))
-                        writePositionFile(path, key,
-                          mx.get(0).asInstanceOf[Number].longValue)
-                    }
-                  } finally if (c.positionFile.isDefined) batch.unpersist()
-                  // resident live pumps retire dead state versions on
-                  // the batch cadence (the StreamingCdc.start hygiene)
-                  val ve = vacuumCadence(c)
-                  if (ve > 0 && bid > 0 && bid % ve == 0)
-                    StreamingCdc.vacuum(spark, stateDir, c.vacuumKeep)
+          // resident live pumps retire dead state versions on the batch
+          // cadence; an empty batch merges nothing
+          graft.streaming.Pump.start(stream, s"${c.dstDir}/_checkpoint",
+              processingTime = if (stayUp(c)) Some(c.nicePause) else None,
+              vacuumEvery = vacuumCadence(c), vacuumKeep = c.vacuumKeep,
+              vacuumDirs = Seq(stateDir)) { (b, _) =>
+            if (!b.isEmpty) {
+              // cache: the merge and the position-file max would
+              // otherwise each re-run the batch's JDBC range scan
+              val batch = if (c.positionFile.isDefined) b.persist() else b
+              try {
+                StreamingCdc.mergeIntoState(
+                  batch.withColumn(graft.cdc.CdcApplier.OpCol,
+                    org.apache.spark.sql.functions.lit("insert")),
+                  stateDir, pk = Seq(key), orderCols = Seq(key))
+                c.positionFile.foreach { path =>
+                  val mx = batch.agg(org.apache.spark.sql.functions
+                    .max(org.apache.spark.sql.functions.col(key))).head()
+                  // any integral key type (INT/BIGINT/...) records
+                  if (!mx.isNullAt(0))
+                    writePositionFile(path, key,
+                      mx.get(0).asInstanceOf[Number].longValue)
                 }
+              } finally if (c.positionFile.isDefined) batch.unpersist()
             }
-            .start()
-            .awaitTermination()
+          }.awaitTermination()
         } finally spark.streams.removeListener(tput)
         Some(stateDir)
       } else if (c.debeziumFeed.isDefined) {

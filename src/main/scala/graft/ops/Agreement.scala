@@ -35,7 +35,7 @@ object Agreement {
   /** The (gold, pred, n) confusion-cell census — ONE map-side-combined
     * corpus scan. Exposed as the report family's interchange frame:
     * [[classifierReport]] builds it inline; the streaming agreement
-    * pump ([[graft.streaming.CurationPumps.startAgreementPump]])
+    * leg ([[graft.streaming.CurationPumps.agreementLeg]])
     * persists it through BucketStateStore (counts merge additively)
     * and [[classifierReportFromCells]] grades the durable copy —
     * drain == batch because both read the same cells.

@@ -645,8 +645,9 @@ object IngestQueries {
     * ride the batch side. Complete-mode memory sink here because the
     * gate drains to termination — this face is the ORACLE HARNESS;
     * the PRODUCTION face is [[graft.streaming.CurationPumps
-    * .startNoveltyPump]], which persists the same dictionary through
-    * BucketStateStore via foreachBatch and survives crash-restarts.
+    * .noveltyLeg]] run by `startMonitorPump`, which persists the same
+    * dictionary through BucketStateStore via foreachBatch and survives
+    * crash-restarts.
     */
   def streamNovelty(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
@@ -702,9 +703,9 @@ object IngestQueries {
     * drained answer equals batch [[graft.dedup.Dedup.contaminationScan]]
     * on the same split — q48's oracle checks both. This memory-sink
     * face is the ORACLE HARNESS; the PRODUCTION face is
-    * [[graft.streaming.CurationPumps.startContaminationPump]], which
-    * persists the verdicts through BucketStateStore and survives
-    * crash-restarts.
+    * [[graft.streaming.CurationPumps.contaminationLeg]] run by
+    * `startMonitorPump`, which persists the verdicts through
+    * BucketStateStore and survives crash-restarts.
     */
   def streamContamination(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
@@ -740,8 +741,8 @@ object IngestQueries {
   /** q162: labeler grading ON INGEST — q153's classifier report as a
     * stream. Documents arrive as files; each micro-batch's
     * (gold, predicted) confusion cells fold ADDITIVELY into the
-    * durable census through the PRODUCTION pump
-    * ([[graft.streaming.CurationPumps.startAgreementPump]] —
+    * durable census through the PRODUCTION pump (a one-leg monitor,
+    * [[graft.streaming.CurationPumps.agreementLeg]] —
     * BucketStateStore + batch-id fence; unlike q154/q155 this face
     * drives the production path directly, there is no memory-sink
     * intermediary), and the report reads the persisted state. Counts
@@ -762,16 +763,16 @@ object IngestQueries {
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$root/docs")
-    graft.streaming.CurationPumps.startAgreementPump(
-        stream, s"$root/state", s"$root/ckpt",
-        gold = col("lang"),
-        pred = graft.text.TextAnalysis.langId(col("text"),
-          graft.text.TextAnalysis.defaultProfiles))
+    graft.streaming.CurationPumps.startMonitorPump(stream, s"$root/ckpt",
+        Seq(graft.streaming.CurationPumps.agreementLeg(s"$root/state",
+          gold = col("lang"),
+          pred = graft.text.TextAnalysis.langId(col("text"),
+            graft.text.TextAnalysis.defaultProfiles))))
       .awaitTermination()
     graft.streaming.CurationPumps.agreementReport(spark, s"$root/state")
   }
 
-  /** q176: the PRODUCTION score pump drained over the documents
+  /** q176: the PRODUCTION score leg drained over the documents
     * table and graded against q165's batch oracle VERBATIM — the
     * drain-equals-batch contract for the threshold-free score grade:
     * per-score (pos, neg) counts are additive and commutative, so
@@ -791,16 +792,16 @@ object IngestQueries {
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$root/docs")
-    graft.streaming.CurationPumps.startScorePump(
-        stream, s"$root/state", s"$root/ckpt",
-        score = size(filter(graft.text.TextAnalysis.tokens(col("text")),
-          t => t === "the" || t === "a")),
-        label = when(col("lang") === "en", lit(1L)).otherwise(lit(0L)))
+    graft.streaming.CurationPumps.startMonitorPump(stream, s"$root/ckpt",
+        Seq(graft.streaming.CurationPumps.scoreLeg(s"$root/state",
+          score = size(filter(graft.text.TextAnalysis.tokens(col("text")),
+            t => t === "the" || t === "a")),
+          label = when(col("lang") === "en", lit(1L)).otherwise(lit(0L)))))
       .awaitTermination()
     graft.streaming.CurationPumps.scoreAuc(spark, s"$root/state")
   }
 
-  /** q179: the PRODUCTION drift pump drained over the documents
+  /** q179: the PRODUCTION drift leg drained over the documents
     * table and graded against q173's batch oracle VERBATIM — the
     * drain-equals-batch contract for the KS drift gauge: the
     * two-population census is additive, so the durable state a
@@ -817,10 +818,10 @@ object IngestQueries {
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$root/docs")
-    graft.streaming.CurationPumps.startDriftPump(
-        stream, s"$root/state", s"$root/ckpt",
-        score = col("n_chars"),
-        group = when(col("source") === "src0", lit(1L)).otherwise(lit(0L)))
+    graft.streaming.CurationPumps.startMonitorPump(stream, s"$root/ckpt",
+        Seq(graft.streaming.CurationPumps.driftLeg(s"$root/state",
+          score = col("n_chars"),
+          group = when(col("source") === "src0", lit(1L)).otherwise(lit(0L)))))
       .awaitTermination()
     graft.streaming.CurationPumps.driftKs(spark, s"$root/state")
   }

@@ -3,20 +3,22 @@ package graft.streaming
 import graft.dedup.Dedup
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
-/** PRODUCTION faces of the streaming corpus-curation pair: documents
-  * arrive as a stream and the curation state persists through
+/** PRODUCTION faces of the streaming curation censuses: documents
+  * arrive as a stream and each census persists through
   * [[BucketStateStore]] via `foreachBatch`, so a killed pump resumes
   * from its checkpoint with the state intact — the q140/StreamingCdc
   * crash-recovery discipline applied to corpus analytics.
   *
-  * The memory-sink drains in [[graft.queries.IngestQueries]]
+  * Each census is a [[MonitorLeg]] (`noveltyLeg`, `scoreLeg`, …) and
+  * [[startMonitorPump]] runs one or several legs over one reader. The
+  * memory-sink drains in [[graft.queries.IngestQueries]]
   * (`streamNovelty`/`streamContamination`, the q154/q155 gate faces)
   * stay as the ORACLE HARNESS — they prove drain-equals-batch against
   * DuckDB but hold the whole answer in a complete-mode memory sink,
-  * which is driver-sized at corpus scale. These pumps are what a
+  * which is driver-sized at corpus scale. The legs are what a
   * deployment runs: state lives in hash-bucketed copy-on-write
   * parquet (RocksDB-free, readable by any Spark job), each
   * micro-batch rewrites only the key-buckets it touches, and the
@@ -49,21 +51,6 @@ object CurationPumps {
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], schema)
 
-  private def triggerOf(processingTime: Option[String]): Trigger =
-    processingTime.map(Trigger.ProcessingTime(_))
-      .getOrElse(Trigger.AvailableNow())
-
-  /** Retire old state versions every `every` batches (skipping batch
-    * 0 — nothing to retire yet). A RESIDENT copy-on-write pump
-    * without vacuum accumulates dead bucket copies without bound;
-    * `keep` is the readable-history retention (must exceed the
-    * longest concurrent reader, the table-format vacuum rule).
-    */
-  private def vacuumIfDue(spark: SparkSession, stateDir: String,
-      bid: Long, every: Int, keep: Int): Unit =
-    if (every > 0 && bid > 0 && bid % every == 0)
-      BucketStateStore.vacuum(spark, stateDir, keep)
-
   /** Fold one document batch into the seen-shingle min-dictionary.
     * The batch pre-aggregates to one row per distinct shingle
     * (map-side combine), then the store merge takes `min(first_doc)`
@@ -86,29 +73,6 @@ object CurationPumps {
         .agg(min(col("first_doc")).as("first_doc"))
     }
   }
-
-  /** Start the incremental-novelty pump: `docsStream` (rows carrying
-    * `idCol`, `textCol`) → per-batch shingle min → durable
-    * dictionary at `stateDir`. Kill it, start it again with the same
-    * checkpoint: processed files are not re-read, replayed batches
-    * are fenced, and the dictionary continues exactly where it was.
-    */
-  def startNoveltyPump(docsStream: DataFrame, stateDir: String,
-      checkpointDir: String, k: Int = 3, idCol: String = "doc_id",
-      textCol: String = "text",
-      numBuckets: Int = 0,
-      processingTime: Option[String] = None,
-      vacuumEvery: Int = 0, vacuumKeep: Int = 4): StreamingQuery =
-    docsStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(triggerOf(processingTime))
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        mergeNoveltyBatch(batch, stateDir, k, idCol, textCol,
-          numBuckets, Some(bid))
-        vacuumIfDue(batch.sparkSession, stateDir, bid, vacuumEvery,
-          vacuumKeep)
-      }
-      .start()
 
   /** The novelty report derived from the PERSISTED dictionary —
     * row-identical to batch [[Dedup.ngramNovelty]] over the same
@@ -155,35 +119,6 @@ object CurationPumps {
     }
   }
 
-  /** Start the decontamination-on-ingest pump: each arriving document
-    * is graded against the (static, benchmark-sized) probe corpus in
-    * the micro-batch that carries it, and flagged verdicts persist at
-    * `stateDir` — so contaminated documents are known BEFORE they
-    * land in the training store, and the verdict table survives the
-    * pump. The probe shingle set is built once here and materialized
-    * (it feeds every micro-batch; unmaterialized it would re-shingle
-    * the probes per batch).
-    */
-  def startContaminationPump(docsStream: DataFrame, probes: DataFrame,
-      stateDir: String, checkpointDir: String, k: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text",
-      numBuckets: Int = 0,
-      processingTime: Option[String] = None,
-      vacuumEvery: Int = 0, vacuumKeep: Int = 4): StreamingQuery = {
-    val probeShingles = Dedup.shingleRows(probes, k, idCol, textCol)
-      .select("shingle").distinct().localCheckpoint()
-    docsStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(triggerOf(processingTime))
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        mergeContaminationBatch(batch, probeShingles, stateDir, k,
-          idCol, textCol, numBuckets, Some(bid))
-        vacuumIfDue(batch.sparkSession, stateDir, bid, vacuumEvery,
-          vacuumKeep)
-      }
-      .start()
-  }
-
   /** The persisted contamination verdicts — row-identical to batch
     * [[Dedup.contaminationScan]] over the drained corpus (the q155
     * contract against durable state).
@@ -207,7 +142,7 @@ object CurationPumps {
   /** Fold one document batch's confusion cells into the store. The
     * combine is an ADDITIVE count merge — commutative (arrival order
     * is irrelevant, so drain == batch) but NOT idempotent, so the
-    * batch-id fence is LOAD-BEARING here, unlike the novelty pump's
+    * batch-id fence is LOAD-BEARING here, unlike the novelty leg's
     * min-merge: without it a crash-replayed batch would double-count
     * its cells (the IncrementalAgg regime of
     * [[BucketStateStore.merge]]).
@@ -224,32 +159,6 @@ object CurationPumps {
         .agg(sum(col("n")).as("n"))
     }
   }
-
-  /** Start the labeler-grading pump: each arriving document's
-    * (gold, predicted) class pair — `pred` is typically a heuristic
-    * labeler EXPRESSION over the document text, graded against a
-    * stored gold column — folds into the durable confusion census at
-    * `stateDir`, so the agreement report over everything ingested so
-    * far is readable at any time without re-scanning the corpus
-    * (and survives the pump: kill it, restart on the same
-    * checkpoint, the census continues exactly).
-    */
-  def startAgreementPump(docsStream: DataFrame, stateDir: String,
-      checkpointDir: String, gold: org.apache.spark.sql.Column,
-      pred: org.apache.spark.sql.Column,
-      numBuckets: Int = 0,
-      processingTime: Option[String] = None,
-      vacuumEvery: Int = 0, vacuumKeep: Int = 4): StreamingQuery =
-    docsStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(triggerOf(processingTime))
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        mergeAgreementBatch(batch, gold, pred, stateDir, numBuckets,
-          Some(bid))
-        vacuumIfDue(batch.sparkSession, stateDir, bid, vacuumEvery,
-          vacuumKeep)
-      }
-      .start()
 
   /** The persisted confusion cells, as
     * [[graft.ops.Agreement.classifierReportFromCells]] input. */
@@ -296,33 +205,6 @@ object CurationPumps {
     }
   }
 
-  /** Start the score-grading pump: each arriving document's
-    * (quantized score, 0/1 label) folds into the durable per-score
-    * census at `stateDir`, so the threshold-free grade of the score
-    * over everything ingested so far — ROC-AUC, the operating-point
-    * table, PR-AUC — is readable at any time without re-scanning the
-    * corpus, and survives the pump (kill it, restart on the same
-    * checkpoint, the census continues exactly). The live view of the
-    * q165 family: "is this quality score still ranking the classes
-    * apart on THIS week's crawl?"
-    */
-  def startScorePump(docsStream: DataFrame, stateDir: String,
-      checkpointDir: String, score: org.apache.spark.sql.Column,
-      label: org.apache.spark.sql.Column,
-      numBuckets: Int = 0,
-      processingTime: Option[String] = None,
-      vacuumEvery: Int = 0, vacuumKeep: Int = 4): StreamingQuery =
-    docsStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(triggerOf(processingTime))
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        mergeScoreBatch(batch, score, label, stateDir, numBuckets,
-          Some(bid))
-        vacuumIfDue(batch.sparkSession, stateDir, bid, vacuumEvery,
-          vacuumKeep)
-      }
-      .start()
-
   /** The persisted score census, as
     * [[graft.ops.ScoreEval.rocAucFromCensus]] input. */
   def scoreCensusState(spark: SparkSession, stateDir: String): DataFrame =
@@ -363,32 +245,6 @@ object CurationPumps {
         .agg(sum(col("a")).as("a"), sum(col("b")).as("b"))
     }
   }
-
-  /** Start the drift pump: each arriving document's (quantized
-    * score, 0/1 slice membership) folds into the durable
-    * two-population census, so the KS statistic between the watched
-    * slice and the rest — over everything ingested so far — is
-    * readable at any time and survives kill/restart. The resident
-    * face of the q173 drift gauge: "has THIS source's score
-    * distribution moved away from the corpus since the pump
-    * started?"
-    */
-  def startDriftPump(docsStream: DataFrame, stateDir: String,
-      checkpointDir: String, score: org.apache.spark.sql.Column,
-      group: org.apache.spark.sql.Column,
-      numBuckets: Int = 0,
-      processingTime: Option[String] = None,
-      vacuumEvery: Int = 0, vacuumKeep: Int = 4): StreamingQuery =
-    docsStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(triggerOf(processingTime))
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        mergeDriftBatch(batch, score, group, stateDir, numBuckets,
-          Some(bid))
-        vacuumIfDue(batch.sparkSession, stateDir, bid, vacuumEvery,
-          vacuumKeep)
-      }
-      .start()
 
   /** The persisted two-population census, as
     * [[graft.ops.ScoreEval.ksFromCensus]] input. */
@@ -622,60 +478,68 @@ object CurationPumps {
     * fence + the vacuum target), and the per-batch fold. The fold
     * receives the micro-batch ALREADY materialized (the monitor
     * persists it once for all legs) and the streaming batch id for
-    * the per-leg fence.
+    * the per-leg fence. Every leg lets its store derive the bucket
+    * count (`numBuckets = 0` in the `merge*Batch` helpers).
     */
   final case class MonitorLeg(name: String, stateDir: String,
       merge: (DataFrame, Option[Long]) => Unit)
 
+  /** The incremental-novelty census: per-batch shingle min → durable
+    * seen-shingle dictionary (the q154 production face). */
   def noveltyLeg(stateDir: String, k: Int = 3, idCol: String = "doc_id",
-      textCol: String = "text",
-      numBuckets: Int = 0): MonitorLeg =
+      textCol: String = "text"): MonitorLeg =
     MonitorLeg("novelty", stateDir, (b, bid) =>
-      mergeNoveltyBatch(b, stateDir, k, idCol, textCol, numBuckets, bid))
+      mergeNoveltyBatch(b, stateDir, k, idCol, textCol, 0, bid))
 
-  /** The probe shingle set is built and materialized ONCE here (it
-    * feeds every micro-batch — the [[startContaminationPump]]
-    * discipline).
+  /** Decontamination on ingest: each arriving document is graded
+    * against the (static, benchmark-sized) probe corpus in the batch
+    * that carries it, so contaminated documents are known BEFORE they
+    * land in the training store (the q155 production face). The probe
+    * shingle set is built and materialized ONCE here: it feeds every
+    * micro-batch, and unmaterialized it would re-shingle the probes
+    * per batch.
     */
   def contaminationLeg(probes: DataFrame, stateDir: String, k: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text",
-      numBuckets: Int = 0): MonitorLeg = {
+      idCol: String = "doc_id", textCol: String = "text"): MonitorLeg = {
     val probeShingles = Dedup.shingleRows(probes, k, idCol, textCol)
       .select("shingle").distinct().localCheckpoint()
     MonitorLeg("contamination", stateDir, (b, bid) =>
       mergeContaminationBatch(b, probeShingles, stateDir, k, idCol,
-        textCol, numBuckets, bid))
+        textCol, 0, bid))
   }
 
+  /** Labeler grading: each document's (gold, predicted) class pair —
+    * `pred` is typically a heuristic labeler EXPRESSION over the text —
+    * folds into the durable confusion census (q162). */
   def agreementLeg(stateDir: String, gold: org.apache.spark.sql.Column,
-      pred: org.apache.spark.sql.Column,
-      numBuckets: Int = 0): MonitorLeg =
+      pred: org.apache.spark.sql.Column): MonitorLeg =
     MonitorLeg("agreement", stateDir, (b, bid) =>
-      mergeAgreementBatch(b, gold, pred, stateDir, numBuckets, bid))
+      mergeAgreementBatch(b, gold, pred, stateDir, 0, bid))
 
+  /** Score grading: each document's (quantized score, 0/1 label) folds
+    * into the per-score census, so ROC-AUC over everything ingested
+    * so far is readable at any time (q176). */
   def scoreLeg(stateDir: String, score: org.apache.spark.sql.Column,
-      label: org.apache.spark.sql.Column,
-      numBuckets: Int = 0): MonitorLeg =
+      label: org.apache.spark.sql.Column): MonitorLeg =
     MonitorLeg("score", stateDir, (b, bid) =>
-      mergeScoreBatch(b, score, label, stateDir, numBuckets, bid))
+      mergeScoreBatch(b, score, label, stateDir, 0, bid))
 
+  /** Drift: each document's (quantized score, 0/1 slice membership)
+    * folds into the two-population census behind the KS gauge (q179). */
   def driftLeg(stateDir: String, score: org.apache.spark.sql.Column,
-      group: org.apache.spark.sql.Column,
-      numBuckets: Int = 0): MonitorLeg =
+      group: org.apache.spark.sql.Column): MonitorLeg =
     MonitorLeg("drift", stateDir, (b, bid) =>
-      mergeDriftBatch(b, score, group, stateDir, numBuckets, bid))
+      mergeDriftBatch(b, score, group, stateDir, 0, bid))
 
   def jsdLeg(stateDir: String, group: org.apache.spark.sql.Column,
-      text: org.apache.spark.sql.Column,
-      numBuckets: Int = 0): MonitorLeg =
+      text: org.apache.spark.sql.Column): MonitorLeg =
     MonitorLeg("jsd", stateDir, (b, bid) =>
-      mergeJsdBatch(b, group, text, stateDir, numBuckets, bid))
+      mergeJsdBatch(b, group, text, stateDir, 0, bid))
 
   def ksMatrixLeg(stateDir: String, score: org.apache.spark.sql.Column,
-      group: org.apache.spark.sql.Column,
-      numBuckets: Int = 0): MonitorLeg =
+      group: org.apache.spark.sql.Column): MonitorLeg =
     MonitorLeg("ksmatrix", stateDir, (b, bid) =>
-      mergeKsMatrixBatch(b, score, group, stateDir, numBuckets, bid))
+      mergeKsMatrixBatch(b, score, group, stateDir, 0, bid))
 
   /** The vocab-coverage leg maintains the SAME (grp, tok, c) census
     * as [[jsdLeg]] (vocabCoverage is a second face of that state) —
@@ -684,10 +548,9 @@ object CurationPumps {
     * fence makes it a no-op, not a double count).
     */
   def vocabLeg(stateDir: String, group: org.apache.spark.sql.Column,
-      text: org.apache.spark.sql.Column,
-      numBuckets: Int = 0): MonitorLeg =
+      text: org.apache.spark.sql.Column): MonitorLeg =
     MonitorLeg("vocab", stateDir, (b, bid) =>
-      mergeJsdBatch(b, group, text, stateDir, numBuckets, bid))
+      mergeJsdBatch(b, group, text, stateDir, 0, bid))
 
   /** The multiclass router-audit leg: folds the (cls, s, pos, neg)
     * census of a FULL per-class probability vector against gold —
@@ -696,18 +559,14 @@ object CurationPumps {
     */
   def classesLeg(stateDir: String,
       confMilliByClass: org.apache.spark.sql.Column,
-      gold: org.apache.spark.sql.Column,
-      numBuckets: Int = 0): MonitorLeg =
+      gold: org.apache.spark.sql.Column): MonitorLeg =
     MonitorLeg("classes", stateDir, (b, bid) =>
-      mergeClassesBatch(b, confMilliByClass, gold, stateDir,
-        numBuckets, bid))
+      mergeClassesBatch(b, confMilliByClass, gold, stateDir, 0, bid))
 
   def embeddingDriftLeg(stateDir: String, groupCol: String = "label",
-      vecCol: String = "embedding",
-      numBuckets: Int = 0): MonitorLeg =
+      vecCol: String = "embedding"): MonitorLeg =
     MonitorLeg("embedding", stateDir, (b, bid) =>
-      mergeEmbeddingDriftBatch(b, groupCol, vecCol, stateDir,
-        numBuckets, bid))
+      mergeEmbeddingDriftBatch(b, groupCol, vecCol, stateDir, 0, bid))
 
   /** Start the unified monitor: ONE reader over `docsStream`, one
     * checkpoint, one foreachBatch that materializes each arriving
@@ -726,12 +585,11 @@ object CurationPumps {
     * single all-legs-done barrier, but the merges themselves need no
     * cross-leg atomicity.
     *
-    * `vacuumEvery > 0` retires each leg's old state versions every N
-    * batches (the [[StreamingCdc.start]] hygiene: a long-running
-    * copy-on-write pump without vacuum accumulates dead bucket copies
-    * without bound — a RESIDENT monitor folds every leg every batch,
-    * so the version count grows legs × batches). `vacuumKeep` is the
-    * per-leg readable-history retention.
+    * One leg is a single-census pump (the `--*-pump` CLI modes).
+    * Trigger and vacuum cadence are [[Pump.start]]'s, over every leg's
+    * state dir: a RESIDENT monitor folds every leg every batch, so
+    * without vacuum its version count grows legs × batches.
+    * `vacuumKeep` is the per-leg readable-history retention.
     */
   def startMonitorPump(docsStream: DataFrame, checkpointDir: String,
       legs: Seq[MonitorLeg],
@@ -740,25 +598,19 @@ object CurationPumps {
     require(legs.nonEmpty, "monitor pump needs at least one census leg")
     require(legs.map(_.name).distinct.size == legs.size,
       s"monitor legs must have distinct names: ${legs.map(_.name)}")
-    docsStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(triggerOf(processingTime))
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        // ONE materialization of the arriving files feeds every leg —
-        // persist, NOT localCheckpoint: unpersist() on a checkpointed
-        // frame is a cache-manager no-op (the blocks belong to the
-        // checkpoint RDD), so a resident monitor would leave one
-        // pinned RDD in the block manager per micro-batch until GC
-        // happened to reclaim it. persist shares the one scan across
-        // legs and the finally releases it deterministically (the
-        // StreamingCdc.startDebezium discipline).
-        val pinned = batch.persist()
-        try {
-          legs.foreach(_.merge(pinned, Some(bid)))
-          legs.foreach(l => vacuumIfDue(batch.sparkSession, l.stateDir,
-            bid, vacuumEvery, vacuumKeep))
-        } finally pinned.unpersist()
-      }
-      .start()
+    Pump.start(docsStream, checkpointDir, processingTime, vacuumEvery,
+        vacuumKeep, legs.map(_.stateDir)) { (batch, bid) =>
+      // ONE materialization of the arriving files feeds every leg —
+      // persist, NOT localCheckpoint: unpersist() on a checkpointed
+      // frame is a cache-manager no-op (the blocks belong to the
+      // checkpoint RDD), so a resident monitor would leave one
+      // pinned RDD in the block manager per micro-batch until GC
+      // happened to reclaim it. persist shares the one scan across
+      // legs and the finally releases it deterministically (the
+      // StreamingCdc.startDebezium discipline).
+      val pinned = batch.persist()
+      try legs.foreach(_.merge(pinned, Some(bid)))
+      finally pinned.unpersist()
+    }
   }
 }

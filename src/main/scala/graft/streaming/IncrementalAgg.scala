@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incremental aggregation maintenance: keep a keyed aggregate
   * (`GROUP BY keys`) continuously up to date from a stream WITHOUT
@@ -55,24 +55,14 @@ object IncrementalAgg {
       template: DataFrame): DataFrame =
     BucketStateStore.currentState(spark, stateDir, template)
 
-  /** Start maintaining `GROUP BY keys` aggregates from a stream.
-    * Trigger semantics mirror StreamingCdc.start (AvailableNow
-    * drain-and-exit vs ProcessingTime cadence).
+  /** Start maintaining `GROUP BY keys` aggregates from a stream, on
+    * the trigger of [[Pump.start]] (no vacuum cadence). Each batch is
+    * fenced by its streaming batch id.
     */
   def start(feed: DataFrame, stateDir: String, checkpointDir: String,
       keys: Seq[String], batchAgg: Seq[Column], mergeAgg: Seq[Column],
-      processingTime: Option[String] = None,
-      numBuckets: Int = 0): StreamingQuery = {
-    val trigger = processingTime
-      .map(Trigger.ProcessingTime(_))
-      .getOrElse(Trigger.AvailableNow())
-    feed.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        mergeBatch(batch, stateDir, keys, batchAgg, mergeAgg,
-          batchId = Some(bid), numBuckets = numBuckets)
-      }
-      .start()
-  }
+      processingTime: Option[String] = None): StreamingQuery =
+    Pump.start(feed, checkpointDir, processingTime) { (batch, bid) =>
+      mergeBatch(batch, stateDir, keys, batchAgg, mergeAgg, batchId = Some(bid))
+    }
 }

@@ -4,7 +4,7 @@ import graft.cdc.CdcApplier
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous CDC pipeline: change-feed stream → `foreachBatch`
   * merge into a hash-bucketed copy-on-write parquet state table
@@ -144,7 +144,6 @@ object StreamingCdc {
     */
   def mergeMultiplexed(batch: DataFrame, stateRoot: String, pk: Seq[String],
       orderCols: Seq[String], routingCols: Seq[String] = Seq("db", "table"),
-      numBuckets: Int = 0,
       pkFor: Map[String, Seq[String]] = Map.empty): Unit = {
     val tables = batch.select(routingCols.map(col): _*).distinct()
       .collect().map(r => routingCols.indices.map(r.getString))
@@ -163,71 +162,41 @@ object StreamingCdc {
       // per-table key override: the reference hard-codes `id` across
       // its whole belt map; here each table can carry its own PK
       mergeIntoState(slice, s"$stateRoot/$name",
-        pkFor.getOrElse(name, pk), orderCols, numBuckets)
+        pkFor.getOrElse(name, pk), orderCols)
     }
   }
 
   /** Start a multi-table pump over a multiplexed feed: one streaming
     * query, one checkpoint, per-table state dirs (T2). `pk` is the
     * default key convention; `pkFor` overrides it per composed table
-    * name (`db__table`) for tables keyed differently.
+    * name (`db__table`) for tables keyed differently. The vacuum
+    * cadence covers every per-table dir under the root, including
+    * tables absent from the batch: their dead versions age regardless
+    * of arrival skew.
     */
   def startMultiplexed(feed: DataFrame, stateRoot: String,
       checkpointDir: String, pk: Seq[String], orderCols: Seq[String],
       routingCols: Seq[String] = Seq("db", "table"),
       processingTime: Option[String] = None,
-      numBuckets: Int = 0,
       pkFor: Map[String, Seq[String]] = Map.empty,
-      vacuumEvery: Int = 0, vacuumKeep: Int = 4): StreamingQuery = {
-    val trigger = processingTime
-      .map(Trigger.ProcessingTime(_))
-      .getOrElse(Trigger.AvailableNow())
-    feed.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        mergeMultiplexed(batch, stateRoot, pk, orderCols, routingCols,
-          numBuckets, pkFor)
-        // vacuum every per-table belt that exists under the root —
-        // including tables absent from THIS batch (their dead
-        // versions age regardless of arrival skew)
-        if (vacuumEvery > 0 && bid > 0 && bid % vacuumEvery == 0)
-          BucketStateStore.listStateDirs(batch.sparkSession, stateRoot)
-            .foreach(d => vacuum(batch.sparkSession, d, vacuumKeep))
-      }
-      .start()
-  }
+      vacuumEvery: Int = 0, vacuumKeep: Int = 4): StreamingQuery =
+    Pump.start(feed, checkpointDir, processingTime, vacuumEvery, vacuumKeep,
+        BucketStateStore.listStateDirs(feed.sparkSession, stateRoot)) { (batch, _) =>
+      mergeMultiplexed(batch, stateRoot, pk, orderCols, routingCols, pkFor)
+    }
 
-  /** Start the pump. `processingTime = None` maps the reference's
-    * `--src-wait` OFF (drain available data, then exit —
-    * Trigger.AvailableNow); `Some(interval)` maps `--src-wait` +
-    * `--nice-pause` (stay up, batch on a cadence —
-    * Trigger.ProcessingTime), per SURVEY §2.10 T4. `vacuumEvery > 0`
-    * folds pending runs into their bases and retires old state
-    * versions every N batches, inside the pump's own batch (vacuum is
-    * a writer) — a long-running copy-on-write pump without vacuum
-    * accumulates dead bucket copies without bound. Without a cadence
-    * the merges still fold each run once it passes a quarter of its
-    * base.
+  /** Start the pump: each batch merges into `stateDir`, on the trigger
+    * and vacuum cadence of [[Pump.start]]. Without a cadence the
+    * merges still fold each run once it passes a quarter of its base.
     */
   def start(feed: DataFrame, stateDir: String, checkpointDir: String,
       pk: Seq[String], orderCols: Seq[String],
       processingTime: Option[String] = None,
-      numBuckets: Int = 0,
-      vacuumEvery: Int = 0, vacuumKeep: Int = 4): StreamingQuery = {
-    val trigger = processingTime
-      .map(Trigger.ProcessingTime(_))
-      .getOrElse(Trigger.AvailableNow())
-    feed.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        mergeIntoState(batch, stateDir, pk, orderCols, numBuckets)
-        if (vacuumEvery > 0 && bid > 0 && bid % vacuumEvery == 0)
-          vacuum(batch.sparkSession, stateDir, vacuumKeep)
-      }
-      .start()
-  }
+      vacuumEvery: Int = 0, vacuumKeep: Int = 4): StreamingQuery =
+    Pump.start(feed, checkpointDir, processingTime, vacuumEvery, vacuumKeep,
+        Seq(stateDir)) { (batch, _) =>
+      mergeIntoState(batch, stateDir, pk, orderCols)
+    }
 
   /** Start a pump over a RAW Debezium JSON-lines stream (one
     * envelope per row in `value` — a file tail or a Kafka value
@@ -259,66 +228,48 @@ object StreamingCdc {
       tableSchemas: Map[String, org.apache.spark.sql.types.StructType],
       pk: Seq[String],
       processingTime: Option[String] = None,
-      numBuckets: Int = 0,
       pkFor: Map[String, Seq[String]] = Map.empty,
       vacuumEvery: Int = 0, vacuumKeep: Int = 4): StreamingQuery = {
     import graft.cdc.DebeziumAdapter
-    val trigger = processingTime
-      .map(Trigger.ProcessingTime(_))
-      .getOrElse(Trigger.AvailableNow())
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val b = batch.persist()
-        try {
-          // routing columns are schema-independent — one pass with any
-          // subscribed schema audits the whole batch (driver-sized:
-          // one row per distinct (db, table))
-          val routes = DebeziumAdapter.parse(b, tableSchemas.head._2, Nil)
-            .groupBy("db", "table").count().collect()
-          val unroutable = routes
-            .filter(r => r.isNullAt(0) || r.isNullAt(1))
-            .map(_.getLong(2)).sum
-          if (unroutable > 0)
-            throw new IllegalStateException(
-              s"debezium pump: $unroutable envelope(s) with NULL " +
-                "source.db/source.table — refusing to drop changes")
-          routes.filter(r => r.getString(0) != db ||
-              !tableSchemas.contains(r.getString(1)))
-            .foreach { r =>
-              log.warn(s"debezium pump: skipping ${r.getLong(2)} " +
-                s"envelope(s) for unsubscribed ${r.getString(0)}." +
-                s"${r.getString(1)}")
-            }
-          tableSchemas.foreach { case (table, schema) =>
-            val tpk = pkFor.getOrElse(table, pk)
-            val slice = DebeziumAdapter.forTable(
-              DebeziumAdapter.parse(b, schema, tpk), db, table)
-            // skip empty slices: a table absent from this batch must
-            // not churn its state version
-            if (!slice.isEmpty)
-              mergeIntoState(slice, s"$stateRoot/${db}__$table", tpk,
-                DebeziumAdapter.orderCols, numBuckets)
+    // every subscribed belt is on the vacuum cadence: a table absent
+    // from recent batches still holds dead versions from earlier ones
+    // (and one that has not merged yet has nothing to vacuum)
+    val belts = tableSchemas.keys.toSeq.map(t => s"$stateRoot/${db}__$t")
+    Pump.start(raw, checkpointDir, processingTime, vacuumEvery, vacuumKeep,
+        belts) { (batch, _) =>
+      val b = batch.persist()
+      try {
+        // routing columns are schema-independent — one pass with any
+        // subscribed schema audits the whole batch (driver-sized:
+        // one row per distinct (db, table))
+        val routes = DebeziumAdapter.parse(b, tableSchemas.head._2, Nil)
+          .groupBy("db", "table").count().collect()
+        val unroutable = routes
+          .filter(r => r.isNullAt(0) || r.isNullAt(1))
+          .map(_.getLong(2)).sum
+        if (unroutable > 0)
+          throw new IllegalStateException(
+            s"debezium pump: $unroutable envelope(s) with NULL " +
+              "source.db/source.table — refusing to drop changes")
+        routes.filter(r => r.getString(0) != db ||
+            !tableSchemas.contains(r.getString(1)))
+          .foreach { r =>
+            log.warn(s"debezium pump: skipping ${r.getLong(2)} " +
+              s"envelope(s) for unsubscribed ${r.getString(0)}." +
+              s"${r.getString(1)}")
           }
-          // all subscribed belts are vacuumed on the cadence — a
-          // table absent from recent batches still holds dead
-          // versions from earlier ones
-          if (vacuumEvery > 0 && bid > 0 && bid % vacuumEvery == 0) {
-            // FS-abstracted existence check: a subscribed table that
-            // has not merged yet has no belt dir (and java.io.File
-            // would never see one on hdfs://-style roots anyway)
-            val existing = BucketStateStore
-              .listStateDirs(batch.sparkSession, stateRoot).toSet
-            tableSchemas.keys.foreach { table =>
-              val dir = s"$stateRoot/${db}__$table"
-              if (existing.exists(_.endsWith(s"/${db}__$table")))
-                vacuum(batch.sparkSession, dir, vacuumKeep)
-            }
-          }
-        } finally b.unpersist()
-      }
-      .start()
+        tableSchemas.foreach { case (table, schema) =>
+          val tpk = pkFor.getOrElse(table, pk)
+          val slice = DebeziumAdapter.forTable(
+            DebeziumAdapter.parse(b, schema, tpk), db, table)
+          // skip empty slices: a table absent from this batch must
+          // not churn its state version
+          if (!slice.isEmpty)
+            mergeIntoState(slice, s"$stateRoot/${db}__$table", tpk,
+              DebeziumAdapter.orderCols)
+        }
+      } finally b.unpersist()
+    }
   }
 
   private lazy val log =

@@ -7,13 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 
-/** Production-face verification for the streaming curation pair
-  * (CurationPumps): the foreachBatch + BucketStateStore drains must
-  * (a) land exactly on the batch answers the q154/q155 oracle faces
-  * prove, and (b) survive a crash-restart — kill the query, add more
-  * data, restart from the same checkpoint, still land on the full
-  * batch answer (the StreamingCdcSpec discipline applied to corpus
-  * analytics state).
+/** Production-face verification for the streaming curation censuses
+  * (CurationPumps legs, one or several per monitor pump): the
+  * foreachBatch + BucketStateStore drains must (a) land exactly on
+  * the batch answers the q154/q155 oracle faces prove, and (b)
+  * survive a crash-restart — kill the query, add more data, restart
+  * from the same checkpoint, still land on the full batch answer (the
+  * StreamingCdcSpec discipline applied to corpus analytics state).
   */
 class CurationPumpsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -37,8 +37,8 @@ class CurationPumpsSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_novpump").toString
     writeSlices(s"$root/feed", Seq(
       docs.filter(col("doc_id") % 2 === 1), docs.filter(col("doc_id") % 2 === 0)))
-    CurationPumps.startNoveltyPump(stream(s"$root/feed"),
-      s"$root/state", s"$root/ckpt", k = 3).awaitTermination()
+    CurationPumps.startMonitorPump(stream(s"$root/feed"), s"$root/ckpt",
+      Seq(CurationPumps.noveltyLeg(s"$root/state", k = 3))).awaitTermination()
     val got = CurationPumps.noveltyReport(spark, s"$root/state", docs, k = 3)
       .collect()
     val want = Dedup.ngramNovelty(docs, k = 3).orderBy("doc_id").collect()
@@ -50,8 +50,8 @@ class CurationPumpsSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_novcrash").toString
     // phase 1: only the odd half exists; drain and "crash" (query gone)
     writeSlices(s"$root/feed", Seq(docs.filter(col("doc_id") % 2 === 1)))
-    CurationPumps.startNoveltyPump(stream(s"$root/feed"),
-      s"$root/state", s"$root/ckpt", k = 3).awaitTermination()
+    CurationPumps.startMonitorPump(stream(s"$root/feed"), s"$root/ckpt",
+      Seq(CurationPumps.noveltyLeg(s"$root/state", k = 3))).awaitTermination()
     val v1 = graft.streaming.BucketStateStore
       .currentVersion(spark, s"$root/state")
     assert(v1.nonEmpty, "phase 1 must have committed dictionary state")
@@ -65,8 +65,8 @@ class CurationPumpsSpec extends AnyFunSuite {
     // more data arrives while the pump is down
     writeSlices(s"$root/feed", Seq(docs.filter(col("doc_id") % 2 === 0)))
     // phase 2: new query, SAME checkpoint — resumes past processed files
-    CurationPumps.startNoveltyPump(stream(s"$root/feed"),
-      s"$root/state", s"$root/ckpt", k = 3).awaitTermination()
+    CurationPumps.startMonitorPump(stream(s"$root/feed"), s"$root/ckpt",
+      Seq(CurationPumps.noveltyLeg(s"$root/state", k = 3))).awaitTermination()
     val got = CurationPumps.noveltyReport(spark, s"$root/state", docs, 3)
       .collect()
     val want = Dedup.ngramNovelty(docs, k = 3).orderBy("doc_id").collect()
@@ -77,8 +77,8 @@ class CurationPumpsSpec extends AnyFunSuite {
   test("novelty pump: replayed batch is fenced (no-op, no version churn)") {
     val root = Files.createTempDirectory("graft_novfence").toString
     writeSlices(s"$root/feed", Seq(docs.filter(col("doc_id") % 2 === 1)))
-    CurationPumps.startNoveltyPump(stream(s"$root/feed"),
-      s"$root/state", s"$root/ckpt", k = 3).awaitTermination()
+    CurationPumps.startMonitorPump(stream(s"$root/feed"), s"$root/ckpt",
+      Seq(CurationPumps.noveltyLeg(s"$root/state", k = 3))).awaitTermination()
     val v = graft.streaming.BucketStateStore
       .currentVersion(spark, s"$root/state").get
     // simulate the crash-replay of an already-folded micro-batch: the
@@ -98,12 +98,14 @@ class CurationPumpsSpec extends AnyFunSuite {
     val corpus = docs.filter(col("doc_id") % 100 =!= 0)
     // phase 1: first half of the corpus, drain, "crash"
     writeSlices(s"$root/feed", Seq(corpus.filter(col("doc_id") % 2 === 1)))
-    CurationPumps.startContaminationPump(stream(s"$root/feed"), probes,
-      s"$root/state", s"$root/ckpt", k = 3).awaitTermination()
+    CurationPumps.startMonitorPump(stream(s"$root/feed"), s"$root/ckpt",
+      Seq(CurationPumps.contaminationLeg(probes, s"$root/state", k = 3)))
+      .awaitTermination()
     // second half arrives; restart from the same checkpoint
     writeSlices(s"$root/feed", Seq(corpus.filter(col("doc_id") % 2 === 0)))
-    CurationPumps.startContaminationPump(stream(s"$root/feed"), probes,
-      s"$root/state", s"$root/ckpt", k = 3).awaitTermination()
+    CurationPumps.startMonitorPump(stream(s"$root/feed"), s"$root/ckpt",
+      Seq(CurationPumps.contaminationLeg(probes, s"$root/state", k = 3)))
+      .awaitTermination()
     val got = CurationPumps.contaminationVerdicts(spark, s"$root/state")
       .collect()
     val want = Dedup.contaminationScan(corpus, probes, k = 3)
@@ -127,9 +129,9 @@ class CurationPumpsSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_agrpump").toString
     // phase 1: odd half only; drain and "crash" (query object gone)
     writeSlices(s"$root/feed", Seq(agreeDocs.filter(col("doc_id") % 2 === 1)))
-    CurationPumps.startAgreementPump(agreeStream(s"$root/feed"),
-      s"$root/state", s"$root/ckpt", gold = col("lang"), pred = langPred)
-      .awaitTermination()
+    CurationPumps.startMonitorPump(agreeStream(s"$root/feed"), s"$root/ckpt",
+      Seq(CurationPumps.agreementLeg(s"$root/state", gold = col("lang"),
+        pred = langPred))).awaitTermination()
     // the half-corpus census is itself a correct half answer
     val half = CurationPumps.agreementReport(spark, s"$root/state").collect()
     val wantHalf = graft.ops.Agreement.classifierReport(
@@ -138,9 +140,9 @@ class CurationPumpsSpec extends AnyFunSuite {
     assert(half.toSeq == wantHalf.toSeq, "mid-crash census grades the half")
     // more documents arrive while the pump is down; restart, SAME ckpt
     writeSlices(s"$root/feed", Seq(agreeDocs.filter(col("doc_id") % 2 === 0)))
-    CurationPumps.startAgreementPump(agreeStream(s"$root/feed"),
-      s"$root/state", s"$root/ckpt", gold = col("lang"), pred = langPred)
-      .awaitTermination()
+    CurationPumps.startMonitorPump(agreeStream(s"$root/feed"), s"$root/ckpt",
+      Seq(CurationPumps.agreementLeg(s"$root/state", gold = col("lang"),
+        pred = langPred))).awaitTermination()
     val got = CurationPumps.agreementReport(spark, s"$root/state").collect()
     val want = graft.ops.Agreement.classifierReport(agreeDocs,
       col("lang"), langPred).collect()
@@ -153,9 +155,9 @@ class CurationPumpsSpec extends AnyFunSuite {
     "would double without it") {
     val root = Files.createTempDirectory("graft_agrfence").toString
     writeSlices(s"$root/feed", Seq(agreeDocs))
-    CurationPumps.startAgreementPump(agreeStream(s"$root/feed"),
-      s"$root/state", s"$root/ckpt", gold = col("lang"), pred = langPred)
-      .awaitTermination()
+    CurationPumps.startMonitorPump(agreeStream(s"$root/feed"), s"$root/ckpt",
+      Seq(CurationPumps.agreementLeg(s"$root/state", gold = col("lang"),
+        pred = langPred))).awaitTermination()
     val cells = CurationPumps.agreementCells(spark, s"$root/state")
       .orderBy("gold", "pred").collect()
     // crash-replay of already-folded micro-batch 0: counts are NOT
@@ -184,9 +186,9 @@ class CurationPumpsSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_scorepump").toString
     // phase 1: odd half only; drain and "crash"
     writeSlices(s"$root/feed", Seq(agreeDocs.filter(col("doc_id") % 2 === 1)))
-    CurationPumps.startScorePump(agreeStream(s"$root/feed"),
-      s"$root/state", s"$root/ckpt", score = markerScore, label = enLabel)
-      .awaitTermination()
+    CurationPumps.startMonitorPump(agreeStream(s"$root/feed"), s"$root/ckpt",
+      Seq(CurationPumps.scoreLeg(s"$root/state", score = markerScore,
+        label = enLabel))).awaitTermination()
     val half = CurationPumps.scoreAuc(spark, s"$root/state").collect()
     val wantHalf = graft.ops.ScoreEval.rocAuc(
         agreeDocs.filter(col("doc_id") % 2 === 1), markerScore, enLabel)
@@ -194,9 +196,9 @@ class CurationPumpsSpec extends AnyFunSuite {
     assert(half.toSeq == wantHalf.toSeq, "mid-crash census grades the half")
     // the rest arrives while the pump is down; restart on the SAME ckpt
     writeSlices(s"$root/feed", Seq(agreeDocs.filter(col("doc_id") % 2 === 0)))
-    CurationPumps.startScorePump(agreeStream(s"$root/feed"),
-      s"$root/state", s"$root/ckpt", score = markerScore, label = enLabel)
-      .awaitTermination()
+    CurationPumps.startMonitorPump(agreeStream(s"$root/feed"), s"$root/ckpt",
+      Seq(CurationPumps.scoreLeg(s"$root/state", score = markerScore,
+        label = enLabel))).awaitTermination()
     val got = CurationPumps.scoreAuc(spark, s"$root/state").collect()
     val want = graft.ops.ScoreEval.rocAuc(agreeDocs, markerScore, enLabel)
       .collect()
@@ -209,9 +211,9 @@ class CurationPumpsSpec extends AnyFunSuite {
     "would double without it") {
     val root = Files.createTempDirectory("graft_scorefence").toString
     writeSlices(s"$root/feed", Seq(agreeDocs))
-    CurationPumps.startScorePump(agreeStream(s"$root/feed"),
-      s"$root/state", s"$root/ckpt", score = markerScore, label = enLabel)
-      .awaitTermination()
+    CurationPumps.startMonitorPump(agreeStream(s"$root/feed"), s"$root/ckpt",
+      Seq(CurationPumps.scoreLeg(s"$root/state", score = markerScore,
+        label = enLabel))).awaitTermination()
     val cells = CurationPumps.scoreCensusState(spark, s"$root/state")
       .orderBy("s").collect()
     CurationPumps.mergeScoreBatch(agreeDocs, markerScore, enLabel,
@@ -240,18 +242,18 @@ class CurationPumpsSpec extends AnyFunSuite {
     "across a crash-restart") {
     val root = Files.createTempDirectory("graft_driftpump").toString
     writeSlices(s"$root/feed", Seq(driftDocs.filter(col("doc_id") % 2 === 1)))
-    CurationPumps.startDriftPump(driftStream(s"$root/feed"),
-      s"$root/state", s"$root/ckpt", score = col("n_chars"),
-      group = src0Group).awaitTermination()
+    CurationPumps.startMonitorPump(driftStream(s"$root/feed"), s"$root/ckpt",
+      Seq(CurationPumps.driftLeg(s"$root/state", score = col("n_chars"),
+        group = src0Group))).awaitTermination()
     val half = CurationPumps.driftKs(spark, s"$root/state").collect()
     val wantHalf = graft.ops.ScoreEval.ksTest(
         driftDocs.filter(col("doc_id") % 2 === 1), col("n_chars"),
         src0Group).collect()
     assert(half.toSeq == wantHalf.toSeq, "mid-crash census grades the half")
     writeSlices(s"$root/feed", Seq(driftDocs.filter(col("doc_id") % 2 === 0)))
-    CurationPumps.startDriftPump(driftStream(s"$root/feed"),
-      s"$root/state", s"$root/ckpt", score = col("n_chars"),
-      group = src0Group).awaitTermination()
+    CurationPumps.startMonitorPump(driftStream(s"$root/feed"), s"$root/ckpt",
+      Seq(CurationPumps.driftLeg(s"$root/state", score = col("n_chars"),
+        group = src0Group))).awaitTermination()
     val got = CurationPumps.driftKs(spark, s"$root/state").collect()
     val want = graft.ops.ScoreEval.ksTest(driftDocs, col("n_chars"),
       src0Group).collect()
@@ -485,9 +487,9 @@ class CurationPumpsSpec extends AnyFunSuite {
   test("drift pump: replayed batch is fenced") {
     val root = Files.createTempDirectory("graft_driftfence").toString
     writeSlices(s"$root/feed", Seq(driftDocs))
-    CurationPumps.startDriftPump(driftStream(s"$root/feed"),
-      s"$root/state", s"$root/ckpt", score = col("n_chars"),
-      group = src0Group).awaitTermination()
+    CurationPumps.startMonitorPump(driftStream(s"$root/feed"), s"$root/ckpt",
+      Seq(CurationPumps.driftLeg(s"$root/state", score = col("n_chars"),
+        group = src0Group))).awaitTermination()
     val cells = CurationPumps.driftCensusState(spark, s"$root/state")
       .orderBy("s").collect()
     CurationPumps.mergeDriftBatch(driftDocs, col("n_chars"), src0Group,
@@ -578,9 +580,9 @@ class CurationPumpsSpec extends AnyFunSuite {
     // newest version
     writeSlices(s"$root/feed", (0 to 7).map(i =>
       agreeDocs.filter(col("doc_id") % 8 === i)))
-    CurationPumps.startScorePump(agreeStream(s"$root/feed"),
-      s"$root/state", s"$root/ckpt", score = markerScore, label = enLabel,
-      vacuumEvery = 1, vacuumKeep = 1)
+    CurationPumps.startMonitorPump(agreeStream(s"$root/feed"), s"$root/ckpt",
+      Seq(CurationPumps.scoreLeg(s"$root/state", score = markerScore,
+        label = enLabel)), vacuumEvery = 1, vacuumKeep = 1)
       .awaitTermination()
     val versions = graft.streaming.BucketStateStore
       .availableVersions(spark, s"$root/state")

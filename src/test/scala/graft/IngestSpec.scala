@@ -1792,6 +1792,10 @@ class GraftAppSpec extends AnyFunSuite {
       "--overlap-group-col=source")))
     assert(r.curations.map(_.mode) == Seq("monitor-ksmatrix",
       "monitor-jsd", "monitor-vocab"))
+    // the vocab record counts the jsd census it reads
+    val stateRows = r.curations.map(x => x.mode -> x.srcRows).toMap
+    assert(stateRows("monitor-vocab") == stateRows("monitor-jsd"),
+      s"vocab reports the jsd census's state rows: $stateRows")
     assert(spark.read.parquet(s"$dst/documents_monitor_ksmatrix.parquet")
         .orderBy("grp").collect().toSeq ==
       graft.ops.ScoreEval.ksMatrix(docs, col("n_chars"), col("source"))
@@ -1810,6 +1814,8 @@ class GraftAppSpec extends AnyFunSuite {
       s"--dst-dir=$dst2", "--src-tables=documents", "--pumps=vocab",
       "--overlap-group-col=source")))
     assert(r2.curations.map(_.mode) == Seq("monitor-vocab"))
+    assert(r2.curations.head.srcRows > 0,
+      "vocab alone counts the census it folds")
     assert(spark.read.parquet(s"$dst2/documents_monitor_vocab.parquet")
         .orderBy("grp").collect().toSeq ==
       graft.text.Vocab.vocabCoverage(docs, col("source"))

@@ -313,6 +313,113 @@ class StreamingCdcSpec extends AnyFunSuite {
       "debezium pump state must equal the direct batch replay")
   }
 
+  /** One 2000-key insert, then single-key updates: each update's run
+    * stays far below a quarter of its base, so every merge after the
+    * first writes a run and each vacuum has a run to fold.
+    */
+  private def cadenceBatches(table: String): Seq[DataFrame] = {
+    import spark.implicits._
+    val cols = Seq("id", "ver", "v", "op", "table")
+    (1L to 2000L).map(i => (i, 1L, (i * 2654435761L).toHexString * 8,
+        "insert", table)).toDF(cols: _*) +:
+      (1L to 3L).map(i => Seq((i, 2L, s"upd$i", "update", table)).toDF(cols: _*))
+  }
+
+  private def rows(df: DataFrame): Seq[(Long, String)] =
+    df.select("id", "v").orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+
+  test("pump vacuum cadence: every 2nd batch, keep 1, leaves exactly " +
+    "the versions the cadence implies") {
+    import graft.streaming.BucketStateStore
+    val root = Files.createTempDirectory("graft_scdc_vac").toString
+    val batches = cadenceBatches("t").map(_.drop("table"))
+    writeBatchFiles(s"$root/feed", batches)
+    StreamingCdc.start(
+        spark.readStream.schema(batches.head.schema)
+          .option("maxFilesPerTrigger", 1).parquet(s"$root/feed"),
+        s"$root/state", s"$root/ckpt", Seq("id"), Seq("ver"),
+        vacuumEvery = 2, vacuumKeep = 1)
+      .awaitTermination()
+    // batch 0 writes base v0, batches 1 and 2 write runs v1 and v2; the
+    // vacuum after batch 2 folds the run into v3 and keeps only v3;
+    // batch 3 writes run v4. Batches 0 and 3 do not vacuum.
+    assert(BucketStateStore.availableVersions(spark, s"$root/state") ==
+      Seq(3L, 4L))
+    assert(new java.io.File(s"$root/state").list().filter(_.startsWith("v"))
+      .toSet == Set("v3", "v4"), "vacuum retires the dirs of v0..v2")
+    val want = CdcApplier.replayCompact(batches.reduce(_ unionByName _),
+      Seq("id"), Seq(col("ver")))
+    assert(rows(StreamingCdc.currentState(spark, s"$root/state",
+      batches.head.drop("op"))) == rows(want))
+  }
+
+  test("multiplexed pump vacuum cadence reaches every per-table dir, " +
+    "including a table absent from the vacuuming batch") {
+    import graft.streaming.BucketStateStore
+    val root = Files.createTempDirectory("graft_scdc_muxvac").toString
+    val a = cadenceBatches("a")
+    val b = cadenceBatches("b").take(2)
+    val batches = a.indices.map(i =>
+      (if (i < b.size) a(i).unionByName(b(i)) else a(i))
+        .withColumn("db", lit("g")))
+    writeBatchFiles(s"$root/feed", batches)
+    StreamingCdc.startMultiplexed(
+        spark.readStream.schema(batches.head.schema)
+          .option("maxFilesPerTrigger", 1).parquet(s"$root/feed"),
+        s"$root/state", s"$root/ckpt", Seq("id"), Seq("ver"),
+        vacuumEvery = 2, vacuumKeep = 1)
+      .awaitTermination()
+    // a: as the single-table cadence (v0 base, v1/v2 runs, fold v3,
+    // run v4); b merges only in batches 0 and 1, and the vacuum after
+    // batch 2 still folds its run into v2 and retires v0 and v1
+    assert(BucketStateStore.availableVersions(spark, s"$root/state/g__a") ==
+      Seq(3L, 4L))
+    assert(BucketStateStore.availableVersions(spark, s"$root/state/g__b") ==
+      Seq(2L))
+    Seq("a" -> a, "b" -> b).foreach { case (t, fed) =>
+      val want = CdcApplier.replayCompact(
+        fed.reduce(_ unionByName _).drop("table"), Seq("id"), Seq(col("ver")))
+      assert(rows(StreamingCdc.currentState(spark, s"$root/state/g__$t",
+        fed.head.drop("op", "table"))) == rows(want), s"state of $t")
+    }
+  }
+
+  test("debezium pump vacuum cadence skips a subscribed table that " +
+    "never arrives: no dir, no failure") {
+    import graft.streaming.BucketStateStore
+    val root = Files.createTempDirectory("graft_dbz_vac").toString
+    val rowSchema = feed.drop("op").schema
+    val weeks = ChangeFeed.timeBatches(feed, "week")
+    assert(weeks.size >= 4, s"need 4 batches, the feed has ${weeks.size} weeks")
+    // four files in binlog (time) order
+    weeks.zipWithIndex.groupBy { case (_, i) => i * 4 / weeks.size }
+      .toSeq.sortBy(_._1).foreach { case (_, ws) =>
+        DebeziumTestFeed.toDebeziumJson(ws.map(_._1).reduce(_ unionByName _),
+            rowSchema, wrapped = false)
+          .coalesce(1).write.mode("append").text(s"$root/feed")
+      }
+    StreamingCdc.startDebezium(
+        spark.readStream.option("maxFilesPerTrigger", 1).text(s"$root/feed"),
+        s"$root/state", s"$root/ckpt", db = "graft",
+        tableSchemas = Map("events" -> rowSchema, "ghost" -> rowSchema),
+        pk = pk, vacuumEvery = 2, vacuumKeep = 1)
+      .awaitTermination()
+    assert(!new java.io.File(s"$root/state/graft__ghost").exists(),
+      "vacuuming a table that never merged must not create its dir")
+    // the vacuum after batch 2 keeps one version, batch 3 adds one
+    assert(BucketStateStore.availableVersions(spark,
+      s"$root/state/graft__events").size == 2)
+    val template = feed.drop("op")
+      .withColumn("_ts_ms", lit(0L)).withColumn("_pos", lit(0L))
+    val got = StreamingCdc.currentState(spark, s"$root/state/graft__events",
+        template)
+      .select("user_id", "event_id").orderBy("user_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.sameElements(batchAnswer),
+      "debezium pump state must equal the direct batch replay")
+  }
+
   test("incremental agg: streamed fold equals one-shot aggregation") {
     import graft.streaming.IncrementalAgg
     val root = Files.createTempDirectory("graft_iagg").toString
