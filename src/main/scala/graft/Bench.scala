@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.TimeUnit
@@ -121,16 +120,7 @@ object Bench {
   private def runShard(names: Seq[String], outPath: String): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // testdata timestamps are naive timestamp[us]; read them as
-      // session-zone TIMESTAMP (the pre-regeneration type), not NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
 
     def runOnce(name: String): Option[String] =
       try {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit diagnostic: print the formatted physical plan of one or
   * more SparkEntry queries without executing them.
@@ -20,16 +19,7 @@ object Explain {
       if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
         .filterNot(SparkEntry.benchExclude)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      // testdata timestamps are naive timestamp[us]; read them as
-      // session-zone TIMESTAMP (the pre-regeneration type), not NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("4", "ERROR")
     names.foreach { name =>
       println(s"\n========== $name ==========")
       SparkEntry.queries(name)(spark, sfDir).explain("formatted")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Where-does-the-time-go diagnostic (optimization guide §1): run one
@@ -61,14 +60,7 @@ object Profile {
       if (args.length > 1) args.drop(1).toSeq
       else Seq("q01_pricing_summary")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     val tracker = new JobTracker
     spark.sparkContext.addSparkListener(tracker)
 

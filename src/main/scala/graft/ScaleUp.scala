@@ -31,16 +31,7 @@ object ScaleUp {
     val dst = args(1)
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // testdata timestamps are naive timestamp[us]; read them as
-      // session-zone TIMESTAMP (the pre-regeneration type), not NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
 
     def load(t: String): DataFrame = Tables.load(spark, src, t)
     def save(df: DataFrame, t: String): Unit =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -34,16 +33,7 @@ object SoakPageRank {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val iters = args.lift(1).map(_.toInt).getOrElse(3)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // testdata timestamps are naive timestamp[us]; read them as
-      // session-zone TIMESTAMP (the pre-regeneration type), not NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
 
     val edges = queries.PipelineQueries.copurchaseEdges(spark, sfDir)
 

@@ -5,7 +5,8 @@ import graft.cdc.ChangeFeed
 import graft.migrate.Migrator
 import graft.schema.{CatalogReader, DdlBuilder}
 import graft.streaming.StreamingCdc
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, filter, lit, size, when}
 
 /** Thin config + run-mode dispatcher (SURVEY §2.13) — the
   * Spark-native analog of the reference's Main/Config/CLIOpts stack
@@ -107,9 +108,6 @@ object GraftApp {
       agreementPred: Option[String] = None, // --agreement-pred=<col>;
                                             // default: built-in langId
                                             // over --text-col (q153)
-      noveltyPump: Boolean = false,         // --novelty-pump
-      contaminationPump: Option[String] = None, // --contamination-pump=<dir>
-      agreementPump: Boolean = false,       // --agreement-pump
       scoreReport: Boolean = false,         // --score-report
       scoreCol: Option[String] = None,      // --score-col=<integral col>;
                                             // default: built-in marker-hit
@@ -124,10 +122,8 @@ object GraftApp {
                                             // milli-units here (largest
                                             // remainder), integral maps
                                             // must already sum to 1000
-      scorePump: Boolean = false,           // --score-pump
       vocabReport: Boolean = false,         // --vocab-report
       driftReport: Boolean = false,         // --drift-report
-      driftPump: Boolean = false,           // --drift-pump
       driftCol: String = "n_chars",         // --drift-col=<integral col>
       driftGroupVal: String = "src0",       // --drift-group-val=<value>;
                                             // the --overlap-group-col slice
@@ -160,9 +156,8 @@ object GraftApp {
       stateExportRows: Option[Long] = None,
       jsonTemplates: Seq[String] = Nil,     // --create-table-json-template
       dryPlanned: Seq[String] = Nil,        // --dry: what WOULD have run
-      curations: Seq[Curation] = Nil,       // --scd2/--ppl-filter/--dedup/
-                                            // --contamination/--semdedup/
-                                            // --embed-contamination/--ann-recall
+      curations: Seq[Curation] = Nil,       // batch curation modes, then
+                                            // --pumps censuses
       remigrations: Seq[Migrator.Remigration] = Nil) // --remigrate
 
   /** One table-level curation run: `mode` over `table`, `srcRows` in,
@@ -381,64 +376,43 @@ object GraftApp {
       if (!c.createTableJson) Nil
       else tables.map(t => DdlBuilder.schemaJson(schemaFor(t)))
 
+    val modes = batchModes(spark, c).filter(_.on)
+    def outBase(t: String) = s"${c.dstDir}/${dstNameFor(t)}"
+    def monitorRoot(t: String) = s"${outBase(t)}_monitor_state"
+    // one census of the --pumps monitor over table t
+    def censusOf(t: String, leg: String) = Census(leg,
+      // vocab is a second FACE of the jsd leg's token census: it
+      // reads the jsd state, and folds it only when jsd does not
+      s"${monitorRoot(t)}/${if (leg == "vocab") "jsd" else leg}",
+      s"monitor-$leg", s"${outBase(t)}_monitor_$leg.parquet",
+      folds = leg != "vocab" || !c.pumps.contains("jsd"))
+
     // --dry (clioptions.py:100-107): resolve, emit driver-side DDL/
     // templates, but execute nothing — report what WOULD have run
     if (c.dry) {
+      // "<label>: <table> -> <path> [+ <path>...], ..."
+      def planLine(label: String, paths: String => Seq[String]) =
+        s"$label: ${tables.map(t => s"$t -> ${paths(t).mkString(" + ")}").mkString(", ")}"
       val planned = Seq(
         c.dstCreateTable ->
           s"dst-create-table: ${tables.map(t => s"${c.db}.$t").mkString(", ")}",
-        c.migrateTable -> {
-          val dest = (t: String) => c.dstJdbcUrl
-            .fold(s"${c.dstDir}/${dstNameFor(t)}.parquet")(u => s"$u/${dstNameFor(t)}")
-          s"migrate-table: ${tables.map(t => s"$t -> ${dest(t)}").mkString(", ")}"
-        },
+        c.migrateTable -> planLine("migrate-table", t => Seq(c.dstJdbcUrl
+          .fold(s"${outBase(t)}.parquet")(u => s"$u/${dstNameFor(t)}"))),
         c.csvExport ->
           s"csvpool: ${tables.map(t => s"${c.dstDir}/csv/$t").mkString(", ")}",
         (c.pumpData || c.srcJdbcUrl.isDefined || c.debeziumFeed.isDefined) ->
           s"pump-data -> ${c.dstDir}/_state",
-        c.scd2 ->
-          s"scd2: ${tables.map(t => s"$t -> ${c.dstDir}/${dstNameFor(t)}_history.parquet").mkString(", ")}",
-        c.pplFilter ->
-          s"ppl-filter: ${tables.map(t => s"$t -> ${c.dstDir}/${dstNameFor(t)}_ppl.parquet").mkString(", ")}",
-        c.dedup ->
-          s"dedup: ${tables.map(t => s"$t -> ${c.dstDir}/${dstNameFor(t)}_dedup.parquet").mkString(", ")}",
-        c.contaminationProbes.isDefined ->
-          s"contamination: ${tables.map(t => s"$t -> ${c.dstDir}/${dstNameFor(t)}_contamination.parquet").mkString(", ")}",
-        c.semdedup ->
-          s"semdedup: ${tables.map(t => s"$t -> ${c.dstDir}/${dstNameFor(t)}_semdedup.parquet").mkString(", ")}",
-        c.embedContaminationProbes.isDefined ->
-          s"embed-contamination: ${tables.map(t => s"$t -> ${c.dstDir}/${dstNameFor(t)}_embed_contamination.parquet").mkString(", ")}",
-        c.annRecall.isDefined ->
-          s"ann-recall[${c.annRecall.getOrElse("")}]: ${tables.map(t => s"$t -> ${c.dstDir}/${dstNameFor(t)}_ann_recall_${c.annRecall.getOrElse("")}.parquet").mkString(", ")}",
-        c.overlapReport ->
-          s"overlap-report: ${tables.map(t => s"$t -> ${c.dstDir}/${dstNameFor(t)}_overlap.parquet").mkString(", ")}",
-        c.noveltyReport ->
-          s"novelty-report: ${tables.map(t => s"$t -> ${c.dstDir}/${dstNameFor(t)}_novelty.parquet").mkString(", ")}",
-        c.remigrate ->
-          s"remigrate: ${tables.map(t => s"$t -> ${c.dstDir}/${dstNameFor(t)}.parquet (merge on ${c.pkFor.getOrElse(t, c.pk).mkString("+")})").mkString(", ")}",
-        c.agreementReport ->
-          s"agreement-report[${c.agreementGold} vs ${c.agreementPred.getOrElse("langid(" + c.textCol + ")")}]: ${tables.map(t => s"$t -> ${c.dstDir}/${dstNameFor(t)}_agreement.parquet").mkString(", ")}",
-        c.noveltyPump ->
-          s"novelty-pump: ${tables.map(t => s"$t -> ${c.dstDir}/${dstNameFor(t)}_novelty_state").mkString(", ")}",
-        c.contaminationPump.isDefined ->
-          s"contamination-pump: ${tables.map(t => s"$t -> ${c.dstDir}/${dstNameFor(t)}_contamination_state").mkString(", ")}",
-        c.agreementPump ->
-          s"agreement-pump[${c.agreementGold} vs ${c.agreementPred.getOrElse("langid(" + c.textCol + ")")}]: ${tables.map(t => s"$t -> ${c.dstDir}/${dstNameFor(t)}_agreement_state").mkString(", ")}",
-        c.scoreReport ->
-          s"score-report[${c.scoreCol.getOrElse("marker_hits(" + c.textCol + ")")} vs ${c.scoreLabel.getOrElse(c.agreementGold + "=" + c.scorePositive)}]: ${tables.map(t => s"$t -> ${c.dstDir}/${dstNameFor(t)}_roc.parquet + _score_summary.parquet").mkString(", ")}",
-        (c.scoreReport && c.scoreClasses.isDefined) ->
-          s"score-classes[${c.scoreClasses.getOrElse("")} vs ${c.agreementGold}]: ${tables.map(t => s"$t -> ${c.dstDir}/${dstNameFor(t)}_class_{logloss,calibration,ap,auc,points}.parquet").mkString(", ")}",
-        c.scorePump ->
-          s"score-pump[${c.scoreCol.getOrElse("marker_hits(" + c.textCol + ")")} vs ${c.scoreLabel.getOrElse(c.agreementGold + "=" + c.scorePositive)}]: ${tables.map(t => s"$t -> ${c.dstDir}/${dstNameFor(t)}_score_state").mkString(", ")}",
-        c.vocabReport ->
-          s"vocab-report[${c.overlapGroupCol}]: ${tables.map(t => s"$t -> ${c.dstDir}/${dstNameFor(t)}_vocab.parquet").mkString(", ")}",
-        c.driftReport ->
-          s"drift-report[${c.driftCol}, ${c.overlapGroupCol}=${c.driftGroupVal} vs rest]: ${tables.map(t => s"$t -> ${c.dstDir}/${dstNameFor(t)}_drift.parquet").mkString(", ")}",
-        c.driftPump ->
-          s"drift-pump[${c.driftCol}, ${c.overlapGroupCol}=${c.driftGroupVal} vs rest]: ${tables.map(t => s"$t -> ${c.dstDir}/${dstNameFor(t)}_drift_state").mkString(", ")}",
-        c.pumps.nonEmpty ->
-          s"monitor-pump[${c.pumps.mkString(",")}]: ${tables.map(t => s"$t -> ${c.dstDir}/${dstNameFor(t)}_monitor_state/{${c.pumps.mkString(",")}} (one reader, one checkpoint)").mkString(", ")}"
-      ).collect { case (true, s) => s }
+        c.remigrate -> planLine("remigrate", t => Seq(s"${outBase(t)}.parquet " +
+          s"(merge on ${c.pkFor.getOrElse(t, c.pk).mkString("+")})")),
+        c.pumps.nonEmpty -> planLine(s"monitor-pump[${c.pumps.mkString(",")}]",
+          t => Seq(s"${monitorRoot(t)}/{${c.pumps.mkString(",")}} " +
+            "(one reader, one checkpoint)"))
+      ).collect { case (true, s) => s } ++
+        modes.map(m => planLine(m.label, t => m.suffixes.map(outBase(t) + _))) ++
+        c.pumps.map(leg => planLine(s"monitor-$leg${legDials(c, leg)}", t => {
+          val x = censusOf(t, leg)
+          Seq(x.stateDir, x.out)
+        }))
       return Result(ddl = ddl, templates = templates,
         jsonTemplates = jsonTemplates, dryPlanned = planned)
     }
@@ -512,424 +486,28 @@ object GraftApp {
         out
       }
 
-    // table-level curation modes (the round-6 pipeline operators on
-    // the CLI face): --scd2 derives the SCD-type-2 history view the
-    // reference's current-state replays discard; --ppl-filter is the
-    // CCNet-style perplexity-bucket filter. Both compose with the
-    // migration transform spec (column-skip / where / converters),
-    // like every other mode.
-    val curations: Seq[Curation] = {
-      import org.apache.spark.sql.functions.col
-      // per-table key resolution honors --pk-for like the pump modes
-      def keyFor(t: String): String = {
-        val pk = c.pkFor.getOrElse(t, c.pk)
-        require(pk.nonEmpty, s"--scd2: no key column for table $t " +
-          "(--pk is empty and no --pk-for entry names one)")
-        pk.head
-      }
-      // srcRows rides the write as an observed metric (the Migrator
-      // reconciliation discipline — no extra source scan); outRows is
-      // a parquet-metadata count of what was written
-      val scd2Runs =
-        if (!c.scd2) Nil
-        else {
-          val value = c.scd2Value.getOrElse(throw new IllegalArgumentException(
-            "--scd2 requires --scd2-value=<tracked column>"))
-          tables.map { t =>
-            val obs = org.apache.spark.sql.Observation()
-            val df = Migrator.transformed(spark, c.srcDir, t, spec)
-              .observe(obs, org.apache.spark.sql.functions.count(
-                org.apache.spark.sql.functions.lit(1)).as("src_rows"))
-            val hist = graft.ops.Scd.scd2Intervals(df,
-              col(c.scd2Key.getOrElse(keyFor(t))), col(value),
-              col(c.scd2Ts.getOrElse(c.orderCols.head)),
-              col(c.scd2Tie.getOrElse(c.orderCols.last)))
-            val out = s"${c.dstDir}/${dstNameFor(t)}_history.parquet"
-            hist.write.mode("overwrite").parquet(out)
-            Curation(t, "scd2", obs.get("src_rows").asInstanceOf[Long],
-              spark.read.parquet(out).count(), out)
-          }
-        }
-      val pplRuns =
-        if (!c.pplFilter) Nil
-        else {
-          val unknown = c.pplDrop.filterNot(Set("head", "middle", "tail"))
-          require(unknown.isEmpty,
-            s"--ppl-drop: unknown bucket name(s) ${unknown.mkString(", ")} " +
-              "(expected head, middle, tail) — refusing a silent no-op filter")
-          tables.map { t =>
-            val df = Migrator.transformed(spark, c.srcDir, t, spec)
-            val buckets = graft.text.LanguageModel.perplexityBuckets(df,
-              v = c.pplVocab, buckets = c.pplBuckets, idCol = c.docIdCol,
-              textCol = c.textCol, groupCol = c.pplGroupCol)
-            val keep = buckets
-              .filter(!col("bucket_name").isin(c.pplDrop: _*))
-              .select(col(c.docIdCol))
-            val obs = org.apache.spark.sql.Observation()
-            val kept = df
-              .observe(obs, org.apache.spark.sql.functions.count(
-                org.apache.spark.sql.functions.lit(1)).as("src_rows"))
-              .join(keep, Seq(c.docIdCol), "left_semi")
-            val out = s"${c.dstDir}/${dstNameFor(t)}_ppl.parquet"
-            kept.write.mode("overwrite").parquet(out)
-            Curation(t, "ppl-filter", obs.get("src_rows").asInstanceOf[Long],
-              spark.read.parquet(out).count(), out)
-          }
-        }
-      // --dedup (q46's head through the CLI face): exact dedup keeps
-      // the min-id copy of each distinct text; near-dup clustering
-      // over the k-gram Jaccard pair graph keeps each component's
-      // representative. Output keeps the source schema (a cleaned
-      // copy of the table, like --ppl-filter).
-      val dedupRuns =
-        if (!c.dedup) Nil
-        else tables.map { t =>
-          val base = Migrator.transformed(spark, c.srcDir, t, spec)
-          val exactKeepers = graft.dedup.Dedup
-            .exactDedup(base, c.docIdCol, c.textCol)
-            .select(col("keeper_doc_id").as(c.docIdCol))
-          val nearDupLosers = graft.dedup.Dedup.dupClusters(
-              graft.dedup.Dedup.jaccardPairs(base, k = c.dedupK,
-                threshold = c.dedupJaccard, idCol = c.docIdCol,
-                textCol = c.textCol))
-            .filter(col("doc_id") =!= col("cluster_id"))
-            .select(col("doc_id").as(c.docIdCol))
-          val obs = org.apache.spark.sql.Observation()
-          val kept = base
-            .observe(obs, org.apache.spark.sql.functions.count(
-              org.apache.spark.sql.functions.lit(1)).as("src_rows"))
-            .join(exactKeepers, Seq(c.docIdCol), "left_semi")
-            .join(nearDupLosers, Seq(c.docIdCol), "left_anti")
-          val out = s"${c.dstDir}/${dstNameFor(t)}_dedup.parquet"
-          kept.write.mode("overwrite").parquet(out)
-          Curation(t, "dedup", obs.get("src_rows").asInstanceOf[Long],
-            spark.read.parquet(out).count(), out)
-        }
-      // --contamination=<probe_dir> (q48 through the CLI face): flag
-      // every table row sharing a k-shingle with the probe corpus
-      // (benchmark decontamination). The report is hit-sized —
-      // (doc_id, n_hits) for flagged rows only.
-      val contaminationRuns = c.contaminationProbes match {
-        case None => Nil
-        case Some(probeDir) =>
-          val probes = spark.read.parquet(probeDir)
-          tables.map { t =>
-            val obs = org.apache.spark.sql.Observation()
-            val df = Migrator.transformed(spark, c.srcDir, t, spec)
-              .observe(obs, org.apache.spark.sql.functions.count(
-                org.apache.spark.sql.functions.lit(1)).as("src_rows"))
-            val flagged = graft.dedup.Dedup.contaminationScan(df, probes,
-              k = c.contaminationK, idCol = c.docIdCol, textCol = c.textCol)
-            val out = s"${c.dstDir}/${dstNameFor(t)}_contamination.parquet"
-            flagged.write.mode("overwrite").parquet(out)
-            Curation(t, "contamination",
-              obs.get("src_rows").asInstanceOf[Long],
-              spark.read.parquet(out).count(), out)
-          }
-      }
-      // --semdedup (q107 through the CLI face — the embedding half of
-      // --dedup): Lloyd-cluster the table's embedding column, mark
-      // within-cluster semantic duplicates at the cosine threshold,
-      // keep each cluster's representatives. Output is a cleaned copy
-      // of the table, like --dedup.
-      val semdedupRuns =
-        if (!c.semdedup) Nil
-        else tables.map { t =>
-          val base = Migrator.transformed(spark, c.srcDir, t, spec)
-          val keepers = graft.vector.KMeans.semanticDedup(base,
-              k = c.semdedupClusters, iters = c.semdedupIters,
-              minCos = c.semdedupMinCos, idCol = c.vecIdCol,
-              vecCol = c.embeddingCol)
-            .filter(col("kept") === 1)
-            .select(col("vec_id").as(c.vecIdCol))
-          val obs = org.apache.spark.sql.Observation()
-          val kept = base
-            .observe(obs, org.apache.spark.sql.functions.count(
-              org.apache.spark.sql.functions.lit(1)).as("src_rows"))
-            .join(keepers, Seq(c.vecIdCol), "left_semi")
-          val out = s"${c.dstDir}/${dstNameFor(t)}_semdedup.parquet"
-          kept.write.mode("overwrite").parquet(out)
-          Curation(t, "semdedup", obs.get("src_rows").asInstanceOf[Long],
-            spark.read.parquet(out).count(), out)
-        }
-      // --embed-contamination=<probe_dir> (q148 through the CLI face —
-      // the embedding half of --contamination): flag every table row
-      // whose embedding sits within the cosine threshold of any probe
-      // vector. Hit-sized report (vec_id, hits, max_cos).
-      val embedContaminationRuns = c.embedContaminationProbes match {
-        case None => Nil
-        case Some(probeDir) =>
-          val probes = spark.read.parquet(probeDir)
-          tables.map { t =>
-            val obs = org.apache.spark.sql.Observation()
-            val df = Migrator.transformed(spark, c.srcDir, t, spec)
-              .observe(obs, org.apache.spark.sql.functions.count(
-                org.apache.spark.sql.functions.lit(1)).as("src_rows"))
-            val flagged = graft.vector.VectorSearch.embeddingContamination(
-              df, probes, threshold = c.embedContaminationCos,
-              idCol = c.vecIdCol, vecCol = c.embeddingCol)
-            val out = s"${c.dstDir}/${dstNameFor(t)}_embed_contamination.parquet"
-            flagged.write.mode("overwrite").parquet(out)
-            Curation(t, "embed-contamination",
-              obs.get("src_rows").asInstanceOf[Long],
-              spark.read.parquet(out).count(), out)
-          }
-      }
-      // --ann-recall=<variant> diagnostic (the q142/q144-q146 recall
-      // gate as an operable CLI check): recall@k of the named lossy
-      // index against the exact brute-force scan on the table's own
-      // fixed query set (vec_id % --ann-queries == 0). srcRows here is
-      // the query count — the evaluation's natural denominator.
-      val annRecallRuns = c.annRecall match {
-        case None => Nil
-        case Some(variant) =>
-          import graft.vector.VectorSearch
-          tables.map { t =>
-            val emb = Migrator.transformed(spark, c.srcDir, t, spec)
-            val qs = emb.filter(
-              org.apache.spark.sql.functions.pmod(col(c.vecIdCol),
-                org.apache.spark.sql.functions.lit(c.annQueryMod)) === 0)
-            val exact = VectorSearch.bruteForceTopK(emb, qs, k = c.annK,
-              idCol = c.vecIdCol, vecCol = c.embeddingCol)
-            val approx = variant match {
-              case "int8" => VectorSearch.int8TopK(emb, qs, k = c.annK,
-                idCol = c.vecIdCol, vecCol = c.embeddingCol)
-              case "ivf" => VectorSearch.ivfTopK(emb, qs, k = c.annK,
-                nprobe = 2, numCells = 32, idCol = c.vecIdCol,
-                vecCol = c.embeddingCol, portableSample = true)
-              case "pq" => VectorSearch.pqTopK(emb, qs, k = c.annK,
-                idCol = c.vecIdCol, vecCol = c.embeddingCol)
-              case "lsh" => VectorSearch.rpLshTopK(emb, qs, k = c.annK,
-                nbits = 32, chunks = 4, idCol = c.vecIdCol,
-                vecCol = c.embeddingCol)
-            }
-            val report = graft.vector.Eval.recallAtK(exact, approx, k = c.annK)
-            val out = s"${c.dstDir}/${dstNameFor(t)}_ann_recall_$variant.parquet"
-            report.write.mode("overwrite").parquet(out)
-            Curation(t, s"ann-recall-$variant", qs.count(),
-              spark.read.parquet(out).count(), out)
-          }
-      }
-      // --overlap-report (q152 through the CLI face): the source-pair
-      // shingle Jaccard/containment matrix — the corpus-composition
-      // number to read BEFORE deciding any mixture re-weighting. A
-      // census-sized report, not a cleaned copy; srcRows is the doc
-      // count scanned, outRows the pair count.
-      val overlapRuns =
-        if (!c.overlapReport) Nil
-        else tables.map { t =>
-          val obs = org.apache.spark.sql.Observation()
-          val docs = Migrator.transformed(spark, c.srcDir, t, spec)
-            .observe(obs, org.apache.spark.sql.functions.count(
-              org.apache.spark.sql.functions.lit(1)).as("src_rows"))
-          val report = graft.dedup.Dedup.sourceOverlap(docs, k = c.dedupK,
-            textCol = c.textCol, groupCol = c.overlapGroupCol)
-          val out = s"${c.dstDir}/${dstNameFor(t)}_overlap.parquet"
-          report.write.mode("overwrite").parquet(out)
-          Curation(t, "overlap-report",
-            obs.get("src_rows").asInstanceOf[Long],
-            spark.read.parquet(out).count(), out)
-        }
-      // --novelty-report (q150 through the CLI face): the per-document
-      // first-occurrence novelty curve — the crawl-saturation signal.
-      val noveltyRuns =
-        if (!c.noveltyReport) Nil
-        else tables.map { t =>
-          val obs = org.apache.spark.sql.Observation()
-          val docs = Migrator.transformed(spark, c.srcDir, t, spec)
-            .observe(obs, org.apache.spark.sql.functions.count(
-              org.apache.spark.sql.functions.lit(1)).as("src_rows"))
-          val report = graft.dedup.Dedup.ngramNovelty(docs, k = c.dedupK,
-            idCol = c.docIdCol, textCol = c.textCol)
-          val out = s"${c.dstDir}/${dstNameFor(t)}_novelty.parquet"
-          report.write.mode("overwrite").parquet(out)
-          Curation(t, "novelty-report",
-            obs.get("src_rows").asInstanceOf[Long],
-            spark.read.parquet(out).count(), out)
-        }
-      // --agreement-report (q153/q156 through the CLI face): with ONE
-      // prediction, per-class P/R/F1 + accuracy + Cohen's kappa of
-      // the predicted column against the gold column; with TWO OR
-      // MORE comma-separated predictions, Fleiss' kappa over the
-      // whole panel {gold, preds...} — the go/no-go number to read
-      // before a heuristic labeler (or a labeler panel's majority
-      // vote) gates a curation run. Default prediction is the
-      // built-in language identifier over --text-col (the q153
-      // pairing); --agreement-pred names stored column(s) instead.
-      val agreementRuns =
-        if (!c.agreementReport) Nil
-        else tables.map { t =>
-          val obs = org.apache.spark.sql.Observation()
-          val docs0 = Migrator.transformed(spark, c.srcDir, t, spec)
-          // the observed copy must appear ONCE in the executed plan;
-          // the panel path unions three scans, so only the gold
-          // branch carries the metric (it sees every source row)
-          val observed = docs0.observe(obs,
-            org.apache.spark.sql.functions.count(
-              org.apache.spark.sql.functions.lit(1)).as("src_rows"))
-          val preds = c.agreementPred
-            .map(_.split(",").toSeq.filter(_.nonEmpty))
-            .getOrElse(Nil)
-          val report =
-            if (preds.sizeIs >= 2) {
-              // panel: gold + every prediction, one rating row each
-              val goldRatings = observed.select(
-                col(c.docIdCol).as("item"), col(c.agreementGold).as("cls"))
-              val ratings = preds.map(p => docs0.select(
-                  col(c.docIdCol).as("item"), col(p).as("cls")))
-                .foldLeft(goldRatings)(_ unionByName _)
-              graft.ops.Agreement.fleissKappa(ratings,
-                col("item"), col("cls"))
-            } else {
-              val pred = preds.headOption.map(col).getOrElse(
-                graft.text.TextAnalysis.langId(col(c.textCol),
-                  graft.text.TextAnalysis.defaultProfiles))
-              graft.ops.Agreement.classifierReport(observed,
-                col(c.agreementGold), pred)
-            }
-          val out = s"${c.dstDir}/${dstNameFor(t)}_agreement.parquet"
-          report.write.mode("overwrite").parquet(out)
-          Curation(t, "agreement-report",
-            obs.get("src_rows").asInstanceOf[Long],
-            spark.read.parquet(out).count(), out)
-        }
-      // --score-report (q165/q166/q170 through the CLI face):
-      // threshold-FREE grading of the score a quality gate
-      // thresholds — the ROC operating-point table (the rows a
-      // cutoff is picked from) plus a one-row summary (ROC-AUC and
-      // average precision). Default score is the built-in English
-      // marker-hit count over --text-col (exactly what q21's
-      // minHits=2 cuts); --score-col names a stored integral column
-      // instead. Default label is gold == --score-positive over
-      // --agreement-gold; --score-label names a stored 0/1 column.
-      val scoreRuns =
-        if (!c.scoreReport) Nil
-        else tables.map { t =>
-          val obs = org.apache.spark.sql.Observation()
-          val docs0 = Migrator.transformed(spark, c.srcDir, t, spec)
-          // the observed copy rides ONLY the curve write (the
-          // agreement-panel precedent: one observed plan per metric)
-          val observed = docs0.observe(obs,
-            org.apache.spark.sql.functions.count(
-              org.apache.spark.sql.functions.lit(1)).as("src_rows"))
-          val score = c.scoreCol.map(col).getOrElse(
-            org.apache.spark.sql.functions.size(
-              org.apache.spark.sql.functions.filter(
-                graft.text.TextAnalysis.tokens(col(c.textCol)),
-                tok => tok === "the" || tok === "a")))
-          val label = c.scoreLabel.map(col).getOrElse(
-            org.apache.spark.sql.functions.when(
-              col(c.agreementGold) === c.scorePositive,
-              org.apache.spark.sql.functions.lit(1L))
-              .otherwise(org.apache.spark.sql.functions.lit(0L)))
-          val curve = graft.ops.ScoreEval.rocCurve(observed, score, label)
-          val outCurve = s"${c.dstDir}/${dstNameFor(t)}_roc.parquet"
-          curve.write.mode("overwrite").parquet(outCurve)
-          val summary = graft.ops.ScoreEval.rocAuc(docs0, score, label)
-            .crossJoin(org.apache.spark.sql.functions.broadcast(
-              graft.ops.ScoreEval.averagePrecision(docs0, score, label)
-                .select(col("ap"))))
-          val outSum = s"${c.dstDir}/${dstNameFor(t)}_score_summary.parquet"
-          summary.write.mode("overwrite").parquet(outSum)
-          Curation(t, "score-report",
-            obs.get("src_rows").asInstanceOf[Long],
-            spark.read.parquet(outCurve).count(), outCurve)
-        }
-      // --score-classes (q188/q190/q191/q195/q196 through the CLI
-      // face): the multiclass battery for a labeler that claims a
-      // FULL per-class probability map — log-loss, per-class
-      // reliability/ECE, per-class AP, per-class ROC-AUC, and the
-      // per-class operating-point table, graded against
-      // --agreement-gold. Quantization contract AT THIS BOUNDARY:
-      // a float map is quantized to milli-units summing to exactly
-      // 1000 via largest remainder (ScoreEval.quantizeMilli — ties
-      // toward the smallest class key); an integral map is passed
-      // through and must already satisfy the sum-to-1000 contract
-      // (the faces raise loudly otherwise). The three ranking faces
-      // share ONE corpus scan: the (cls, s) census is built once and
-      // the census-sized FromCells derivations fan out from it.
-      val classRuns =
-        if (!(c.scoreReport && c.scoreClasses.isDefined)) Nil
-        else tables.map { t =>
-          val obs = org.apache.spark.sql.Observation()
-          val docs0 = Migrator.transformed(spark, c.srcDir, t, spec)
-          val conf = classConfCol(docs0.schema, c.scoreClasses.get)
-          val gold = col(c.agreementGold).cast("string")
-          val observed = docs0.observe(obs,
-            org.apache.spark.sql.functions.count(
-              org.apache.spark.sql.functions.lit(1)).as("src_rows"))
-          val base = s"${c.dstDir}/${dstNameFor(t)}"
-          // the observed plan rides ONLY the logloss write (one
-          // observed plan per metric, the score-report precedent)
-          graft.ops.ScoreEval.logLossMulti(observed, conf, gold)
-            .write.mode("overwrite").parquet(s"${base}_class_logloss.parquet")
-          graft.ops.ScoreEval.calibrationByClass(docs0, conf, gold)
-            .write.mode("overwrite")
-            .parquet(s"${base}_class_calibration.parquet")
-          val census = graft.ops.ScoreEval
-            .classScoreCensus(docs0, conf, gold).localCheckpoint()
-          graft.ops.ScoreEval.averagePrecisionByClassFromCells(census)
-            .write.mode("overwrite").parquet(s"${base}_class_ap.parquet")
-          graft.ops.ScoreEval.rocAucByClassFromCells(census)
-            .write.mode("overwrite").parquet(s"${base}_class_auc.parquet")
-          val outPoints = s"${base}_class_points.parquet"
-          graft.ops.ScoreEval.operatingPointsByClassFromCells(census)
-            .write.mode("overwrite").parquet(outPoints)
-          Curation(t, "score-classes",
-            obs.get("src_rows").asInstanceOf[Long],
-            spark.read.parquet(outPoints).count(), outPoints)
-        }
-      // --vocab-report (q175 through the CLI face): per-group
-      // vocabulary coverage — Good–Turing seen mass + the Chao1
-      // vocabulary lower bound — over --overlap-group-col: the
-      // crawl-saturation gauge beside --novelty-report's curve.
-      val vocabRuns =
-        if (!c.vocabReport) Nil
-        else tables.map { t =>
-          val obs = org.apache.spark.sql.Observation()
-          val docs = Migrator.transformed(spark, c.srcDir, t, spec)
-            .observe(obs, org.apache.spark.sql.functions.count(
-              org.apache.spark.sql.functions.lit(1)).as("src_rows"))
-          val report = graft.text.Vocab.vocabCoverage(docs,
-            col(c.overlapGroupCol), textCol = c.textCol)
-          val out = s"${c.dstDir}/${dstNameFor(t)}_vocab.parquet"
-          report.write.mode("overwrite").parquet(out)
-          Curation(t, "vocab-report",
-            obs.get("src_rows").asInstanceOf[Long],
-            spark.read.parquet(out).count(), out)
-        }
-      // --drift-report (q173 through the CLI face): two-sample KS of
-      // --drift-col between the --drift-group-val slice of
-      // --overlap-group-col and the rest of the table — "did this
-      // slice's score distribution move?" before any gate fires.
-      val driftRuns =
-        if (!c.driftReport) Nil
-        else tables.map { t =>
-          val obs = org.apache.spark.sql.Observation()
-          val docs = Migrator.transformed(spark, c.srcDir, t, spec)
-            .observe(obs, org.apache.spark.sql.functions.count(
-              org.apache.spark.sql.functions.lit(1)).as("src_rows"))
-          val group = org.apache.spark.sql.functions.when(
-            col(c.overlapGroupCol) === c.driftGroupVal,
-            org.apache.spark.sql.functions.lit(1L))
-            .otherwise(org.apache.spark.sql.functions.lit(0L))
-          val report = graft.ops.ScoreEval.ksTest(docs, col(c.driftCol),
-            group)
-          val out = s"${c.dstDir}/${dstNameFor(t)}_drift.parquet"
-          report.write.mode("overwrite").parquet(out)
-          Curation(t, "drift-report",
-            obs.get("src_rows").asInstanceOf[Long],
-            spark.read.parquet(out).count(), out)
-        }
-      scd2Runs ++ pplRuns ++ dedupRuns ++ contaminationRuns ++
-        semdedupRuns ++ embedContaminationRuns ++ annRecallRuns ++
-        overlapRuns ++ noveltyRuns ++ agreementRuns ++ scoreRuns ++
-        classRuns ++ vocabRuns ++ driftRuns
-    }
+    // table-level curation modes (the pipeline operators on the CLI
+    // face, declared in batchModes): each composes with the migration
+    // transform spec (column-skip / where / converters), like every
+    // other mode. srcRows rides the writes as an observed metric (the
+    // Migrator reconciliation discipline — no extra source scan), and
+    // outRows is observed on the first report's write.
+    val curations: Seq[Curation] = modes.flatMap(m => tables.map { t =>
+      val rows = Migrator.transformed(spark, c.srcDir, t, spec)
+      val src = Observation()
+      val observed = if (m.srcRows.isDefined) rows
+        else rows.observe(src, count(lit(1)).as("src_rows"))
+      val paths = m.suffixes.map(outBase(t) + _)
+      val outRows = m.reports(t, rows, observed).zip(paths)
+        .map { case (report, path) => writeCounted(report, path) }
+      Curation(t, m.name, m.srcRows.fold(
+        src.get("src_rows").asInstanceOf[Long])(_(rows)), outRows.head,
+        paths.head)
+    })
 
-    // RESIDENT curation pumps (the q154/q155/q162 production faces on
-    // the CLI): where --novelty-report/--contamination/--agreement-report
-    // re-scan the whole table per run, these STREAM the source table's
+    // RESIDENT curation monitor (the q154/q155/q162 production faces
+    // on the CLI): where the batch --*-report modes re-scan the whole
+    // table per run, --pumps=<leg,...> STREAMS the source table's
     // parquet directory — new files appearing there fold incrementally
     // into durable BucketStateStore state under dstDir, and a restart
     // resumes from the checkpoint (kill-safe, replay-fenced). The
@@ -942,21 +520,18 @@ object GraftApp {
     // then read live via --state-dir/--state-export or the library
     // report faces.
     //
-    // Every pump here is a CurationPumps monitor: each --*-pump flag is
-    // a one-leg monitor with its own reader, state dir and checkpoint;
-    // --pumps=<leg,...> is ONE reader, ONE checkpoint, one foreachBatch
-    // folding every listed census from a single pass over each arriving
-    // file (N one-leg pumps on one feed = N readers + N× ingest I/O).
-    // Legs share the dials: --dedup-k / --contamination-k /
-    // --agreement-gold / --agreement-pred / --score-col / --score-label
-    // / --drift-col / --overlap-group-col; the contamination leg grades
-    // against --contamination-pump=<dir> (flag) or --probe-dir
-    // (--pumps), and the embedding leg reads --embedding-col grouped by
+    // ONE reader, ONE checkpoint, one foreachBatch folds every listed
+    // census from a single pass over each arriving file (N one-leg
+    // pumps on one feed = N readers + N× ingest I/O); one leg is the
+    // single-census pump. Legs share the dials: --dedup-k /
+    // --contamination-k / --agreement-gold / --agreement-pred /
+    // --score-col / --score-label / --drift-col / --overlap-group-col;
+    // the contamination leg grades against --probe-dir, and the
+    // embedding leg reads --embedding-col grouped by
     // --overlap-group-col (for an embeddings-style table). Each leg
     // keeps its own batch-id fence, so a crash between two legs' merges
     // replays safely (CurationPumpsSpec).
     val curationPumps: Seq[Curation] = {
-      import org.apache.spark.sql.functions.{col, lit, when}
       import graft.streaming.{BucketStateStore, CurationPumps}
       def tableStream(t: String) = {
         val schema = Tables.load(spark, c.srcDir, t).schema
@@ -972,60 +547,19 @@ object GraftApp {
         else reader.option("pathGlobFilter", new java.io.File(p).getName)
           .parquet(c.srcDir)
       }
-      val flagLegs = Seq("novelty" -> c.noveltyPump,
-        "contamination" -> c.contaminationPump.isDefined,
-        "agreement" -> c.agreementPump, "score" -> c.scorePump,
-        "drift" -> c.driftPump).collect { case (leg, true) => leg }
-      val monitorLegNames = Set("novelty", "contamination", "agreement",
-        "score", "drift", "ksmatrix", "jsd", "vocab", "embedding",
-        "classes")
-      val bad = c.pumps.filterNot(monitorLegNames)
-      require(bad.isEmpty, s"--pumps: unknown census legs " +
-        s"${bad.mkString(",")} (known: " +
-        s"${monitorLegNames.toSeq.sorted.mkString(",")})")
-      require(c.pumps.distinct.size == c.pumps.size,
-        s"--pumps: duplicate legs in ${c.pumps.mkString(",")}")
-      require(!c.pumps.contains("contamination") || c.probeDir.isDefined,
-        "--pumps=contamination needs --probe-dir=<parquet dir of " +
-          "probe documents>")
-      require(!c.pumps.contains("classes") || c.scoreClasses.isDefined,
-        "--pumps=classes needs --score-classes=<per-class " +
-          "probability map column>")
-      val preds = c.agreementPred
-        .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-      require(!(flagLegs ++ c.pumps).contains("agreement") ||
-        preds.sizeIs <= 1,
-        "the agreement pump grades ONE labeler against gold (the " +
-          "durable census is a pairwise confusion matrix); a panel got " +
-          s"${preds.size} predictions — use batch --agreement-report " +
-          "for Fleiss' kappa")
-      // the defaults of the batch --*-report modes
-      lazy val pred = preds.headOption.map(col).getOrElse(
-        graft.text.TextAnalysis.langId(col(c.textCol),
-          graft.text.TextAnalysis.defaultProfiles))
-      lazy val score = c.scoreCol.map(col).getOrElse(
-        org.apache.spark.sql.functions.size(
-          org.apache.spark.sql.functions.filter(
-            graft.text.TextAnalysis.tokens(col(c.textCol)),
-            tok => tok === "the" || tok === "a")))
-      lazy val label = c.scoreLabel.map(col).getOrElse(
-        when(col(c.agreementGold) === c.scorePositive, lit(1L))
-          .otherwise(lit(0L)))
-      lazy val driftGroup = when(col(c.overlapGroupCol) === c.driftGroupVal,
-        lit(1L)).otherwise(lit(0L))
-      def legOf(t: String, leg: String, stateDir: String,
-          probeDir: Option[String]): CurationPumps.MonitorLeg = leg match {
+      def legOf(t: String, leg: String,
+          stateDir: String): CurationPumps.MonitorLeg = leg match {
         case "novelty" => CurationPumps.noveltyLeg(stateDir, k = c.dedupK,
           idCol = c.docIdCol, textCol = c.textCol)
         case "contamination" => CurationPumps.contaminationLeg(
-          spark.read.parquet(probeDir.get), stateDir, k = c.contaminationK,
+          spark.read.parquet(c.probeDir.get), stateDir, k = c.contaminationK,
           idCol = c.docIdCol, textCol = c.textCol)
         case "agreement" => CurationPumps.agreementLeg(stateDir,
-          gold = col(c.agreementGold), pred = pred)
-        case "score" => CurationPumps.scoreLeg(stateDir, score = score,
-          label = label)
+          gold = col(c.agreementGold), pred = gradedPred(c))
+        case "score" => CurationPumps.scoreLeg(stateDir, score = gradedScore(c),
+          label = gradedLabel(c))
         case "drift" => CurationPumps.driftLeg(stateDir,
-          score = col(c.driftCol), group = driftGroup)
+          score = col(c.driftCol), group = driftGroup(c))
         case "ksmatrix" => CurationPumps.ksMatrixLeg(stateDir,
           score = col(c.driftCol), group = col(c.overlapGroupCol))
         case "jsd" => CurationPumps.jsdLeg(stateDir,
@@ -1059,47 +593,25 @@ object GraftApp {
         // state, library-reachable)
         case "classes" => CurationPumps.classAucReport(spark, stateDir)
       }
-      /** One census of a pump: its leg name, state dir, mode name and
-        * report file; `folds = false` when another leg of the same pump
-        * folds its state. */
-      final case class Census(leg: String, stateDir: String, mode: String,
-          out: String, folds: Boolean = true)
-      // drain one pump over table t, then write and record each report
-      def drain(t: String, ckpt: String, probeDir: Option[String],
-          censuses: Seq[Census]): Seq[Curation] = {
-        CurationPumps.startMonitorPump(tableStream(t), ckpt,
-          censuses.filter(_.folds).map(x => legOf(t, x.leg, x.stateDir, probeDir)),
+      // drain the monitor over each table, then write and record each
+      // census's report
+      if (c.pumps.isEmpty) Nil else tables.flatMap { t =>
+        val censuses = c.pumps.map(censusOf(t, _))
+        CurationPumps.startMonitorPump(tableStream(t),
+          s"${c.dstDir}/_ckpt_monitor_$t",
+          censuses.filter(_.folds).map(x => legOf(t, x.leg, x.stateDir)),
           processingTime = if (stayUp(c)) Some(c.nicePause) else None,
           vacuumEvery = vacuumCadence(c), vacuumKeep = c.vacuumKeep)
           .awaitTermination()
         censuses.map { x =>
-          reportOf(t, x.leg, x.stateDir).write.mode("overwrite").parquet(x.out)
           val stateRows = BucketStateStore.currentVersion(spark, x.stateDir)
             .map(v => BucketStateStore.stateAtInferred(spark, x.stateDir, v)
               .count()).getOrElse(0L)
-          Curation(t, x.mode, stateRows, spark.read.parquet(x.out).count(), x.out)
+          Curation(t, x.mode, stateRows,
+            writeCounted(reportOf(t, x.leg, x.stateDir), x.out), x.out)
         }
       }
-      val flagRuns = flagLegs.flatMap(leg => tables.flatMap { t =>
-        val base = s"${c.dstDir}/${dstNameFor(t)}"
-        drain(t, s"${c.dstDir}/_ckpt_${leg}_$t", c.contaminationPump,
-          Seq(Census(leg, s"${base}_${leg}_state", s"$leg-pump",
-            s"${base}_${leg}_pump.parquet")))
-      })
-      val monitorRuns = if (c.pumps.isEmpty) Nil else tables.flatMap { t =>
-        val root = s"${c.dstDir}/${dstNameFor(t)}_monitor_state"
-        drain(t, s"${c.dstDir}/_ckpt_monitor_$t", c.probeDir, c.pumps.map { leg =>
-          // vocab is a second FACE of the jsd leg's token census: it
-          // reads the jsd state, and folds it only when jsd does not
-          Census(leg, s"$root/${if (leg == "vocab") "jsd" else leg}",
-            s"monitor-$leg",
-            s"${c.dstDir}/${dstNameFor(t)}_monitor_$leg.parquet",
-            folds = leg != "vocab" || !c.pumps.contains("jsd"))
-        })
-      }
-      flagRuns ++ monitorRuns
     }
-
     val pumped =
       if (c.srcJdbcUrl.isDefined) {
         // LIVE replication pump over a real database connection — the
@@ -1217,6 +729,289 @@ object GraftApp {
       remigrations = remigrations)
   }
 
+  /** One batch curation mode of the CLI, declared once: the run, its
+    * [[Curation]] record and the `--dry` plan all read it.
+    *
+    * @param on       the invocation enabled the mode
+    * @param name     the mode name the record carries
+    * @param label    the `--dry` line's prefix: the mode and its dials
+    * @param suffixes output paths after `<dst-dir>/<dst table>`, one
+    *                 per report; the first is the report the record
+    *                 counts and names
+    * @param reports  (table, rows, observed) => one report per suffix,
+    *                 from the table's transformed rows. `observed` is
+    *                 the same rows counting `src_rows`: it must appear
+    *                 ONCE in the written plans (a union or self-join of
+    *                 it would not count the source once), so every
+    *                 other branch reads `rows`
+    * @param srcRows  the record's srcRows when it is not the table's
+    *                 row count; `observed` is then plain `rows`
+    */
+  private final case class BatchMode(on: Boolean, name: String,
+      label: String, suffixes: Seq[String],
+      reports: (String, DataFrame, DataFrame) => Seq[DataFrame],
+      srcRows: Option[DataFrame => Long] = None)
+
+  /** One census of the `--pumps` monitor: its leg name, state dir,
+    * mode name and report file; `folds = false` when another leg of
+    * the same monitor folds its state. */
+  private final case class Census(leg: String, stateDir: String,
+      mode: String, out: String, folds: Boolean = true)
+
+  /** Every batch curation mode, in run order. */
+  private def batchModes(spark: SparkSession, c: Config): Seq[BatchMode] = {
+    import org.apache.spark.sql.functions.{broadcast, pmod}
+    import graft.dedup.Dedup
+    import graft.ops.ScoreEval
+    import graft.vector.VectorSearch
+    val variant = c.annRecall.getOrElse("")
+    // the table's own fixed ANN query set (vec_id % --ann-queries == 0)
+    def queries(emb: DataFrame) =
+      emb.filter(pmod(col(c.vecIdCol), lit(c.annQueryMod)) === 0)
+    Seq(
+      // --scd2 derives the SCD-type-2 history view the reference's
+      // current-state replays discard
+      BatchMode(c.scd2, "scd2", "scd2", Seq("_history.parquet"),
+        (t, _, in) => {
+          // per-table key resolution honors --pk-for like the pump modes
+          val key = c.scd2Key.getOrElse {
+            val pk = c.pkFor.getOrElse(t, c.pk)
+            require(pk.nonEmpty, s"--scd2: no key column for table $t " +
+              "(--pk is empty and no --pk-for entry names one)")
+            pk.head
+          }
+          Seq(graft.ops.Scd.scd2Intervals(in, col(key), col(c.scd2Value.get),
+            col(c.scd2Ts.getOrElse(c.orderCols.head)),
+            col(c.scd2Tie.getOrElse(c.orderCols.last))))
+        }),
+      // --ppl-filter: the CCNet-style perplexity-bucket filter
+      BatchMode(c.pplFilter, "ppl-filter", "ppl-filter", Seq("_ppl.parquet"),
+        (_, rows, in) => {
+          val keep = graft.text.LanguageModel.perplexityBuckets(rows,
+              v = c.pplVocab, buckets = c.pplBuckets, idCol = c.docIdCol,
+              textCol = c.textCol, groupCol = c.pplGroupCol)
+            .filter(!col("bucket_name").isin(c.pplDrop: _*))
+            .select(col(c.docIdCol))
+          Seq(in.join(keep, Seq(c.docIdCol), "left_semi"))
+        }),
+      // --dedup (q46's head through the CLI face): exact dedup keeps
+      // the min-id copy of each distinct text; near-dup clustering
+      // over the k-gram Jaccard pair graph keeps each component's
+      // representative. Output keeps the source schema (a cleaned
+      // copy of the table, like --ppl-filter).
+      BatchMode(c.dedup, "dedup", "dedup", Seq("_dedup.parquet"),
+        (_, rows, in) => {
+          val exactKeepers = Dedup.exactDedup(rows, c.docIdCol, c.textCol)
+            .select(col("keeper_doc_id").as(c.docIdCol))
+          val nearDupLosers = Dedup.dupClusters(Dedup.jaccardPairs(rows,
+              k = c.dedupK, threshold = c.dedupJaccard, idCol = c.docIdCol,
+              textCol = c.textCol))
+            .filter(col("doc_id") =!= col("cluster_id"))
+            .select(col("doc_id").as(c.docIdCol))
+          Seq(in.join(exactKeepers, Seq(c.docIdCol), "left_semi")
+            .join(nearDupLosers, Seq(c.docIdCol), "left_anti"))
+        }),
+      // --contamination=<probe_dir> (q48 through the CLI face): flag
+      // every table row sharing a k-shingle with the probe corpus
+      // (benchmark decontamination). The report is hit-sized —
+      // (doc_id, n_hits) for flagged rows only.
+      BatchMode(c.contaminationProbes.isDefined, "contamination",
+        "contamination", Seq("_contamination.parquet"),
+        (_, _, in) => Seq(Dedup.contaminationScan(in,
+          spark.read.parquet(c.contaminationProbes.get),
+          k = c.contaminationK, idCol = c.docIdCol, textCol = c.textCol))),
+      // --semdedup (q107 through the CLI face — the embedding half of
+      // --dedup): Lloyd-cluster the table's embedding column, mark
+      // within-cluster semantic duplicates at the cosine threshold,
+      // keep each cluster's representatives. Output is a cleaned copy
+      // of the table, like --dedup.
+      BatchMode(c.semdedup, "semdedup", "semdedup", Seq("_semdedup.parquet"),
+        (_, rows, in) => {
+          val keepers = graft.vector.KMeans.semanticDedup(rows,
+              k = c.semdedupClusters, iters = c.semdedupIters,
+              minCos = c.semdedupMinCos, idCol = c.vecIdCol,
+              vecCol = c.embeddingCol)
+            .filter(col("kept") === 1)
+            .select(col("vec_id").as(c.vecIdCol))
+          Seq(in.join(keepers, Seq(c.vecIdCol), "left_semi"))
+        }),
+      // --embed-contamination=<probe_dir> (q148 through the CLI face —
+      // the embedding half of --contamination): flag every table row
+      // whose embedding sits within the cosine threshold of any probe
+      // vector. Hit-sized report (vec_id, hits, max_cos).
+      BatchMode(c.embedContaminationProbes.isDefined, "embed-contamination",
+        "embed-contamination", Seq("_embed_contamination.parquet"),
+        (_, _, in) => Seq(VectorSearch.embeddingContamination(in,
+          spark.read.parquet(c.embedContaminationProbes.get),
+          threshold = c.embedContaminationCos, idCol = c.vecIdCol,
+          vecCol = c.embeddingCol))),
+      // --ann-recall=<variant> diagnostic (the q142/q144-q146 recall
+      // gate as an operable CLI check): recall@k of the named lossy
+      // index against the exact brute-force scan on the table's own
+      // query set. srcRows here is the query count — the evaluation's
+      // natural denominator.
+      BatchMode(c.annRecall.isDefined, s"ann-recall-$variant",
+        s"ann-recall[$variant]", Seq(s"_ann_recall_$variant.parquet"),
+        (_, emb, _) => {
+          val qs = queries(emb)
+          val exact = VectorSearch.bruteForceTopK(emb, qs, k = c.annK,
+            idCol = c.vecIdCol, vecCol = c.embeddingCol)
+          val approx = variant match {
+            case "int8" => VectorSearch.int8TopK(emb, qs, k = c.annK,
+              idCol = c.vecIdCol, vecCol = c.embeddingCol)
+            case "ivf" => VectorSearch.ivfTopK(emb, qs, k = c.annK,
+              nprobe = 2, numCells = 32, idCol = c.vecIdCol,
+              vecCol = c.embeddingCol, portableSample = true)
+            case "pq" => VectorSearch.pqTopK(emb, qs, k = c.annK,
+              idCol = c.vecIdCol, vecCol = c.embeddingCol)
+            case "lsh" => VectorSearch.rpLshTopK(emb, qs, k = c.annK,
+              nbits = 32, chunks = 4, idCol = c.vecIdCol,
+              vecCol = c.embeddingCol)
+          }
+          Seq(graft.vector.Eval.recallAtK(exact, approx, k = c.annK))
+        }, srcRows = Some(emb => queries(emb).count())),
+      // --overlap-report (q152 through the CLI face): the source-pair
+      // shingle Jaccard/containment matrix — the corpus-composition
+      // number to read BEFORE deciding any mixture re-weighting. A
+      // census-sized report, not a cleaned copy; srcRows is the doc
+      // count scanned, outRows the pair count.
+      BatchMode(c.overlapReport, "overlap-report", "overlap-report",
+        Seq("_overlap.parquet"), (_, _, in) => Seq(Dedup.sourceOverlap(in,
+          k = c.dedupK, textCol = c.textCol, groupCol = c.overlapGroupCol))),
+      // --novelty-report (q150 through the CLI face): the per-document
+      // first-occurrence novelty curve — the crawl-saturation signal.
+      BatchMode(c.noveltyReport, "novelty-report", "novelty-report",
+        Seq("_novelty.parquet"), (_, _, in) => Seq(Dedup.ngramNovelty(in,
+          k = c.dedupK, idCol = c.docIdCol, textCol = c.textCol))),
+      // --agreement-report (q153/q156 through the CLI face): with ONE
+      // prediction, per-class P/R/F1 + accuracy + Cohen's kappa of
+      // the predicted column against the gold column; with TWO OR
+      // MORE comma-separated predictions, Fleiss' kappa over the
+      // whole panel {gold, preds...} — the go/no-go number to read
+      // before a heuristic labeler (or a labeler panel's majority
+      // vote) gates a curation run. Default prediction is the
+      // built-in language identifier over --text-col (the q153
+      // pairing); --agreement-pred names stored column(s) instead.
+      BatchMode(c.agreementReport, "agreement-report",
+        s"agreement-report${agreementDials(c)}", Seq("_agreement.parquet"),
+        (_, rows, in) => {
+          val preds = agreementPreds(c)
+          Seq(if (preds.sizeIs >= 2) {
+            // panel: gold + every prediction, one rating row each; the
+            // union reads the table once per rater, so only the gold
+            // branch carries the metric (it sees every source row)
+            val ratings = preds.map(p => rows.select(
+                col(c.docIdCol).as("item"), col(p).as("cls")))
+              .foldLeft(in.select(col(c.docIdCol).as("item"),
+                col(c.agreementGold).as("cls")))(_ unionByName _)
+            graft.ops.Agreement.fleissKappa(ratings, col("item"), col("cls"))
+          } else graft.ops.Agreement.classifierReport(in,
+            col(c.agreementGold), gradedPred(c)))
+        }),
+      // --score-report (q165/q166/q170 through the CLI face):
+      // threshold-FREE grading of the score a quality gate
+      // thresholds — the ROC operating-point table (the rows a
+      // cutoff is picked from) plus a one-row summary (ROC-AUC and
+      // average precision). The observed rows ride ONLY the curve.
+      BatchMode(c.scoreReport, "score-report", s"score-report${scoreDials(c)}",
+        Seq("_roc.parquet", "_score_summary.parquet"), (_, rows, in) => {
+          val score = gradedScore(c)
+          val label = gradedLabel(c)
+          Seq(ScoreEval.rocCurve(in, score, label),
+            ScoreEval.rocAuc(rows, score, label).crossJoin(broadcast(
+              ScoreEval.averagePrecision(rows, score, label)
+                .select(col("ap")))))
+        }),
+      // --score-classes (q188/q190/q191/q195/q196 through the CLI
+      // face): the multiclass battery for a labeler that claims a
+      // FULL per-class probability map — per-class operating points,
+      // log-loss, per-class reliability/ECE, per-class AP and
+      // per-class ROC-AUC, graded against --agreement-gold (the map
+      // is quantized at this boundary, see classConfCol). The three
+      // ranking faces share ONE corpus scan: the (cls, s) census is
+      // built once and the census-sized FromCells derivations fan out
+      // from it. The observed rows ride ONLY the logloss report.
+      BatchMode(c.scoreReport && c.scoreClasses.isDefined, "score-classes",
+        s"score-classes[${c.scoreClasses.getOrElse("")} vs ${c.agreementGold}]",
+        Seq("points", "logloss", "calibration", "ap", "auc")
+          .map(f => s"_class_$f.parquet"), (_, rows, in) => {
+          val conf = classConfCol(rows.schema, c.scoreClasses.get)
+          val gold = col(c.agreementGold).cast("string")
+          val census = ScoreEval.classScoreCensus(rows, conf, gold)
+            .localCheckpoint()
+          Seq(ScoreEval.operatingPointsByClassFromCells(census),
+            ScoreEval.logLossMulti(in, conf, gold),
+            ScoreEval.calibrationByClass(rows, conf, gold),
+            ScoreEval.averagePrecisionByClassFromCells(census),
+            ScoreEval.rocAucByClassFromCells(census))
+        }),
+      // --vocab-report (q175 through the CLI face): per-group
+      // vocabulary coverage — Good–Turing seen mass + the Chao1
+      // vocabulary lower bound — over --overlap-group-col: the
+      // crawl-saturation gauge beside --novelty-report's curve.
+      BatchMode(c.vocabReport, "vocab-report",
+        s"vocab-report[${c.overlapGroupCol}]", Seq("_vocab.parquet"),
+        (_, _, in) => Seq(graft.text.Vocab.vocabCoverage(in,
+          col(c.overlapGroupCol), textCol = c.textCol))),
+      // --drift-report (q173 through the CLI face): two-sample KS of
+      // --drift-col between the --drift-group-val slice of
+      // --overlap-group-col and the rest of the table — "did this
+      // slice's score distribution move?" before any gate fires.
+      BatchMode(c.driftReport, "drift-report", s"drift-report${driftDials(c)}",
+        Seq("_drift.parquet"), (_, _, in) => Seq(ScoreEval.ksTest(in,
+          col(c.driftCol), driftGroup(c)))))
+  }
+
+  /** Write `df` as parquet at `path` and return its row count, observed
+    * on the write itself instead of read back. */
+  private def writeCounted(df: DataFrame, path: String): Long = {
+    val written = Observation()
+    df.observe(written, count(lit(1)).as("rows"))
+      .write.mode("overwrite").parquet(path)
+    written.get("rows").asInstanceOf[Long]
+  }
+
+  // The graded columns and their `--dry` labels, shared by the batch
+  // --*-report modes and the monitor legs of the same census.
+  private def agreementPreds(c: Config): Seq[String] =
+    c.agreementPred.map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
+  /** The one prediction graded against gold: --agreement-pred, else the
+    * built-in language identifier over --text-col (q153). */
+  private def gradedPred(c: Config): Column =
+    agreementPreds(c).headOption.map(col).getOrElse(
+      graft.text.TextAnalysis.langId(col(c.textCol),
+        graft.text.TextAnalysis.defaultProfiles))
+  /** --score-col, else the built-in English marker-hit count over
+    * --text-col (exactly what q21's minHits=2 cuts). */
+  private def gradedScore(c: Config): Column =
+    c.scoreCol.map(col).getOrElse(size(filter(
+      graft.text.TextAnalysis.tokens(col(c.textCol)),
+      tok => tok === "the" || tok === "a")))
+  /** --score-label (a stored 0/1 column), else gold == --score-positive
+    * over --agreement-gold. */
+  private def gradedLabel(c: Config): Column =
+    c.scoreLabel.map(col).getOrElse(
+      when(col(c.agreementGold) === c.scorePositive, lit(1L)).otherwise(lit(0L)))
+  /** 1 for the --drift-group-val slice of --overlap-group-col, else 0. */
+  private def driftGroup(c: Config): Column =
+    when(col(c.overlapGroupCol) === c.driftGroupVal, lit(1L)).otherwise(lit(0L))
+  private def agreementDials(c: Config): String =
+    s"[${c.agreementGold} vs ${c.agreementPred.getOrElse("langid(" + c.textCol + ")")}]"
+  private def scoreDials(c: Config): String =
+    s"[${c.scoreCol.getOrElse("marker_hits(" + c.textCol + ")")} vs " +
+      s"${c.scoreLabel.getOrElse(c.agreementGold + "=" + c.scorePositive)}]"
+  private def driftDials(c: Config): String =
+    s"[${c.driftCol}, ${c.overlapGroupCol}=${c.driftGroupVal} vs rest]"
+  private def legDials(c: Config, leg: String): String = leg match {
+    case "agreement" => agreementDials(c)
+    case "score" => scoreDials(c)
+    case "drift" => driftDials(c)
+    case _ => ""
+  }
+
+  private val MonitorLegs = Set("novelty", "contamination", "agreement",
+    "score", "drift", "ksmatrix", "jsd", "vocab", "embedding", "classes")
+
   private val KnownOptions = Set("src-dir", "dst-dir", "dst-schema",
     "src-tables", "src-tables-prefixes", "column-skip",
     "src-tables-where-clauses", "column-default-value", "catalog-csv",
@@ -1235,7 +1030,7 @@ object GraftApp {
     "embed-contamination", "embed-contamination-cos",
     "ann-recall", "ann-k", "ann-queries",
     "vec-id-col", "embedding-col", "overlap-group-col",
-    "agreement-gold", "agreement-pred", "contamination-pump",
+    "agreement-gold", "agreement-pred",
     "score-col", "score-label", "score-positive", "score-classes",
     "drift-col", "drift-group-val", "pumps", "probe-dir",
     "vacuum-every", "vacuum-keep")
@@ -1246,8 +1041,7 @@ object GraftApp {
     "install", "dry", "state-versions", "with-create-database",
     "scd2", "ppl-filter", "dedup", "semdedup",
     "overlap-report", "novelty-report", "remigrate", "agreement-report",
-    "novelty-pump", "agreement-pump", "score-report", "score-pump",
-    "vocab-report", "drift-report", "drift-pump")
+    "score-report", "vocab-report", "drift-report")
 
   /** `--column-default-value=t.col=v` values: numeric if they parse,
     * else the literal string (na.fill applies them type-matched).
@@ -1326,7 +1120,7 @@ object GraftApp {
     val flags = fileFlags ++ cliFlags
     def list(k: String): Seq[String] =
       kv.get(k).map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    Config(
+    val c = Config(
       // --install generates service files only — no data source needed
       // (the reference's install path exits before any reader starts,
       // main.py:57-73)
@@ -1436,6 +1230,10 @@ object GraftApp {
           // to be a drop
           require(tiers.nonEmpty,
             s"--ppl-drop=$v names no tiers (e.g. --ppl-drop=tail)")
+          val unknown = tiers.filterNot(Set("head", "middle", "tail"))
+          require(unknown.isEmpty,
+            s"--ppl-drop: unknown bucket name(s) ${unknown.mkString(", ")} " +
+              "(expected head, middle, tail) — refusing a silent no-op filter")
           tiers
         }.getOrElse(Seq("tail")),
       pplGroupCol = kv.getOrElse("ppl-group-col", "lang"),
@@ -1478,18 +1276,13 @@ object GraftApp {
       agreementReport = flags("agreement-report"),
       agreementGold = kv.getOrElse("agreement-gold", "lang"),
       agreementPred = kv.get("agreement-pred"),
-      noveltyPump = flags("novelty-pump"),
-      contaminationPump = kv.get("contamination-pump"),
-      agreementPump = flags("agreement-pump"),
       scoreReport = flags("score-report"),
       scoreCol = kv.get("score-col"),
       scoreLabel = kv.get("score-label"),
       scorePositive = kv.getOrElse("score-positive", "en"),
       scoreClasses = kv.get("score-classes"),
-      scorePump = flags("score-pump"),
       vocabReport = flags("vocab-report"),
       driftReport = flags("drift-report"),
-      driftPump = flags("drift-pump"),
       driftCol = kv.getOrElse("drift-col", "n_chars"),
       driftGroupVal = kv.getOrElse("drift-group-val", "src0"),
       pumps = list("pumps"),
@@ -1505,6 +1298,29 @@ object GraftApp {
           "version is always retained)")
         n
       }.getOrElse(4))
+    // checks across options run here, not in run, so that --dry
+    // refuses exactly what the run would
+    require(!c.scd2 || c.scd2Value.isDefined,
+      "--scd2 requires --scd2-value=<tracked column>")
+    val badLegs = c.pumps.filterNot(MonitorLegs)
+    require(badLegs.isEmpty, s"--pumps: unknown census legs " +
+      s"${badLegs.mkString(",")} (known: " +
+      s"${MonitorLegs.toSeq.sorted.mkString(",")})")
+    require(c.pumps.distinct.size == c.pumps.size,
+      s"--pumps: duplicate legs in ${c.pumps.mkString(",")}")
+    require(!c.pumps.contains("contamination") || c.probeDir.isDefined,
+      "--pumps=contamination needs --probe-dir=<parquet dir of " +
+        "probe documents>")
+    require(!c.pumps.contains("classes") || c.scoreClasses.isDefined,
+      "--pumps=classes needs --score-classes=<per-class " +
+        "probability map column>")
+    require(!c.pumps.contains("agreement") ||
+      agreementPreds(c).sizeIs <= 1,
+      "the agreement pump grades ONE labeler against gold (the " +
+        "durable census is a pairwise confusion matrix); a panel got " +
+        s"${agreementPreds(c).size} predictions — use batch " +
+        "--agreement-report for Fleiss' kappa")
+    c
   }
 
   private val AnnRecallVariants = Set("int8", "ivf", "pq", "lsh")
@@ -1545,15 +1361,9 @@ object GraftApp {
       s"--$name=$v: expected an integer"))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
+    val spark = graft.Sessions.builder(
+        sys.env.getOrElse("SPARK_MASTER", "local[*]"),
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // naive parquet timestamp[us] reads as session-zone TIMESTAMP
-      // (pre-Spark-4 behavior), not NTZ — the CDC envelope and
-      // watermark paths require TIMESTAMP
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .getOrCreate()
     val result = run(spark, parse(args.toIndexedSeq))
     result.ddl.foreach(println)

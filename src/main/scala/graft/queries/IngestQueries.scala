@@ -776,7 +776,7 @@ object IngestQueries {
     * table and graded against q165's batch oracle VERBATIM — the
     * drain-equals-batch contract for the threshold-free score grade:
     * per-score (pos, neg) counts are additive and commutative, so
-    * the durable census a resident `--score-pump` maintains must
+    * the durable census a resident `--pumps=score` maintains must
     * yield bit-identical ROC-AUC to the batch scan, in any arrival
     * order (the two feed files land upper half first). The streaming
     * face of the ScoreEval family, q162's precedent applied to score
@@ -805,7 +805,7 @@ object IngestQueries {
     * table and graded against q173's batch oracle VERBATIM — the
     * drain-equals-batch contract for the KS drift gauge: the
     * two-population census is additive, so the durable state a
-    * resident `--drift-pump` maintains must yield a bit-identical
+    * resident `--pumps=drift` maintains must yield a bit-identical
     * sup-CDF gap to the batch scan, in any arrival order.
     */
   def streamDrift(spark: SparkSession, dir: String): DataFrame = {

@@ -585,7 +585,9 @@ object CurationPumps {
     * single all-legs-done barrier, but the merges themselves need no
     * cross-leg atomicity.
     *
-    * One leg is a single-census pump (the `--*-pump` CLI modes).
+    * One leg is a single-census pump: on the CLI, `--pumps=<leg>`
+    * runs one leg and `--pumps=<leg,...>` several, with `--probe-dir`
+    * naming the contamination leg's probes.
     * Trigger and vacuum cadence are [[Pump.start]]'s, over every leg's
     * state dir: a RESIDENT monitor folds every leg every batch, so
     * without vacuum its version count grows legs × batches.

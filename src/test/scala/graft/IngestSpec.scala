@@ -496,6 +496,19 @@ class GraftAppSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val dir = "/root/testdata/sf0.001"
 
+  /** The run of `args` that produced `r`, repeated with `--dry`, names
+    * each curation's output path under its table: the dry plan and the
+    * run write the same paths. */
+  private def assertDryPlans(args: Seq[String], r: GraftApp.Result): Unit = {
+    val planned = GraftApp.run(spark, GraftApp.parse(args :+ "--dry"))
+      .dryPlanned.flatMap(_.split(": ", 2).last.split(", ").toSeq)
+      .map(_.split(" -> ", 2)).collect { case Array(t, paths) =>
+        paths.split(" \\+ ").toSeq.map(t -> _) }.flatten.toSet
+    assert(r.curations.nonEmpty)
+    r.curations.foreach(cu => assert(planned(cu.table -> cu.outDir),
+      s"--dry does not name ${cu.mode}'s ${cu.outDir}: $planned"))
+  }
+
   test("parse maps reference-named options") {
     val c = GraftApp.parse(Seq(
       "--src-dir=/src", "--dst-dir=/dst", "--migrate-table",
@@ -734,10 +747,11 @@ class GraftAppSpec extends AnyFunSuite {
 
   test("scd2 mode derives the history view through the CLI surface") {
     val dst = Files.createTempDirectory("graft_appscd").toString
-    val c = GraftApp.parse(Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
-      "--src-tables=events", "--scd2", "--scd2-value=event_type"))
-    val r = GraftApp.run(spark, c)
+    val args = Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
+      "--src-tables=events", "--scd2", "--scd2-value=event_type")
+    val r = GraftApp.run(spark, GraftApp.parse(args))
     assert(r.curations.map(_.mode) == Seq("scd2"))
+    assertDryPlans(args, r)
     val out = spark.read.parquet(s"$dst/events_history.parquet")
     val direct = graft.ops.Scd.scd2Intervals(
       graft.Tables.load(spark, dir, "events"),
@@ -754,11 +768,12 @@ class GraftAppSpec extends AnyFunSuite {
 
   test("ppl-filter mode drops the per-language tail bucket through the CLI surface") {
     val dst = Files.createTempDirectory("graft_appppl").toString
-    val c = GraftApp.parse(Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
+    val args = Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
       "--src-tables=documents", "--ppl-filter", "--ppl-vocab=50",
-      "--ppl-buckets=3", "--ppl-drop=tail"))
-    val r = GraftApp.run(spark, c)
+      "--ppl-buckets=3", "--ppl-drop=tail")
+    val r = GraftApp.run(spark, GraftApp.parse(args))
     assert(r.curations.map(_.mode) == Seq("ppl-filter"))
+    assertDryPlans(args, r)
     val docs = graft.Tables.load(spark, dir, "documents")
     val buckets = graft.text.LanguageModel.perplexityBuckets(docs, v = 50)
     val wantIds = buckets
@@ -774,11 +789,12 @@ class GraftAppSpec extends AnyFunSuite {
 
   test("dedup mode drops exact and near-dup copies through the CLI surface") {
     val dst = Files.createTempDirectory("graft_appdedup").toString
-    val c = GraftApp.parse(Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
+    val args = Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
       "--src-tables=documents", "--dedup", "--dedup-k=3",
-      "--dedup-jaccard=0.5"))
-    val r = GraftApp.run(spark, c)
+      "--dedup-jaccard=0.5")
+    val r = GraftApp.run(spark, GraftApp.parse(args))
     assert(r.curations.map(_.mode) == Seq("dedup"))
+    assertDryPlans(args, r)
     // the CLI result must equal the library composition it fronts
     // (q46's head: exact keepers minus near-dup non-representatives)
     val docs = graft.Tables.load(spark, dir, "documents")
@@ -812,11 +828,12 @@ class GraftAppSpec extends AnyFunSuite {
       .pmod(org.apache.spark.sql.functions.col("doc_id"),
         org.apache.spark.sql.functions.lit(100)) === 0)
       .write.parquet(probeDir)
-    val c = GraftApp.parse(Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
+    val args = Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
       "--src-tables=documents", s"--contamination=$probeDir",
-      "--contamination-k=3"))
-    val r = GraftApp.run(spark, c)
+      "--contamination-k=3")
+    val r = GraftApp.run(spark, GraftApp.parse(args))
     assert(r.curations.map(_.mode) == Seq("contamination"))
+    assertDryPlans(args, r)
     val want = graft.dedup.Dedup.contaminationScan(docs,
         spark.read.parquet(probeDir), k = 3)
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
@@ -843,11 +860,12 @@ class GraftAppSpec extends AnyFunSuite {
 
   test("semdedup mode keeps semantic representatives through the CLI surface") {
     val dst = Files.createTempDirectory("graft_appsemdedup").toString
-    val c = GraftApp.parse(Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
+    val args = Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
       "--src-tables=embeddings", "--semdedup", "--semdedup-clusters=8",
-      "--semdedup-iters=2", "--semdedup-min-cos=0.4"))
-    val r = GraftApp.run(spark, c)
+      "--semdedup-iters=2", "--semdedup-min-cos=0.4")
+    val r = GraftApp.run(spark, GraftApp.parse(args))
     assert(r.curations.map(_.mode) == Seq("semdedup"))
+    assertDryPlans(args, r)
     // the CLI result must equal the library call it fronts (q107's
     // kept-representative set)
     val emb = graft.Tables.load(spark, dir, "embeddings")
@@ -873,11 +891,12 @@ class GraftAppSpec extends AnyFunSuite {
       .pmod(org.apache.spark.sql.functions.col("vec_id"),
         org.apache.spark.sql.functions.lit(97)) === 0)
       .write.parquet(probeDir)
-    val c = GraftApp.parse(Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
+    val args = Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
       "--src-tables=embeddings", s"--embed-contamination=$probeDir",
-      "--embed-contamination-cos=0.25"))
-    val r = GraftApp.run(spark, c)
+      "--embed-contamination-cos=0.25")
+    val r = GraftApp.run(spark, GraftApp.parse(args))
     assert(r.curations.map(_.mode) == Seq("embed-contamination"))
+    assertDryPlans(args, r)
     val want = graft.vector.VectorSearch.embeddingContamination(emb,
         spark.read.parquet(probeDir), threshold = 0.25)
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
@@ -891,11 +910,12 @@ class GraftAppSpec extends AnyFunSuite {
 
   test("ann-recall mode reports recall@k of a lossy index via the CLI") {
     val dst = Files.createTempDirectory("graft_appannrec").toString
-    val c = GraftApp.parse(Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
+    val args = Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
       "--src-tables=embeddings", "--ann-recall=int8", "--ann-k=10",
-      "--ann-queries=100"))
-    val r = GraftApp.run(spark, c)
+      "--ann-queries=100")
+    val r = GraftApp.run(spark, GraftApp.parse(args))
     assert(r.curations.map(_.mode) == Seq("ann-recall-int8"))
+    assertDryPlans(args, r)
     val emb = graft.Tables.load(spark, dir, "embeddings")
     val qs = emb.filter(org.apache.spark.sql.functions
       .pmod(org.apache.spark.sql.functions.col("vec_id"),
@@ -914,12 +934,13 @@ class GraftAppSpec extends AnyFunSuite {
 
   test("overlap-report and novelty-report modes equal their library calls") {
     val dst = Files.createTempDirectory("graft_appreports").toString
-    val c = GraftApp.parse(Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
+    val args = Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
       "--src-tables=documents", "--overlap-report", "--novelty-report",
-      "--dedup-k=3"))
-    val r = GraftApp.run(spark, c)
+      "--dedup-k=3")
+    val r = GraftApp.run(spark, GraftApp.parse(args))
     assert(r.curations.map(_.mode).sorted ==
       Seq("novelty-report", "overlap-report"))
+    assertDryPlans(args, r)
     val docs = graft.Tables.load(spark, dir, "documents")
     val wantOverlap = graft.dedup.Dedup.sourceOverlap(docs, k = 3)
       .collect().map(x => (x.getString(0), x.getString(1)) ->
@@ -960,9 +981,11 @@ class GraftAppSpec extends AnyFunSuite {
   test("agreement-report mode equals the library call, honors --agreement-pred") {
     val dst = Files.createTempDirectory("graft_appagree").toString
     // default prediction: built-in langId over --text-col (q153 pairing)
-    val r = GraftApp.run(spark, GraftApp.parse(Seq(s"--src-dir=$dir",
-      s"--dst-dir=$dst", "--src-tables=documents", "--agreement-report")))
+    val args = Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
+      "--src-tables=documents", "--agreement-report")
+    val r = GraftApp.run(spark, GraftApp.parse(args))
     assert(r.curations.map(_.mode) == Seq("agreement-report"))
+    assertDryPlans(args, r)
     val docs = graft.Tables.load(spark, dir, "documents")
     val want = graft.ops.Agreement.classifierReport(docs, col("lang"),
         graft.text.TextAnalysis.langId(col("text"),
@@ -990,9 +1013,11 @@ class GraftAppSpec extends AnyFunSuite {
   test("agreement-report with a pred LIST runs the Fleiss panel") {
     val dst = Files.createTempDirectory("graft_appfleiss").toString
     // two predictions + gold = a 3-rater panel -> Fleiss' kappa
-    val r = GraftApp.run(spark, GraftApp.parse(Seq(s"--src-dir=$dir",
-      s"--dst-dir=$dst", "--src-tables=documents", "--agreement-report",
-      "--agreement-gold=lang", "--agreement-pred=source,lang")))
+    val args = Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
+      "--src-tables=documents", "--agreement-report",
+      "--agreement-gold=lang", "--agreement-pred=source,lang")
+    val r = GraftApp.run(spark, GraftApp.parse(args))
+    assertDryPlans(args, r)
     val docs = graft.Tables.load(spark, dir, "documents")
     val ratings = Seq(col("lang"), col("source"), col("lang"))
       .map(c0 => docs.select(col("doc_id").as("item"), c0.as("cls")))
@@ -1013,9 +1038,11 @@ class GraftAppSpec extends AnyFunSuite {
       "and --score-positive") {
     val dst = Files.createTempDirectory("graft_appscore").toString
     // default: marker-hit score vs gold lang == 'en'
-    val r = GraftApp.run(spark, GraftApp.parse(Seq(s"--src-dir=$dir",
-      s"--dst-dir=$dst", "--src-tables=documents", "--score-report")))
+    val args = Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
+      "--src-tables=documents", "--score-report")
+    val r = GraftApp.run(spark, GraftApp.parse(args))
     assert(r.curations.map(_.mode) == Seq("score-report"))
+    assertDryPlans(args, r)
     val docs = graft.Tables.load(spark, dir, "documents")
     val hits = size(filter(graft.text.TextAnalysis.tokens(col("text")),
       t => t === "the" || t === "a"))
@@ -1076,11 +1103,13 @@ class GraftAppSpec extends AnyFunSuite {
         .as("probs"),
       pmod(col("id"), lit(2L)).as("bin"))
     routed.write.parquet(s"$src/documents.parquet")
-    val r = GraftApp.run(spark, GraftApp.parse(Seq(s"--src-dir=$src",
-      s"--dst-dir=$dst", "--src-tables=documents", "--score-report",
+    val args = Seq(s"--src-dir=$src", s"--dst-dir=$dst",
+      "--src-tables=documents", "--score-report",
       "--score-col=doc_id", "--score-label=bin",
-      "--score-classes=probs", "--agreement-gold=gold")))
+      "--score-classes=probs", "--agreement-gold=gold")
+    val r = GraftApp.run(spark, GraftApp.parse(args))
     assert(r.curations.map(_.mode) == Seq("score-report", "score-classes"))
+    assertDryPlans(args, r)
     val conf = graft.ops.ScoreEval.quantizeMilli(col("probs"))
     val gold = col("gold").cast("string")
     def read(suffix: String) =
@@ -1151,10 +1180,12 @@ class GraftAppSpec extends AnyFunSuite {
         lit("c2"), (lit(1L) + pmod(col("id") * 29, lit(307L))) / lit(1237.0))
         .as("probs"))
     routed.write.parquet(s"$src/documents.parquet")
-    val r = GraftApp.run(spark, GraftApp.parse(Seq(s"--src-dir=$src",
-      s"--dst-dir=$dst", "--src-tables=documents", "--pumps=classes",
-      "--score-classes=probs", "--agreement-gold=gold")))
+    val args = Seq(s"--src-dir=$src", s"--dst-dir=$dst",
+      "--src-tables=documents", "--pumps=classes",
+      "--score-classes=probs", "--agreement-gold=gold")
+    val r = GraftApp.run(spark, GraftApp.parse(args))
     assert(r.curations.map(_.mode) == Seq("monitor-classes"))
+    assertDryPlans(args, r)
     val want = graft.ops.ScoreEval.rocAucByClass(routed,
       graft.ops.ScoreEval.quantizeMilli(col("probs")),
       col("gold").cast("string")).collect()
@@ -1511,13 +1542,14 @@ class GraftAppSpec extends AnyFunSuite {
     docs.filter(col("doc_id") % 2 === 1).coalesce(1)
       .write.parquet(s"$src/documents.parquet")
     val args = Seq(s"--src-dir=$src", s"--dst-dir=$dst",
-      "--src-tables=documents", "--novelty-pump", "--dedup-k=3")
+      "--src-tables=documents", "--pumps=novelty", "--dedup-k=3")
     val r1 = GraftApp.run(spark, GraftApp.parse(args))
-    assert(r1.curations.map(_.mode) == Seq("novelty-pump"))
+    assert(r1.curations.map(_.mode) == Seq("monitor-novelty"))
+    assertDryPlans(args, r1)
     val oddDocs = docs.filter(col("doc_id") % 2 === 1)
     val wantHalf = graft.dedup.Dedup.ngramNovelty(oddDocs, k = 3)
       .orderBy("doc_id").collect()
-    val gotHalf = spark.read.parquet(s"$dst/documents_novelty_pump.parquet")
+    val gotHalf = spark.read.parquet(s"$dst/documents_monitor_novelty.parquet")
       .orderBy("doc_id").collect()
     assert(gotHalf.toSeq == wantHalf.toSeq,
       "drained pump report equals batch novelty over what arrived")
@@ -1527,10 +1559,10 @@ class GraftAppSpec extends AnyFunSuite {
     // restart: same dst -> same checkpoint + state; processed files
     // are not re-read, the dictionary continues where it was
     val r2 = GraftApp.run(spark, GraftApp.parse(args))
-    assert(r2.curations.map(_.mode) == Seq("novelty-pump"))
+    assert(r2.curations.map(_.mode) == Seq("monitor-novelty"))
     val want = graft.dedup.Dedup.ngramNovelty(docs, k = 3)
       .orderBy("doc_id").collect()
-    val got = spark.read.parquet(s"$dst/documents_novelty_pump.parquet")
+    val got = spark.read.parquet(s"$dst/documents_monitor_novelty.parquet")
       .orderBy("doc_id").collect()
     assert(got.toSeq == want.toSeq,
       "restarted pump must land on the full batch answer")
@@ -1564,18 +1596,20 @@ class GraftAppSpec extends AnyFunSuite {
     // 8 files = 8 micro-batches of the pump's file stream
     (0 to 7).foreach(i => docs.filter(col("doc_id") % 8 === i).coalesce(1)
       .write.mode("append").parquet(s"$src/documents.parquet"))
-    val r = GraftApp.run(spark, GraftApp.parse(Seq(s"--src-dir=$src",
-      s"--dst-dir=$dst", "--src-tables=documents", "--score-pump",
-      "--vacuum-every=1", "--vacuum-keep=1")))
-    assert(r.curations.map(_.mode) == Seq("score-pump"))
+    val args = Seq(s"--src-dir=$src", s"--dst-dir=$dst",
+      "--src-tables=documents", "--pumps=score", "--vacuum-every=1",
+      "--vacuum-keep=1")
+    val r = GraftApp.run(spark, GraftApp.parse(args))
+    assert(r.curations.map(_.mode) == Seq("monitor-score"))
+    assertDryPlans(args, r)
     val versions = graft.streaming.BucketStateStore
-      .availableVersions(spark, s"$dst/documents_score_state")
+      .availableVersions(spark, s"$dst/documents_monitor_state/score")
     assert(versions.size == 1,
       s"--vacuum-keep=1 must leave exactly the live version, kept $versions")
     val score = size(filter(graft.text.TextAnalysis.tokens(col("text")),
       t => t === "the" || t === "a"))
     val label = when(col("lang") === "en", lit(1L)).otherwise(lit(0L))
-    assert(spark.read.parquet(s"$dst/documents_score_pump.parquet")
+    assert(spark.read.parquet(s"$dst/documents_monitor_score.parquet")
         .collect().toSeq ==
       graft.ops.ScoreEval.rocAuc(docs, score, label).collect().toSeq)
   }
@@ -1587,19 +1621,21 @@ class GraftAppSpec extends AnyFunSuite {
     val docs = graft.Tables.load(spark, dir, "documents")
     val probes = docs.filter(col("doc_id") % 100 === 0)
     probes.write.mode("overwrite").parquet(probeDir)
-    val r = GraftApp.run(spark, GraftApp.parse(Seq(s"--src-dir=$dir",
-      s"--dst-dir=$dst", "--src-tables=documents",
-      s"--contamination-pump=$probeDir", "--contamination-k=3",
-      "--agreement-pump", "--agreement-gold=lang")))
+    val args = Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
+      "--src-tables=documents", "--pumps=contamination,agreement",
+      s"--probe-dir=$probeDir", "--contamination-k=3",
+      "--agreement-gold=lang")
+    val r = GraftApp.run(spark, GraftApp.parse(args))
     assert(r.curations.map(_.mode).sorted ==
-      Seq("agreement-pump", "contamination-pump"))
+      Seq("monitor-agreement", "monitor-contamination"))
+    assertDryPlans(args, r)
     // contamination: the pump grades the WHOLE table against the
     // probes (probe rows included — they trivially self-hit), exactly
     // like the batch scan over the same inputs
     val wantContam = graft.dedup.Dedup.contaminationScan(docs, probes, k = 3)
       .orderBy("doc_id").collect()
     val gotContam = spark.read
-      .parquet(s"$dst/documents_contamination_pump.parquet")
+      .parquet(s"$dst/documents_monitor_contamination.parquet")
       .orderBy("doc_id").collect()
     assert(gotContam.toSeq == wantContam.toSeq && gotContam.nonEmpty)
     // agreement: default labeler is the built-in langId over --text-col
@@ -1607,14 +1643,14 @@ class GraftAppSpec extends AnyFunSuite {
         graft.text.TextAnalysis.langId(col("text"),
           graft.text.TextAnalysis.defaultProfiles)).collect()
     val gotAgree = spark.read
-      .parquet(s"$dst/documents_agreement_pump.parquet")
+      .parquet(s"$dst/documents_monitor_agreement.parquet")
       .orderBy("cls").collect()
     assert(gotAgree.toSeq == wantAgree.toSeq)
     // a labeler PANEL has no pairwise census — refused loudly
     val e = intercept[IllegalArgumentException] {
       GraftApp.run(spark, GraftApp.parse(Seq(s"--src-dir=$dir",
         s"--dst-dir=${Files.createTempDirectory("graft_apppanel")}",
-        "--src-tables=documents", "--agreement-pump",
+        "--src-tables=documents", "--pumps=agreement",
         "--agreement-pred=source,lang")))
     }
     assert(e.getMessage.contains("ONE labeler"), e.getMessage)
@@ -1623,17 +1659,17 @@ class GraftAppSpec extends AnyFunSuite {
   test("curation pump modes show up in --dry planning") {
     val dst = Files.createTempDirectory("graft_apppumpdry").toString
     val r = GraftApp.run(spark, GraftApp.parse(Seq(s"--src-dir=$dir",
-      s"--dst-dir=$dst", "--src-tables=documents", "--novelty-pump",
-      "--contamination-pump=/probes", "--agreement-pump", "--score-pump",
+      s"--dst-dir=$dst", "--src-tables=documents",
+      "--pumps=novelty,contamination,agreement,score", "--probe-dir=/probes",
       "--dry")))
     assert(r.dryPlanned.exists(_.startsWith(
-      s"novelty-pump: documents -> $dst/documents_novelty_state")))
+      s"monitor-novelty: documents -> $dst/documents_monitor_state/novelty")))
     assert(r.dryPlanned.exists(_.startsWith(
-      s"contamination-pump: documents -> $dst/documents_contamination_state")))
+      s"monitor-contamination: documents -> $dst/documents_monitor_state/contamination")))
     assert(r.dryPlanned.exists(_.startsWith(
-      s"agreement-pump[lang vs langid(text)]: documents -> $dst/documents_agreement_state")))
+      s"monitor-agreement[lang vs langid(text)]: documents -> $dst/documents_monitor_state/agreement")))
     assert(r.dryPlanned.exists(_.startsWith(
-      s"score-pump[marker_hits(text) vs lang=en]: documents -> $dst/documents_score_state")))
+      s"monitor-score[marker_hits(text) vs lang=en]: documents -> $dst/documents_monitor_state/score")))
     assert(r.curations.isEmpty, "--dry must not start any pump")
   }
 
@@ -1641,11 +1677,12 @@ class GraftAppSpec extends AnyFunSuite {
     "and honor their option dials") {
     val dst = Files.createTempDirectory("graft_appvocabdrift").toString
     val docs = graft.Tables.load(spark, dir, "documents")
-    val r = GraftApp.run(spark, GraftApp.parse(Seq(s"--src-dir=$dir",
-      s"--dst-dir=$dst", "--src-tables=documents",
-      "--vocab-report", "--drift-report")))
+    val args = Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
+      "--src-tables=documents", "--vocab-report", "--drift-report")
+    val r = GraftApp.run(spark, GraftApp.parse(args))
     assert(r.curations.map(_.mode).sorted ==
       Seq("drift-report", "vocab-report"))
+    assertDryPlans(args, r)
     val wantVocab = graft.text.Vocab.vocabCoverage(docs, col("source"))
       .collect()
     val gotVocab = spark.read.parquet(s"$dst/documents_vocab.parquet")
@@ -1683,38 +1720,42 @@ class GraftAppSpec extends AnyFunSuite {
   test("drift-pump mode equals the batch ksTest through the CLI surface") {
     val dst = Files.createTempDirectory("graft_appdriftpump").toString
     val docs = graft.Tables.load(spark, dir, "documents")
-    val r = GraftApp.run(spark, GraftApp.parse(Seq(s"--src-dir=$dir",
-      s"--dst-dir=$dst", "--src-tables=documents", "--drift-pump")))
-    assert(r.curations.map(_.mode) == Seq("drift-pump"))
+    val args = Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
+      "--src-tables=documents", "--pumps=drift")
+    val r = GraftApp.run(spark, GraftApp.parse(args))
+    assert(r.curations.map(_.mode) == Seq("monitor-drift"))
+    assertDryPlans(args, r)
     val want = graft.ops.ScoreEval.ksTest(docs, col("n_chars"),
       when(col("source") === "src0", lit(1L)).otherwise(lit(0L))).collect()
-    val got = spark.read.parquet(s"$dst/documents_drift_pump.parquet")
+    val got = spark.read.parquet(s"$dst/documents_monitor_drift.parquet")
       .collect()
     assert(got.toSeq == want.toSeq)
     // --dry plans the state dir and starts nothing
     val dst2 = Files.createTempDirectory("graft_appdriftpumpdry").toString
     val r2 = GraftApp.run(spark, GraftApp.parse(Seq(s"--src-dir=$dir",
-      s"--dst-dir=$dst2", "--src-tables=documents", "--drift-pump",
+      s"--dst-dir=$dst2", "--src-tables=documents", "--pumps=drift",
       "--dry")))
     assert(r2.dryPlanned.exists(_.startsWith(
-      s"drift-pump[n_chars, source=src0 vs rest]: documents -> " +
-        s"$dst2/documents_drift_state")))
+      s"monitor-drift[n_chars, source=src0 vs rest]: documents -> " +
+        s"$dst2/documents_monitor_state/drift")))
     assert(r2.curations.isEmpty)
   }
 
   test("score-pump mode equals the batch rocAuc through the CLI surface") {
     val dst = Files.createTempDirectory("graft_appscorepump").toString
     val docs = graft.Tables.load(spark, dir, "documents")
-    val r = GraftApp.run(spark, GraftApp.parse(Seq(s"--src-dir=$dir",
-      s"--dst-dir=$dst", "--src-tables=documents", "--score-pump")))
-    assert(r.curations.map(_.mode) == Seq("score-pump"))
+    val args = Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
+      "--src-tables=documents", "--pumps=score")
+    val r = GraftApp.run(spark, GraftApp.parse(args))
+    assert(r.curations.map(_.mode) == Seq("monitor-score"))
+    assertDryPlans(args, r)
     // default score/label: built-in marker hits vs gold lang == 'en' —
     // the same defaults --score-report grades in batch
     val score = size(filter(graft.text.TextAnalysis.tokens(col("text")),
       t => t === "the" || t === "a"))
     val label = when(col("lang") === "en", lit(1L)).otherwise(lit(0L))
     val want = graft.ops.ScoreEval.rocAuc(docs, score, label).collect()
-    val got = spark.read.parquet(s"$dst/documents_score_pump.parquet")
+    val got = spark.read.parquet(s"$dst/documents_monitor_score.parquet")
       .collect()
     assert(got.toSeq == want.toSeq)
     assert(got.head.getDouble(2) > 0.0, "fixture must separate the classes")
@@ -1728,10 +1769,12 @@ class GraftAppSpec extends AnyFunSuite {
     val docs = graft.Tables.load(spark, dir, "documents")
     docs.filter(col("doc_id") % 100 === 0).write.mode("overwrite")
       .parquet(probeDir)
-    val r = GraftApp.run(spark, GraftApp.parse(Seq(s"--src-dir=$dir",
-      s"--dst-dir=$dst", "--src-tables=documents",
+    val args = Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
+      "--src-tables=documents",
       "--pumps=novelty,contamination,agreement,score,drift,jsd",
-      s"--probe-dir=$probeDir")))
+      s"--probe-dir=$probeDir")
+    val r = GraftApp.run(spark, GraftApp.parse(args))
+    assertDryPlans(args, r)
     assert(r.curations.map(_.mode) == Seq("monitor-novelty",
       "monitor-contamination", "monitor-agreement", "monitor-score",
       "monitor-drift", "monitor-jsd"))
@@ -1786,10 +1829,11 @@ class GraftAppSpec extends AnyFunSuite {
     "second fold") {
     val dst = Files.createTempDirectory("graft_appmonitor2").toString
     val docs = graft.Tables.load(spark, dir, "documents")
-    val r = GraftApp.run(spark, GraftApp.parse(Seq(s"--src-dir=$dir",
-      s"--dst-dir=$dst", "--src-tables=documents",
-      "--pumps=ksmatrix,jsd,vocab", "--drift-col=n_chars",
-      "--overlap-group-col=source")))
+    val args = Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
+      "--src-tables=documents", "--pumps=ksmatrix,jsd,vocab",
+      "--drift-col=n_chars", "--overlap-group-col=source")
+    val r = GraftApp.run(spark, GraftApp.parse(args))
+    assertDryPlans(args, r)
     assert(r.curations.map(_.mode) == Seq("monitor-ksmatrix",
       "monitor-jsd", "monitor-vocab"))
     // the vocab record counts the jsd census it reads
@@ -1825,9 +1869,11 @@ class GraftAppSpec extends AnyFunSuite {
   test("--pumps monitor: embedding leg over an embeddings table") {
     val dst = Files.createTempDirectory("graft_appmonemb").toString
     val embs = graft.Tables.load(spark, dir, "embeddings")
-    val r = GraftApp.run(spark, GraftApp.parse(Seq(s"--src-dir=$dir",
-      s"--dst-dir=$dst", "--src-tables=embeddings", "--pumps=embedding",
-      "--overlap-group-col=label")))
+    val args = Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
+      "--src-tables=embeddings", "--pumps=embedding",
+      "--overlap-group-col=label")
+    val r = GraftApp.run(spark, GraftApp.parse(args))
+    assertDryPlans(args, r)
     assert(r.curations.map(_.mode) == Seq("monitor-embedding"))
     assert(spark.read
         .parquet(s"$dst/embeddings_monitor_embedding.parquet")
@@ -1861,6 +1907,34 @@ class GraftAppSpec extends AnyFunSuite {
       s"monitor-pump[score,drift]: documents -> " +
         s"$dst/documents_monitor_state/{score,drift}")))
     assert(r.curations.isEmpty, "--dry must not start the monitor")
+  }
+
+  // every check across options fails --dry with the run's own message:
+  // a plan must not promise a run that would be refused
+  Seq(
+    "an unknown --pumps leg" -> (Seq("--pumps=bogus"), "unknown census legs"),
+    "a duplicate --pumps leg" -> (Seq("--pumps=score,score"), "duplicate"),
+    "--pumps=contamination without --probe-dir" ->
+      (Seq("--pumps=contamination"), "--probe-dir"),
+    "--pumps=classes without --score-classes" ->
+      (Seq("--pumps=classes"), "--score-classes"),
+    "an agreement-leg labeler panel" ->
+      (Seq("--pumps=agreement", "--agreement-pred=source,lang"), "ONE labeler"),
+    "--scd2 without --scd2-value" -> (Seq("--scd2"), "--scd2-value"),
+    "an unknown --ppl-drop tier" ->
+      (Seq("--ppl-filter", "--ppl-drop=tail,bogus"), "unknown bucket name")
+  ).foreach { case (what, (extra, text)) =>
+    test(s"--dry refuses $what with the run's message") {
+      val dst = Files.createTempDirectory("graft_dryrefuse").toString
+      val args = Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
+        "--src-tables=documents") ++ extra
+      val run = intercept[IllegalArgumentException](
+        GraftApp.run(spark, GraftApp.parse(args)))
+      assert(run.getMessage.contains(text), run.getMessage)
+      val dry = intercept[IllegalArgumentException](
+        GraftApp.run(spark, GraftApp.parse(args :+ "--dry")))
+      assert(dry.getMessage == run.getMessage)
+    }
   }
 
   test("agreement-report batch face carries the same R_K as the " +
