@@ -297,6 +297,7 @@ object GraftApp {
 
   /** Execute the selected modes in reference order. */
   def run(spark: SparkSession, c: Config): Result = {
+    validate(c)
     // process-level surface first, like the reference's startup order
     // (logging config → pidfile → dispatch, main.py:39-73)
     c.logLevel.foreach(l => spark.sparkContext.setLogLevel(LogLevels(l)))
@@ -343,6 +344,20 @@ object GraftApp {
       registry.register(t, graft.ops.Transforms.converterInstance(cls))
     }
     val spec = Migrator.Spec(c.columnSkip, c.whereClauses, c.defaults, registry)
+    // the checks that need each table's key or schema, also made
+    // before --dry returns
+    tables.foreach { t =>
+      val pk = c.pkFor.getOrElse(t, c.pk)
+      require(!c.remigrate || pk.nonEmpty, s"--remigrate: no primary key " +
+        s"for table $t (--pk is empty and no --pk-for entry names one)")
+      require(!c.scd2 || c.scd2Key.isDefined || pk.nonEmpty, s"--scd2: no " +
+        s"key column for table $t (--pk is empty and no --pk-for entry " +
+        "names one)")
+      if (c.scoreReport) c.scoreClasses.foreach(
+        classConfCol(Migrator.transformed(spark, c.srcDir, t, spec).schema, _))
+      if (c.pumps.contains("classes"))
+        classConfCol(Tables.load(spark, c.srcDir, t).schema, c.scoreClasses.get)
+    }
 
     def schemaFor(t: String) = catalog match {
       case Some(cat) => CatalogReader.schemaOf(cat, t,
@@ -378,7 +393,12 @@ object GraftApp {
 
     val modes = batchModes(spark, c).filter(_.on)
     def outBase(t: String) = s"${c.dstDir}/${dstNameFor(t)}"
-    def monitorRoot(t: String) = s"${outBase(t)}_monitor_state"
+    // one monitor per table AND leg set: its checkpoint and its legs'
+    // states are keyed by the sorted leg list, so a run with other legs
+    // folds the whole table into its own states instead of resuming a
+    // reader whose files another leg set already consumed
+    val legSet = c.pumps.sorted.mkString("-")
+    def monitorRoot(t: String) = s"${outBase(t)}_monitor_state/$legSet"
     // one census of the --pumps monitor over table t
     def censusOf(t: String, leg: String) = Census(leg,
       // vocab is a second FACE of the jsd leg's token census: it
@@ -460,10 +480,8 @@ object GraftApp {
     val remigrations: Seq[Migrator.Remigration] =
       if (!c.remigrate) Nil
       else tables.map { t =>
-        val pk = c.pkFor.getOrElse(t, c.pk)
-        require(pk.nonEmpty, s"--remigrate: no primary key for table $t " +
-          "(--pk is empty and no --pk-for entry names one)")
-        val r = Migrator.remigrate(spark, c.srcDir, c.dstDir, t, pk, spec,
+        val r = Migrator.remigrate(spark, c.srcDir, c.dstDir, t,
+          c.pkFor.getOrElse(t, c.pk), spec,
           dstTable = Some(dstNameFor(t)))
         if (!r.reconciled) throw new IllegalStateException(
           s"remigrate count mismatch for $t: retained=${r.retainedRows} " +
@@ -598,7 +616,7 @@ object GraftApp {
       if (c.pumps.isEmpty) Nil else tables.flatMap { t =>
         val censuses = c.pumps.map(censusOf(t, _))
         CurationPumps.startMonitorPump(tableStream(t),
-          s"${c.dstDir}/_ckpt_monitor_$t",
+          s"${c.dstDir}/_ckpt_monitor_$t/$legSet",
           censuses.filter(_.folds).map(x => legOf(t, x.leg, x.stateDir)),
           processingTime = if (stayUp(c)) Some(c.nicePause) else None,
           vacuumEvery = vacuumCadence(c), vacuumKeep = c.vacuumKeep)
@@ -774,12 +792,7 @@ object GraftApp {
       BatchMode(c.scd2, "scd2", "scd2", Seq("_history.parquet"),
         (t, _, in) => {
           // per-table key resolution honors --pk-for like the pump modes
-          val key = c.scd2Key.getOrElse {
-            val pk = c.pkFor.getOrElse(t, c.pk)
-            require(pk.nonEmpty, s"--scd2: no key column for table $t " +
-              "(--pk is empty and no --pk-for entry names one)")
-            pk.head
-          }
+          val key = c.scd2Key.getOrElse(c.pkFor.getOrElse(t, c.pk).head)
           Seq(graft.ops.Scd.scd2Intervals(in, col(key), col(c.scd2Value.get),
             col(c.scd2Ts.getOrElse(c.orderCols.head)),
             col(c.scd2Tie.getOrElse(c.orderCols.last))))
@@ -1222,20 +1235,8 @@ object GraftApp {
         .getOrElse(1000),
       pplBuckets = kv.get("ppl-buckets").map(longOpt("ppl-buckets")(_).toInt)
         .getOrElse(3),
-      pplDrop = kv.get("ppl-drop")
-        .map { v =>
-          val tiers = v.split(",").toSeq.filter(_.nonEmpty)
-          // `--ppl-drop=` would otherwise parse to zero tiers and the
-          // filter silently keeps everything — a no-op the user asked
-          // to be a drop
-          require(tiers.nonEmpty,
-            s"--ppl-drop=$v names no tiers (e.g. --ppl-drop=tail)")
-          val unknown = tiers.filterNot(Set("head", "middle", "tail"))
-          require(unknown.isEmpty,
-            s"--ppl-drop: unknown bucket name(s) ${unknown.mkString(", ")} " +
-              "(expected head, middle, tail) — refusing a silent no-op filter")
-          tiers
-        }.getOrElse(Seq("tail")),
+      pplDrop = kv.get("ppl-drop").map(_.split(",").toSeq.filter(_.nonEmpty))
+        .getOrElse(Seq("tail")),
       pplGroupCol = kv.getOrElse("ppl-group-col", "lang"),
       dedup = flags("dedup"),
       dedupK = kv.get("dedup-k").map(longOpt("dedup-k")(_).toInt)
@@ -1259,11 +1260,7 @@ object GraftApp {
       embedContaminationProbes = kv.get("embed-contamination"),
       embedContaminationCos = kv.get("embed-contamination-cos")
         .map(doubleOpt("embed-contamination-cos")).getOrElse(0.25),
-      annRecall = kv.get("ann-recall").map { v =>
-        require(AnnRecallVariants.contains(v),
-          s"--ann-recall=$v: expected one of ${AnnRecallVariants.toSeq.sorted.mkString(", ")}")
-        v
-      },
+      annRecall = kv.get("ann-recall"),
       annK = kv.get("ann-k").map(longOpt("ann-k")(_).toInt).getOrElse(10),
       annQueryMod = kv.get("ann-queries")
         .map(longOpt("ann-queries")(_).toInt).getOrElse(100),
@@ -1298,8 +1295,25 @@ object GraftApp {
           "version is always retained)")
         n
       }.getOrElse(4))
-    // checks across options run here, not in run, so that --dry
-    // refuses exactly what the run would
+    validate(c)
+    c
+  }
+
+  /** The checks on a [[Config]] as a whole, made by [[parse]] and again
+    * first thing in [[run]] (a Config built in code skips parse), so
+    * `--dry` refuses exactly what the run would. */
+  private def validate(c: Config): Unit = {
+    // `--ppl-drop=` would otherwise name zero tiers and the filter
+    // silently keep everything — a no-op the user asked to be a drop
+    require(c.pplDrop.nonEmpty,
+      s"--ppl-drop=${c.pplDrop.mkString(",")} names no tiers " +
+        "(e.g. --ppl-drop=tail)")
+    val unknownTiers = c.pplDrop.filterNot(Set("head", "middle", "tail"))
+    require(unknownTiers.isEmpty,
+      s"--ppl-drop: unknown bucket name(s) ${unknownTiers.mkString(", ")} " +
+        "(expected head, middle, tail) — refusing a silent no-op filter")
+    c.annRecall.foreach(v => require(AnnRecallVariants.contains(v),
+      s"--ann-recall=$v: expected one of ${AnnRecallVariants.toSeq.sorted.mkString(", ")}"))
     require(!c.scd2 || c.scd2Value.isDefined,
       "--scd2 requires --scd2-value=<tracked column>")
     val badLegs = c.pumps.filterNot(MonitorLegs)
@@ -1320,7 +1334,6 @@ object GraftApp {
         "durable census is a pairwise confusion matrix); a panel got " +
         s"${agreementPreds(c).size} predictions — use batch " +
         "--agreement-report for Fleiss' kappa")
-    c
   }
 
   private val AnnRecallVariants = Set("int8", "ivf", "pq", "lsh")

@@ -52,7 +52,7 @@ object PrefixSum {
     * localCheckpoint + offsets collect per extra column — the
     * ScoreEval census cumulatives (cum_pos AND cum_neg, cum_a AND
     * cum_b) all need exactly this pairing on every run and every
-    * drift-pump drain.
+    * `--pumps=drift` drain.
     */
   def withRunningTotals(df: DataFrame, order: Seq[Column],
       values: Seq[(Column, String)]): DataFrame = {

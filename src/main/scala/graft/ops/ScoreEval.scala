@@ -977,10 +977,10 @@ object ScoreEval {
       .agg(sum(lit(1L) - col("g")).as("a"), sum(col("g")).as("b"))
   }
 
-  /** [[ksTest]] over a pre-built `(s, a, b)` census — the streaming
-    * drift pump's durable-state face. Same integer sup, same single
+  /** [[ksTest]] over a pre-built `(s, a, b)` census — the drift
+    * monitor leg's durable-state face. Same integer sup, same single
     * division, one code path; both cumulatives ride ONE two-phase
-    * prefix pass (this runs on every drift-pump drain).
+    * prefix pass (this runs on every `--pumps=drift` drain).
     */
   def ksFromCensus(census: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"

@@ -587,7 +587,10 @@ object CurationPumps {
     *
     * One leg is a single-census pump: on the CLI, `--pumps=<leg>`
     * runs one leg and `--pumps=<leg,...>` several, with `--probe-dir`
-    * naming the contamination leg's probes.
+    * naming the contamination leg's probes. A checkpoint belongs to
+    * its leg set: the legs' state dirs are part of what its offsets
+    * mean, so a caller gives another leg set its own checkpoint and
+    * state dirs (the CLI keys both by the sorted leg list).
     * Trigger and vacuum cadence are [[Pump.start]]'s, over every leg's
     * state dir: a RESIDENT monitor folds every leg every batch, so
     * without vacuum its version count grows legs × batches.

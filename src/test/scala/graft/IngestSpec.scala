@@ -1603,7 +1603,7 @@ class GraftAppSpec extends AnyFunSuite {
     assert(r.curations.map(_.mode) == Seq("monitor-score"))
     assertDryPlans(args, r)
     val versions = graft.streaming.BucketStateStore
-      .availableVersions(spark, s"$dst/documents_monitor_state/score")
+      .availableVersions(spark, s"$dst/documents_monitor_state/score/score")
     assert(versions.size == 1,
       s"--vacuum-keep=1 must leave exactly the live version, kept $versions")
     val score = size(filter(graft.text.TextAnalysis.tokens(col("text")),
@@ -1663,13 +1663,13 @@ class GraftAppSpec extends AnyFunSuite {
       "--pumps=novelty,contamination,agreement,score", "--probe-dir=/probes",
       "--dry")))
     assert(r.dryPlanned.exists(_.startsWith(
-      s"monitor-novelty: documents -> $dst/documents_monitor_state/novelty")))
+      s"monitor-novelty: documents -> $dst/documents_monitor_state/agreement-contamination-novelty-score/novelty")))
     assert(r.dryPlanned.exists(_.startsWith(
-      s"monitor-contamination: documents -> $dst/documents_monitor_state/contamination")))
+      s"monitor-contamination: documents -> $dst/documents_monitor_state/agreement-contamination-novelty-score/contamination")))
     assert(r.dryPlanned.exists(_.startsWith(
-      s"monitor-agreement[lang vs langid(text)]: documents -> $dst/documents_monitor_state/agreement")))
+      s"monitor-agreement[lang vs langid(text)]: documents -> $dst/documents_monitor_state/agreement-contamination-novelty-score/agreement")))
     assert(r.dryPlanned.exists(_.startsWith(
-      s"monitor-score[marker_hits(text) vs lang=en]: documents -> $dst/documents_monitor_state/score")))
+      s"monitor-score[marker_hits(text) vs lang=en]: documents -> $dst/documents_monitor_state/agreement-contamination-novelty-score/score")))
     assert(r.curations.isEmpty, "--dry must not start any pump")
   }
 
@@ -1737,7 +1737,7 @@ class GraftAppSpec extends AnyFunSuite {
       "--dry")))
     assert(r2.dryPlanned.exists(_.startsWith(
       s"monitor-drift[n_chars, source=src0 vs rest]: documents -> " +
-        s"$dst2/documents_monitor_state/drift")))
+        s"$dst2/documents_monitor_state/drift/drift")))
     assert(r2.curations.isEmpty)
   }
 
@@ -1759,6 +1759,32 @@ class GraftAppSpec extends AnyFunSuite {
       .collect()
     assert(got.toSeq == want.toSeq)
     assert(got.head.getDouble(2) > 0.0, "fixture must separate the classes")
+  }
+
+  test("--pumps=novelty then --pumps=score on one dst: each leg set keeps " +
+    "its own checkpoint, so the score census covers the whole table") {
+    val dst = Files.createTempDirectory("graft_appsequential").toString
+    val docs = graft.Tables.load(spark, dir, "documents")
+    def args(legs: String) = Seq(s"--src-dir=$dir", s"--dst-dir=$dst",
+      "--src-tables=documents", s"--pumps=$legs")
+    val r1 = GraftApp.run(spark, GraftApp.parse(args("novelty")))
+    assert(r1.curations.map(_.mode) == Seq("monitor-novelty"))
+    val r2 = GraftApp.run(spark, GraftApp.parse(args("score")))
+    assert(r2.curations.map(_.mode) == Seq("monitor-score"))
+    assertDryPlans(args("score"), r2)
+    // the score census folds every row the novelty run already read
+    val score = size(filter(graft.text.TextAnalysis.tokens(col("text")),
+      t => t === "the" || t === "a"))
+    val label = when(col("lang") === "en", lit(1L)).otherwise(lit(0L))
+    assert(spark.read.parquet(s"$dst/documents_monitor_score.parquet")
+        .collect().toSeq ==
+      graft.ops.ScoreEval.rocAuc(docs, score, label).collect().toSeq)
+    // the first leg set's census is untouched and still resumable
+    assert(spark.read.parquet(s"$dst/documents_monitor_novelty.parquet")
+        .orderBy("doc_id").collect().toSeq ==
+      graft.dedup.Dedup.ngramNovelty(
+          docs.select(col("doc_id"), col("text")), k = 3)
+        .orderBy("doc_id").collect().toSeq)
   }
 
   test("--pumps monitor: ONE invocation folds every listed census and " +
@@ -1817,10 +1843,14 @@ class GraftAppSpec extends AnyFunSuite {
       graft.text.Divergence.jsdFromMixture(docs, col("source"),
         col("text")).collect().toSeq)
     // ONE checkpoint and ONE state root on disk — not six of each
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$dst/_ckpt_monitor_documents")))
+    assert(java.nio.file.Files.list(
+        java.nio.file.Paths.get(s"$dst/_ckpt_monitor_documents"))
+      .count() == 1)
     assert(java.nio.file.Files.list(
         java.nio.file.Paths.get(s"$dst/documents_monitor_state"))
+      .count() == 1)
+    assert(java.nio.file.Files.list(java.nio.file.Paths.get(
+        s"$dst/documents_monitor_state/agreement-contamination-drift-jsd-novelty-score"))
       .count() == 6)
   }
 
@@ -1849,8 +1879,8 @@ class GraftAppSpec extends AnyFunSuite {
       graft.text.Vocab.vocabCoverage(docs, col("source"))
         .collect().toSeq)
     // vocab shares the jsd leg's state: two state dirs, not three
-    assert(java.nio.file.Files.list(
-        java.nio.file.Paths.get(s"$dst/documents_monitor_state"))
+    assert(java.nio.file.Files.list(java.nio.file.Paths.get(
+        s"$dst/documents_monitor_state/jsd-ksmatrix-vocab"))
       .count() == 2)
     // and vocab ALONE still folds the census itself
     val dst2 = Files.createTempDirectory("graft_appmonitor3").toString
@@ -1905,7 +1935,7 @@ class GraftAppSpec extends AnyFunSuite {
       "--pumps=score,drift", "--dry")))
     assert(r.dryPlanned.exists(_.startsWith(
       s"monitor-pump[score,drift]: documents -> " +
-        s"$dst/documents_monitor_state/{score,drift}")))
+        s"$dst/documents_monitor_state/drift-score/{score,drift}")))
     assert(r.curations.isEmpty, "--dry must not start the monitor")
   }
 
@@ -1922,7 +1952,13 @@ class GraftAppSpec extends AnyFunSuite {
       (Seq("--pumps=agreement", "--agreement-pred=source,lang"), "ONE labeler"),
     "--scd2 without --scd2-value" -> (Seq("--scd2"), "--scd2-value"),
     "an unknown --ppl-drop tier" ->
-      (Seq("--ppl-filter", "--ppl-drop=tail,bogus"), "unknown bucket name")
+      (Seq("--ppl-filter", "--ppl-drop=tail,bogus"), "unknown bucket name"),
+    "--remigrate with no primary key" ->
+      (Seq("--remigrate", "--pk="), "no primary key"),
+    "--scd2 with no key column" ->
+      (Seq("--scd2", "--scd2-value=text", "--pk="), "no key column"),
+    "a non-map --score-classes column" ->
+      (Seq("--score-report", "--score-classes=text"), "expected a map")
   ).foreach { case (what, (extra, text)) =>
     test(s"--dry refuses $what with the run's message") {
       val dst = Files.createTempDirectory("graft_dryrefuse").toString
@@ -1934,6 +1970,26 @@ class GraftAppSpec extends AnyFunSuite {
       val dry = intercept[IllegalArgumentException](
         GraftApp.run(spark, GraftApp.parse(args :+ "--dry")))
       assert(dry.getMessage == run.getMessage)
+    }
+  }
+
+  test("run refuses a Config built without parse, --dry included") {
+    val base = GraftApp.parse(Seq(s"--src-dir=$dir",
+      s"--dst-dir=${Files.createTempDirectory("graft_cfgrefuse")}",
+      "--src-tables=documents"))
+    Seq(
+      base.copy(pumps = Seq("bogus")) -> "unknown census legs",
+      base.copy(pumps = Seq("agreement"),
+        agreementPred = Some("source,lang")) -> "ONE labeler",
+      base.copy(pplFilter = true, pplDrop = Seq("bogus")) ->
+        "unknown bucket name",
+      base.copy(scd2 = true) -> "--scd2-value",
+      base.copy(annRecall = Some("bogus")) -> "--ann-recall=bogus"
+    ).foreach { case (c, text) =>
+      Seq(c, c.copy(dry = true)).foreach { cc =>
+        val e = intercept[IllegalArgumentException](GraftApp.run(spark, cc))
+        assert(e.getMessage.contains(text), e.getMessage)
+      }
     }
   }
 
