@@ -19,11 +19,10 @@ import scala.jdk.CollectionConverters._
   * are launched sequentially so each timed run owns the machine.
   *
   * Per query inside a shard: one untimed warmup run (session/JIT/
-  * parquet-footer warmup), then at least `SPARK_GRAFT_BENCH_REPS`
-  * timed runs (default 3, median reported — single-shot timing on a
-  * shared machine is variance-exposed: identical builds measured
-  * 3.3-12.4 s on the same query across runs), extending up to
-  * `SPARK_GRAFT_BENCH_MAX_REPS` (default 7) while the three runs
+  * parquet-footer warmup), then at least 3 timed runs (median
+  * reported — single-shot timing on a shared machine is
+  * variance-exposed: identical builds measured 3.3-12.4 s on the same
+  * query across runs), extending up to 7 while the three runs
   * bracketing the median still spread more than 15% — extra cost
   * lands only on queries whose timing is actually noisy.
   * Materialization is the noop sink (full evaluation of every
@@ -33,7 +32,7 @@ import scala.jdk.CollectionConverters._
   * A query that throws is a loud failure: recorded in the JSON under
   * "errors", timed as -1, and the process exits nonzero — a
   * regression can't silently look like a fast success. A child JVM
-  * that dies or hangs past the timeout marks its whole group failed
+  * that dies or hangs past 1800 s marks its whole group failed
   * and the sweep continues.
   *
   * The one-line JSON goes to stdout AND to a file (sbt wraps forked
@@ -59,24 +58,18 @@ import scala.jdk.CollectionConverters._
   *     out-file is rewritten after every child so even a hard kill
   *     leaves a parseable partial record.
   *
+  * `runMain graft.Bench [outPath]` (default target/bench_local.json).
+  * A scale soak is this sweep on a [[ScaleUp]] directory.
+  *
   * Env knobs:
-  *   SPARK_GRAFT_BENCH_ONLY=q01_x,q02_y  subset sweep (both modes;
-  *                                       bypasses the tier filter)
+  *   SPARK_GRAFT_SF_DIR=dir              data dir (default sf0.1)
+  *   SPARK_GRAFT_CPUS=n                  cores ([[Sessions.cpus]])
+  *   SPARK_GRAFT_BENCH_ONLY=q01_x,q02_y  subset sweep (bypasses the
+  *                                       tier filter)
   *   SPARK_GRAFT_BENCH_TIER=core|full    query tier (default core =
   *                                       SparkEntry.benchCore)
   *   SPARK_GRAFT_BENCH_BUDGET=secs       coordinator wall-clock budget
   *                                       (default 3000; 0 = unlimited)
-  *   SPARK_GRAFT_BENCH_GROUP=N           queries per child JVM (default 1:
-  *                                       fully isolated official record —
-  *                                       grouped children overstated the
-  *                                       heavy tail 2-5x via groupmate debt)
-  *   SPARK_GRAFT_BENCH_REPS=N            minimum timed runs per query,
-  *                                       median kept (default 3)
-  *   SPARK_GRAFT_BENCH_MAX_REPS=N        rep cap while the median
-  *                                       neighborhood is unstable (default 7)
-  *   SPARK_GRAFT_BENCH_INPROC=1          run everything in THIS JVM
-  *                                       (shard mode; coordinator sets it)
-  *   SPARK_GRAFT_BENCH_TIMEOUT=secs      per-child timeout (default 1800)
   *   SPARK_GRAFT_BENCH_PAIR=pathB        interleaved A/B pair sweep:
   *                                       each query runs twice back to
   *                                       back (outPath, then pathB) —
@@ -85,30 +78,51 @@ import scala.jdk.CollectionConverters._
   *                                       (requires BUDGET=0)
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    // default under target/ (untracked): a driver or ad-hoc sweep
-    // must not shadow the COMMITTED pair files (BENCH_LOCAL*.json are
-    // written only when a path is passed explicitly)
-    val outPath = args.headOption
-      .orElse(sys.env.get("SPARK_GRAFT_BENCH_OUT"))
-      .getOrElse("target/bench_local.json")
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val tier = sys.env.getOrElse("SPARK_GRAFT_BENCH_TIER", "core")
-    require(tier == "core" || tier == "full",
-      s"SPARK_GRAFT_BENCH_TIER=$tier: expected core or full")
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(SparkEntry.benchExclude)
-      // an explicit ONLY list (a standalone measurement, or a
-      // coordinator-launched shard) bypasses the tier filter
-      .filter(n => only.forall(_.contains(n)))
-      .filter(n => only.isDefined || tier == "full" || SparkEntry.benchCore(n))
-    if (sys.env.contains("SPARK_GRAFT_BENCH_INPROC")) runShard(names, outPath)
-    else sys.env.get("SPARK_GRAFT_BENCH_PAIR") match {
-      case Some(pathB) => coordinatePair(names, outPath, pathB, tier)
-      case None => coordinate(names, outPath, tier)
-    }
+  def main(args: Array[String]): Unit = plan(args.toSeq, sys.env) match {
+    case Shard(out, names, reps1) => runShard(names, out, reps1)
+    case Sweep(out, names, tier, Some(pathB)) =>
+      coordinatePair(names, out, pathB, tier)
+    case Sweep(out, names, tier, None) => coordinate(names, out, tier)
   }
+
+  private[graft] sealed trait Plan
+  /** One child JVM's group, fixed by the coordinator's arguments. */
+  private[graft] final case class Shard(out: String, names: Seq[String],
+      reps1: Boolean) extends Plan
+  private[graft] final case class Sweep(out: String, names: Seq[String],
+      tier: String, pairB: Option[String]) extends Plan
+
+  /** The arguments a coordinator passes its child: record path, query
+    * list, reps-1 flag. [[plan]] reads them back before any env knob.
+    */
+  private[graft] def shardArgs(out: String, names: Seq[String],
+      reps1: Boolean): Seq[String] = Seq(out, names.mkString(","), reps1.toString)
+
+  /** What one invocation runs. Three arguments are a shard (see
+    * [[shardArgs]]), whatever the environment says; otherwise the one
+    * optional argument is the record path and the env knobs pick the
+    * sweep.
+    */
+  private[graft] def plan(args: Seq[String], env: Map[String, String]): Plan =
+    args match {
+      case Seq(out, names, reps1) =>
+        Shard(out, names.split(",").toSeq, reps1.toBoolean)
+      case _ =>
+        val only = env.get("SPARK_GRAFT_BENCH_ONLY")
+          .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+        val tier = env.getOrElse("SPARK_GRAFT_BENCH_TIER", "core")
+        require(tier == "core" || tier == "full",
+          s"SPARK_GRAFT_BENCH_TIER=$tier: expected core or full")
+        val names = SparkEntry.queries.keys.toSeq.sorted
+          .filterNot(SparkEntry.benchExclude)
+          // an explicit ONLY list bypasses the tier filter
+          .filter(n => only.forall(_.contains(n)))
+          .filter(n => only.isDefined || tier == "full" || SparkEntry.benchCore(n))
+        // default under target/ (untracked): an ad-hoc sweep must not
+        // shadow the COMMITTED pair files (BENCH_LOCAL*.json)
+        Sweep(args.headOption.getOrElse("target/bench_local.json"), names,
+          tier, env.get("SPARK_GRAFT_BENCH_PAIR"))
+    }
 
   // ---------------------------------------------------------------- shard
 
@@ -117,10 +131,10 @@ object Bench {
     * JVM per group, so the debt a query can inherit is bounded by its
     * few groupmates, not the whole sweep.
     */
-  private def runShard(names: Seq[String], outPath: String): Unit = {
+  private def runShard(names: Seq[String], outPath: String,
+      reps1: Boolean): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.local(cpus)
+    val spark = Sessions.local()
 
     def runOnce(name: String): Option[String] =
       try {
@@ -150,9 +164,7 @@ object Bench {
     clearState()
     System.gc()
 
-    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(3)
-    val maxReps = sys.env.get("SPARK_GRAFT_BENCH_MAX_REPS").map(_.toInt)
-      .getOrElse(7).max(reps)
+    val (reps, maxReps) = if (reps1) (1, 1) else (3, 7)
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val results = names.map { name =>
       val times = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -208,15 +220,6 @@ object Bench {
     if (elapsed + childCost(l) > budget) Levels.size else l
   }
 
-  /** Partition `names` into groups, run each group in a fresh child
-    * JVM (cloned from this JVM's executable, classpath, and VM flags —
-    * sbt `run / fork := true` means those carry the add-opens and heap
-    * settings), and merge the shard records. The out-file is rewritten
-    * after every child (a killed sweep still leaves a parseable
-    * partial record), and the wall-clock budget walks the [[Levels]]
-    * ladder — truncating, with the skips RECORDED, only when even
-    * grouped children cannot fit.
-    */
   /** One child-JVM launch: the group's queries run fully isolated in
     * a fresh process (cloned executable/classpath/VM flags), its
     * record landing at `shardOut`. Returns Some(message) on a
@@ -224,21 +227,13 @@ object Bench {
     * when a record landed — per-query errors then live IN the record.
     */
   private final case class ChildLauncher(java: String, vmArgs: Seq[String],
-      classpath: String, timeoutSecs: Long) {
+      classpath: String) {
+    private val timeoutSecs = 1800L
     def run(group: Seq[String], shardOut: Path,
         reps1: Boolean): Option[String] = {
-      val cmd = (Seq(java) ++ vmArgs ++
-        Seq("-cp", classpath, "graft.Bench", shardOut.toString)).asJava
+      val cmd = (Seq(java) ++ vmArgs ++ Seq("-cp", classpath, "graft.Bench") ++
+        shardArgs(shardOut.toString, group, reps1)).asJava
       val pb = new ProcessBuilder(cmd)
-      pb.environment.put("SPARK_GRAFT_BENCH_INPROC", "1")
-      pb.environment.put("SPARK_GRAFT_BENCH_ONLY", group.mkString(","))
-      // the pair knob must not leak into children: a child with PAIR
-      // set would still take the INPROC branch, but hygiene first
-      pb.environment.remove("SPARK_GRAFT_BENCH_PAIR")
-      if (reps1) {
-        pb.environment.put("SPARK_GRAFT_BENCH_REPS", "1")
-        pb.environment.put("SPARK_GRAFT_BENCH_MAX_REPS", "1")
-      }
       pb.redirectErrorStream(true)
       pb.redirectOutput(ProcessBuilder.Redirect.INHERIT)
       try {
@@ -261,13 +256,19 @@ object Bench {
     java = Paths.get(sys.props("java.home"), "bin", "java").toString,
     vmArgs = childVmArgs(
       ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq),
-    classpath = sys.props("java.class.path"),
-    timeoutSecs = sys.env.get("SPARK_GRAFT_BENCH_TIMEOUT").map(_.toLong)
-      .getOrElse(1800L))
+    classpath = sys.props("java.class.path"))
 
+  /** Partition `names` into groups, run each group in a fresh child
+    * JVM (cloned from this JVM's executable, classpath, and VM flags —
+    * sbt `run / fork := true` means those carry the add-opens and heap
+    * settings), and merge the shard records. The out-file is rewritten
+    * after every child (a killed sweep still leaves a parseable
+    * partial record), and the wall-clock budget walks the [[Levels]]
+    * ladder — truncating, with the skips RECORDED, only when even
+    * grouped children cannot fit.
+    */
   private def coordinate(names: Seq[String], outPath: String,
       tier: String): Unit = {
-    val groupSize = sys.env.get("SPARK_GRAFT_BENCH_GROUP").map(_.toInt).getOrElse(1)
     val budget = sys.env.get("SPARK_GRAFT_BENCH_BUDGET").map(_.toDouble)
       .getOrElse(3000.0)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -314,9 +315,7 @@ object Bench {
         level = next
       }
       if (level < Levels.size) {
-        val (_, grp, _) = Levels(level)
-        val take = math.max(grp, if (level == 0) math.max(1, groupSize) else grp)
-        val group = (0 until math.min(take, pending.size))
+        val group = (0 until math.min(Levels(level)._2, pending.size))
           .map(_ => pending.dequeue())
         val shardOut = shardDir.resolve(s"shard$i.json")
         val t0 = System.nanoTime()
@@ -477,11 +476,6 @@ object Bench {
     s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
                 case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
 
-  /** `extra` lands AFTER the "sf" field (the errors-section parse
-    * delimits on `},"sf":` — nothing may come between them); `print`
-    * is suppressed for the per-child interim rewrites (the stdout
-    * contract is ONE final JSON line).
-    */
   /** Seconds at millisecond precision — the record's wire format.
     * Sub-ms digits are noise on this protocol (same-build medians
     * spread percents, not ppm) and the 9-digit nanosecond tail was
@@ -492,6 +486,12 @@ object Bench {
     java.math.BigDecimal.valueOf(v)
       .setScale(3, java.math.RoundingMode.HALF_UP).toPlainString
 
+  /** Every record names the data dir and [[Sessions.cpus]] right
+    * after its errors (the errors-section parse delimits on `},"sf":` —
+    * nothing may come between them); `extra` follows; `print` is
+    * suppressed for the per-child interim rewrites (the stdout
+    * contract is ONE final JSON line).
+    */
   private[graft] def writeRecord(outPath: String, results: Seq[(String, Double)],
                           errors: Seq[(String, String)], sfDir: String,
                           extra: String = "", print: Boolean = true): Unit = {
@@ -502,7 +502,7 @@ object Bench {
     val total = fmt3(results.collect { case (_, v) if v >= 0 => v }.sum)
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""errors":$errJson,"sf":"$sfDir"$extra}"""
+      s""""errors":$errJson,"sf":"$sfDir","cpus":${Sessions.cpus}$extra}"""
     if (print) println(line)
     val p = Paths.get(outPath)
     Option(p.getParent).foreach(Files.createDirectories(_))

@@ -19,7 +19,7 @@ object Explain {
       if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
         .filterNot(SparkEntry.benchExclude)
-    val spark = Sessions.local("4", "ERROR")
+    val spark = Sessions.local("ERROR")
     names.foreach { name =>
       println(s"\n========== $name ==========")
       SparkEntry.queries(name)(spark, sfDir).explain("formatted")

@@ -59,8 +59,7 @@ object Profile {
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else Seq("q01_pricing_summary")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Sessions.local(cpus)
+    val spark = Sessions.local()
     val tracker = new JobTracker
     spark.sparkContext.addSparkListener(tracker)
 

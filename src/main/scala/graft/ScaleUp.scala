@@ -30,8 +30,7 @@ object ScaleUp {
     val src = args(0)
     val dst = args(1)
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.local(cpus)
+    val spark = Sessions.local()
 
     def load(t: String): DataFrame = Tables.load(spark, src, t)
     def save(df: DataFrame, t: String): Unit =

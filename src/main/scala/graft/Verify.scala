@@ -5,8 +5,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.local(cpus)
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     // dev loop: GRAFT_VERIFY_ONLY=q80,q81 restricts the dump (the
     // driver sets nothing, so its runs always dump every query)

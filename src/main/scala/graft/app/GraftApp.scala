@@ -1375,9 +1375,7 @@ object GraftApp {
 
   def main(args: Array[String]): Unit = {
     val spark = graft.Sessions.builder(
-        sys.env.getOrElse("SPARK_MASTER", "local[*]"),
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .getOrCreate()
+        sys.env.getOrElse("SPARK_MASTER", "local[*]")).getOrCreate()
     val result = run(spark, parse(args.toIndexedSeq))
     result.ddl.foreach(println)
     result.jsonTemplates.foreach(println)

@@ -14,8 +14,13 @@ class BenchRecordSpec extends AnyFunSuite {
                         errors: Seq[(String, String)]): (Map[String, Double], Map[String, String]) = {
     val f = Files.createTempFile("bench-rec", ".json")
     try {
-      Bench.writeRecord(f.toString, results, errors, "/root/testdata/sf0.01")
-      Bench.parseRecord(Files.readString(f))
+      Bench.writeRecord(f.toString, results, errors, "testdata/sf0.01")
+      val line = Files.readString(f)
+      // every record names its cores, after "sf": the errors section
+      // still ends at `},"sf":`
+      assert(line.contains(
+        s"""},"sf":"testdata/sf0.01","cpus":${Sessions.cpus}}"""), line)
+      Bench.parseRecord(line)
     } finally Files.deleteIfExists(f)
   }
 
@@ -84,6 +89,31 @@ near line 2"""
       val (_, errs) = roundtrip(Seq(s"q$i" -> -1.0), Seq(s"q$i" -> msg))
       assert(errs(s"q$i") === msg, s"case $i corrupted: ${errs(s"q$i")}")
     }
+  }
+
+  test("shard arguments carry the names, record path and reps-1 flag") {
+    val names = Seq("q92_copurchase_rank", "q01_pricing_summary")
+    Seq(true, false).foreach { reps1 =>
+      val args = Bench.shardArgs("shards/shard3.json", names, reps1)
+      assert(Bench.plan(args, Map.empty) ===
+        Bench.Shard("shards/shard3.json", names, reps1))
+    }
+  }
+
+  test("a user's ONLY, TIER or PAIR cannot change what a shard runs") {
+    val env = Map(
+      "SPARK_GRAFT_BENCH_ONLY" -> "q01_pricing_summary",
+      "SPARK_GRAFT_BENCH_TIER" -> "full",
+      "SPARK_GRAFT_BENCH_PAIR" -> "other.json")
+    val args = Bench.shardArgs("shards/shard0.json",
+      Seq("q92_copurchase_rank"), reps1 = false)
+    assert(Bench.plan(args, env) ===
+      Bench.Shard("shards/shard0.json", Seq("q92_copurchase_rank"), false))
+    assert(Bench.plan(args, env + ("SPARK_GRAFT_BENCH_TIER" -> "bogus")) ===
+      Bench.plan(args, Map.empty))
+    // the same env does steer a sweep
+    assert(Bench.plan(Seq("out.json"), env) === Bench.Sweep("out.json",
+      Seq("q01_pricing_summary"), "full", Some("other.json")))
   }
 
   test("childVmArgs keeps heap/opens/spark props, drops launcher baggage") {

@@ -7,7 +7,9 @@
   number as `find src/main -name '*.scala' | xargs cat | wc -l`;
 - config_fields: the fields of `GraftApp.Config`, the CLI's options;
 - env_knobs: the distinct environment variables main code reads
-  (`sys.env…("NAME")`, `System.getenv("NAME")`), listed by name.
+  (`sys.env…("NAME")`, `System.getenv("NAME")`, or a lookup in an
+  environment map passed as `env`, e.g. `env.get("NAME")`), listed by
+  name.
 
 Run it on a clone of the parent commit and on the change to get the
 before/after deltas.
@@ -18,7 +20,7 @@ import sys
 
 CONFIG_FILE = "src/main/scala/graft/app/GraftApp.scala"
 ENV_READ = re.compile(
-    r'(?:sys\.env(?:\.get|\.getOrElse|\.contains)?|System\.getenv)\s*\(\s*"([A-Za-z0-9_]+)"')
+    r'(?:\benv(?:\.get|\.getOrElse|\.contains)?|System\.getenv)\s*\(\s*"([A-Za-z0-9_]+)"')
 
 
 def scala_files(root):
