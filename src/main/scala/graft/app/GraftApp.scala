@@ -4,7 +4,7 @@ import graft.Tables
 import graft.cdc.ChangeFeed
 import graft.migrate.Migrator
 import graft.schema.{CatalogReader, DdlBuilder}
-import graft.streaming.StreamingCdc
+import graft.streaming.{CurationPumps, StreamingCdc}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, filter, lit, size, when}
 
@@ -344,6 +344,8 @@ object GraftApp {
       registry.register(t, graft.ops.Transforms.converterInstance(cls))
     }
     val spec = Migrator.Spec(c.columnSkip, c.whereClauses, c.defaults, registry)
+    // the listed --pumps legs, in the order listed
+    val monitorLegs = c.pumps.map(pumpLegs(c).map(l => l.name -> l).toMap)
     // the checks that need each table's key or schema, also made
     // before --dry returns
     tables.foreach { t =>
@@ -355,8 +357,8 @@ object GraftApp {
         "names one)")
       if (c.scoreReport) c.scoreClasses.foreach(
         classConfCol(Migrator.transformed(spark, c.srcDir, t, spec).schema, _))
-      if (c.pumps.contains("classes"))
-        classConfCol(Tables.load(spark, c.srcDir, t).schema, c.scoreClasses.get)
+      // resolving a leg against the table checks the columns it grades
+      monitorLegs.foreach(_.fold(spark, t))
     }
 
     def schemaFor(t: String) = catalog match {
@@ -399,13 +401,10 @@ object GraftApp {
     // reader whose files another leg set already consumed
     val legSet = c.pumps.sorted.mkString("-")
     def monitorRoot(t: String) = s"${outBase(t)}_monitor_state/$legSet"
-    // one census of the --pumps monitor over table t
-    def censusOf(t: String, leg: String) = Census(leg,
-      // vocab is a second FACE of the jsd leg's token census: it
-      // reads the jsd state, and folds it only when jsd does not
-      s"${monitorRoot(t)}/${if (leg == "vocab") "jsd" else leg}",
-      s"monitor-$leg", s"${outBase(t)}_monitor_$leg.parquet",
-      folds = leg != "vocab" || !c.pumps.contains("jsd"))
+    def stateDirOf(t: String, l: PumpLeg) =
+      s"${monitorRoot(t)}/${l.state.getOrElse(l.name)}"
+    def reportPath(t: String, l: PumpLeg) =
+      s"${outBase(t)}_monitor_${l.name}.parquet"
 
     // --dry (clioptions.py:100-107): resolve, emit driver-side DDL/
     // templates, but execute nothing — report what WOULD have run
@@ -429,10 +428,8 @@ object GraftApp {
             "(one reader, one checkpoint)"))
       ).collect { case (true, s) => s } ++
         modes.map(m => planLine(m.label, t => m.suffixes.map(outBase(t) + _))) ++
-        c.pumps.map(leg => planLine(s"monitor-$leg${legDials(c, leg)}", t => {
-          val x = censusOf(t, leg)
-          Seq(x.stateDir, x.out)
-        }))
+        monitorLegs.map(l => planLine(s"monitor-${l.name}${l.label}",
+          t => Seq(stateDirOf(t, l), reportPath(t, l))))
       return Result(ddl = ddl, templates = templates,
         jsonTemplates = jsonTemplates, dryPlanned = planned)
     }
@@ -550,7 +547,7 @@ object GraftApp {
     // keeps its own batch-id fence, so a crash between two legs' merges
     // replays safely (CurationPumpsSpec).
     val curationPumps: Seq[Curation] = {
-      import graft.streaming.{BucketStateStore, CurationPumps}
+      import graft.streaming.BucketStateStore
       def tableStream(t: String) = {
         val schema = Tables.load(spark, c.srcDir, t).schema
         // one file per micro-batch: deterministic pacing for a file
@@ -565,68 +562,25 @@ object GraftApp {
         else reader.option("pathGlobFilter", new java.io.File(p).getName)
           .parquet(c.srcDir)
       }
-      def legOf(t: String, leg: String,
-          stateDir: String): CurationPumps.MonitorLeg = leg match {
-        case "novelty" => CurationPumps.noveltyLeg(stateDir, k = c.dedupK,
-          idCol = c.docIdCol, textCol = c.textCol)
-        case "contamination" => CurationPumps.contaminationLeg(
-          spark.read.parquet(c.probeDir.get), stateDir, k = c.contaminationK,
-          idCol = c.docIdCol, textCol = c.textCol)
-        case "agreement" => CurationPumps.agreementLeg(stateDir,
-          gold = col(c.agreementGold), pred = gradedPred(c))
-        case "score" => CurationPumps.scoreLeg(stateDir, score = gradedScore(c),
-          label = gradedLabel(c))
-        case "drift" => CurationPumps.driftLeg(stateDir,
-          score = col(c.driftCol), group = driftGroup(c))
-        case "ksmatrix" => CurationPumps.ksMatrixLeg(stateDir,
-          score = col(c.driftCol), group = col(c.overlapGroupCol))
-        case "jsd" => CurationPumps.jsdLeg(stateDir,
-          group = col(c.overlapGroupCol), text = col(c.textCol))
-        case "vocab" => CurationPumps.vocabLeg(stateDir,
-          group = col(c.overlapGroupCol), text = col(c.textCol))
-        case "embedding" => CurationPumps.embeddingDriftLeg(stateDir,
-          groupCol = c.overlapGroupCol, vecCol = c.embeddingCol)
-        case "classes" => CurationPumps.classesLeg(stateDir,
-          confMilliByClass = classConfCol(
-            Tables.load(spark, c.srcDir, t).schema, c.scoreClasses.get),
-          gold = col(c.agreementGold).cast("string"))
-      }
-      def reportOf(t: String, leg: String,
-          stateDir: String): org.apache.spark.sql.DataFrame = leg match {
-        case "novelty" => CurationPumps.noveltyReport(spark, stateDir,
-          Tables.load(spark, c.srcDir, t), k = c.dedupK,
-          idCol = c.docIdCol, textCol = c.textCol)
-        case "contamination" =>
-          CurationPumps.contaminationVerdicts(spark, stateDir)
-        case "agreement" => CurationPumps.agreementReport(spark, stateDir)
-        case "score" => CurationPumps.scoreAuc(spark, stateDir)
-        case "drift" => CurationPumps.driftKs(spark, stateDir)
-        case "ksmatrix" => CurationPumps.ksMatrixReport(spark, stateDir)
-        case "jsd" => CurationPumps.jsdReport(spark, stateDir)
-        case "vocab" => CurationPumps.vocabCoverageReport(spark, stateDir)
-        case "embedding" =>
-          CurationPumps.embeddingDriftReport(spark, stateDir)
-        // the drained router audit: per-class AUC off the durable
-        // census (AP/operating points are further faces of the same
-        // state, library-reachable)
-        case "classes" => CurationPumps.classAucReport(spark, stateDir)
-      }
       // drain the monitor over each table, then write and record each
       // census's report
       if (c.pumps.isEmpty) Nil else tables.flatMap { t =>
-        val censuses = c.pumps.map(censusOf(t, _))
+        // a leg on another leg's state folds it only when that leg is
+        // not listed too
         CurationPumps.startMonitorPump(tableStream(t),
           s"${c.dstDir}/_ckpt_monitor_$t/$legSet",
-          censuses.filter(_.folds).map(x => legOf(t, x.leg, x.stateDir)),
+          monitorLegs.filter(_.state.forall(!c.pumps.contains(_)))
+            .map(l => l.fold(spark, t)(stateDirOf(t, l))),
           processingTime = if (stayUp(c)) Some(c.nicePause) else None,
           vacuumEvery = vacuumCadence(c), vacuumKeep = c.vacuumKeep)
           .awaitTermination()
-        censuses.map { x =>
-          val stateRows = BucketStateStore.currentVersion(spark, x.stateDir)
-            .map(v => BucketStateStore.stateAtInferred(spark, x.stateDir, v)
+        monitorLegs.map { l =>
+          val dir = stateDirOf(t, l)
+          val stateRows = BucketStateStore.currentVersion(spark, dir)
+            .map(v => BucketStateStore.stateAtInferred(spark, dir, v)
               .count()).getOrElse(0L)
-          Curation(t, x.mode, stateRows,
-            writeCounted(reportOf(t, x.leg, x.stateDir), x.out), x.out)
+          Curation(t, s"monitor-${l.name}", stateRows, writeCounted(
+            l.report(spark, t, dir), reportPath(t, l)), reportPath(t, l))
         }
       }
     }
@@ -770,11 +724,30 @@ object GraftApp {
       reports: (String, DataFrame, DataFrame) => Seq[DataFrame],
       srcRows: Option[DataFrame => Long] = None)
 
-  /** One census of the `--pumps` monitor: its leg name, state dir,
-    * mode name and report file; `folds = false` when another leg of
-    * the same monitor folds its state. */
-  private final case class Census(leg: String, stateDir: String,
-      mode: String, out: String, folds: Boolean = true)
+  /** One leg of the `--pumps` monitor, declared once: [[validate]],
+    * the `--dry` plan, the drain and its [[Curation]] record all read
+    * it. The record's mode is `monitor-<name>`, its report
+    * `<dst table>_monitor_<name>.parquet`.
+    *
+    * @param name    the leg name `--pumps` lists
+    * @param fold    (session, table) => state dir => the leg folding
+    *                the table's batches. Applying the table resolves
+    *                the columns the leg grades against its schema, and
+    *                `run` does that for every listed leg before `--dry`
+    *                returns
+    * @param report  (session, table, state dir) => the report read off
+    *                the state
+    * @param label   the `--dry` line's dials after `monitor-<name>`
+    * @param state   the leg whose state this one is a second face of:
+    *                it reads that leg's state dir, and folds it only
+    *                when that leg is not listed too
+    * @param refusal why the invocation cannot run this leg, if it cannot
+    */
+  private final case class PumpLeg(name: String,
+      fold: (SparkSession, String) => String => CurationPumps.MonitorLeg,
+      report: (SparkSession, String, String) => DataFrame,
+      label: String = "", state: Option[String] = None,
+      refusal: Option[String] = None)
 
   /** Every batch curation mode, in run order. */
   private def batchModes(spark: SparkSession, c: Config): Seq[BatchMode] = {
@@ -975,6 +948,64 @@ object GraftApp {
           col(c.driftCol), driftGroup(c)))))
   }
 
+  /** Every `--pumps` leg. The legs share the dials of the batch
+    * `--*-report` modes of the same census. */
+  private def pumpLegs(c: Config): Seq[PumpLeg] = {
+    import graft.streaming.CurationPumps._
+    val jsd = PumpLeg("jsd",
+      (_, _) => jsdLeg(_, col(c.overlapGroupCol), col(c.textCol)),
+      (spark, _, dir) => jsdReport(spark, dir))
+    Seq(
+      PumpLeg("novelty", (_, _) => noveltyLeg(_, k = c.dedupK,
+          idCol = c.docIdCol, textCol = c.textCol),
+        (spark, t, dir) => noveltyReport(spark, dir,
+          Tables.load(spark, c.srcDir, t), k = c.dedupK,
+          idCol = c.docIdCol, textCol = c.textCol)),
+      // the probes are read when the leg is built, once per table
+      PumpLeg("contamination", (spark, _) => contaminationLeg(
+          spark.read.parquet(c.probeDir.get), _, k = c.contaminationK,
+          idCol = c.docIdCol, textCol = c.textCol),
+        (spark, _, dir) => contaminationVerdicts(spark, dir),
+        refusal = Option.when(c.probeDir.isEmpty)(
+          "needs --probe-dir=<parquet dir of probe documents>")),
+      PumpLeg("agreement", (_, _) => agreementLeg(_,
+          gold = col(c.agreementGold), pred = gradedPred(c)),
+        (spark, _, dir) => agreementReport(spark, dir),
+        label = agreementDials(c),
+        refusal = Option.when(agreementPreds(c).sizeIs > 1)(
+          "grades ONE labeler against gold (the durable census is a " +
+            "pairwise confusion matrix); a panel got " +
+            s"${agreementPreds(c).size} predictions — use batch " +
+            "--agreement-report for Fleiss' kappa")),
+      PumpLeg("score", (_, _) => scoreLeg(_, gradedScore(c), gradedLabel(c)),
+        (spark, _, dir) => scoreAuc(spark, dir), label = scoreDials(c)),
+      PumpLeg("drift", (_, _) => driftLeg(_, col(c.driftCol), driftGroup(c)),
+        (spark, _, dir) => driftKs(spark, dir), label = driftDials(c)),
+      PumpLeg("ksmatrix", (_, _) => ksMatrixLeg(_, col(c.driftCol),
+          col(c.overlapGroupCol)),
+        (spark, _, dir) => ksMatrixReport(spark, dir)),
+      jsd,
+      // vocab is a second FACE of the jsd leg's token census
+      PumpLeg("vocab",
+        (_, _) => vocabLeg(_, col(c.overlapGroupCol), col(c.textCol)),
+        (spark, _, dir) => vocabCoverageReport(spark, dir),
+        state = Some(jsd.name)),
+      PumpLeg("embedding",
+        (_, _) => embeddingDriftLeg(_, c.overlapGroupCol, c.embeddingCol),
+        (spark, _, dir) => embeddingDriftReport(spark, dir)),
+      // the drained router audit: per-class AUC off the durable census
+      // (AP/operating points are further faces of the same state,
+      // library-reachable)
+      PumpLeg("classes", (spark, t) => {
+          val conf = classConfCol(Tables.load(spark, c.srcDir, t).schema,
+            c.scoreClasses.get)
+          classesLeg(_, conf, col(c.agreementGold).cast("string"))
+        },
+        (spark, _, dir) => classAucReport(spark, dir),
+        refusal = Option.when(c.scoreClasses.isEmpty)(
+          "needs --score-classes=<per-class probability map column>")))
+  }
+
   /** Write `df` as parquet at `path` and return its row count, observed
     * on the write itself instead of read back. */
   private def writeCounted(df: DataFrame, path: String): Long = {
@@ -1015,16 +1046,6 @@ object GraftApp {
       s"${c.scoreLabel.getOrElse(c.agreementGold + "=" + c.scorePositive)}]"
   private def driftDials(c: Config): String =
     s"[${c.driftCol}, ${c.overlapGroupCol}=${c.driftGroupVal} vs rest]"
-  private def legDials(c: Config, leg: String): String = leg match {
-    case "agreement" => agreementDials(c)
-    case "score" => scoreDials(c)
-    case "drift" => driftDials(c)
-    case _ => ""
-  }
-
-  private val MonitorLegs = Set("novelty", "contamination", "agreement",
-    "score", "drift", "ksmatrix", "jsd", "vocab", "embedding", "classes")
-
   private val KnownOptions = Set("src-dir", "dst-dir", "dst-schema",
     "src-tables", "src-tables-prefixes", "column-skip",
     "src-tables-where-clauses", "column-default-value", "catalog-csv",
@@ -1316,24 +1337,15 @@ object GraftApp {
       s"--ann-recall=$v: expected one of ${AnnRecallVariants.toSeq.sorted.mkString(", ")}"))
     require(!c.scd2 || c.scd2Value.isDefined,
       "--scd2 requires --scd2-value=<tracked column>")
-    val badLegs = c.pumps.filterNot(MonitorLegs)
+    val legs = pumpLegs(c)
+    val badLegs = c.pumps.filterNot(legs.map(_.name).contains)
     require(badLegs.isEmpty, s"--pumps: unknown census legs " +
       s"${badLegs.mkString(",")} (known: " +
-      s"${MonitorLegs.toSeq.sorted.mkString(",")})")
+      s"${legs.map(_.name).sorted.mkString(",")})")
     require(c.pumps.distinct.size == c.pumps.size,
       s"--pumps: duplicate legs in ${c.pumps.mkString(",")}")
-    require(!c.pumps.contains("contamination") || c.probeDir.isDefined,
-      "--pumps=contamination needs --probe-dir=<parquet dir of " +
-        "probe documents>")
-    require(!c.pumps.contains("classes") || c.scoreClasses.isDefined,
-      "--pumps=classes needs --score-classes=<per-class " +
-        "probability map column>")
-    require(!c.pumps.contains("agreement") ||
-      agreementPreds(c).sizeIs <= 1,
-      "the agreement pump grades ONE labeler against gold (the " +
-        "durable census is a pairwise confusion matrix); a panel got " +
-        s"${agreementPreds(c).size} predictions — use batch " +
-        "--agreement-report for Fleiss' kappa")
+    legs.filter(l => c.pumps.contains(l.name)).foreach(l =>
+      require(l.refusal.isEmpty, s"--pumps=${l.name} ${l.refusal.get}"))
   }
 
   private val AnnRecallVariants = Set("int8", "ivf", "pq", "lsh")

@@ -876,19 +876,13 @@ object IngestQueries {
         // against the REST of the corpus — the contamination leg
         // filters its own view of the shared batch (a leg is a fold,
         // not a second reader)
-        val probes = full.select(col("doc_id"), col("text"))
-          .filter(col("doc_id") % 100 === 0)
-        val probeShingles = graft.dedup.Dedup
-          .shingleRows(probes, 3, "doc_id", "text")
-          .select("shingle").distinct().localCheckpoint()
+        val contamination = CurationPumps.contaminationLeg(
+          full.filter(col("doc_id") % 100 === 0),
+          s"$root/state/contamination", k = 3)
         val legs = Seq(
           CurationPumps.noveltyLeg(s"$root/state/novelty", k = 3),
-          CurationPumps.MonitorLeg("contamination",
-            s"$root/state/contamination", (b, bid) =>
-            CurationPumps.mergeContaminationBatch(
-              b.filter(col("doc_id") % 100 =!= 0), probeShingles,
-              s"$root/state/contamination", 3, "doc_id", "text",
-              numBuckets = 0, batchId = bid)),
+          contamination.copy(merge = (b, bid) => contamination.merge(
+            b.filter(col("doc_id") % 100 =!= 0), bid)),
           CurationPumps.agreementLeg(s"$root/state/agreement",
             gold = col("lang"),
             pred = graft.text.TextAnalysis.langId(col("text"),

@@ -1078,9 +1078,10 @@ object PipelineQueries {
         edgesDistinct = true)
       .orderBy("node")
 
-  /** The q92 bipartite customer↔part graph (also the SoakPageRank
-    * scale-soak input): an edge per distinct co-purchase, both
-    * directions; part ids offset into their own node-id space.
+  /** The q92 bipartite customer↔part graph (also the q92/q119
+    * scale-soak input: Bench on a ScaleUp dir): an edge per distinct
+    * co-purchase, both directions; part ids offset into their own
+    * node-id space.
     */
   def copurchaseEdges(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.load(spark, dir, "lineitem")

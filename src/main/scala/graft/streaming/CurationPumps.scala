@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.dedup.Dedup
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -14,6 +14,12 @@ import org.apache.spark.sql.types._
   *
   * Each census is a [[MonitorLeg]] (`noveltyLeg`, `scoreLeg`, …) and
   * [[startMonitorPump]] runs one or several legs over one reader. The
+  * eight aggregate legs (novelty's min-dictionary and the seven summed
+  * censuses; vocab is the jsd fold under its own name) are each a
+  * cells function through [[censusLeg]], which folds through
+  * [[IncrementalAgg.mergePartials]] — the one fold `IncrementalAgg`
+  * maintains its rollups with. Contamination's replace-by-key
+  * verdicts are the one custom merge. The
   * memory-sink drains in [[graft.queries.IngestQueries]]
   * (`streamNovelty`/`streamContamination`, the q154/q155 gate faces)
   * stay as the ORACLE HARNESS — they prove drain-equals-batch against
@@ -31,7 +37,7 @@ import org.apache.spark.sql.types._
   */
 object CurationPumps {
 
-  /** Persisted dictionary schema: each distinct k-shingle's
+  /** Dictionary schema (the shape of a never-merged store): each distinct k-shingle's
     * first-occurrence document id. This IS the crawl-saturation
     * monitor's between-snapshots state; its cardinality is the same
     * one the batch op (Dedup.ngramNovelty) shuffles.
@@ -40,39 +46,24 @@ object CurationPumps {
     StructField("shingle", StringType, nullable = true),
     StructField("first_doc", LongType, nullable = true)))
 
-  /** Persisted verdict schema: per contaminated document, how many of
+  /** Verdict schema (the shape of a never-merged store): per contaminated document, how many of
     * its distinct k-shingles hit the probe set.
     */
   val ContaminationSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType, nullable = true),
     StructField("n_hits", LongType, nullable = true)))
 
-  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema)
-
-  /** Fold one document batch into the seen-shingle min-dictionary.
-    * The batch pre-aggregates to one row per distinct shingle
-    * (map-side combine), then the store merge takes `min(first_doc)`
-    * of state and batch — min is commutative AND idempotent, so
-    * arrival order is irrelevant and a crash-replayed batch folds to
-    * a no-op even without the fence (the fence is passed anyway: it
-    * skips the replay's read-merge-write entirely).
+  /** A leg's current state in the schema its store persisted, so
+    * group columns keep whatever type the source carried (string
+    * sources, int labels) without the reader re-declaring it;
+    * `fallback`, the leg's schema, only shapes a never-merged store.
+    * Every `*Cells`/`*State` reader and report reads through here.
     */
-  private[graft] def mergeNoveltyBatch(batch: DataFrame, stateDir: String,
-      k: Int, idCol: String, textCol: String, numBuckets: Int,
-      batchId: Option[Long]): Unit = {
-    val batchMin = Dedup.shingleRows(batch, k, idCol, textCol)
-      .groupBy(col("shingle"))
-      .agg(min(col("doc_id")).as("first_doc"))
-    val template = emptyOf(batch.sparkSession, NoveltySchema)
-    BucketStateStore.merge(batchMin, stateDir, Seq("shingle"), template,
-      numBuckets, batchId) { (state, b) =>
-      state.unionByName(b)
-        .groupBy(col("shingle"))
-        .agg(min(col("first_doc")).as("first_doc"))
-    }
-  }
+  private def stateOf(spark: SparkSession, stateDir: String,
+      fallback: StructType): DataFrame =
+    BucketStateStore.currentState(spark, stateDir, spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row],
+      BucketStateStore.persistedSchema(spark, stateDir).getOrElse(fallback)))
 
   /** The novelty report derived from the PERSISTED dictionary —
     * row-identical to batch [[Dedup.ngramNovelty]] over the same
@@ -84,9 +75,7 @@ object CurationPumps {
   def noveltyReport(spark: SparkSession, stateDir: String,
       docs: DataFrame, k: Int = 3, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val dict = BucketStateStore.currentState(spark, stateDir,
-      emptyOf(spark, NoveltySchema))
-    val novel = dict.groupBy(col("first_doc"))
+    val novel = stateOf(spark, stateDir, NoveltySchema).groupBy(col("first_doc"))
       .agg(count(lit(1)).as("nov"))
     val perDoc = Dedup.shingleRows(docs, k, idCol, textCol)
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
@@ -104,16 +93,15 @@ object CurationPumps {
     * replayed batch recomputes identical verdicts and overwrites them
     * — idempotent, with the fence skipping the work besides.
     */
-  private[graft] def mergeContaminationBatch(batch: DataFrame,
+  private def mergeContaminationBatch(batch: DataFrame,
       probeShingles: DataFrame, stateDir: String, k: Int, idCol: String,
-      textCol: String, numBuckets: Int, batchId: Option[Long]): Unit = {
+      textCol: String, batchId: Option[Long]): Unit = {
     val hits = Dedup.shingleRows(batch, k, idCol, textCol)
       .join(broadcast(probeShingles), Seq("shingle"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_hits"))
-    val template = emptyOf(batch.sparkSession, ContaminationSchema)
-    BucketStateStore.merge(hits, stateDir, Seq("doc_id"), template,
-      numBuckets, batchId) { (state, b) =>
+    BucketStateStore.merge(hits, stateDir, Seq("doc_id"), hits,
+      batchId = batchId) { (state, b) =>
       state.join(b.select("doc_id"), Seq("doc_id"), "left_anti")
         .unionByName(b)
     }
@@ -125,11 +113,9 @@ object CurationPumps {
     */
   def contaminationVerdicts(spark: SparkSession,
       stateDir: String): DataFrame =
-    BucketStateStore.currentState(spark, stateDir,
-      emptyOf(spark, ContaminationSchema))
-      .orderBy("doc_id")
+    stateOf(spark, stateDir, ContaminationSchema).orderBy("doc_id")
 
-  /** Persisted confusion-cell schema for the agreement pump: one row
+  /** Confusion-cell schema for a never-merged agreement store: one row
     * per (gold, predicted) class pair with its running count —
     * class-cardinality-squared-sized, orders of magnitude narrower
     * than the rated documents.
@@ -139,32 +125,10 @@ object CurationPumps {
     StructField("pred", StringType, nullable = true),
     StructField("n", LongType, nullable = true)))
 
-  /** Fold one document batch's confusion cells into the store. The
-    * combine is an ADDITIVE count merge — commutative (arrival order
-    * is irrelevant, so drain == batch) but NOT idempotent, so the
-    * batch-id fence is LOAD-BEARING here, unlike the novelty leg's
-    * min-merge: without it a crash-replayed batch would double-count
-    * its cells (the IncrementalAgg regime of
-    * [[BucketStateStore.merge]]).
-    */
-  private[graft] def mergeAgreementBatch(batch: DataFrame,
-      gold: org.apache.spark.sql.Column, pred: org.apache.spark.sql.Column,
-      stateDir: String, numBuckets: Int, batchId: Option[Long]): Unit = {
-    val cells = graft.ops.Agreement.confusionCells(batch, gold, pred)
-    val template = emptyOf(batch.sparkSession, AgreementSchema)
-    BucketStateStore.merge(cells, stateDir, Seq("gold", "pred"), template,
-      numBuckets, batchId) { (state, b) =>
-      state.unionByName(b)
-        .groupBy(col("gold"), col("pred"))
-        .agg(sum(col("n")).as("n"))
-    }
-  }
-
   /** The persisted confusion cells, as
     * [[graft.ops.Agreement.classifierReportFromCells]] input. */
   def agreementCells(spark: SparkSession, stateDir: String): DataFrame =
-    BucketStateStore.currentState(spark, stateDir,
-      emptyOf(spark, AgreementSchema))
+    stateOf(spark, stateDir, AgreementSchema)
 
   /** The classifier report derived from the PERSISTED census —
     * row-identical to batch [[graft.ops.Agreement.classifierReport]]
@@ -175,7 +139,7 @@ object CurationPumps {
     graft.ops.Agreement.classifierReportFromCells(
       agreementCells(spark, stateDir))
 
-  /** Persisted per-score census schema for the score pump: one row
+  /** Per-score census schema for a never-merged score store: one row
     * per distinct quantized score value with running positive /
     * negative counts — score-cardinality-sized, orders of magnitude
     * narrower than the scored documents.
@@ -185,31 +149,10 @@ object CurationPumps {
     StructField("pos", LongType, nullable = true),
     StructField("neg", LongType, nullable = true)))
 
-  /** Fold one batch's per-score census into the store. Additive
-    * count merge — commutative (drain == batch) but NOT idempotent,
-    * so the batch-id fence is LOAD-BEARING (the [[mergeAgreementBatch]]
-    * regime): without it a crash-replayed batch would double-count
-    * its score cells.
-    */
-  private[graft] def mergeScoreBatch(batch: DataFrame,
-      score: org.apache.spark.sql.Column,
-      label: org.apache.spark.sql.Column,
-      stateDir: String, numBuckets: Int, batchId: Option[Long]): Unit = {
-    val cells = graft.ops.ScoreEval.scoreCensus(batch, score, label)
-    val template = emptyOf(batch.sparkSession, ScoreSchema)
-    BucketStateStore.merge(cells, stateDir, Seq("s"), template,
-      numBuckets, batchId) { (state, b) =>
-      state.unionByName(b)
-        .groupBy(col("s"))
-        .agg(sum(col("pos")).as("pos"), sum(col("neg")).as("neg"))
-    }
-  }
-
   /** The persisted score census, as
     * [[graft.ops.ScoreEval.rocAucFromCensus]] input. */
   def scoreCensusState(spark: SparkSession, stateDir: String): DataFrame =
-    BucketStateStore.currentState(spark, stateDir,
-      emptyOf(spark, ScoreSchema))
+    stateOf(spark, stateDir, ScoreSchema)
 
   /** ROC-AUC derived from the PERSISTED census — row-identical to
     * batch [[graft.ops.ScoreEval.rocAuc]] over the drained corpus
@@ -219,8 +162,8 @@ object CurationPumps {
   def scoreAuc(spark: SparkSession, stateDir: String): DataFrame =
     graft.ops.ScoreEval.rocAucFromCensus(scoreCensusState(spark, stateDir))
 
-  /** Persisted two-population score census for the drift pump: one
-    * row per distinct quantized score with running counts for the
+  /** Two-population census schema for a never-merged drift store:
+    * one row per distinct quantized score with running counts for the
     * watched slice (`b`) and the rest (`a`).
     */
   val DriftSchema: StructType = StructType(Seq(
@@ -228,29 +171,10 @@ object CurationPumps {
     StructField("a", LongType, nullable = true),
     StructField("b", LongType, nullable = true)))
 
-  /** Fold one batch's two-population census into the store —
-    * additive, commutative, NOT idempotent: the batch-id fence is
-    * load-bearing (the [[mergeScoreBatch]] regime).
-    */
-  private[graft] def mergeDriftBatch(batch: DataFrame,
-      score: org.apache.spark.sql.Column,
-      group: org.apache.spark.sql.Column,
-      stateDir: String, numBuckets: Int, batchId: Option[Long]): Unit = {
-    val cells = graft.ops.ScoreEval.ksCensus(batch, score, group)
-    val template = emptyOf(batch.sparkSession, DriftSchema)
-    BucketStateStore.merge(cells, stateDir, Seq("s"), template,
-      numBuckets, batchId) { (state, b) =>
-      state.unionByName(b)
-        .groupBy(col("s"))
-        .agg(sum(col("a")).as("a"), sum(col("b")).as("b"))
-    }
-  }
-
   /** The persisted two-population census, as
     * [[graft.ops.ScoreEval.ksFromCensus]] input. */
   def driftCensusState(spark: SparkSession, stateDir: String): DataFrame =
-    BucketStateStore.currentState(spark, stateDir,
-      emptyOf(spark, DriftSchema))
+    stateOf(spark, stateDir, DriftSchema)
 
   /** KS statistic derived from the PERSISTED census — row-identical
     * to batch [[graft.ops.ScoreEval.ksTest]] over the drained corpus
@@ -266,10 +190,7 @@ object CurationPumps {
   // drain-equals-batch shape of the score/drift pumps.
   // ------------------------------------------------------------------
 
-  /** Fallback schema for a never-merged JSD store (the persisted
-    * schema is normally inferred from the stored parquet, so any
-    * group type round-trips — this is only the empty-state shape).
-    */
+  /** Fallback schema for a never-merged JSD store. */
   val JsdSchema: StructType = StructType(Seq(
     StructField("grp", StringType, nullable = true),
     StructField("tok", StringType, nullable = true),
@@ -282,40 +203,10 @@ object CurationPumps {
     StructField("s", LongType, nullable = true),
     StructField("cnt", LongType, nullable = true)))
 
-  /** Current state with the schema the store itself persisted —
-    * group columns keep whatever type the source carried (string
-    * sources, int labels) without the caller re-declaring it; the
-    * fallback only shapes a never-merged (empty) store.
-    */
-  private def stateInferred(spark: SparkSession, stateDir: String,
-      fallback: StructType): DataFrame =
-    BucketStateStore.persistedSchema(spark, stateDir) match {
-      case Some(sch) =>
-        BucketStateStore.currentState(spark, stateDir, emptyOf(spark, sch))
-      case None => emptyOf(spark, fallback)
-    }
-
-  /** Fold one document batch's (grp, tok, c) token census into the
-    * store — additive, commutative (drain == batch), NOT idempotent:
-    * the batch-id fence is load-bearing (the [[mergeScoreBatch]]
-    * regime).
-    */
-  private[graft] def mergeJsdBatch(batch: DataFrame,
-      group: org.apache.spark.sql.Column, text: org.apache.spark.sql.Column,
-      stateDir: String, numBuckets: Int, batchId: Option[Long]): Unit = {
-    val cells = graft.text.Divergence.jsdCensus(batch, group, text)
-    BucketStateStore.merge(cells, stateDir, Seq("grp", "tok"),
-      cells.limit(0), numBuckets, batchId) { (state, b) =>
-      state.unionByName(b)
-        .groupBy(col("grp"), col("tok"))
-        .agg(sum(col("c")).as("c"))
-    }
-  }
-
   /** The persisted (grp, tok, c) token census, as
     * [[graft.text.Divergence.jsdFromCells]] input. */
   def jsdCells(spark: SparkSession, stateDir: String): DataFrame =
-    stateInferred(spark, stateDir, JsdSchema)
+    stateOf(spark, stateDir, JsdSchema)
 
   /** Source-vs-mixture JSD derived from the PERSISTED census —
     * row-identical to batch [[graft.text.Divergence.jsdFromMixture]]
@@ -331,28 +222,10 @@ object CurationPumps {
     StructField("s", LongType, nullable = true),
     StructField("c", LongType, nullable = true)))
 
-  /** Fold one batch's (grp, s, c) per-group score census into the
-    * store — additive, commutative (drain == batch), NOT idempotent:
-    * the batch-id fence is load-bearing (the [[mergeScoreBatch]]
-    * regime).
-    */
-  private[graft] def mergeKsMatrixBatch(batch: DataFrame,
-      score: org.apache.spark.sql.Column,
-      group: org.apache.spark.sql.Column,
-      stateDir: String, numBuckets: Int, batchId: Option[Long]): Unit = {
-    val cells = graft.ops.ScoreEval.groupScoreCensus(batch, score, group)
-    BucketStateStore.merge(cells, stateDir, Seq("grp", "s"),
-      cells.limit(0), numBuckets, batchId) { (state, b) =>
-      state.unionByName(b)
-        .groupBy(col("grp"), col("s"))
-        .agg(sum(col("c")).as("c"))
-    }
-  }
-
   /** The persisted (grp, s, c) census, as
     * [[graft.ops.ScoreEval.ksMatrixFromCells]] input. */
   def ksMatrixCells(spark: SparkSession, stateDir: String): DataFrame =
-    stateInferred(spark, stateDir, KsMatrixSchema)
+    stateOf(spark, stateDir, KsMatrixSchema)
 
   /** Every-source-vs-rest KS matrix derived from the PERSISTED
     * census — row-identical to batch [[graft.ops.ScoreEval.ksMatrix]]
@@ -379,32 +252,10 @@ object CurationPumps {
     StructField("pos", LongType, nullable = true),
     StructField("neg", LongType, nullable = true)))
 
-  /** Fold one document batch's (cls, s, pos, neg) per-class score
-    * census into the store — additive, commutative (drain == batch),
-    * NOT idempotent: the batch-id fence is load-bearing (the
-    * [[mergeScoreBatch]] regime). The sum-to-1000 contract is
-    * enforced per batch row by [[graft.ops.ScoreEval.classScoreCensus]]
-    * — a router that de-normalizes mid-stream fails the fold loudly
-    * instead of corrupting the durable census.
-    */
-  private[graft] def mergeClassesBatch(batch: DataFrame,
-      confMilliByClass: org.apache.spark.sql.Column,
-      gold: org.apache.spark.sql.Column,
-      stateDir: String, numBuckets: Int, batchId: Option[Long]): Unit = {
-    val cells = graft.ops.ScoreEval.classScoreCensus(batch,
-      confMilliByClass, gold)
-    BucketStateStore.merge(cells, stateDir, Seq("cls", "s"),
-      cells.limit(0), numBuckets, batchId) { (state, b) =>
-      state.unionByName(b)
-        .groupBy(col("cls"), col("s"))
-        .agg(sum(col("pos")).as("pos"), sum(col("neg")).as("neg"))
-    }
-  }
-
   /** The persisted (cls, s, pos, neg) census, as input to the
     * `FromCells` faces of the multiclass battery. */
   def classesCells(spark: SparkSession, stateDir: String): DataFrame =
-    stateInferred(spark, stateDir, ClassesSchema)
+    stateOf(spark, stateDir, ClassesSchema)
 
   /** Per-class ROC-AUC derived from the PERSISTED census —
     * row-identical to batch [[graft.ops.ScoreEval.rocAucByClass]]
@@ -432,27 +283,10 @@ object CurationPumps {
     graft.ops.ScoreEval.operatingPointsByClassFromCells(
       classesCells(spark, stateDir))
 
-  /** Fold one embedding batch's (grp, pos, s, cnt) component-sum
-    * census into the store — additive, commutative (drain == batch),
-    * NOT idempotent: the batch-id fence is load-bearing.
-    */
-  private[graft] def mergeEmbeddingDriftBatch(batch: DataFrame,
-      groupCol: String, vecCol: String, stateDir: String,
-      numBuckets: Int, batchId: Option[Long]): Unit = {
-    val cells = graft.vector.VectorSearch
-      .embeddingDriftCensus(batch, groupCol, vecCol)
-    BucketStateStore.merge(cells, stateDir, Seq("grp", "pos"),
-      cells.limit(0), numBuckets, batchId) { (state, b) =>
-      state.unionByName(b)
-        .groupBy(col("grp"), col("pos"))
-        .agg(sum(col("s")).as("s"), sum(col("cnt")).as("cnt"))
-    }
-  }
-
   /** The persisted (grp, pos, s, cnt) census, as
     * [[graft.vector.VectorSearch.embeddingDriftFromCells]] input. */
   def embeddingDriftCells(spark: SparkSession, stateDir: String): DataFrame =
-    stateInferred(spark, stateDir, EmbeddingDriftSchema)
+    stateOf(spark, stateDir, EmbeddingDriftSchema)
 
   /** Centroid-vs-rest cosine per group derived from the PERSISTED
     * census — row-identical to batch
@@ -475,21 +309,42 @@ object CurationPumps {
 
   /** One census leg of the unified monitor: a name (unique within a
     * monitor, used for diagnostics), the leg's OWN state dir (per-leg
-    * fence + the vacuum target), and the per-batch fold. The fold
-    * receives the micro-batch ALREADY materialized (the monitor
-    * persists it once for all legs) and the streaming batch id for
-    * the per-leg fence. Every leg lets its store derive the bucket
-    * count (`numBuckets = 0` in the `merge*Batch` helpers).
+    * fence + the vacuum target; unique within a monitor), and the
+    * per-batch fold. The fold receives the micro-batch ALREADY
+    * materialized (the monitor persists it once for all legs) and the
+    * streaming batch id for the per-leg fence. Every leg lets its
+    * store derive the bucket count.
     */
   final case class MonitorLeg(name: String, stateDir: String,
       merge: (DataFrame, Option[Long]) => Unit)
+
+  /** An aggregate census leg: `cells` reduces a batch to one row per
+    * `keys` value, and every other column folds into the state by
+    * `agg` through [[IncrementalAgg.mergePartials]]. With `sum` (the
+    * seven counting censuses) the fold is commutative but NOT
+    * idempotent, so the batch-id fence is LOAD-BEARING: without it a
+    * crash-replayed batch would double-count its cells. With `min`
+    * (novelty's first-occurrence dictionary) a replay folds to a no-op
+    * even without the fence; the fence then only skips the work.
+    */
+  private[graft] def censusLeg(name: String, stateDir: String,
+      keys: Seq[String], agg: Column => Column = sum)(
+      cells: DataFrame => DataFrame): MonitorLeg =
+    MonitorLeg(name, stateDir, { (batch, bid) =>
+      val partials = cells(batch)
+      IncrementalAgg.mergePartials(partials, stateDir, keys,
+        partials.columns.toSeq.filterNot(keys.contains)
+          .map(c => agg(col(c)).as(c)), bid)
+    })
 
   /** The incremental-novelty census: per-batch shingle min → durable
     * seen-shingle dictionary (the q154 production face). */
   def noveltyLeg(stateDir: String, k: Int = 3, idCol: String = "doc_id",
       textCol: String = "text"): MonitorLeg =
-    MonitorLeg("novelty", stateDir, (b, bid) =>
-      mergeNoveltyBatch(b, stateDir, k, idCol, textCol, 0, bid))
+    censusLeg("novelty", stateDir, Seq("shingle"), min) { b =>
+      Dedup.shingleRows(b, k, idCol, textCol).groupBy(col("shingle"))
+        .agg(min(col("doc_id")).as("first_doc"))
+    }
 
   /** Decontamination on ingest: each arriving document is graded
     * against the (static, benchmark-sized) probe corpus in the batch
@@ -505,68 +360,65 @@ object CurationPumps {
       .select("shingle").distinct().localCheckpoint()
     MonitorLeg("contamination", stateDir, (b, bid) =>
       mergeContaminationBatch(b, probeShingles, stateDir, k, idCol,
-        textCol, 0, bid))
+        textCol, bid))
   }
 
   /** Labeler grading: each document's (gold, predicted) class pair —
     * `pred` is typically a heuristic labeler EXPRESSION over the text —
     * folds into the durable confusion census (q162). */
-  def agreementLeg(stateDir: String, gold: org.apache.spark.sql.Column,
-      pred: org.apache.spark.sql.Column): MonitorLeg =
-    MonitorLeg("agreement", stateDir, (b, bid) =>
-      mergeAgreementBatch(b, gold, pred, stateDir, 0, bid))
+  def agreementLeg(stateDir: String, gold: Column,
+      pred: Column): MonitorLeg =
+    censusLeg("agreement", stateDir, Seq("gold", "pred"))(
+      graft.ops.Agreement.confusionCells(_, gold, pred))
 
   /** Score grading: each document's (quantized score, 0/1 label) folds
     * into the per-score census, so ROC-AUC over everything ingested
     * so far is readable at any time (q176). */
-  def scoreLeg(stateDir: String, score: org.apache.spark.sql.Column,
-      label: org.apache.spark.sql.Column): MonitorLeg =
-    MonitorLeg("score", stateDir, (b, bid) =>
-      mergeScoreBatch(b, score, label, stateDir, 0, bid))
+  def scoreLeg(stateDir: String, score: Column, label: Column): MonitorLeg =
+    censusLeg("score", stateDir, Seq("s"))(
+      graft.ops.ScoreEval.scoreCensus(_, score, label))
 
   /** Drift: each document's (quantized score, 0/1 slice membership)
     * folds into the two-population census behind the KS gauge (q179). */
-  def driftLeg(stateDir: String, score: org.apache.spark.sql.Column,
-      group: org.apache.spark.sql.Column): MonitorLeg =
-    MonitorLeg("drift", stateDir, (b, bid) =>
-      mergeDriftBatch(b, score, group, stateDir, 0, bid))
+  def driftLeg(stateDir: String, score: Column, group: Column): MonitorLeg =
+    censusLeg("drift", stateDir, Seq("s"))(
+      graft.ops.ScoreEval.ksCensus(_, score, group))
 
-  def jsdLeg(stateDir: String, group: org.apache.spark.sql.Column,
-      text: org.apache.spark.sql.Column): MonitorLeg =
-    MonitorLeg("jsd", stateDir, (b, bid) =>
-      mergeJsdBatch(b, group, text, stateDir, 0, bid))
+  def jsdLeg(stateDir: String, group: Column, text: Column): MonitorLeg =
+    censusLeg("jsd", stateDir, Seq("grp", "tok"))(
+      graft.text.Divergence.jsdCensus(_, group, text))
 
-  def ksMatrixLeg(stateDir: String, score: org.apache.spark.sql.Column,
-      group: org.apache.spark.sql.Column): MonitorLeg =
-    MonitorLeg("ksmatrix", stateDir, (b, bid) =>
-      mergeKsMatrixBatch(b, score, group, stateDir, 0, bid))
+  def ksMatrixLeg(stateDir: String, score: Column,
+      group: Column): MonitorLeg =
+    censusLeg("ksmatrix", stateDir, Seq("grp", "s"))(
+      graft.ops.ScoreEval.groupScoreCensus(_, score, group))
 
   /** The vocab-coverage leg maintains the SAME (grp, tok, c) census
     * as [[jsdLeg]] (vocabCoverage is a second face of that state) —
     * use this only when the jsd leg is NOT also enabled on the same
-    * state dir, or the second fold per batch is wasted work (the
-    * fence makes it a no-op, not a double count).
+    * state dir: the monitor refuses two legs on one state dir.
     */
-  def vocabLeg(stateDir: String, group: org.apache.spark.sql.Column,
-      text: org.apache.spark.sql.Column): MonitorLeg =
-    MonitorLeg("vocab", stateDir, (b, bid) =>
-      mergeJsdBatch(b, group, text, stateDir, 0, bid))
+  def vocabLeg(stateDir: String, group: Column, text: Column): MonitorLeg =
+    jsdLeg(stateDir, group, text).copy(name = "vocab")
 
   /** The multiclass router-audit leg: folds the (cls, s, pos, neg)
     * census of a FULL per-class probability vector against gold —
     * the state behind [[classAucReport]] / [[classApReport]] /
-    * [[classPointsReport]] (one leg, three faces).
+    * [[classPointsReport]] (one leg, three faces). The sum-to-1000
+    * contract is enforced per batch row by
+    * [[graft.ops.ScoreEval.classScoreCensus]]: a router that
+    * de-normalizes mid-stream fails the fold loudly instead of
+    * corrupting the durable census.
     */
-  def classesLeg(stateDir: String,
-      confMilliByClass: org.apache.spark.sql.Column,
-      gold: org.apache.spark.sql.Column): MonitorLeg =
-    MonitorLeg("classes", stateDir, (b, bid) =>
-      mergeClassesBatch(b, confMilliByClass, gold, stateDir, 0, bid))
+  def classesLeg(stateDir: String, confMilliByClass: Column,
+      gold: Column): MonitorLeg =
+    censusLeg("classes", stateDir, Seq("cls", "s"))(
+      graft.ops.ScoreEval.classScoreCensus(_, confMilliByClass, gold))
 
   def embeddingDriftLeg(stateDir: String, groupCol: String = "label",
       vecCol: String = "embedding"): MonitorLeg =
-    MonitorLeg("embedding", stateDir, (b, bid) =>
-      mergeEmbeddingDriftBatch(b, groupCol, vecCol, stateDir, 0, bid))
+    censusLeg("embedding", stateDir, Seq("grp", "pos"))(
+      graft.vector.VectorSearch.embeddingDriftCensus(_, groupCol, vecCol))
 
   /** Start the unified monitor: ONE reader over `docsStream`, one
     * checkpoint, one foreachBatch that materializes each arriving
@@ -576,7 +428,8 @@ object CurationPumps {
     * pin in a finally.
     *
     * Exactly-once per leg under crash replay: each leg keeps its OWN
-    * BucketStateStore (own state dir, own batch-id fence). A crash
+    * BucketStateStore (own state dir, own batch-id fence; two legs on
+    * one state dir are refused, as two legs with one name are). A crash
     * BETWEEN two legs' merges replays the batch on restart — legs
     * that already folded it skip on their fence (or no-op on their
     * idempotent combine), legs that hadn't fold it now; no census is
@@ -603,6 +456,11 @@ object CurationPumps {
     require(legs.nonEmpty, "monitor pump needs at least one census leg")
     require(legs.map(_.name).distinct.size == legs.size,
       s"monitor legs must have distinct names: ${legs.map(_.name)}")
+    // two legs on one store: the second sees the batch id the first
+    // just fenced and skips, so its census would never be written
+    require(legs.map(l => new org.apache.hadoop.fs.Path(l.stateDir))
+      .distinct.size == legs.size, "monitor legs must have distinct " +
+      s"state dirs: ${legs.map(l => s"${l.name}=${l.stateDir}")}")
     Pump.start(docsStream, checkpointDir, processingTime, vacuumEvery,
         vacuumKeep, legs.map(_.stateDir)) { (batch, bid) =>
       // ONE materialization of the arriving files feeds every leg —

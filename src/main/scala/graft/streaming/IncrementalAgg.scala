@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incremental aggregation maintenance: keep a keyed aggregate
@@ -37,16 +38,24 @@ object IncrementalAgg {
   def mergeBatch(batch: DataFrame, stateDir: String, keys: Seq[String],
       batchAgg: Seq[Column], mergeAgg: Seq[Column],
       batchId: Option[Long] = None,
-      numBuckets: Int = 0): Unit = {
-    import org.apache.spark.sql.functions.col
-    val partials = batch.groupBy(keys.map(col): _*).agg(
-      batchAgg.head, batchAgg.tail: _*)
+      numBuckets: Int = 0): Unit =
+    mergePartials(batch.groupBy(keys.map(col): _*).agg(
+      batchAgg.head, batchAgg.tail: _*), stateDir, keys, mergeAgg, batchId,
+      numBuckets)
+
+  /** Fold already-aggregated partial rows (one per key, in the state's
+    * schema) into the maintained aggregate: `state ∪ partials`, grouped
+    * by `keys`, combined by `mergeAgg`. This is the one fold every
+    * summing or min-taking census shares; the fence is `mergeBatch`'s.
+    */
+  def mergePartials(partials: DataFrame, stateDir: String, keys: Seq[String],
+      mergeAgg: Seq[Column], batchId: Option[Long] = None,
+      numBuckets: Int = 0): Unit =
     BucketStateStore.merge(partials, stateDir, keys, partials, numBuckets,
         batchId) { (state, p) =>
       state.unionByName(p)
         .groupBy(keys.map(col): _*).agg(mergeAgg.head, mergeAgg.tail: _*)
     }
-  }
 
   /** Current maintained aggregate (schema fixed by a template batch
     * aggregated the same way).

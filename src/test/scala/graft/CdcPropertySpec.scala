@@ -2,7 +2,7 @@ package graft
 
 import graft.cdc.CdcApplier
 import graft.streaming.{BucketStateStore, IncrementalAgg, StreamingCdc}
-import org.apache.spark.sql.functions.{col, count, lit, sha2, sum}
+import org.apache.spark.sql.functions.{col, count, lit, min, sha2, sum}
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 import org.scalacheck.util.Pretty
@@ -234,6 +234,59 @@ class CdcPropertySpec extends AnyFunSuite {
         assert(seen.getOrElse((numBuckets, e), 0) > 0,
           s"no $e compaction while a run was pending: $seen")
       }
+    }
+  }
+
+  /** (k, x) rows cut into at most 6 batches; after each batch either no
+    * vacuum or a vacuum keeping 1 to 3 versions; and one batch, by
+    * index, replayed under its own id after a later (or the same) batch.
+    */
+  private val aggFeedGen = for {
+    rows <- Gen.choose(2, 60).flatMap(Gen.listOfN(_, for {
+      k <- Gen.choose(0L, KeySpace - 1)
+      x <- Gen.choose(-500L, 500L)
+    } yield (k, x)))
+    cuts <- Gen.choose(0, 5).flatMap(Gen.listOfN(_, Gen.choose(1, rows.size - 1)))
+      .map(_.distinct.sorted)
+    vacuums <- Gen.listOfN(cuts.size + 1,
+      Gen.frequency(2 -> Gen.const(None), 1 -> Gen.choose(1, 3).map(Some(_))))
+    replayed <- Gen.choose(0, cuts.size)
+    after <- Gen.choose(replayed, cuts.size)
+  } yield (rows, cuts, vacuums, replayed, after)
+
+  Seq(1, 4).foreach { numBuckets =>
+    test(s"sum and min folds through mergePartials equal one groupBy, with " +
+      s"random vacuums and a replayed batch, at numBuckets=$numBuckets") {
+      import spark.implicits._
+      def partials(rows: Seq[(Long, Long)]) = rows.toDF("k", "x")
+        .groupBy("k").agg(sum("x").as("s"), min("x").as("m"))
+      def sorted(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+        df.select("k", "s", "m").orderBy("k").collect().map(_.toSeq).toSeq
+      val prop = Prop.forAllNoShrink(aggFeedGen) {
+        case (rows, cuts, vacuums, replayed, after) =>
+          val stateDir = Files.createTempDirectory("graft_agg_prop").toString
+          val bounds = (0 +: cuts) :+ rows.size
+          val batches = bounds.zip(bounds.tail).map { case (from, until) =>
+            rows.slice(from, until) }
+          def fold(bid: Int): Unit = IncrementalAgg.mergePartials(
+            partials(batches(bid)), stateDir, Seq("k"),
+            Seq(sum(col("s")).as("s"), min(col("m")).as("m")),
+            Some(bid.toLong), numBuckets)
+          batches.indices.zip(vacuums).foreach { case (bid, vac) =>
+            fold(bid)
+            if (bid == after) fold(replayed)
+            vac.foreach(BucketStateStore.vacuum(spark, stateDir, _))
+          }
+          val got = sorted(IncrementalAgg.current(spark, stateDir, partials(rows)))
+          val want = sorted(partials(rows))
+          Prop(got == want) :| s"rows=$rows cuts=$cuts vacuums=$vacuums " +
+            s"replayed=$replayed after=$after got=$got want=$want"
+      }
+      val params = Test.Parameters.default
+        .withMinSuccessfulTests(6)
+        .withInitialSeed(Seed(20261019L + numBuckets))
+      val result = Test.check(params, prop)
+      assert(result.passed, Pretty.pretty(result))
     }
   }
 

@@ -84,9 +84,8 @@ class CurationPumpsSpec extends AnyFunSuite {
     // simulate the crash-replay of an already-folded micro-batch: the
     // offset log committed batch 0, the store fenced it — re-merging
     // with the same batch id must not advance the version
-    CurationPumps.mergeNoveltyBatch(docs.filter(col("doc_id") % 2 === 1),
-      s"$root/state", 3, "doc_id", "text",
-      graft.streaming.BucketStateStore.DefaultNumBuckets, Some(0L))
+    CurationPumps.noveltyLeg(s"$root/state", k = 3)
+      .merge(docs.filter(col("doc_id") % 2 === 1), Some(0L))
     assert(graft.streaming.BucketStateStore
       .currentVersion(spark, s"$root/state").get == v,
       "fenced replay must not publish a new version")
@@ -162,9 +161,8 @@ class CurationPumpsSpec extends AnyFunSuite {
       .orderBy("gold", "pred").collect()
     // crash-replay of already-folded micro-batch 0: counts are NOT
     // idempotent, so only the fence keeps the census exact
-    CurationPumps.mergeAgreementBatch(agreeDocs, col("lang"), langPred,
-      s"$root/state",
-      graft.streaming.BucketStateStore.DefaultNumBuckets, Some(0L))
+    CurationPumps.agreementLeg(s"$root/state", col("lang"), langPred)
+      .merge(agreeDocs, Some(0L))
     val after = CurationPumps.agreementCells(spark, s"$root/state")
       .orderBy("gold", "pred").collect()
     assert(after.toSeq == cells.toSeq,
@@ -216,9 +214,8 @@ class CurationPumpsSpec extends AnyFunSuite {
         label = enLabel))).awaitTermination()
     val cells = CurationPumps.scoreCensusState(spark, s"$root/state")
       .orderBy("s").collect()
-    CurationPumps.mergeScoreBatch(agreeDocs, markerScore, enLabel,
-      s"$root/state",
-      graft.streaming.BucketStateStore.DefaultNumBuckets, Some(0L))
+    CurationPumps.scoreLeg(s"$root/state", markerScore, enLabel)
+      .merge(agreeDocs, Some(0L))
     val after = CurationPumps.scoreCensusState(spark, s"$root/state")
       .orderBy("s").collect()
     assert(after.toSeq == cells.toSeq,
@@ -296,14 +293,11 @@ class CurationPumpsSpec extends AnyFunSuite {
     val jsdDocs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
     val root = Files.createTempDirectory("graft_jsdfence").toString
-    CurationPumps.mergeJsdBatch(jsdDocs, col("source"), col("text"),
-      s"$root/state", graft.streaming.BucketStateStore.DefaultNumBuckets,
-      Some(0L))
+    val leg = CurationPumps.jsdLeg(s"$root/state", col("source"), col("text"))
+    leg.merge(jsdDocs, Some(0L))
     val cells = CurationPumps.jsdCells(spark, s"$root/state")
       .orderBy("grp", "tok").collect()
-    CurationPumps.mergeJsdBatch(jsdDocs, col("source"), col("text"),
-      s"$root/state", graft.streaming.BucketStateStore.DefaultNumBuckets,
-      Some(0L))
+    leg.merge(jsdDocs, Some(0L))
     val after = CurationPumps.jsdCells(spark, s"$root/state")
       .orderBy("grp", "tok").collect()
     assert(after.toSeq == cells.toSeq,
@@ -398,22 +392,20 @@ class CurationPumpsSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_moncrash").toString
     val batch0 = full.filter(col("doc_id") % 2 === 1)
     val batch1 = full.filter(col("doc_id") % 2 === 0)
-    val nb = graft.streaming.BucketStateStore.DefaultNumBuckets
+    val agreement = CurationPumps.agreementLeg(s"$root/state/agreement",
+      col("lang"), langPred)
+    val score = CurationPumps.scoreLeg(s"$root/state/score", markerScore,
+      enLabel)
     // batch 0 arrives: the agreement leg folds it, then the process
     // dies BEFORE the score leg's merge (both additive and fenced)
-    CurationPumps.mergeAgreementBatch(batch0, col("lang"), langPred,
-      s"$root/state/agreement", nb, Some(0L))
+    agreement.merge(batch0, Some(0L))
     // restart: the unacknowledged batch 0 is REPLAYED through every
     // leg — agreement skips on its fence, score folds it now
-    CurationPumps.mergeAgreementBatch(batch0, col("lang"), langPred,
-      s"$root/state/agreement", nb, Some(0L))
-    CurationPumps.mergeScoreBatch(batch0, markerScore, enLabel,
-      s"$root/state/score", nb, Some(0L))
+    agreement.merge(batch0, Some(0L))
+    score.merge(batch0, Some(0L))
     // batch 1 flows through both legs normally
-    CurationPumps.mergeAgreementBatch(batch1, col("lang"), langPred,
-      s"$root/state/agreement", nb, Some(1L))
-    CurationPumps.mergeScoreBatch(batch1, markerScore, enLabel,
-      s"$root/state/score", nb, Some(1L))
+    agreement.merge(batch1, Some(1L))
+    score.merge(batch1, Some(1L))
     // both censuses are exact: nothing double-counted, nothing skipped
     val nAgree = CurationPumps.agreementCells(spark, s"$root/state/agreement")
       .agg(sum(col("n"))).collect().head.getLong(0)
@@ -484,6 +476,25 @@ class CurationPumpsSpec extends AnyFunSuite {
     }
   }
 
+  test("monitor pump refuses two legs on one state dir — the second " +
+    "would skip every batch on the first's fence") {
+    val full = Tables.load(spark, dir, "documents")
+    val root = Files.createTempDirectory("graft_mondirs").toString
+    writeSlices(s"$root/feed", Seq(full))
+    val s = spark.readStream.schema(full.schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$root/feed")
+    val e = intercept[IllegalArgumentException] {
+      CurationPumps.startMonitorPump(s, s"$root/ckpt", Seq(
+        CurationPumps.jsdLeg(s"$root/state", col("source"), col("text")),
+        CurationPumps.vocabLeg(s"$root/state/", col("source"),
+          col("text")))).awaitTermination()
+    }
+    assert(e.getMessage.contains("distinct state dirs"), e.getMessage)
+    assert(graft.streaming.BucketStateStore
+      .currentVersion(spark, s"$root/state").isEmpty,
+      "a refused monitor must fold nothing")
+  }
+
   test("drift pump: replayed batch is fenced") {
     val root = Files.createTempDirectory("graft_driftfence").toString
     writeSlices(s"$root/feed", Seq(driftDocs))
@@ -492,9 +503,8 @@ class CurationPumpsSpec extends AnyFunSuite {
         group = src0Group))).awaitTermination()
     val cells = CurationPumps.driftCensusState(spark, s"$root/state")
       .orderBy("s").collect()
-    CurationPumps.mergeDriftBatch(driftDocs, col("n_chars"), src0Group,
-      s"$root/state",
-      graft.streaming.BucketStateStore.DefaultNumBuckets, Some(0L))
+    CurationPumps.driftLeg(s"$root/state", col("n_chars"), src0Group)
+      .merge(driftDocs, Some(0L))
     val after = CurationPumps.driftCensusState(spark, s"$root/state")
       .orderBy("s").collect()
     assert(after.toSeq == cells.toSeq,
@@ -520,10 +530,8 @@ class CurationPumpsSpec extends AnyFunSuite {
     assert(got.toSeq == want.toSeq && got.nonEmpty)
     // replay of already-folded micro-batch 0: additive counts would
     // double without the fence
-    CurationPumps.mergeKsMatrixBatch(
-      driftDocs.filter(col("doc_id") % 2 === 1), col("n_chars"),
-      col("source"), s"$root/state",
-      graft.streaming.BucketStateStore.DefaultNumBuckets, Some(0L))
+    CurationPumps.ksMatrixLeg(s"$root/state", col("n_chars"), col("source"))
+      .merge(driftDocs.filter(col("doc_id") % 2 === 1), Some(0L))
     val after = CurationPumps.ksMatrixReport(spark, s"$root/state").collect()
     assert(after.toSeq == got.toSeq,
       "fenced replay must not inflate the census")
@@ -564,9 +572,7 @@ class CurationPumpsSpec extends AnyFunSuite {
         .collect().toSeq)
     // replay of already-folded micro-batch 0: the additive pos/neg
     // census would double-count without the batch-id fence
-    CurationPumps.mergeClassesBatch(full.filter(col("doc_id") % 2 === 1),
-      conf, gold, s"$root/state",
-      graft.streaming.BucketStateStore.DefaultNumBuckets, Some(0L))
+    leg.merge(full.filter(col("doc_id") % 2 === 1), Some(0L))
     val after = CurationPumps.classAucReport(spark, s"$root/state").collect()
     assert(after.toSeq == got.toSeq,
       "fenced replay must not inflate the census")

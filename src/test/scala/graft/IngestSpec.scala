@@ -1939,6 +1939,37 @@ class GraftAppSpec extends AnyFunSuite {
     assert(r.curations.isEmpty, "--dry must not start the monitor")
   }
 
+  test("--dry plans every declared --pumps leg's state and report, " +
+    "vocab on jsd's state; an unknown leg lists the declared ones") {
+    val legs = Seq("novelty", "contamination", "agreement", "score", "drift",
+      "ksmatrix", "jsd", "vocab", "embedding", "classes")
+    val e = intercept[IllegalArgumentException](GraftApp.parse(Seq(
+      s"--src-dir=$dir", "--dst-dir=/dst", "--src-tables=documents",
+      "--pumps=bogus")))
+    assert(e.getMessage.endsWith(s"(known: ${legs.sorted.mkString(",")})"),
+      e.getMessage)
+    // the classes leg resolves --score-classes against the table, so
+    // the table carries a probability map
+    val src = Files.createTempDirectory("graft_appalllegs_src").toString
+    val dst = Files.createTempDirectory("graft_appalllegs_dst").toString
+    spark.range(3).select(col("id").as("doc_id"),
+        map(lit("c0"), lit(0.25), lit("c1"), lit(0.75)).as("probs"))
+      .write.parquet(s"$src/documents.parquet")
+    val r = GraftApp.run(spark, GraftApp.parse(Seq(s"--src-dir=$src",
+      s"--dst-dir=$dst", "--src-tables=documents",
+      s"--pumps=${legs.mkString(",")}", "--probe-dir=/probes",
+      "--score-classes=probs", "--dry")))
+    val root = s"$dst/documents_monitor_state/${legs.sorted.mkString("-")}"
+    legs.foreach { leg =>
+      val state = if (leg == "vocab") "jsd" else leg
+      val paths = s": documents -> $root/$state + " +
+        s"$dst/documents_monitor_$leg.parquet"
+      assert(r.dryPlanned.exists(p => p.startsWith(s"monitor-$leg") &&
+        p.endsWith(paths)), s"no --dry line for $leg: ${r.dryPlanned}")
+    }
+    assert(r.curations.isEmpty, "--dry must not start the monitor")
+  }
+
   // every check across options fails --dry with the run's own message:
   // a plan must not promise a run that would be refused
   Seq(
