@@ -229,15 +229,15 @@ object SparkEntry {
     "q151_remigrate_drift"  -> IngestQueries.remigrateDrift _,
     "q152_source_overlap"   -> PipelineQueries.sourceOverlap _,
     "q153_langid_eval"      -> PipelineQueries.langIdEval _,
-    "q154_stream_novelty"   -> IngestQueries.streamNovelty _,
-    "q155_stream_contamination" -> IngestQueries.streamContamination _,
+    "q154_stream_novelty"   -> IngestQueries.monitorNovelty _,
+    "q155_stream_contamination" -> IngestQueries.monitorContamination _,
     "q156_fleiss_kappa"     -> PipelineQueries.raterAgreement _,
     "q157_ann_rbo"          -> PipelineQueries.annRboInt8 _,
     "q158_generation_bleu"  -> PipelineQueries.generationBleu _,
     "q159_retrieval_ndcg"   -> PipelineQueries.retrievalNdcg _,
     "q160_retrieval_map"    -> PipelineQueries.retrievalMap _,
     "q161_generation_rouge" -> PipelineQueries.generationRouge _,
-    "q162_stream_agreement" -> IngestQueries.streamAgreement _,
+    "q162_stream_agreement" -> IngestQueries.monitorAgreement _,
     "q163_krippendorff"     -> PipelineQueries.raterAlpha _,
     "q164_generation_chrf"  -> PipelineQueries.generationChrf _,
     "q165_roc_auc"          -> PipelineQueries.langScoreAuc _,
@@ -251,10 +251,10 @@ object SparkEntry {
     "q173_ks_drift"         -> PipelineQueries.sourceLengthKs _,
     "q174_mcc"              -> PipelineQueries.langIdMcc _,
     "q175_vocab_coverage"   -> PipelineQueries.sourceVocabCoverage _,
-    "q176_stream_score"     -> IngestQueries.streamScore _,
+    "q176_stream_score"     -> IngestQueries.monitorScore _,
     "q177_embedding_drift"  -> PipelineQueries.labelEmbeddingDrift _,
     "q178_log_loss"         -> PipelineQueries.langScoreLogLoss _,
-    "q179_stream_drift"     -> IngestQueries.streamDrift _,
+    "q179_stream_drift"     -> IngestQueries.monitorDrift _,
     "q180_monitor_novelty"  -> IngestQueries.monitorNovelty _,
     "q181_monitor_contamination" -> IngestQueries.monitorContamination _,
     "q182_monitor_agreement" -> IngestQueries.monitorAgreement _,
@@ -276,9 +276,9 @@ object SparkEntry {
     "q198_quantize_milli"   -> PipelineQueries.quantizeMilliCensus _,
   )
 
-  /** q153's oracle, shared verbatim by q162 (the streaming drain of
-    * the same report: confusion-cell counts are additive and
-    * commutative, so the pump's durable census must grade
+  /** q153's oracle, shared verbatim by q162 and q182 (both read the
+    * shared monitor's agreement leg: confusion-cell counts are
+    * additive and commutative, so the durable census must grade
     * identically): q21's labeler graded against gold labels —
     * per-class P/R/F1 from the confusion matrix, global accuracy,
     * Cohen's kappa (agree·N − Σ n_gold·n_pred)/(N² − Σ
@@ -333,9 +333,9 @@ object SparkEntry {
       |LEFT JOIN dg USING (cls) CROSS JOIN tot CROSS JOIN rc CROSS JOIN sq
       |ORDER BY cls.cls""".stripMargin
 
-  /** q165's oracle, shared verbatim by q176 (the streaming drain of
-    * the same grade: per-score (pos, neg) counts are additive and
-    * commutative, so the score pump's durable census must yield
+  /** q165's oracle, shared verbatim by q176 and q183 (both read the
+    * shared monitor's score leg: per-score (pos, neg) counts are
+    * additive and commutative, so the durable census must yield
     * bit-identical ROC-AUC): the marker-hit score's exact
     * Mann–Whitney AUC against gold lang='en', census cumulative in
     * a window, pair mass in HUGEINT.
@@ -357,11 +357,12 @@ object SparkEntry {
       |       ELSE 0.0 END AS auc
       |FROM g""".stripMargin
 
-  /** q173's oracle, shared verbatim by q179 (the streaming drain of
-    * the same gauge: the two-population census is additive, so the
-    * drift pump's durable state must yield a bit-identical sup-CDF
-    * gap): two-sample KS of n_chars, src0 vs the rest — integer
-    * masses on the common denominator, argmax by (mass DESC, s ASC).
+  /** q173's oracle, shared verbatim by q179 and q184 (both read the
+    * shared monitor's drift leg: the two-population census is
+    * additive, so the durable state must yield a bit-identical
+    * sup-CDF gap): two-sample KS of n_chars, src0 vs the rest —
+    * integer masses on the common denominator, argmax by (mass DESC,
+    * s ASC).
     */
   private val SourceLengthKsSql: String =
     """WITH d AS (SELECT n_chars AS s,
@@ -383,10 +384,10 @@ object SparkEntry {
       |  best.s AS d_at
       |FROM t, best""".stripMargin
 
-  /** q150's oracle at k=3, shared verbatim by q154 (the standalone
-    * novelty pump's drain) and q180 (the unified monitor's novelty
-    * leg): min first-occurrence is commutative AND idempotent, so any
-    * arrival order folds to the batch dictionary.
+  /** q150's oracle at k=3, shared verbatim by q154 and q180 (both
+    * read the shared monitor's novelty leg): min first-occurrence is
+    * commutative AND idempotent, so any arrival order folds to the
+    * batch dictionary.
     */
   private val StreamNoveltySql: String =
     """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
@@ -402,9 +403,9 @@ object SparkEntry {
       |FROM pd LEFT JOIN nv ON pd.doc_id = nv.first_doc
       |ORDER BY pd.doc_id""".stripMargin
 
-  /** q48's split as the oracle shared verbatim by q155 (standalone
-    * contamination pump) and q181 (the monitor's contamination leg):
-    * per-doc probe-hit verdicts are micro-batch-local facts.
+  /** q48's split as the oracle shared verbatim by q155 and q181
+    * (both read the shared monitor's contamination leg): per-doc
+    * probe-hit verdicts are micro-batch-local facts.
     */
   private val StreamContaminationSql: String =
     """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
@@ -3158,16 +3159,17 @@ object SparkEntry {
     // kappa (agree·N − Σ n_gold·n_pred)/(N² − Σ n_gold·n_pred) in
     // HUGEINT mirroring the engine's DECIMAL(38,0)
     "q153_langid_eval" -> LangIdEvalSql,
-    // q162: the streaming drain of q153 — confusion-cell counts are
-    // additive/commutative, so the pump's durable census must grade
-    // to the identical batch report; the oracle is q153's verbatim
+    // q162: the shared monitor's agreement leg (as q182) — confusion
+    // cells are additive/commutative, so the durable census must
+    // grade to the identical batch report; the oracle is q153's
     "q162_stream_agreement" -> LangIdEvalSql,
-    // q154: the streaming drain of q150 must produce the identical
-    // batch answer (min first-occurrence is commutative), so the
-    // oracle is q150's verbatim
+    // q154: the shared monitor's novelty leg (as q180) must produce
+    // the identical batch answer (min first-occurrence is
+    // commutative), so the oracle is q150's verbatim
     "q154_stream_novelty" -> StreamNoveltySql,
-    // q155: the streaming drain of q48 — per-doc probe-hit counts are
-    // micro-batch-local facts, so the stream must equal the batch scan
+    // q155: the shared monitor's contamination leg (as q181) — per-doc
+    // probe-hit counts are micro-batch-local facts, so the drain must
+    // equal the batch scan
     "q155_stream_contamination" -> StreamContaminationSql,
     // q156: Fleiss' kappa over the 3-rater panel (gold lang, the q21
     // labeler, length parity). Every sum exact in HUGEINT; p_bar/p_e
@@ -3447,8 +3449,8 @@ object SparkEntry {
     // per-score census: 2U = Σ_s pos(s)·(2·neg(<s)+neg(s)) in
     // HUGEINT mirroring the engine's DECIMAL(38,0), one division
     "q165_roc_auc" -> LangScoreAucSql,
-    // q176: the production score pump drained over the same corpus —
-    // the oracle is q165's VERBATIM (drain == batch: additive census)
+    // q176: the shared monitor's score leg (as q183) — the oracle is
+    // q165's VERBATIM (drain == batch: additive census)
     "q176_stream_score" -> LangScoreAucSql,
     // q166: the full ROC operating-point table — per distinct score
     // "predict en when hits >= thr": exact confusion counts off the
@@ -3620,8 +3622,8 @@ object SparkEntry {
     // n_a·n_b, so the sup is an integer max (ties toward smallest s)
     // and d one division of exact integers
     "q173_ks_drift" -> SourceLengthKsSql,
-    // q179: the production drift pump drained over the same corpus —
-    // the oracle is q173's VERBATIM (drain == batch: additive census)
+    // q179: the shared monitor's drift leg (as q184) — the oracle is
+    // q173's VERBATIM (drain == batch: additive census)
     "q179_stream_drift" -> SourceLengthKsSql,
     // q178: binary log-loss of the capped q167 pseudo-confidence —
     // per-cell micro-nat loss rounded ONCE off the (conf, y) census,

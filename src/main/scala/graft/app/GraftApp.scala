@@ -405,6 +405,9 @@ object GraftApp {
       s"${monitorRoot(t)}/${l.state.getOrElse(l.name)}"
     def reportPath(t: String, l: PumpLeg) =
       s"${outBase(t)}_monitor_${l.name}.parquet"
+    // --csvpool-file-path-prefix (clioptions.py:109, default
+    // /tmp/csvpool_): per-table output is <prefix><table>
+    def csvOut(t: String) = c.csvPrefix.fold(s"${c.dstDir}/csv/$t")(_ + t)
 
     // --dry (clioptions.py:100-107): resolve, emit driver-side DDL/
     // templates, but execute nothing — report what WOULD have run
@@ -418,7 +421,7 @@ object GraftApp {
         c.migrateTable -> planLine("migrate-table", t => Seq(c.dstJdbcUrl
           .fold(s"${outBase(t)}.parquet")(u => s"$u/${dstNameFor(t)}"))),
         c.csvExport ->
-          s"csvpool: ${tables.map(t => s"${c.dstDir}/csv/$t").mkString(", ")}",
+          s"csvpool: ${tables.map(csvOut).mkString(", ")}",
         (c.pumpData || c.srcJdbcUrl.isDefined || c.debeziumFeed.isDefined) ->
           s"pump-data -> ${c.dstDir}/_state",
         c.remigrate -> planLine("remigrate", t => Seq(s"${outBase(t)}.parquet " +
@@ -492,9 +495,7 @@ object GraftApp {
     val csvDirs =
       if (!c.csvExport) Nil
       else tables.map { t =>
-        // --csvpool-file-path-prefix (clioptions.py:109, default
-        // /tmp/csvpool_): per-table output is <prefix><table>
-        val out = c.csvPrefix.fold(s"${c.dstDir}/csv/$t")(p => s"$p$t")
+        val out = csvOut(t)
         graft.sources.CsvSource.write(
           Migrator.transformed(spark, c.srcDir, t, spec), out,
           stringify = true)
@@ -520,8 +521,9 @@ object GraftApp {
         paths.head)
     })
 
-    // RESIDENT curation monitor (the q154/q155/q162 production faces
-    // on the CLI): where the batch --*-report modes re-scan the whole
+    // RESIDENT curation monitor (the CLI face of the legs that q154,
+    // q155, q162, q176, q179, q180-q186, q192, q193 and q197 drain):
+    // where the batch --*-report modes re-scan the whole
     // table per run, --pumps=<leg,...> STREAMS the source table's
     // parquet directory — new files appearing there fold incrementally
     // into durable BucketStateStore state under dstDir, and a restart

@@ -74,16 +74,10 @@ object IngestQueries {
       .option("numPartitions", "4")
       .load()
     val stateDir = s"$root/state"
-    val q = stream.writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.ProcessingTime("250 milliseconds"))
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty)
-          StreamingCdc.mergeIntoState(
-            b.withColumn("op", lit("insert")), stateDir,
-            pk = Seq("EVENT_ID"), orderCols = Seq("TS", "EVENT_ID"))
-      }
-      .start()
+    val q = StreamingCdc.start(stream.withColumn("op", lit("insert")),
+      stateDir, s"$root/ckpt", pk = Seq("EVENT_ID"),
+      orderCols = Seq("TS", "EVENT_ID"),
+      processingTime = Some("250 milliseconds"))
     try {
       q.processAllAvailable()
       // phase 2: live inserts AFTER stream start — the incremental
@@ -633,209 +627,15 @@ object IngestQueries {
       .orderBy("event_type")
   }
 
-  /** q154: INCREMENTAL corpus n-gram novelty — q150 as a stream.
-    * Documents arrive as files; a streaming aggregate maintains each
-    * shingle's first-occurrence doc (`min(doc_id)` — commutative, so
-    * the drained answer is arrival-order-free and must hash-equal
-    * batch [[graft.dedup.Dedup.ngramNovelty]]; q150's oracle checks
-    * both). The streaming state IS the seen-shingle dictionary —
-    * exactly what a crawl-saturation monitor keeps between snapshots
-    * (RocksDB-state-sized at corpus scale, the same cardinality the
-    * batch op shuffles); per-doc gram totals are per-file facts and
-    * ride the batch side. Complete-mode memory sink here because the
-    * gate drains to termination — this face is the ORACLE HARNESS;
-    * the PRODUCTION face is [[graft.streaming.CurationPumps
-    * .noveltyLeg]] run by `startMonitorPump`, which persists the same
-    * dictionary through BucketStateStore via foreachBatch and survives
-    * crash-restarts.
-    */
-  def streamNovelty(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
-    val root = tmpDir("graft_stream_novelty")
-    // two files, upper half written first: arrival order must not
-    // matter because min() is commutative
-    docs.filter(col("doc_id") % 2 === 1).write.parquet(s"$root/docs")
-    docs.filter(col("doc_id") % 2 === 0).write.mode("append")
-      .parquet(s"$root/docs")
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$root/docs")
-    val name = s"graft_novelty_${streamCounter.incrementAndGet()}"
-    val q = stream
-      .select(col("doc_id"),
-        explode(array_distinct(
-          graft.text.TextAnalysis.shingles(col("text"), 3))).as("shingle"))
-      .groupBy(col("shingle"))
-      .agg(min(col("doc_id")).as("first_doc"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val novel = spark.table(name)
-      .groupBy(col("first_doc")).agg(count(lit(1)).as("nov"))
-    // documents shorter than k tokens have NO shingles and NO row in
-    // batch ngramNovelty (explode of an empty array); drop them here
-    // too so stream and batch are row-identical on every valid corpus
-    val perDoc = docs.select(col("doc_id"),
-        size(array_distinct(
-          graft.text.TextAnalysis.shingles(col("text"), 3))).as("n_grams"))
-      .filter(col("n_grams") > 0)
-    perDoc.join(novel, col("doc_id") === col("first_doc"), "left")
-      .select(col("doc_id"), col("n_grams").cast("long").as("n_grams"),
-        coalesce(col("nov"), lit(0L)).as("novel"),
-        (coalesce(col("nov"), lit(0L)).cast("double") /
-          col("n_grams").cast("double")).as("novelty"))
-      .orderBy("doc_id")
-  }
-
-  /** q155: decontamination ON INGEST — q48's benchmark contamination
-    * scan as a stream-static join. The probe shingle set is batch
-    * (benchmark-sized, broadcast, built once); corpus documents
-    * arrive as files and each is graded in the micro-batch that
-    * carries it — the production shape, where contaminated documents
-    * are flagged before they ever land in the training store rather
-    * than by a later full-corpus sweep. Counts are per-doc facts of
-    * the arriving document (distinct shingles ∩ probe set), so the
-    * drained answer equals batch [[graft.dedup.Dedup.contaminationScan]]
-    * on the same split — q48's oracle checks both. This memory-sink
-    * face is the ORACLE HARNESS; the PRODUCTION face is
-    * [[graft.streaming.CurationPumps.contaminationLeg]] run by
-    * `startMonitorPump`, which persists the verdicts through
-    * BucketStateStore and survives crash-restarts.
-    */
-  def streamContamination(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
-    val probes = docs.filter(col("doc_id") % 100 === 0)
-    val corpus = docs.filter(col("doc_id") % 100 =!= 0)
-    val root = tmpDir("graft_stream_contam")
-    corpus.write.parquet(s"$root/docs")
-    val probeShingles = graft.dedup.Dedup
-      .shingleRows(probes, 3, "doc_id", "text")
-      .select("shingle").distinct()
-    val stream = spark.readStream.schema(corpus.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$root/docs")
-    val name = s"graft_contam_${streamCounter.incrementAndGet()}"
-    val q = stream
-      .select(col("doc_id"),
-        explode(array_distinct(
-          graft.text.TextAnalysis.shingles(col("text"), 3))).as("shingle"))
-      .join(broadcast(probeShingles), Seq("shingle"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_hits"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).orderBy("doc_id")
-  }
-
-  /** q162: labeler grading ON INGEST — q153's classifier report as a
-    * stream. Documents arrive as files; each micro-batch's
-    * (gold, predicted) confusion cells fold ADDITIVELY into the
-    * durable census through the PRODUCTION pump (a one-leg monitor,
-    * [[graft.streaming.CurationPumps.agreementLeg]] —
-    * BucketStateStore + batch-id fence; unlike q154/q155 this face
-    * drives the production path directly, there is no memory-sink
-    * intermediary), and the report reads the persisted state. Counts
-    * are commutative, so the drained report must hash-equal batch
-    * [[graft.ops.Agreement.classifierReport]] — q153's oracle checks
-    * both. The production stance: a labeler's live agreement with
-    * gold is readable at any time without re-scanning the corpus,
-    * and the census survives the pump.
-    */
-  def streamAgreement(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("text"), col("lang"))
-    val root = tmpDir("graft_stream_agree")
-    // two files, upper half first: additive counts are arrival-order-free
-    docs.filter(col("doc_id") % 2 === 1).write.parquet(s"$root/docs")
-    docs.filter(col("doc_id") % 2 === 0).write.mode("append")
-      .parquet(s"$root/docs")
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$root/docs")
-    graft.streaming.CurationPumps.startMonitorPump(stream, s"$root/ckpt",
-        Seq(graft.streaming.CurationPumps.agreementLeg(s"$root/state",
-          gold = col("lang"),
-          pred = graft.text.TextAnalysis.langId(col("text"),
-            graft.text.TextAnalysis.defaultProfiles))))
-      .awaitTermination()
-    graft.streaming.CurationPumps.agreementReport(spark, s"$root/state")
-  }
-
-  /** q176: the PRODUCTION score leg drained over the documents
-    * table and graded against q165's batch oracle VERBATIM — the
-    * drain-equals-batch contract for the threshold-free score grade:
-    * per-score (pos, neg) counts are additive and commutative, so
-    * the durable census a resident `--pumps=score` maintains must
-    * yield bit-identical ROC-AUC to the batch scan, in any arrival
-    * order (the two feed files land upper half first). The streaming
-    * face of the ScoreEval family, q162's precedent applied to score
-    * censuses.
-    */
-  def streamScore(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("text"), col("lang"))
-    val root = tmpDir("graft_stream_score")
-    docs.filter(col("doc_id") % 2 === 1).write.parquet(s"$root/docs")
-    docs.filter(col("doc_id") % 2 === 0).write.mode("append")
-      .parquet(s"$root/docs")
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$root/docs")
-    graft.streaming.CurationPumps.startMonitorPump(stream, s"$root/ckpt",
-        Seq(graft.streaming.CurationPumps.scoreLeg(s"$root/state",
-          score = size(filter(graft.text.TextAnalysis.tokens(col("text")),
-            t => t === "the" || t === "a")),
-          label = when(col("lang") === "en", lit(1L)).otherwise(lit(0L)))))
-      .awaitTermination()
-    graft.streaming.CurationPumps.scoreAuc(spark, s"$root/state")
-  }
-
-  /** q179: the PRODUCTION drift leg drained over the documents
-    * table and graded against q173's batch oracle VERBATIM — the
-    * drain-equals-batch contract for the KS drift gauge: the
-    * two-population census is additive, so the durable state a
-    * resident `--pumps=drift` maintains must yield a bit-identical
-    * sup-CDF gap to the batch scan, in any arrival order.
-    */
-  def streamDrift(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("n_chars"), col("source"))
-    val root = tmpDir("graft_stream_drift")
-    docs.filter(col("doc_id") % 2 === 1).write.parquet(s"$root/docs")
-    docs.filter(col("doc_id") % 2 === 0).write.mode("append")
-      .parquet(s"$root/docs")
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$root/docs")
-    graft.streaming.CurationPumps.startMonitorPump(stream, s"$root/ckpt",
-        Seq(graft.streaming.CurationPumps.driftLeg(s"$root/state",
-          score = col("n_chars"),
-          group = when(col("source") === "src0", lit(1L)).otherwise(lit(0L)))))
-      .awaitTermination()
-    graft.streaming.CurationPumps.driftKs(spark, s"$root/state")
-  }
-
   // ------------------------------------------------------------------
-  // q180-q185: the UNIFIED monitor — one resident stream whose single
-  // foreachBatch folds EVERY census from one pass over each arriving
-  // file (where q154/q155/q162/q176/q179 each run their own reader).
-  // The six faces below read the per-leg durable state of ONE shared
-  // monitor drain — deliberately memoized per source dir, because the
-  // whole point of the monitor is that the six censuses cost one
-  // ingest pass, not six; each query entry still grades its census
-  // against its batch oracle VERBATIM (the q154/q155/q153/q165/q173/
-  // q172 SQL, unchanged).
+  // The UNIFIED monitor — one resident stream whose single foreachBatch
+  // folds EVERY census from one pass over each arriving file. Every
+  // streaming curation face over `documents` (q154, q155, q162, q176,
+  // q179, q180-q185, q192, q193, q197) reads the per-leg durable state
+  // of ONE shared monitor drain — deliberately memoized per source
+  // dir, because the whole point of the monitor is that the censuses
+  // cost one ingest pass, not one each; each query entry still grades
+  // its census against its batch oracle VERBATIM.
   // ------------------------------------------------------------------
 
   private val monitorRoots = scala.collection.mutable.Map[String, String]()
@@ -908,9 +708,9 @@ object IngestQueries {
       })
     }
 
-  /** q180: the monitor's novelty leg — the durable dictionary ONE
-    * shared reader folded must equal batch ngramNovelty (q154's
-    * oracle verbatim).
+  /** q154 and q180: the monitor's novelty leg — the durable
+    * dictionary ONE shared reader folded must equal batch
+    * ngramNovelty (q150's oracle verbatim).
     */
   def monitorNovelty(spark: SparkSession, dir: String): DataFrame = {
     val root = monitorStateRoot(spark, dir)
@@ -920,27 +720,27 @@ object IngestQueries {
       k = 3)
   }
 
-  /** q181: the monitor's contamination leg (q155's oracle verbatim). */
+  /** q155 and q181: the monitor's contamination leg (q48's split). */
   def monitorContamination(spark: SparkSession, dir: String): DataFrame = {
     val root = monitorStateRoot(spark, dir)
     graft.streaming.CurationPumps.contaminationVerdicts(spark,
       s"$root/state/contamination")
   }
 
-  /** q182: the monitor's agreement leg (q153's oracle verbatim). */
+  /** q162 and q182: the monitor's agreement leg (q153's oracle). */
   def monitorAgreement(spark: SparkSession, dir: String): DataFrame = {
     val root = monitorStateRoot(spark, dir)
     graft.streaming.CurationPumps.agreementReport(spark,
       s"$root/state/agreement")
   }
 
-  /** q183: the monitor's score leg (q165's oracle verbatim). */
+  /** q176 and q183: the monitor's score leg (q165's oracle). */
   def monitorScore(spark: SparkSession, dir: String): DataFrame = {
     val root = monitorStateRoot(spark, dir)
     graft.streaming.CurationPumps.scoreAuc(spark, s"$root/state/score")
   }
 
-  /** q184: the monitor's drift leg (q173's oracle verbatim). */
+  /** q179 and q184: the monitor's drift leg (q173's oracle). */
   def monitorDrift(spark: SparkSession, dir: String): DataFrame = {
     val root = monitorStateRoot(spark, dir)
     graft.streaming.CurationPumps.driftKs(spark, s"$root/state/drift")

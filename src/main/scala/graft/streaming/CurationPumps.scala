@@ -19,17 +19,13 @@ import org.apache.spark.sql.types._
   * cells function through [[censusLeg]], which folds through
   * [[IncrementalAgg.mergePartials]] — the one fold `IncrementalAgg`
   * maintains its rollups with. Contamination's replace-by-key
-  * verdicts are the one custom merge. The
-  * memory-sink drains in [[graft.queries.IngestQueries]]
-  * (`streamNovelty`/`streamContamination`, the q154/q155 gate faces)
-  * stay as the ORACLE HARNESS — they prove drain-equals-batch against
-  * DuckDB but hold the whole answer in a complete-mode memory sink,
-  * which is driver-sized at corpus scale. The legs are what a
-  * deployment runs: state lives in hash-bucketed copy-on-write
-  * parquet (RocksDB-free, readable by any Spark job), each
-  * micro-batch rewrites only the key-buckets it touches, and the
-  * streaming checkpoint + the store's batch-id fence give
-  * exactly-once across crash replays.
+  * verdicts are the one custom merge. The legs are what a deployment
+  * runs, and what the streaming curation faces of
+  * [[graft.queries.IngestQueries]] drain against DuckDB: state lives
+  * in hash-bucketed copy-on-write parquet (RocksDB-free, readable by
+  * any Spark job), each micro-batch rewrites only the key-buckets it
+  * touches, and the streaming checkpoint + the store's batch-id fence
+  * give exactly-once across crash replays.
   *
   * Mirrors the role of the reference's resident pump loop
   * (pumper.py:13-47, mysqlreader.py:362-448 in /root/reference) with
@@ -67,8 +63,8 @@ object CurationPumps {
 
   /** The novelty report derived from the PERSISTED dictionary —
     * row-identical to batch [[Dedup.ngramNovelty]] over the same
-    * corpus (the q154 contract, now against durable state instead of
-    * a memory sink): per document with ≥1 shingle, how many of its
+    * corpus (the q154/q180 contract, against durable state): per
+    * document with ≥1 shingle, how many of its
     * distinct k-shingles first occurred in it. `docs` supplies the
     * per-doc gram totals (per-file facts, not state).
     */

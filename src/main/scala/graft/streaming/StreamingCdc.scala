@@ -33,7 +33,7 @@ object StreamingCdc {
   def vacuum(spark: SparkSession, stateDir: String, keep: Int = 2): Unit =
     BucketStateStore.vacuum(spark, stateDir, keep)
 
-  /** First replicated row, recorded once at stream start — the
+  /** First replicated row, recorded by the first non-empty batch — the
     * reference logs it per table so operators can craft the
     * migration cut-over WHERE clause (mysqlreader.py:241-245,
     * docs/manual.md:555-592). Persisted as `_first_row.json` next
@@ -117,8 +117,8 @@ object StreamingCdc {
     persisted.foreach { existing =>
       graft.migrate.SchemaDrift.diff(existing, template.schema)
     }
-    if (BucketStateStore.currentVersion(spark, stateDir).isEmpty)
-      recordFirstRow(batch, stateDir, orderCols)
+    // not keyed on the version: an empty first batch publishes one
+    recordFirstRow(batch, stateDir, orderCols)
     // resolved once: the store writes it as a run, or applies it to
     // the touched buckets' state when it writes bases
     val last = CdcApplier.lastPerKey(batch, pk, orderCols.map(col))

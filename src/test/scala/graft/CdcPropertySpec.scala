@@ -16,7 +16,8 @@ import java.nio.file.Files
   * `CdcApplier.replayCompact` computes over the whole feed in one
   * pass — the associativity the `CdcApplier` scaladoc claims, through
   * the bucketed store at several bucket counts, and while the store
-  * grows by re-bucketing.
+  * grows by re-bucketing. A `Map` model of last-write-wins checks
+  * `replayCompact` itself, with `applyAll` and the store beside it.
   */
 class CdcPropertySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -90,6 +91,48 @@ class CdcPropertySpec extends AnyFunSuite {
       val params = Test.Parameters.default
         .withMinSuccessfulTests(10)
         .withInitialSeed(Seed(20261017L + numBuckets))
+      val result = Test.check(params, prop)
+      assert(result.passed, Pretty.pretty(result))
+    }
+  }
+
+  /** Last-write-wins as a `Map` fold over the feed in order: a delete
+    * drops its key, a key move drops its old key, any other change puts
+    * the row. It shares no code with `CdcApplier`, so a fault in
+    * `lastPerKey`, which every store path goes through, shows here.
+    */
+  private def model(feed: Seq[Change]): Seq[Seq[Any]] =
+    feed.foldLeft(Map.empty[Long, Seq[Any]]) {
+      case (m, (id, before, v, ts, seq, op)) =>
+        val rest = before.filter(_ != id).fold(m)(m - _)
+        if (op == "delete") rest - id else rest + (id -> Seq(id, v, ts, seq))
+    }.toSeq.sortBy(_._1).map(_._2)
+
+  Seq(1, 4).foreach { numBuckets =>
+    test(s"applyAll, replayCompact and micro-batched merges equal a Map " +
+      s"model of last-write-wins at numBuckets=$numBuckets") {
+      val prop = Prop.forAllNoShrink(splitFeedGen) { case (feed, cuts) =>
+        val stateDir = Files.createTempDirectory("graft_cdc_model").toString
+        val bounds = (0 +: cuts) :+ feed.size
+        val batches = bounds.zip(bounds.tail).map { case (from, until) =>
+          rows(feed.slice(from, until)) }
+        batches.foreach(StreamingCdc.mergeIntoState(_, stateDir, Seq("id"),
+          Seq("ts", "seq"), numBuckets))
+        val whole = rows(feed)
+        val template = whole.drop("op", "_before_id")
+        val order = Seq(col("ts"), col("seq"))
+        val want = model(feed)
+        val wrong = Seq(
+          "applyAll" -> CdcApplier.applyAll(template.limit(0), batches,
+            Seq("id"), order),
+          "replayCompact" -> CdcApplier.replayCompact(whole, Seq("id"), order),
+          "mergeIntoState" -> StreamingCdc.currentState(spark, stateDir, template)
+        ).map { case (name, df) => name -> sorted(df) }.filter(_._2 != want)
+        Prop(wrong.isEmpty) :| s"feed=$feed cuts=$cuts model=$want wrong=$wrong"
+      }
+      val params = Test.Parameters.default
+        .withMinSuccessfulTests(6)
+        .withInitialSeed(Seed(20261024L + numBuckets))
       val result = Test.check(params, prop)
       assert(result.passed, Pretty.pretty(result))
     }

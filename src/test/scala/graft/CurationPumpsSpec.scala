@@ -10,7 +10,7 @@ import java.nio.file.Files
 /** Production-face verification for the streaming curation censuses
   * (CurationPumps legs, one or several per monitor pump): the
   * foreachBatch + BucketStateStore drains must (a) land exactly on
-  * the batch answers the q154/q155 oracle faces prove, and (b)
+  * the batch answers the q150/q48 oracles prove, and (b)
   * survive a crash-restart — kill the query, add more data, restart
   * from the same checkpoint, still land on the full batch answer (the
   * StreamingCdcSpec discipline applied to corpus analytics state).

@@ -1395,6 +1395,13 @@ class GraftAppSpec extends AnyFunSuite {
     assert(r.dryPlanned.exists(_.startsWith("csvpool")))
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dst)),
       "dry run must not write the destination")
+    // the plan names the path the spill would write: <prefix><table>
+    // when the prefix is set
+    val prefix = Files.createTempDirectory("graft_dry_csv").toString + "/pool_"
+    val pr = GraftApp.run(spark, GraftApp.parse(Seq(
+      s"--src-dir=$dir", s"--dst-dir=$dst", "--src-tables=region",
+      "--csvpool", s"--csvpool-file-path-prefix=$prefix", "--dry")))
+    assert(pr.dryPlanned.contains(s"csvpool: ${prefix}region"), pr.dryPlanned)
   }
 
   test("dst-table renames a single destination; dst-table-prefix maps the list") {

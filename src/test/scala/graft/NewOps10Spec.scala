@@ -129,12 +129,12 @@ class NewOps10Spec extends AnyFunSuite {
   // --- streaming novelty ---------------------------------------------
 
   test("streamNovelty drains to the exact batch novelty answer") {
-    // the streaming min-first-occurrence state, fed file-by-file in
-    // shuffled halves (evens written after odds), must equal batch
-    // ngramNovelty row-for-row — min is commutative, so arrival
-    // order is irrelevant by construction
+    // the shared monitor's min-first-occurrence state, fed
+    // file-by-file in shuffled halves (evens written after odds), must
+    // equal batch ngramNovelty row-for-row — min is commutative, so
+    // arrival order is irrelevant by construction
     val dir = "/root/testdata/sf0.001"
-    val got = graft.queries.IngestQueries.streamNovelty(spark, dir)
+    val got = graft.queries.IngestQueries.monitorNovelty(spark, dir)
       .collect()
     val want = Dedup.ngramNovelty(Tables.load(spark, dir, "documents"),
       k = 3).orderBy("doc_id").collect()
@@ -158,7 +158,16 @@ class NewOps10Spec extends AnyFunSuite {
       (4L, "")             // empty text — also 0 shingles
     ).toDF("doc_id", "text")
       .write.parquet(s"$tmp/documents.parquet")
-    val got = graft.queries.IngestQueries.streamNovelty(spark, tmp)
+    // the shared monitor also folds lang/source/n_chars legs, which
+    // this two-column corpus lacks: drive the novelty leg alone
+    val docs = Tables.load(spark, tmp, "documents")
+    graft.streaming.CurationPumps.startMonitorPump(
+        spark.readStream.schema(docs.schema).parquet(Tables.path(tmp, "documents")),
+        s"$tmp/ckpt", Seq(graft.streaming.CurationPumps.noveltyLeg(
+          s"$tmp/state", k = 3)))
+      .awaitTermination()
+    val got = graft.streaming.CurationPumps.noveltyReport(spark,
+        s"$tmp/state", docs, k = 3)
       .collect()
     val want = Dedup.ngramNovelty(Tables.load(spark, tmp, "documents"),
       k = 3).orderBy("doc_id").collect()
@@ -171,7 +180,7 @@ class NewOps10Spec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
-    val got = graft.queries.IngestQueries.streamContamination(spark, dir)
+    val got = graft.queries.IngestQueries.monitorContamination(spark, dir)
       .collect()
     val want = Dedup.contaminationScan(
         docs.filter(col("doc_id") % 100 =!= 0),

@@ -694,6 +694,18 @@ class StreamingCdcSpec extends AnyFunSuite {
     }
   }
 
+  test("an empty first batch leaves the first row to the first non-empty one") {
+    val root = Files.createTempDirectory("graft_scdc_first").toString
+    val first = ChangeFeed.timeBatches(feed, "week").head
+    // an empty batch still publishes a version
+    StreamingCdc.mergeIntoState(first.limit(0), s"$root/state", pk, orderCols)
+    assert(StreamingCdc.currentVersion(spark, s"$root/state").contains(0L))
+    assert(StreamingCdc.firstRow(spark, s"$root/state").isEmpty)
+    StreamingCdc.mergeIntoState(first, s"$root/state", pk, orderCols)
+    val want = first.orderBy(orderCols.map(col): _*).limit(1).toJSON.head()
+    assert(StreamingCdc.firstRow(spark, s"$root/state").contains(want))
+  }
+
   test("version pointer survives torn-write-free publish") {
     val root = Files.createTempDirectory("graft_scdc4").toString
     val months = ChangeFeed.timeBatches(feed, "week").take(2)
