@@ -594,12 +594,7 @@ object GraftApp {
         // the incremental key-range poll (graft-jdbc source). The
         // monotonic key doubles as PK and merge order; offsets ride
         // the streaming checkpoint, so restarts resume exactly.
-        val table = c.srcJdbcTable.getOrElse(
-          throw new IllegalArgumentException(
-            "--src-jdbc-url requires --src-jdbc-table"))
-        val key = c.srcJdbcKey.getOrElse(
-          throw new IllegalArgumentException(
-            "--src-jdbc-url requires --src-jdbc-key"))
+        val (table, key) = (c.srcJdbcTable.get, c.srcJdbcKey.get)
         val stateDir = s"${c.dstDir}/_state"
         val reader0 = spark.readStream.format("graft-jdbc")
           .option("url", c.srcJdbcUrl.get)
@@ -1339,6 +1334,10 @@ object GraftApp {
       s"--ann-recall=$v: expected one of ${AnnRecallVariants.toSeq.sorted.mkString(", ")}"))
     require(!c.scd2 || c.scd2Value.isDefined,
       "--scd2 requires --scd2-value=<tracked column>")
+    require(c.srcJdbcUrl.isEmpty || c.srcJdbcTable.isDefined,
+      "--src-jdbc-url requires --src-jdbc-table")
+    require(c.srcJdbcUrl.isEmpty || c.srcJdbcKey.isDefined,
+      "--src-jdbc-url requires --src-jdbc-key")
     val legs = pumpLegs(c)
     val badLegs = c.pumps.filterNot(legs.map(_.name).contains)
     require(badLegs.isEmpty, s"--pumps: unknown census legs " +

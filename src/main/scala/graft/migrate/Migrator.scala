@@ -3,6 +3,7 @@ package graft.migrate
 import graft.Tables
 import graft.ops.Transforms
 import graft.schema.DdlBuilder
+import graft.sources.{JdbcSink, JdbcSnapshot}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, expr, lit}
 
@@ -73,18 +74,8 @@ object Migrator {
     // --dst-table / --dst-table-prefix (clioptions.py:454-465 in
     // /root/reference): the destination may be named independently of
     // the source table; DDL and the sink path follow the dst name
-    val dstName = dstTable.getOrElse(table)
-    val srcObs = Observation(s"graft_migrate_$table")
-    val out = transformed(spark, srcDir, table, spec)
-      .observe(srcObs, count(lit(1)).as("rows"))
-    val sparkDdl = DdlBuilder.createTableSpark(db, dstName, out.schema)
-    val chDdl = DdlBuilder.createTableClickHouse(db, dstName, out.schema)
-    val dst = s"$dstDir/$dstName.parquet"
-    out.write.mode("overwrite").parquet(dst)
-    TableMigration(table,
-      srcRows = srcObs.get("rows").asInstanceOf[Long],
-      dstRows = spark.read.parquet(dst).count(),
-      sparkDdl = sparkDdl, chDdl = chDdl)
+    migrateFrame(spark, transformed(spark, srcDir, table, spec), dstDir,
+      table, dstTable.getOrElse(table), db)
   }
 
   /** Migrate one LIVE JDBC table into `dstDir/<table>.parquet` — the
@@ -99,13 +90,22 @@ object Migrator {
   def migrateJdbcTable(spark: SparkSession,
       jdbcOpts: Map[String, String], dstDir: String, table: String,
       db: String = "default",
-      transform: DataFrame => DataFrame = identity): TableMigration = {
-    val srcObs = Observation(s"graft_migrate_jdbc_$table")
-    val out = transform(graft.sources.JdbcSnapshot.read(spark, jdbcOpts))
-      .observe(srcObs, count(lit(1)).as("rows"))
-    val sparkDdl = DdlBuilder.createTableSpark(db, table, out.schema)
-    val chDdl = DdlBuilder.createTableClickHouse(db, table, out.schema)
-    val dst = s"$dstDir/$table.parquet"
+      transform: DataFrame => DataFrame = identity): TableMigration =
+    migrateFrame(spark, transform(JdbcSnapshot.read(spark, jdbcOpts)),
+      dstDir, table, table, db)
+
+  /** The body both parquet-destination faces share: DDL for
+    * `dstName`, one write of `src` to `dstDir/<dstName>.parquet` with
+    * the source count observed on it, then the re-read recount.
+    */
+  private def migrateFrame(spark: SparkSession, src: DataFrame,
+      dstDir: String, table: String, dstName: String,
+      db: String): TableMigration = {
+    val srcObs = Observation(s"graft_migrate_$table")
+    val out = src.observe(srcObs, count(lit(1)).as("rows"))
+    val sparkDdl = DdlBuilder.createTableSpark(db, dstName, out.schema)
+    val chDdl = DdlBuilder.createTableClickHouse(db, dstName, out.schema)
+    val dst = s"$dstDir/$dstName.parquet"
     out.write.mode("overwrite").parquet(dst)
     TableMigration(table,
       srcRows = srcObs.get("rows").asInstanceOf[Long],
@@ -130,17 +130,15 @@ object Migrator {
     val out = transformed(spark, srcDir, table, spec)
     val sparkDdl = DdlBuilder.createTableSpark(db, table, out.schema)
     val chDdl = DdlBuilder.createTableClickHouse(db, table, out.schema)
-    graft.sources.JdbcSink.write(out, url, dbtable,
+    JdbcSink.write(out, url, dbtable,
       batchSize = batchSize, driver = driver, numPartitions = numPartitions)
     // the parquet path piggybacks the source count on the write via
     // observe(); the JDBC writer executes as an RDD action outside an
     // observable SQL execution, so the source count is its own scan —
     // acceptable because the INSERT pump, not the re-read, dominates
     // this direction's cost
-    val readBack = spark.read.format("jdbc")
-      .option("url", url).option("dbtable", dbtable)
-      .options(driver.map("driver" -> _).toMap)
-      .load()
+    val readBack = JdbcSnapshot.read(spark,
+      Map("url" -> url, "dbtable" -> dbtable) ++ driver.map("driver" -> _))
     TableMigration(table,
       srcRows = out.count(),
       dstRows = readBack.count(),

@@ -161,8 +161,8 @@ object IngestQueries {
       .agg(max(col("o_orderkey"))).head().getLong(0) + 1
     val back = JdbcSnapshot.read(spark,
       JdbcSnapshot.options(url, "APP", "ORDERS",
-        partitioning = Some(JdbcSnapshot.Partitioning("O_ORDERKEY", 0L, hi, 4)),
-        quote = "\"") + ("driver" -> DerbyDriver.get))
+        partitioning = Some(JdbcSnapshot.Partitioning("O_ORDERKEY", 0L, hi, 4))) +
+        ("driver" -> DerbyDriver.get))
     back.select(col("O_ORDERKEY").as("o_orderkey"),
         col("O_CUSTKEY").as("o_custkey"),
         col("O_ORDERSTATUS").as("o_orderstatus"),

@@ -1,17 +1,17 @@
 package graft.sources
 
+import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.jdbc.JdbcDialects
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
-import java.sql.{Connection, DriverManager, ResultSet}
+import java.sql.{Connection, DriverManager}
 
 /** Incremental JDBC streaming source (DataSource V2 MicroBatchStream)
   * — the self-contained live-CDC option SURVEY §2.1-S1 names: poll a
@@ -36,6 +36,13 @@ import java.sql.{Connection, DriverManager, ResultSet}
   *   .load()
   * }}}
   *
+  * Types, row decoding and identifier quoting come from Spark's
+  * `JdbcDialect` for the URL, the one `spark.read.jdbc` (JdbcSnapshot)
+  * uses: the schema is the snapshot reader's, every value goes
+  * through its getters, and the range scan quotes each column and the
+  * key the dialect's way (backticks on MySQL, `"` elsewhere). A tail
+  * and a snapshot of one table therefore type every column alike.
+  *
   * Contract: the key column is append-monotonic (new rows have
   * strictly larger keys than every already-read row). Updates in
   * place are invisible — tables with in-place updates need the
@@ -51,17 +58,14 @@ import java.sql.{Connection, DriverManager, ResultSet}
   * (first batch = whole table) into paced micro-batches.
   */
 class JdbcIncrementalProvider extends TableProvider with DataSourceRegister {
-  import JdbcIncremental._
 
   override def shortName(): String = "graft-jdbc"
 
+  /** The schema Spark's JDBC reader gives the table: the snapshot's. */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    withConnection(options.get("url"), Option(options.get("driver"))) { conn =>
-      val st = conn.prepareStatement(
-        s"SELECT * FROM ${options.get("dbtable")} WHERE 1=0")
-      try schemaOf(st.getMetaData)
-      finally st.close()
-    }
+    JdbcSnapshot.read(SparkSession.active,
+      Map("url" -> options.get("url"), "dbtable" -> options.get("dbtable")) ++
+        Option(options.get("driver")).map("driver" -> _)).schema
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table =
@@ -116,6 +120,7 @@ private class JdbcIncrementalStream(schema: StructType,
   require(schema.fieldNames.contains(keyCol),
     s"keyColumn $keyCol is not a column of $table " +
       s"(schema: ${schema.fieldNames.mkString(",")})")
+  private val key = JdbcDialects.get(url).quoteIdentifier(keyCol)
 
   override def initialOffset(): Offset = JdbcKeyOffset(startKey)
 
@@ -144,20 +149,20 @@ private class JdbcIncrementalStream(schema: StructType,
 
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowFence = Some(
-      probe(s"SELECT MAX($keyCol) FROM $table")(_ => ())
+      probe(s"SELECT MAX($key) FROM $table")(_ => ())
         .getOrElse(Long.MinValue))
 
-  private def probe(sql: String)(set: java.sql.PreparedStatement => Unit): Option[Long] =
-    withConnection(url, driver) { conn =>
+  private def probe(sql: String)(set: java.sql.PreparedStatement => Unit): Option[Long] = {
+    val conn = connect(url, driver)
+    try {
       val st = conn.prepareStatement(sql)
-      try {
-        set(st)
-        val rs = st.executeQuery()
-        rs.next()
-        val v = rs.getLong(1)
-        if (rs.wasNull()) None else Some(v)
-      } finally st.close()
-    }
+      set(st)
+      val rs = st.executeQuery()
+      rs.next()
+      val v = rs.getLong(1)
+      if (rs.wasNull()) None else Some(v)
+    } finally conn.close()
+  }
 
   /** One driver-side aggregate probe per trigger, anchored on the
     * engine's committed start (SupportsAdmissionControl — the plain
@@ -174,13 +179,13 @@ private class JdbcIncrementalStream(schema: StructType,
     val known = start.asInstanceOf[JdbcKeyOffset].maxKey
     val max = availableNowFence match {
       case Some(fence) => Some(fence) // frozen at prepare; no live probe
-      case None => probe(s"SELECT MAX($keyCol) FROM $table")(_ => ())
+      case None => probe(s"SELECT MAX($key) FROM $table")(_ => ())
     }
     val target = max.filter(_ > known).getOrElse(known)
     val capped = maxKeyRange match {
       case Some(cap) if target > known =>
         val base = probe(
-          s"SELECT MIN($keyCol) FROM $table WHERE $keyCol > ?")(_.setLong(1, known))
+          s"SELECT MIN($key) FROM $table WHERE $key > ?")(_.setLong(1, known))
           .map(m => math.max(known, m - 1)).getOrElse(known)
         if (BigInt(target) - BigInt(base) > cap) base + cap else target
       case _ => target
@@ -203,17 +208,9 @@ private class JdbcIncrementalStream(schema: StructType,
     // rebase the open lower bound onto the actual data so the split
     // is even (the initial offset is Long.MinValue — splitting THAT
     // range numerically would put every row in the last partition)
-    val effLo = withConnection(url, driver) { conn =>
-      val st = conn.prepareStatement(
-        s"SELECT MIN($keyCol) FROM $table WHERE $keyCol > ? AND $keyCol <= ?")
-      try {
-        st.setLong(1, lo); st.setLong(2, hi)
-        val rs = st.executeQuery()
-        rs.next()
-        val v = rs.getLong(1)
-        if (rs.wasNull()) hi else v - 1 // empty range → no partitions
-      } finally st.close()
-    }
+    val effLo = probe(s"SELECT MIN($key) FROM $table WHERE $key > ? AND $key <= ?") {
+      st => st.setLong(1, lo); st.setLong(2, hi)
+    }.map(_ - 1).getOrElse(hi) // empty range → no partitions
     if (hi <= effLo) return Array.empty
     val n = math.max(1, numPartitions)
     val span = BigInt(hi) - BigInt(effLo)
@@ -243,104 +240,37 @@ private class JdbcRangeReaderFactory(url: String, driver: Option[String],
     new PartitionReader[InternalRow] {
       private val conn = connect(url, driver)
       private val st = {
-        val cols = schema.fieldNames.map(quoteIfPlain).mkString(", ")
-        val s = conn.prepareStatement(
-          s"SELECT $cols FROM $table WHERE $keyCol > ? AND $keyCol <= ?")
+        val s = conn.prepareStatement(rangeSelect(url, table, keyCol, schema))
         s.setFetchSize(10000)
         s.setLong(1, p.lower); s.setLong(2, p.upper)
         s
       }
-      private val rs = st.executeQuery()
-      private val getters = schema.fields.map(f => getterFor(f.dataType))
+      private val rows = GraftColumnBridge.jdbcRows(st.executeQuery(),
+        JdbcDialects.get(url), schema)
+      private var row: InternalRow = _
 
-      override def next(): Boolean = rs.next()
-      override def get(): InternalRow =
-        InternalRow.fromSeq(getters.zipWithIndex.map { case (g, i) =>
-          val v = g(rs, i + 1)
-          if (rs.wasNull()) null else v
-        }.toIndexedSeq)
-      override def close(): Unit = { rs.close(); st.close(); conn.close() }
+      override def next(): Boolean = rows.hasNext && { row = rows.next(); true }
+      override def get(): InternalRow = row
+      override def close(): Unit = { st.close(); conn.close() }
     }
   }
 }
 
-private[sources] object JdbcIncremental {
+private[graft] object JdbcIncremental {
 
   def connect(url: String, driver: Option[String]): Connection = {
     driver.foreach(Class.forName)
     DriverManager.getConnection(url)
   }
 
-  def withConnection[A](url: String, driver: Option[String])(f: Connection => A): A = {
-    val conn = connect(url, driver)
-    try f(conn) finally conn.close()
-  }
-
-  /** Quote a plain identifier with the ANSI double-quote; leave
-    * anything already quoted or expression-shaped alone.
+  /** The scan of one key range `(?, ?]`: every column and the key
+    * quoted by the URL's dialect.
     */
-  def quoteIfPlain(name: String): String =
-    if (name.matches("[A-Za-z_][A-Za-z0-9_]*")) "\"" + name + "\"" else name
-
-  /** java.sql.Types → Catalyst, the subset a replication source
-    * needs (numeric, string, temporal, boolean, binary, decimal) —
-    * mirrors graft.schema.TypeMapper's MySQL-name-keyed map but keyed
-    * on JDBC metadata type codes, which every driver reports.
-    */
-  def catalystType(jdbcType: Int, precision: Int, scale: Int): DataType = {
-    import java.sql.Types._
-    jdbcType match {
-      case BIGINT => LongType
-      case INTEGER => IntegerType
-      case SMALLINT => ShortType
-      case TINYINT => ByteType
-      case DOUBLE | FLOAT => DoubleType
-      case REAL => FloatType
-      case DECIMAL | NUMERIC =>
-        DecimalType(math.min(math.max(precision, 1), 38),
-          math.min(scale, 38))
-      case CHAR | VARCHAR | LONGVARCHAR | CLOB | NCHAR | NVARCHAR |
-           LONGNVARCHAR => StringType
-      case TIMESTAMP => TimestampType
-      case DATE => DateType
-      case BOOLEAN | BIT => BooleanType
-      case BINARY | VARBINARY | LONGVARBINARY | BLOB => BinaryType
-      case t => throw new IllegalArgumentException(
-        s"graft-jdbc: unsupported JDBC type code $t")
-    }
-  }
-
-  def schemaOf(md: java.sql.ResultSetMetaData): StructType =
-    StructType((1 to md.getColumnCount).map { i =>
-      StructField(md.getColumnLabel(i),
-        catalystType(md.getColumnType(i), md.getPrecision(i), md.getScale(i)),
-        md.isNullable(i) != java.sql.ResultSetMetaData.columnNoNulls)
-    })
-
-  /** Column getter producing Catalyst internal values (UTF8String,
-    * epoch-µs longs, Decimal) — the PartitionReader[InternalRow]
-    * contract. Callers null-out via rs.wasNull afterwards.
-    */
-  def getterFor(dt: DataType): (ResultSet, Int) => Any = dt match {
-    case LongType => (rs, i) => rs.getLong(i)
-    case IntegerType => (rs, i) => rs.getInt(i)
-    case ShortType => (rs, i) => rs.getShort(i)
-    case ByteType => (rs, i) => rs.getByte(i)
-    case DoubleType => (rs, i) => rs.getDouble(i)
-    case FloatType => (rs, i) => rs.getFloat(i)
-    case StringType => (rs, i) => UTF8String.fromString(rs.getString(i))
-    case TimestampType => (rs, i) =>
-      val t = rs.getTimestamp(i)
-      if (t == null) null else DateTimeUtils.fromJavaTimestamp(t)
-    case DateType => (rs, i) =>
-      val d = rs.getDate(i)
-      if (d == null) null else DateTimeUtils.fromJavaDate(d)
-    case BooleanType => (rs, i) => rs.getBoolean(i)
-    case BinaryType => (rs, i) => rs.getBytes(i)
-    case d: DecimalType => (rs, i) =>
-      val v = rs.getBigDecimal(i)
-      if (v == null) null else Decimal(v, d.precision, d.scale)
-    case other => throw new IllegalArgumentException(
-      s"graft-jdbc: no reader for $other")
+  def rangeSelect(url: String, table: String, keyCol: String,
+      schema: StructType): String = {
+    val d = JdbcDialects.get(url)
+    val key = d.quoteIdentifier(keyCol)
+    s"SELECT ${schema.fieldNames.map(d.quoteIdentifier).mkString(", ")} " +
+      s"FROM $table WHERE $key > ? AND $key <= ?"
   }
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.jdbc.JdbcDialects
 
 /** Partitioned JDBC snapshot scan options (SURVEY §2.1 S2) — the
   * Spark-native form of the reference's server-side streaming
@@ -13,8 +14,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Tested against a LIVE embedded Derby database (the JDBC engine
   * Spark ships for its metastore): partitioned range-scan fan-out,
   * server-side WHERE pushdown, and fetch-size plumbing execute
-  * against real JDBC (JdbcSnapshotSpec); MySQL specifics (backtick
-  * quoting) stay the default and are covered by option-assembly
+  * against real JDBC (JdbcSnapshotSpec); MySQL's backtick quoting,
+  * which the URL's dialect picks, is covered by option-assembly
   * tests.
   */
 object JdbcSnapshot {
@@ -25,17 +26,18 @@ object JdbcSnapshot {
   /** Build the JDBC reader option map: table-or-query pushdown
     * (`WHERE` folds into a dbtable subquery so filtering happens
     * server-side, like tablemigrator.py:191-194), partitioned range
-    * scan, batch fetch size.
+    * scan, batch fetch size. `db` and `table` are quoted the way the
+    * URL's dialect quotes identifiers.
     */
   def options(url: String, db: String, table: String,
       where: Option[String] = None,
       partitioning: Option[Partitioning] = None,
-      fetchSize: Int = 100000,
-      quote: String = "`"): Map[String, String] = {
-    val q = quote
+      fetchSize: Int = 100000): Map[String, String] = {
+    val d = JdbcDialects.get(url)
+    val qualified = s"${d.quoteIdentifier(db)}.${d.quoteIdentifier(table)}"
     val dbtable = where match {
-      case Some(w) => s"(SELECT * FROM $q$db$q.$q$table$q WHERE $w) AS t"
-      case None    => s"$q$db$q.$q$table$q"
+      case Some(w) => s"(SELECT * FROM $qualified WHERE $w) AS t"
+      case None    => qualified
     }
     Map(
       "url" -> url,

@@ -193,6 +193,9 @@ class MigratorSpec extends AnyFunSuite {
           qe: org.apache.spark.sql.execution.QueryExecution,
           exception: Exception): Unit = ()
     }
+    // the probe table's own write above ends on the async listener
+    // bus; drain it first so only the migration's executions are seen
+    org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       val dst = Files.createTempDirectory("md").toString
@@ -1989,6 +1992,12 @@ class GraftAppSpec extends AnyFunSuite {
     "an agreement-leg labeler panel" ->
       (Seq("--pumps=agreement", "--agreement-pred=source,lang"), "ONE labeler"),
     "--scd2 without --scd2-value" -> (Seq("--scd2"), "--scd2-value"),
+    "--src-jdbc-url without --src-jdbc-table" ->
+      (Seq("--src-jdbc-url=jdbc:derby:memory:none", "--src-jdbc-key=ID"),
+        "--src-jdbc-table"),
+    "--src-jdbc-url without --src-jdbc-key" ->
+      (Seq("--src-jdbc-url=jdbc:derby:memory:none", "--src-jdbc-table=APP.T"),
+        "--src-jdbc-key"),
     "an unknown --ppl-drop tier" ->
       (Seq("--ppl-filter", "--ppl-drop=tail,bogus"), "unknown bucket name"),
     "--remigrate with no primary key" ->

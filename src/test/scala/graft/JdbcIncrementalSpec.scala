@@ -1,16 +1,18 @@
 package graft
 
+import graft.sources.{JdbcIncremental, JdbcSnapshot}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 import java.sql.DriverManager
 
 /** Live tests of the incremental JDBC streaming source against
-  * embedded Derby: offset math, partition fan-out, type conversion,
-  * post-start inserts, and crash-replay resume from the persisted
-  * checkpoint offset.
+  * embedded Derby: offset math, partition fan-out, type conversion
+  * (the snapshot reader's, column for column), post-start inserts,
+  * and crash-replay resume from the persisted checkpoint offset.
   */
 class JdbcIncrementalSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -205,6 +207,48 @@ class JdbcIncrementalSpec extends AnyFunSuite {
       s"100 keys / 30 per batch needs >= 4 paced batches (single-batch " +
         s"fallback would ignore the cap), got ${batches.get}")
     assert(drain() == 20, "next run picks up exactly the mid-drain inserts")
+  }
+
+  test("the tail types and decodes a wide table exactly like the snapshot") {
+    val url = freshDerby()
+    val driver = "org.apache.derby.jdbc.EmbeddedDriver"
+    exec(url, "CREATE TABLE WIDE (ID BIGINT NOT NULL, S SMALLINT, R REAL, " +
+        "D DECIMAL(7,2), B BOOLEAN, BIN CHAR(4) FOR BIT DATA, C CLOB, " +
+        "DT DATE, TM TIME, TS TIMESTAMP)",
+      "INSERT INTO WIDE VALUES (1, -7, 1.5, 12345.67, TRUE, X'0a0b0c0d', " +
+        "'clob one', '2024-02-29', '13:14:15', '2024-03-01 01:02:03.456')",
+      "INSERT INTO WIDE VALUES (2, 32767, -0.25, -0.01, FALSE, X'00ff00ff', " +
+        "'two', '1999-12-31', '00:00:00', '1970-01-01 00:00:00')",
+      "INSERT INTO WIDE VALUES (3, NULL, NULL, NULL, NULL, NULL, NULL, " +
+        "NULL, NULL, NULL)")
+    val tail = spark.readStream.format("graft-jdbc")
+      .option("url", url).option("driver", driver)
+      .option("dbtable", "APP.WIDE").option("keyColumn", "ID")
+      .option("numPartitions", "2").load()
+    val snap = JdbcSnapshot.read(spark,
+      JdbcSnapshot.options(url, "APP", "WIDE") + ("driver" -> driver))
+    assert(tail.schema == snap.schema)
+    val name = s"jdbcinc_wide_${System.nanoTime()}"
+    tail.writeStream.format("memory").queryName(name)
+      .option("checkpointLocation", Files.createTempDirectory("ck").toString)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    val got = spark.table(name)
+    assert(got.count() == 3)
+    assert(got.exceptAll(snap).isEmpty && snap.exceptAll(got).isEmpty)
+  }
+
+  test("the range scan and the snapshot quote identifiers the URL's dialect's way") {
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("name", StringType)))
+    assert(JdbcIncremental.rangeSelect("jdbc:mysql://h:3306/d",
+      "d.t", "id", schema) ==
+      "SELECT `id`, `name` FROM d.t WHERE `id` > ? AND `id` <= ?")
+    assert(JdbcIncremental.rangeSelect("jdbc:derby:memory:d",
+      "APP.T", "id", schema) ==
+      "SELECT \"id\", \"name\" FROM APP.T WHERE \"id\" > ? AND \"id\" <= ?")
+    // the MySQL side of JdbcSnapshot.options: JdbcSnapshotSpec's option assembly
+    val derbyTable = JdbcSnapshot.options("jdbc:derby:memory:d", "APP", "T")("dbtable")
+    assert(derbyTable == "\"APP\".\"T\"")
   }
 
   test("offset json round-trips") {

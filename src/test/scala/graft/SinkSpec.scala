@@ -85,7 +85,7 @@ class JdbcSnapshotSpec extends AnyFunSuite {
     assert(opts("dbtable") == "(SELECT * FROM `d`.`t` WHERE id > 100) AS t")
     assert(opts("partitionColumn") == "id" && opts("numPartitions") == "16")
     assert(opts("fetchsize") == "100000")
-    val plain = JdbcSnapshot.options("u", "d", "t")
+    val plain = JdbcSnapshot.options("jdbc:mysql://h:3306/d", "d", "t")
     assert(plain("dbtable") == "`d`.`t`" && !plain.contains("partitionColumn"))
   }
 
@@ -112,8 +112,8 @@ class JdbcSnapshotSpec extends AnyFunSuite {
 
   test("live JDBC: partitioned range scan fans out and reads every row") {
     val opts = JdbcSnapshot.options(derbyUrl, "APP", "PEOPLE",
-      partitioning = Some(JdbcSnapshot.Partitioning("ID", 0L, 100L, 4)),
-      quote = "\"") + ("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
+      partitioning = Some(JdbcSnapshot.Partitioning("ID", 0L, 100L, 4))) +
+      ("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
     val df = JdbcSnapshot.read(spark, opts)
     assert(df.rdd.getNumPartitions == 4,
       "range partitioning must fan out into parallel scans")
@@ -124,7 +124,7 @@ class JdbcSnapshotSpec extends AnyFunSuite {
 
   test("live JDBC: WHERE folds server-side into the dbtable subquery") {
     val opts = JdbcSnapshot.options(derbyUrl, "APP", "PEOPLE",
-      where = Some("ID >= 50"), quote = "\"") +
+      where = Some("ID >= 50")) +
       ("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
     val df = JdbcSnapshot.read(spark, opts)
     assert(df.count() == 50)
@@ -133,8 +133,8 @@ class JdbcSnapshotSpec extends AnyFunSuite {
 
   test("live JDBC: end-to-end migration with count reconciliation") {
     val opts = JdbcSnapshot.options(derbyUrl, "APP", "PEOPLE",
-      partitioning = Some(JdbcSnapshot.Partitioning("ID", 0L, 100L, 4)),
-      quote = "\"") + ("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
+      partitioning = Some(JdbcSnapshot.Partitioning("ID", 0L, 100L, 4))) +
+      ("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
     val dst = Files.createTempDirectory("graft_jdbcmig").toString
     val m = graft.migrate.Migrator.migrateJdbcTable(spark, opts, dst, "people")
     assert(m.reconciled && m.srcRows == 100 && m.dstRows == 100)
