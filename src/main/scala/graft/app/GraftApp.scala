@@ -458,12 +458,9 @@ object GraftApp {
         // pump, writer/chwriter.py:47-112); table-by-table with the
         // same fail-fast reconciliation as the parquet path
         tables.map { t =>
-          val m = Migrator.migrateTableToJdbc(spark, c.srcDir, t,
-            c.dstJdbcUrl.get, dbtable = dstNameFor(t), spec = spec,
-            db = c.db, driver = c.dstJdbcDriver)
-          if (!m.reconciled) throw new IllegalStateException(
-            s"migration count mismatch for $t: src=${m.srcRows} dst=${m.dstRows}")
-          m
+          Migrator.requireReconciled(Migrator.migrateTableToJdbc(spark,
+            c.srcDir, t, c.dstJdbcUrl.get, dbtable = dstNameFor(t),
+            spec = spec, db = c.db, driver = c.dstJdbcDriver))
         }
       else Migrator.migrateAll(spark, c.srcDir, c.dstDir, tables, c.db, spec,
         dstName = dstNameFor)

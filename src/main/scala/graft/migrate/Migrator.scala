@@ -7,6 +7,9 @@ import graft.sources.{JdbcSink, JdbcSnapshot}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, expr, lit}
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+import java.util.concurrent.atomic.AtomicBoolean
+
 /** End-to-end snapshot migration (SURVEY §3.2) — the Spark-native
   * `--migrate-table` path: per-table scan → column skip → WHERE →
   * pluggable transform → sink, with auto-DDL and source/destination
@@ -17,9 +20,14 @@ import org.apache.spark.sql.functions.{count, expr, lit}
   * count-verification protocol (docs/manual.md:366-494: migrate
   * 7,694,964 rows, then `SELECT COUNT(*)` must agree on both sides).
   * The reference streams 100k-row batches through one Python
-  * process; here the scan is a partition-parallel read and the sink
-  * a partition-parallel write — no driver-side rows, no batching
-  * knobs, the cluster is the parallelism.
+  * process and forks writer processes for parallelism
+  * (writer/processwriter.py:28-59); here the scan is a
+  * partition-parallel read and the sink a partition-parallel write —
+  * no driver-side rows, no batching knobs, the cluster is the
+  * parallelism. A table list ([[migrateAll]]) also runs its tables
+  * concurrently from the driver, largest first, so small tables of
+  * one task each fill the idle cores; the first failure stops further
+  * tables from starting.
   */
 object Migrator {
 
@@ -343,20 +351,67 @@ object Migrator {
     }
   }
 
+  /** Throws unless `m`'s source and destination counts agree — the
+    * reference's per-table exception abort (tablemigrator.py:217-222).
+    * Returns `m`.
+    */
+  def requireReconciled(m: TableMigration): TableMigration = {
+    if (!m.reconciled)
+      throw new IllegalStateException(s"migration count mismatch for " +
+        s"${m.table}: src=${m.srcRows} dst=${m.dstRows}")
+    m
+  }
+
   /** Migrate a table list (the reference's db→table loop,
-    * tablemigrator.py:154-178); fails fast on the first
-    * non-reconciled table like the reference's per-table exception
-    * abort (tablemigrator.py:217-222).
+    * tablemigrator.py:154-178), up to `defaultParallelism` tables at
+    * once. Each table is one [[migrateTable]]: one observed write,
+    * then the re-read recount, checked by [[requireReconciled]].
+    *
+    * At one Spark task per small table, a serial loop leaves most
+    * cores idle; here the driver runs the tables on a fixed pool of
+    * `min(tables.size, defaultParallelism)` threads, made inside the
+    * call so they inherit the caller's local properties (job group,
+    * description) and active session. Tables start largest first by
+    * Catalyst's size estimate (no job), so the long pole starts at
+    * once. Records come back in list order.
+    *
+    * Fails loudly like the reference's per-table abort: after the
+    * first failure, a thrown exception or a count mismatch, no further
+    * table starts; tables already running finish; then the first
+    * failure in list order is rethrown as it was thrown. Duplicate
+    * tables or destination names are refused before any table starts,
+    * since two runs would share an output path.
     */
   def migrateAll(spark: SparkSession, srcDir: String, dstDir: String,
       tables: Seq[String], db: String = "default",
       spec: Spec = Spec(),
-      dstName: String => String = identity): Seq[TableMigration] =
-    tables.map { t =>
-      val m = migrateTable(spark, srcDir, dstDir, t, db, spec, Some(dstName(t)))
-      if (!m.reconciled)
-        throw new IllegalStateException(
-          s"migration count mismatch for $t: src=${m.srcRows} dst=${m.dstRows}")
-      m
+      dstName: String => String = identity): Seq[TableMigration] = {
+    val dsts = tables.map(dstName)
+    for ((what, names) <- Seq("table" -> tables, "destination" -> dsts)) {
+      val dup = names.diff(names.distinct).distinct
+      require(dup.isEmpty, s"migrateAll: duplicate $what ${dup.mkString(", ")}")
     }
+    val frames = tables.map(transformed(spark, srcDir, _, spec))
+    val largestFirst = tables.indices.sortBy(
+      frames(_).queryExecution.optimizedPlan.stats.sizeInBytes)(Ordering[BigInt].reverse)
+    val failed = new AtomicBoolean(false)
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, math.min(tables.size, spark.sparkContext.defaultParallelism)))
+    try {
+      val runs = largestFirst.map { i =>
+        i -> pool.submit(new Callable[Option[TableMigration]] {
+          def call(): Option[TableMigration] =
+            if (failed.get) None
+            else try Some(requireReconciled(migrateFrame(spark, frames(i), dstDir,
+                tables(i), dsts(i), db)))
+            catch { case e: Throwable => failed.set(true); throw e }
+        })
+      }.sortBy(_._1)
+      val outcomes = runs.map { case (_, run) =>
+        try Right(run.get) catch { case e: ExecutionException => Left(e.getCause) }
+      }
+      outcomes.collectFirst { case Left(e) => throw e }
+      outcomes.collect { case Right(Some(m)) => m }
+    } finally pool.shutdown()
+  }
 }

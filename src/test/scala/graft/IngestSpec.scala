@@ -223,6 +223,100 @@ class MigratorSpec extends AnyFunSuite {
     assert(ms.length == 2 && ms.forall(_.reconciled))
   }
 
+  private val tables8 = Seq("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events")
+
+  test("concurrent migrateAll equals sequential migrateTable calls, in list order") {
+    val par = Files.createTempDirectory("graft_migpar").toString
+    val seq = Files.createTempDirectory("graft_migseq").toString
+    val ms = Migrator.migrateAll(spark, dir, par, tables8)
+    assert(ms == tables8.map(Migrator.migrateTable(spark, dir, seq, _)))
+    tables8.foreach { t =>
+      def rows(root: String) = {
+        val df = spark.read.parquet(s"$root/$t.parquet")
+        (df.schema, df.collect().map(_.toString).sorted.toSeq)
+      }
+      assert(rows(par) == rows(seq), s"$t: parquet differs from the sequential write")
+    }
+  }
+
+  test("concurrent migrateAll rethrows the first-listed failure unwrapped") {
+    val dst = Files.createTempDirectory("graft_migfail").toString
+    val missing = intercept[Exception] {
+      Migrator.migrateAll(spark, dir, dst,
+        Seq("region", "missing_first", "nation", "missing_second"))
+    }
+    assert(!missing.isInstanceOf[java.util.concurrent.ExecutionException])
+    assert(missing.getMessage.contains("missing_first"), missing)
+    // a failure while a table runs on the pool is rethrown as thrown
+    val reg = new graft.ops.Transforms.TransformRegistry()
+      .register("nation", _.withColumn("boom", raise_error(lit("nation boom"))))
+    val e = intercept[Exception] {
+      Migrator.migrateAll(spark, dir, dst, Seq("region", "nation"),
+        spec = Migrator.Spec(transforms = reg))
+    }
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException])
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("nation boom")), e)
+  }
+
+  test("migrateAll refuses duplicate tables or destinations before any write") {
+    val dst = s"${Files.createTempDirectory("graft_migdup")}/out"
+    val dupTable = intercept[IllegalArgumentException] {
+      Migrator.migrateAll(spark, dir, dst, Seq("region", "nation", "region"))
+    }
+    assert(dupTable.getMessage.contains("duplicate table region"))
+    val dupDst = intercept[IllegalArgumentException] {
+      Migrator.migrateAll(spark, dir, dst, Seq("region", "nation"),
+        dstName = _ => "same")
+    }
+    assert(dupDst.getMessage.contains("duplicate destination same"))
+    assert(!new java.io.File(dst).exists())
+  }
+
+  test("migrateAll's jobs carry the caller's local properties") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    // uniquely-named probe tables in SHORT temp paths, so that their
+    // executions can be told from other suites' by plan text
+    val src = Files.createTempDirectory("mj").toString
+    val probes = Seq("mjprobe_a", "mjprobe_b", "mjprobe_c")
+    probes.foreach(t => spark.read.parquet(s"$dir/nation.parquet")
+      .write.parquet(s"$src/$t.parquet"))
+    val probeExecs = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
+        case e: SparkListenerSQLExecutionStart
+            if e.physicalPlanDescription.contains("mjprobe") =>
+          probeExecs.add(e.executionId)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((e.properties.getProperty("spark.sql.execution.id"),
+          e.properties.getProperty("spark.job.description")))
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(sc)
+    sc.addSparkListener(listener)
+    val tag = s"graft-migrate-${System.nanoTime()}"
+    try {
+      sc.setJobDescription(tag)
+      val ms = try Migrator.migrateAll(spark, src,
+          Files.createTempDirectory("md").toString, probes)
+        finally sc.setJobDescription(null)
+      assert(ms.map(_.table) == probes && ms.forall(_.srcRows == 25))
+      org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(sc)
+    } finally sc.removeSparkListener(listener)
+    val migrateJobs = jobs.toArray(Array.empty[(String, String)]).filter {
+      case (exec, _) => exec != null && probeExecs.contains(exec.toLong)
+    }
+    // each table: the observed write and the recount
+    assert(probeExecs.size >= 2 * probes.size, s"saw ${probeExecs.size} executions")
+    assert(migrateJobs.nonEmpty && migrateJobs.forall(_._2 == tag),
+      migrateJobs.mkString(", "))
+  }
+
   test("registered transform participates in the chain") {
     val dst = Files.createTempDirectory("graft_migtr").toString
     val reg = new graft.ops.Transforms.TransformRegistry()

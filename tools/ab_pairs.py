@@ -5,14 +5,16 @@ Runs `perfbench/run.py` in two checkouts, a parent and a change, one run
 at a time: pair 0 runs the parent first, pair 1 the change first, and so
 on, each pair on its own seed. Every result line is appended to a JSONL
 log. Then it prints, per end-to-end metric of `BENCHMARK.json`, both
-sides' median [q1, q3], the change/parent ratio of the medians and the
-pairs the change won (ties count for neither side).
+sides' median [q1, q3], the change/parent ratio of the medians, the
+per-pair change/parent ratios as median [min, max] and the pairs the
+change won (ties count for neither side).
 
     tools/ab_pairs.py --parent DIR --change DIR --workload cdc_uniform \\
         --seeds 501-510 [--seconds 12] [--log ab.jsonl] [--claim visible_p50_ms]
     tools/ab_pairs.py --summarize ab.jsonl [--claim visible_p50_ms]
 
-Flags: any run with `correct: false` or `failed > 0`; any metric whose
+Flags: any run that exited non-zero or has `correct: false` or
+`failed > 0`; any metric whose
 change median is worse than the parent's by more than its bound. With
 `--claim`, the verdict: the change must win at least 9 of 10 pairs and
 the medians must differ, in the better direction, by more than the
@@ -69,7 +71,7 @@ def summarize(entries: list, bench: dict, claim) -> bool:
     ok = True
     for e in entries:
         r = e["result"]
-        if not r.get("correct") or r.get("failed"):
+        if e["rc"] != 0 or not r.get("correct") or r.get("failed"):
             ok = False
             print(f"FLAG {e['workload']} seed {e['seed']} {e['side']}: "
                   f"correct={r.get('correct')} failed={r.get('failed')} rc={e['rc']}")
@@ -81,7 +83,8 @@ def summarize(entries: list, bench: dict, claim) -> bool:
         print(f"\n{workload}: {len(seeds)} pairs, seeds {seeds[0] if seeds else '-'}"
               f"..{seeds[-1] if seeds else '-'}")
         print(f"{'metric':16s} {'parent median [q1, q3]':>30s} "
-              f"{'change median [q1, q3]':>30s} {'ratio':>6s} {'wins':>6s}")
+              f"{'change median [q1, q3]':>30s} {'ratio':>6s} "
+              f"{'pair ratio [min, max]':>24s} {'wins':>6s}")
         for m in bench["end_to_end"]:
             name, lower = m["name"], m["better"] == "lower"
             pairs = [(runs[("parent", s)].get(name, {}).get("value"),
@@ -92,12 +95,15 @@ def summarize(entries: list, bench: dict, claim) -> bool:
             pq, cq = quartiles([p for p, _ in pairs]), quartiles([c for _, c in pairs])
             wins = sum((c < p) if lower else (c > p) for p, c in pairs)
             ratio = cq[1] / pq[1] if pq[1] else float("inf")
+            per_pair = sorted(c / p if p else float("inf") for p, c in pairs)
+            pair_ratios = (f"{statistics.median(per_pair):.3f} "
+                           f"[{per_pair[0]:.3f}, {per_pair[-1]:.3f}]")
             worse = ratio - 1 if lower else 1 - ratio
             flag = ""
             if worse > m["bound"]:
                 ok, flag = False, f"  WORSE than bound {m['bound']}"
             print(f"{name:16s} {spread(pq):>30s} {spread(cq):>30s} "
-                  f"{ratio:6.3f} {wins:>3d}/{len(pairs)}{flag}")
+                  f"{ratio:6.3f} {pair_ratios:>24s} {wins:>3d}/{len(pairs)}{flag}")
             if name == claim:
                 gap = (pq[1] - cq[1]) if lower else (cq[1] - pq[1])
                 met = wins >= 0.9 * len(pairs) and gap > pq[2] - pq[0]
@@ -139,7 +145,7 @@ def main() -> int:
                 with open(a.log, "a") as f:
                     f.write(json.dumps(e) + "\n")
                 v = e["result"].get("metrics", {}).get(a.claim or "", {}).get("value")
-                print(f"pair {i} seed {seed} {side}: correct="
+                print(f"pair {i} seed {seed} {side}: rc={e['rc']} correct="
                       f"{e['result'].get('correct')} failed={e['result'].get('failed')}"
                       + (f" {a.claim}={v:.4g}" if v is not None else ""), flush=True)
     return 0 if summarize(entries, bench, a.claim) else 1
