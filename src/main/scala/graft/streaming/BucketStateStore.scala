@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, MapType, StructType}
 
@@ -432,9 +431,7 @@ object BucketStateStore {
     * touched buckets. `numBuckets` is the bucket count of a NEW store;
     * 0, every caller's default, derives it from the batch's size (see
     * the Layout note). An existing store keeps the count its manifest
-    * records. A batch whose optimized plan is an empty local relation
-    * (`limit(0)`, an empty slice) returns at once: no version is
-    * published, no file is read or written and no job runs.
+    * records.
     *
     * Runs: a last-write-wins caller passes `tombstone`, the predicate
     * marking a batch row as a delete, and a `batch` already resolved to
@@ -482,10 +479,6 @@ object BucketStateStore {
         s"state schema must not contain reserved column $c")
     }
     require(numBuckets >= 0, s"numBuckets must be >= 0, got $numBuckets")
-    batch.queryExecution.optimizedPlan match {
-      case r: LocalRelation if r.data.isEmpty => return
-      case _ =>
-    }
     for (bid <- batchId; last <- lastBatchId(spark, stateDir))
       if (bid <= last) return // replayed batch already folded in
     val target = spark.sessionState.conf.filesMaxPartitionBytes

@@ -117,8 +117,7 @@ object StreamingCdc {
     persisted.foreach { existing =>
       graft.migrate.SchemaDrift.diff(existing, template.schema)
     }
-    // keyed on the first-row file, not on the version: the first batch
-    // with rows records it; an empty batch records and publishes nothing
+    // not keyed on the version: an empty first batch publishes one
     recordFirstRow(batch, stateDir, orderCols)
     // resolved once: the store writes it as a run, or applies it to
     // the touched buckets' state when it writes bases

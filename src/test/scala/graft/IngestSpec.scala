@@ -260,6 +260,41 @@ class MigratorSpec extends AnyFunSuite {
       .exists(c => String.valueOf(c.getMessage).contains("nation boom")), e)
   }
 
+  test("migrateAll starts no table after a failure and raises the first-listed one") {
+    // every pool thread gets a failing table, listed smallest first, so
+    // the last-listed fails first in time; the two small tables queue
+    // behind them and may start only after one of them has failed
+    val src = Files.createTempDirectory("graft_migabort").toString
+    val k = spark.sparkContext.defaultParallelism
+    val failing = (0 until k).map(i => s"abort_f$i")
+    val queued = Seq("abort_q0", "abort_q1")
+    (failing.zipWithIndex.map { case (t, i) => t -> 2000L * (i + 1) } ++
+        queued.map(_ -> 10L)).foreach { case (t, n) =>
+      spark.range(n).select(col("id"), rand(7).as("x"))
+        .write.parquet(s"$src/$t.parquet")
+    }
+    val reg = failing.foldLeft(new graft.ops.Transforms.TransformRegistry()) {
+      (r, t) => r.register(t, _.withColumn("boom", raise_error(lit(s"boom $t"))))
+    }
+    val spec = Migrator.Spec(transforms = reg)
+    val sizes = (failing ++ queued).map(t => Migrator.transformed(spark, src, t, spec)
+      .queryExecution.optimizedPlan.stats.sizeInBytes)
+    val (failSizes, queuedSizes) = sizes.splitAt(k)
+    assert(failSizes.zip(failSizes.tail).forall { case (a, b) => a < b } &&
+      queuedSizes.max < failSizes.min, s"size order is not the one planned: $sizes")
+    val dst = Files.createTempDirectory("graft_migabort_dst").toString
+    val e = intercept[Exception] {
+      Migrator.migrateAll(spark, src, dst, failing ++ queued, spec = spec)
+    }
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException])
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(c => String.valueOf(c.getMessage)).toSeq
+    assert(msgs.exists(_.contains("boom abort_f0")), e)
+    assert(!msgs.exists(_.contains(s"boom abort_f${k - 1}")), e)
+    queued.foreach(t => assert(!new java.io.File(s"$dst/$t.parquet").exists(),
+      s"$t started after a failure"))
+  }
+
   test("migrateAll refuses duplicate tables or destinations before any write") {
     val dst = s"${Files.createTempDirectory("graft_migdup")}/out"
     val dupTable = intercept[IllegalArgumentException] {

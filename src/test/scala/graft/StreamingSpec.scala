@@ -465,33 +465,6 @@ class StreamingCdcSpec extends AnyFunSuite {
     assert(after2.toSeq == Seq(("h1", 4L), ("h2", 2L)))
   }
 
-  test("an empty batch into a fenced IncrementalAgg store publishes no version") {
-    import graft.streaming.{BucketStateStore, IncrementalAgg}
-    val root = Files.createTempDirectory("graft_empty_agg").toString
-    import spark.implicits._
-    val b = Seq(("h1", 1L), ("h1", 2L), ("h2", 3L)).toDF("k", "id")
-    val batchAgg = Seq(count(lit(1)).as("n"), min(col("id")).as("keeper"))
-    val mergeAgg = Seq(sum(col("n")).as("n"), min(col("keeper")).as("keeper"))
-    def fold(batch: DataFrame, bid: Long): Unit = IncrementalAgg.mergeBatch(
-      batch, s"$root/state", Seq("k"), batchAgg, mergeAgg, batchId = Some(bid))
-    fold(b, 0L)
-    def files(): Long = {
-      val walk = Files.walk(java.nio.file.Paths.get(root))
-      try walk.count() finally walk.close()
-    }
-    val before = files()
-    fold(b.limit(0), 1L)
-    assert(BucketStateStore.currentVersion(spark, s"$root/state").contains(0L))
-    assert(BucketStateStore.lastBatchId(spark, s"$root/state").contains(0L))
-    assert(files() == before, "an empty batch must write no file")
-    fold(b, 2L) // the next non-empty batch still merges
-    assert(BucketStateStore.currentVersion(spark, s"$root/state").contains(1L))
-    val template = b.groupBy("k").agg(batchAgg.head, batchAgg.tail: _*)
-    val after = IncrementalAgg.current(spark, s"$root/state", template)
-      .orderBy("k").collect().map(r => (r.getString(0), r.getLong(1)))
-    assert(after.toSeq == Seq(("h1", 4L), ("h2", 2L)))
-  }
-
   test("stateAt time-travels to every retained version; vacuum trims history") {
     import graft.streaming.BucketStateStore
     val root = Files.createTempDirectory("graft_tt").toString
@@ -724,9 +697,9 @@ class StreamingCdcSpec extends AnyFunSuite {
   test("an empty first batch leaves the first row to the first non-empty one") {
     val root = Files.createTempDirectory("graft_scdc_first").toString
     val first = ChangeFeed.timeBatches(feed, "week").head
-    // an empty batch publishes no version
+    // an empty batch still publishes a version
     StreamingCdc.mergeIntoState(first.limit(0), s"$root/state", pk, orderCols)
-    assert(StreamingCdc.currentVersion(spark, s"$root/state").isEmpty)
+    assert(StreamingCdc.currentVersion(spark, s"$root/state").contains(0L))
     assert(StreamingCdc.firstRow(spark, s"$root/state").isEmpty)
     StreamingCdc.mergeIntoState(first, s"$root/state", pk, orderCols)
     val want = first.orderBy(orderCols.map(col): _*).limit(1).toJSON.head()
